@@ -141,7 +141,7 @@ def ngram_contamination(
         )
 
     # broadcast-gate audit (r12): bench_set is a distinct over md5
-    # expressions (no kernel dispatcher upstream — estimate stable),
+    # expressions (no Arrow kernel upstream — estimate stable),
     # and the probe side is ensure_parallelism'd in sh(); a missed
     # broadcast degrades to a shuffle join, never a serialization.
     bench_set = DD.maybe_broadcast(
@@ -463,8 +463,8 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     """Sign-LSH bucket id: bit p = (vec . plane_p >= 0), packed into
     an integer. Map-only column expression. NOTE the per-plane dot is
     an interpreted `aggregate` fold outside codegen — `semantic_dedup`
-    dispatches to the Arrow kernel below by default (LSH_BUCKET_IMPL);
-    this expression form is the oracle-pinnable fallback."""
+    uses it only below LSH_KERNEL_BYTES of input; past that size it
+    runs the Arrow kernel `_sem_vecs_arrow`."""
     bucket = F.lit(0).cast("long")
     for p, w in enumerate(planes):
         d = SIM.dot(vec, F.array(*[F.lit(x) for x in w]))
@@ -472,22 +472,20 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return bucket
 
 
-# Same dispatch story as the dedup signature kernels (r11 pattern):
-# the 8 x dim literal-plane folds per vector are interpreted; the
-# Arrow kernel computes all planes and the norm in ONE map-only pass
-# — bit-identical (cumsum partial-sum order == the left fold from
-# 0.0; sign test and power-of-two packing are exact integer ops;
-# np.sqrt and Spark sqrt are both correctly rounded IEEE) — asserted
-# against the expression form in tests. UNLIKE the r11 kernels the
-# default is SIZE-AWARE, because the composed-plan A/B showed a
+# semantic_dedup's bucket/norm scan stage has two forms, chosen by
+# input size. The 8 x dim literal-plane folds per vector are
+# interpreted; the Arrow kernel computes all planes and the norm in
+# ONE map-only pass — bit-identical (cumsum partial-sum order == the
+# left fold from 0.0; sign test and power-of-two packing are exact
+# integer ops; np.sqrt and Spark sqrt are both correctly rounded
+# IEEE) — asserted in tests. The composed-plan A/B showed a
 # crossover, not a uniform win: at 2k vectors the kernel's fixed
 # costs (pin + count action, Python worker spin-up) exceed the fold
 # saving (~2.7 s vs ~2.0 s bench protocol), while at 40k it wins
 # 1.5-2x (12.6 s vs 17.9-26.3 s warm) and the gap widens with scale.
-# "auto" reads the INPUT's Catalyst size estimate (a parquet scan's
-# file size — impl-independent, cheap) and takes the kernel past
-# LSH_KERNEL_BYTES; "arrow"/"expr" pin either form.
-LSH_BUCKET_IMPL = "auto"
+# The choice reads the INPUT's Catalyst size estimate (a parquet
+# scan's file size — independent of either form, cheap) and takes
+# the kernel past LSH_KERNEL_BYTES.
 LSH_KERNEL_BYTES = 8 << 20
 
 
@@ -497,7 +495,8 @@ def _sem_vecs_arrow(
     """(vid, vec, bucket, nrm) in one Arrow `mapInPandas` pass over a
     (vid, vec) frame — the kernel form of the semantic_dedup scan
     stage. Requires fixed-dimension vectors (the embeddings-table
-    contract); the closed-over plane matrix is k x dim literals."""
+    contract) and raises on ragged input; the closed-over plane
+    matrix is k x dim literals."""
     import numpy as np
 
     from pyspark.sql import types as T
@@ -525,9 +524,8 @@ def _sem_vecs_arrow(
             )
             if V.dtype == object:
                 raise ValueError(
-                    "semantic_dedup arrow kernel requires "
-                    "fixed-dimension vectors; pass impl='expr' for "
-                    "ragged inputs"
+                    "semantic_dedup requires fixed-dimension vectors: "
+                    "every embedding must have the same length"
                 )
             bucket = np.zeros(n, dtype=np.int64)
             if V.ndim == 2 and V.shape[1] > 0:
@@ -557,14 +555,12 @@ def semantic_dedup(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_bucket="auto",
-    impl: str | None = None,
 ) -> DataFrame:
     """SemDeDup-shaped embedding dedup with a deterministic quantizer.
-    The bucket/norm scan stage dispatches per LSH_BUCKET_IMPL
-    (size-aware "auto" default: the Arrow kernel past
-    LSH_KERNEL_BYTES of input, the expression form below it — see
-    the constants' crossover note; `impl="arrow"`/`"expr"` pin
-    either, bit-identical, asserted in tests).
+    The bucket/norm scan stage is size-aware: the Arrow kernel past
+    LSH_KERNEL_BYTES of input, the expression form below it (see the
+    constant's crossover note; bit-identical, asserted in tests).
+    Vectors must all have the same dimension.
 
     Vectors land in sign-LSH buckets (expected occupancy n / 2^P);
     within a bucket, a vector is DROPPED iff some smaller-id vector
@@ -593,19 +589,13 @@ def semantic_dedup(
             F.col(vec_col).cast("array<double>").alias("vec"),
         )
     )
-    mode = impl or LSH_BUCKET_IMPL
-    if mode == "auto":
-        try:
-            est = int(
-                src._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        except Exception:  # pragma: no cover - estimate unavailable
-            est = 0
-        mode = "arrow" if est >= LSH_KERNEL_BYTES else "expr"
-    arrow = mode == "arrow"
+    try:
+        est = int(
+            src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:  # pragma: no cover - estimate unavailable
+        est = 0
+    arrow = est >= LSH_KERNEL_BYTES
     if arrow:
         # the kernel output IS pinned (unlike the expr form below):
         # the frame feeds four plan branches (size table, both join
@@ -631,14 +621,15 @@ def semantic_dedup(
     # matching; its bucket pass recomputes per use, JVM-side.
     joinable, capped = _occupancy_cap(vecs, "bucket", max_bucket)
     a = joinable.alias("a")
-    # broadcast-gate audit (re-done for the r12 kernel): under the
-    # arrow default vecs is pinned, so the hint comes from the
-    # MATERIALIZED size (impl-invariant, the r12 rule) — KB-MB at
+    # broadcast-gate audit (re-done for the r12 kernel): on the
+    # kernel path vecs is pinned, so the hint comes from the
+    # MATERIALIZED size (plan-independent, the r12 rule) — KB-MB at
     # test scale fires it; a 10^8-doc corpus exceeds the cap and it
-    # correctly doesn't. Under impl='expr' the inflated wide-literal
-    # estimate disables the hint and the join shuffles on `bucket`.
-    # The probe side is spread (ensure_parallelism above), so either
-    # decision executes parallel and capped.
+    # correctly doesn't. On the small-input expression path the
+    # inflated wide-literal estimate disables the hint and the join
+    # shuffles on `bucket`. The probe side is spread
+    # (ensure_parallelism above), so either decision executes
+    # parallel and capped.
     b = (
         DD.maybe_broadcast_pinned(joinable.alias("b"), pinned=vecs)
         if arrow
@@ -734,7 +725,7 @@ def semdedup_prune(
     # quadratic per-cluster pair generation must run where the
     # CLUSTER KEY's partitioning puts it. A broadcast b-side pins
     # pair-gen onto the probe side's scan partitioning — one
-    # partition on a one-file input, the r11 `NEAREST_IMPL`
+    # partition on a one-file input, the r11 nprobe=1 assignment
     # regression (arrow 3.7 s vs expr 2.3 s at sf0.1, entirely that
     # serialization) — and pre-spreading `scored` round-robin just
     # moves the cost into defaultParallelism-many tiny-task stages
@@ -1121,9 +1112,8 @@ def passage_stats(
 
 # r12: the window-hash frame (doc_id, s, sh) feeds BOTH the
 # corpus-wide occurrence count and the duplicated-window join probe.
-# "pin" persists it so the split + stride-1 explode + per-window md5
-# pass (the span family's CPU hot spot) runs ONCE; "recompute"
-# keeps the r11 shape (two full hash passes). ~20 B/row cached —
+# It is pinned so the split + stride-1 explode + per-window md5 pass
+# (the span family's CPU hot spot) runs ONCE. ~20 B/row cached —
 # linear in corpus tokens, the same bound as the shuffle the count
 # already pays, so it holds at the 100 TB tier. Caller obligation
 # (ADVICE r12): the pin is released by the catalog lifecycle
@@ -1132,15 +1122,13 @@ def passage_stats(
 # remove_duplicate_spans directly must call
 # reader_spark.cache.release_pins() when done, or pinned span frames
 # accumulate across calls. At very large corpora the
-# MEMORY_AND_DISK persist trades recompute for spill; if the spill
-# exceeds the saved hash pass, set SPAN_REUSE="recompute".
-SPAN_REUSE = "pin"
+# MEMORY_AND_DISK persist trades recompute for spill.
 
 
 def _span_hashes(base: DataFrame, width: int) -> DataFrame:
     """(doc_id, s, sh): every width-token window's 60-bit hash,
     stride 1 — shared by `duplicate_spans` / `remove_duplicate_spans`
-    and pinned under SPAN_REUSE="pin" (see note above)."""
+    and pinned (see note above)."""
     ws = F.col("ws")
     spans = (
         base.filter(F.size(ws) >= width)
@@ -1159,7 +1147,7 @@ def _span_hashes(base: DataFrame, width: int) -> DataFrame:
             ).alias("sh"),
         )
     )
-    return pin(spans) if SPAN_REUSE == "pin" else spans
+    return pin(spans)
 
 
 def duplicate_spans(

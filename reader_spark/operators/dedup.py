@@ -126,13 +126,13 @@ def should_broadcast(df: DataFrame, cap_bytes: int | None = None) -> bool:
 
     HAZARD (r11 semdedup regression): the pre-execution estimate is a
     function of the PLAN, not the data — for the same frame it swings
-    orders of magnitude with the implementation (a `mapInPandas`
-    kernel reports ~actual bytes while an interpreted-lambda fold
-    inflates to absurd sizes), so a dispatcher default flip can
-    silently flip every downstream hint. For a frame that is already
+    orders of magnitude with the plan shape (a `mapInPandas` kernel
+    reports ~actual bytes while an interpreted-lambda fold inflates
+    to absurd sizes), so rewriting an upstream operator can silently
+    flip every downstream hint. For a frame that is already
     `pin()`ed (the shared-self-join pattern), use
     `should_broadcast_pinned` instead: it decides from the
-    materialized cache's REAL byte size and is impl-invariant."""
+    materialized cache's REAL byte size, whatever plan produced it."""
     cap = BROADCAST_BYTE_CAP if cap_bytes is None else cap_bytes
     try:
         est = int(
@@ -150,11 +150,12 @@ def maybe_broadcast_pinned(
 ) -> DataFrame:
     """`maybe_broadcast` for the pinned-self-join pattern — hint
     decided by `should_broadcast_pinned` (materialized cache size,
-    impl-invariant). When the join side is a DERIVED frame (an alias
-    or filter of the pin, whose plan the CacheManager may not match),
-    pass the underlying persisted frame as `pinned`: the decision
-    runs on the pin (a sound upper bound — derivations only ever
-    shrink it) while the hint lands on the frame that joins."""
+    independent of the producing plan). When the join side is a
+    DERIVED frame (an alias or filter of the pin, whose plan the
+    CacheManager may not match), pass the underlying persisted frame
+    as `pinned`: the decision runs on the pin (a sound upper bound —
+    derivations only ever shrink it) while the hint lands on the
+    frame that joins."""
     gate = df if pinned is None else pinned
     return F.broadcast(df) if should_broadcast_pinned(gate, cap_bytes) else df
 
@@ -172,16 +173,16 @@ def should_broadcast_pinned(
     memoized QueryExecution on `df` itself would still report the
     pre-execution estimate — hence the `select("*")`.
 
-    This closes the r11 `NEAREST_IMPL` regression class: the arrow
-    and expression forms of a kernel-fed frame estimate 1.4 MB vs
-    242 TB for the SAME data, so every estimate-gated hint downstream
-    of a dispatcher flips with the default; the materialized size is
-    identical either way (asserted in tests).
+    This closes the r11 regression class: the Arrow kernel and the
+    expression form of the nprobe=1 cluster assignment estimated
+    1.4 MB vs 242 TB for the SAME data, so every estimate-gated hint
+    downstream flipped with the plan shape; the materialized size
+    depends only on the data.
 
     Guard: a frame that is NOT actually persisted would silently
     reproduce the hazard this function closes (count() runs a full
     job, caches nothing, and the fresh plan resolves to the same
-    impl-dependent estimate) — so an unpinned input falls back to
+    plan-dependent estimate) — so an unpinned input falls back to
     plain `should_broadcast` without paying the count."""
     cap = BROADCAST_BYTE_CAP if cap_bytes is None else cap_bytes
     try:
@@ -268,121 +269,37 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-# Which classic-MinHash implementation `minhash_signature` dispatches
-# to. "arrow" won the r11 probe at EVERY token-length regime — the k
-# affine mixes are interpreted HigherOrderFunction lambdas outside
-# whole-stage codegen, and one Arrow round-trip + vectorized numpy
-# beats them 5.1x on the sf0.1 fixture (23 tokens/doc: 2.26 -> 0.44
-# s), 4.5x at 2k tokens/doc and 3.8x at 10k (it also beats
-# oph_signature's expression form everywhere measured, making
-# classic-arrow the scale default outright). "expr" keeps the pure
-# column-expression plan — zero Python workers, the form embedded
-# oracles/tests mirror — and is bit-identical by construction.
-MINHASH_IMPL = "arrow"
-
-
 def minhash_signature(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 8,
     hashes_col: str | None = None,
-    impl: str | None = None,
 ) -> DataFrame:
-    """MinHash signature as `num_hashes` columns h0..h{k-1} — the
-    canonical entry point; dispatches to the Arrow/numpy kernel
-    (`minhash_signature_arrow`, default — see MINHASH_IMPL) or the
-    column-expression form (`minhash_signature_expr`). Both are
-    BIT-IDENTICAL (asserted in tests), so bands, indexes, and
-    oracles never see which one ran."""
-    impl = impl or MINHASH_IMPL
-    fn = (
-        minhash_signature_arrow
-        if impl == "arrow"
-        else minhash_signature_expr
-    )
-    return fn(
-        docs,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        hashes_col=hashes_col,
-    )
+    """MinHash signature as `num_hashes` columns h0..h{k-1}, computed
+    in ONE Arrow `mapInPandas` pass: per token the md5-base hash, then
+    `num_hashes` affine mixes a_i*h+b_i mod P (all values < 2^60, so
+    int64 never overflows) and a per-doc min. No shuffle and no
+    fitted state (pyspark.ml's MinHashLSH needs a CountVectorizer
+    vocabulary broadcast).
 
-
-def minhash_signature_expr(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    hashes_col: str | None = None,
-) -> DataFrame:
-    """MinHash signature as `num_hashes` columns h0..h{k-1}.
-
-    No shuffle: one md5 per token (materialized once as an
-    intermediate array column so Catalyst doesn't duplicate it per
-    seed), then `num_hashes` affine mixes + array_min — pure
-    projections, no Python workers. NOTE the mixes are higher-order-
-    function lambdas, which Catalyst interprets OUTSIDE whole-stage
-    codegen: the Arrow kernel beats this form ~4-5x at k=128 at every
-    token length measured (SCALE.md r11), so this is the fallback /
-    reference implementation, not the default. (The pyspark.ml
-    MinHashLSH needs a CountVectorizer vocabulary broadcast; this
-    streaming-friendly formulation avoids any fitted state.)
-
-    hashes_col: name of a precomputed token-hash array column (see
-    `token_hashes`) — skips the md5 pass entirely."""
-    if hashes_col is not None:
-        base = docs.select(F.col(id_col), F.col(hashes_col).alias("__hms"))
-    else:
-        base = ensure_parallelism(docs).select(
-            F.col(id_col),
-            F.transform(word_set(F.col(text_col)), md5_base_mod).alias("__hms"),
-        )
-
-    def mixer(seed: int):
-        a, b = minhash_mix_params(seed)
-        # NB: keep the lambda unary — a 2-arg lambda would be treated
-        # by F.transform as (element, index).
-        return lambda h: (F.lit(a).cast("long") * h + F.lit(b)) % MINHASH_P
-
-    sig_cols = [
-        F.array_min(F.transform(F.col("__hms"), mixer(i))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return base.select(F.col(id_col), *sig_cols)
-
-
-def minhash_signature_arrow(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    hashes_col: str | None = None,
-) -> DataFrame:
-    """`minhash_signature` computed in ONE Arrow `mapInPandas` pass —
-    bit-identical output (same md5-base token hashes, same affine mix
-    a_i*h+b_i mod P, all values < 2^60 so int64 never overflows), but
-    the k x tokens arithmetic runs as vectorized numpy instead of k
-    interpreted higher-order-lambda array expressions. SCALE.md (r10)
-    measured the expression form's interpreted-lambda floor: the k=128
-    classic pass realizes ~3x the single-mix cost instead of the
-    arithmetic 128x headroom, because HigherOrderFunction lambdas stay
-    outside whole-stage codegen. This path trades one Arrow
-    serialization of the (id, toks) frame for C-speed arithmetic —
-    and the r11 probe showed the trade wins at EVERY token-length
-    regime, including the short-doc fixture where transfer overhead
-    is largest relative to arithmetic (SCALE.md r11: 5.1x at 23
-    tokens/doc, 4.5x at 2k, 3.8x at 10k; it also beats the OPH
-    expression form everywhere measured). It is therefore the
-    default behind `minhash_signature` (see MINHASH_IMPL).
+    The k x tokens arithmetic runs as vectorized numpy rather than k
+    higher-order-lambda array expressions, which Catalyst interprets
+    outside whole-stage codegen. The r11 probe measured the kernel
+    ahead of that expression form at every token-length regime
+    (SCALE.md r11: 5.1x at 23 tokens/doc, 4.5x at 2k, 3.8x at 10k);
+    the expression form survives only as a bit-identity oracle in
+    the tests.
 
     The md5 pass itself stays JVM-side (`token_hashes`): only the mix
     + segmented-min runs in Python, over long arrays, never strings.
     Batches are sub-chunked so the k x flat_tokens mix matrix stays
     ~256 MB regardless of input batch shape. Empty/NULL token arrays
-    produce all-NULL signature rows (the expression form's
-    array_min-of-empty semantics, which the banding guard drops)."""
+    produce all-NULL signature rows (array_min-of-empty semantics,
+    which the banding guard drops).
+
+    hashes_col: name of a precomputed token-hash array column (see
+    `token_hashes`) — skips the md5 pass entirely."""
     import numpy as np
     import pandas as pd
 
@@ -391,9 +308,8 @@ def minhash_signature_arrow(
         hashes_col = "toks"
         base = docs.select(F.col(id_col), F.col(hashes_col))
     else:
-        # caller-owns-layout (same contract as the expression form):
-        # a precomputed hashes_col frame was already spread by
-        # token_hashes -- or deliberately kept single-partition by
+        # caller-owns-layout: a precomputed hashes_col frame was
+        # already spread by token_hashes -- or deliberately kept single-partition by
         # the sampled diagnostics -- so re-spreading here would force
         # a pointless exchange of the token arrays (and undo the
         # 1-partition layout the 64-row audits rely on).
@@ -461,40 +377,7 @@ def minhash_signature_arrow(
     return base.mapInPandas(compute, schema)
 
 
-# Which OPH implementation `oph_signature` dispatches to — same story
-# as MINHASH_IMPL: the expression form's per-row bucket fold is an
-# interpreted aggregate outside codegen, and the Arrow kernel
-# (sort + segmented min + vectorized densification) realizes the
-# O(tokens) promise the scheme exists for (SCALE.md r11 numbers).
-OPH_IMPL = "arrow"
-
-
 def oph_signature(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 128,
-    hashes_col: str | None = None,
-    impl: str | None = None,
-) -> DataFrame:
-    """One-Permutation signature — canonical entry point; dispatches
-    to the Arrow kernel (`oph_signature_arrow`, default) or the
-    column-expression form (`oph_signature_expr`). Bit-identical
-    either way (asserted in tests + the hypothesis reference-model
-    property), so indexes, bands, and the `_oph_cte` oracle never
-    see which one ran."""
-    impl = impl or OPH_IMPL
-    fn = oph_signature_arrow if impl == "arrow" else oph_signature_expr
-    return fn(
-        docs,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        hashes_col=hashes_col,
-    )
-
-
-def oph_signature_expr(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -510,92 +393,17 @@ def oph_signature_expr(
     right (circular), offset by distance*P so borrowed values never
     collide with genuine ones. Collision probability per coordinate
     approximates Jaccard (densification bias O(1/tokens)), so the
-    banding S-curve — and the whole downstream pipeline: band rows,
-    candidate join, verify, the index format — is UNCHANGED; only
-    the signature pass gets k-times cheaper. On short fixture docs
-    the classic pass is already sub-millisecond; at real-corpus
-    token counts (10^3-10^4) the classic k=128 pass is the dominant
-    linear cost and this is the swap (`lsh_recall_audit_oph`
-    measures what the approximation costs in recall).
+    banding S-curve and the whole downstream pipeline are unchanged
+    (`lsh_recall_audit_oph` measures what the approximation costs in
+    recall).
 
-    Zero shuffle and zero explode: the token array is already
-    per-row, so bucket minima fold in ONE array pass (the input is
-    SORTED ascending — `token_hashes` — so only the FIRST token per
-    residue inserts into the accumulator map; every later token is a
-    cheap contains-check). Densification is O(k * filled) array
-    expressions. Output schema identical to `minhash_signature`
-    (h0..h{k-1} longs; all-NULL for empty docs)."""
-    k = num_hashes
-    # the bucket fold below keeps the FIRST hash per residue, which
-    # is the minimum ONLY on an ascending array — sort here
-    # unconditionally (a no-op on `token_hashes` output, which is
-    # already sorted; load-bearing on raw tokenize, where word_set
-    # sorts the token STRINGS, not their hashes — caught by the
-    # hypothesis reference-model property test)
-    if hashes_col is not None:
-        base = docs.select(
-            F.col(id_col), F.array_sort(F.col(hashes_col)).alias("__hms")
-        )
-    else:
-        base = ensure_parallelism(docs).select(
-            F.col(id_col),
-            F.array_sort(
-                F.transform(word_set(F.col(text_col)), md5_base_mod)
-            ).alias("__hms"),
-        )
-    empty_map = F.map_from_arrays(
-        F.array().cast("array<int>"), F.array().cast("array<long>")
-    )
-    mins = F.aggregate(
-        F.col("__hms"),
-        empty_map,
-        lambda acc, h: F.when(
-            F.map_contains_key(acc, F.pmod(h, F.lit(k)).cast("int")), acc
-        ).otherwise(
-            F.map_concat(
-                acc,
-                F.create_map(F.pmod(h, F.lit(k)).cast("int"), h),
-            )
-        ),
-    )
-    staged = base.select(F.col(id_col), mins.alias("__mp")).select(
-        F.col(id_col),
-        F.col("__mp"),
-        F.array_sort(F.map_keys(F.col("__mp"))).alias("__fb"),
-    )
-
-    def sig(i: int):
-        delta = F.array_min(
-            F.transform(
-                F.col("__fb"), lambda p: F.pmod(p - F.lit(i), F.lit(k))
-            )
-        )
-        src = F.pmod(F.lit(i) + delta, F.lit(k)).cast("int")
-        return (
-            F.element_at(F.col("__mp"), src)
-            + delta.cast("long") * F.lit(MINHASH_P)
-        ).alias(f"h{i}")
-
-    return staged.select(F.col(id_col), *[sig(i) for i in range(k)])
-
-
-def oph_signature_arrow(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 128,
-    hashes_col: str | None = None,
-) -> DataFrame:
-    """`oph_signature` in ONE Arrow `mapInPandas` pass — bit-identical
-    (bucket minima + the same rotation densification, pure int64),
-    with the per-row map fold replaced by a sort + segmented min over
-    the batch's flat token-hash array and the densification by a
-    k-column backward scan vectorized across the batch's docs. The
-    expression form's fold is an interpreted aggregate OUTSIDE
-    whole-stage codegen — SCALE.md r10 measured it realizing only ~3x
-    over classic instead of the k-times arithmetic headroom; here the
-    O(tokens) pass actually materializes (SCALE.md r11 numbers).
-    Same schema and NULL semantics as every other signature builder."""
+    ONE Arrow `mapInPandas` pass: bucket minima come from a sort +
+    segmented min over the batch's flat token-hash array, and the
+    densification is a k-column backward scan vectorized across the
+    batch's docs (pure int64). Same schema and NULL semantics as
+    `minhash_signature` (h0..h{k-1} longs; all-NULL for empty docs);
+    checked against a Python reference model and the `_oph_cte`
+    DuckDB oracle."""
     import numpy as np
     import pandas as pd
 
@@ -604,9 +412,8 @@ def oph_signature_arrow(
         hashes_col = "toks"
         base = docs.select(F.col(id_col), F.col(hashes_col))
     else:
-        # caller-owns-layout (same contract as the expression form):
-        # a precomputed hashes_col frame was already spread by
-        # token_hashes -- or deliberately kept single-partition by
+        # caller-owns-layout: a precomputed hashes_col frame was
+        # already spread by token_hashes -- or deliberately kept single-partition by
         # the sampled diagnostics -- so re-spreading here would force
         # a pointless exchange of the token arrays (and undo the
         # 1-partition layout the 64-row audits rely on).
@@ -724,11 +531,10 @@ def lsh_candidate_pairs(
     if n_bands > 4:
         bands = md5_band_rows(sigs, num_hashes, band_size, id_col)
         a2 = bands.alias("a")
-        # broadcast-gate audit (r12): bands derives from the arrow
-        # MINHASH kernel, whose estimate is ~real bytes (vs the expr
-        # form's inflation) — the hint may flip with the dispatcher,
-        # but the probe side is ensure_parallelism'd at token_hashes,
-        # so either decision executes parallel; the byte cap still
+        # broadcast-gate audit (r12): bands derives from the
+        # minhash_signature kernel, whose estimate is ~real bytes; the
+        # probe side is ensure_parallelism'd at token_hashes, so
+        # either hint decision executes parallel, and the byte cap
         # bounds driver memory.
         b2 = maybe_broadcast(bands.alias("b"), broadcast_cap)
         return (
@@ -764,99 +570,6 @@ def lsh_candidate_pairs(
         )
         out = pairs if out is None else out.unionByName(pairs)
     return out
-
-
-# Spread strategy for the verify pair stream: "hash" repartitions on
-# the (unique) pair key — identical uniform spread to round-robin
-# without the sortBeforeRepartition local sort (SPARK-23207), and it
-# collapses into the pair-dedup aggregate's exchange. "rr" keeps the
-# r11 round-robin form. Same rows either way; dispatch is perf-only.
-PAIR_SPREAD = "hash"
-
-# Per-pair intersection-size implementation for jaccard_verify:
-# "expr" = JVM array_intersect (per-pair OpenHashSet build + probe +
-# materialized result array); "arrow" = one mapInArrow pass that
-# counts common elements of the two sorted-distinct hash arrays with
-# a vectorized lexsort + adjacent-duplicate scan (no per-pair Python,
-# no intermediate array materialization). Both emit the IDENTICAL
-# integer `inter` (set cardinalities are exact ints; the jaccard
-# division stays a JVM expression over the same ints either way, so
-# there is no float-parity risk). Dispatch is perf-only. r13 gate:
-# parity EXACT over all 5,822,682 sf0.1 candidate pairs (count +
-# order-insensitive xxhash64 xor + jaccard sum identical at
-# threshold 0.0 and 0.8), but the interleaved A/B REFUTES the kernel
-# for speed — dedup_near_dup best 5.62 s (arrow) vs 3.39 s (expr),
-# split_leakage 5.93 vs 3.17 over 6 alternating reps: shipping two
-# ~23-element int64 arrays per pair across the Arrow boundary
-# (~1 GB at sf0.1) costs more than array_intersect's per-pair hash
-# set saves. "expr" stays the default; the kernel is kept
-# parity-tested for corpora with much longer token arrays, where
-# the per-pair set build grows linearly but the transfer amortizes.
-INTERSECT_IMPL = "expr"
-
-
-def _intersect_sizes_arrow(j: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, toks_a, toks_b, tot) -> (doc_a, doc_b, inter,
-    tot): the per-pair |A ∩ B| as ONE vectorized Arrow pass.
-
-    Within a batch the two list columns are flattened to (pair_id,
-    value) rows; a lexsort by (pair_id, value) makes every value
-    common to both sides of a pair adjacent (each side is distinct,
-    so a duplicate == a match), and a bincount of adjacent-equal
-    positions yields the intersection sizes — no per-row Python, no
-    per-pair hash set. ~O(E log E) per batch in numpy on E flattened
-    tokens, against array_intersect's per-pair set build."""
-    import numpy as np
-    import pyarrow as pa
-
-    names = j.columns
-    ia, ib = names.index("toks_a"), names.index("toks_b")
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            j.schema["doc_a"],
-            j.schema["doc_b"],
-            T.StructField("inter", T.IntegerType(), True),
-            j.schema["tot"],
-        ]
-    )
-
-    def compute(batches):
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ta, tb = rb.column(ia), rb.column(ib)
-            # absolute offsets into the (unsliced) child buffers
-            oa = ta.offsets.to_numpy().astype(np.int64)
-            ob = tb.offsets.to_numpy().astype(np.int64)
-            va = ta.values.to_numpy(zero_copy_only=False)
-            vb = tb.values.to_numpy(zero_copy_only=False)
-            na = oa[1:] - oa[:-1]
-            nb = ob[1:] - ob[:-1]
-            idx = np.arange(n, dtype=np.int64)
-            pid = np.concatenate([np.repeat(idx, na), np.repeat(idx, nb)])
-            vals = np.concatenate(
-                [va[oa[0] : oa[-1]], vb[ob[0] : ob[-1]]]
-            )
-            order = np.lexsort((vals, pid))
-            sp = pid[order]
-            sv = vals[order]
-            dup = (sp[1:] == sp[:-1]) & (sv[1:] == sv[:-1])
-            inter = np.bincount(sp[1:][dup], minlength=n).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(names.index("doc_a")),
-                    rb.column(names.index("doc_b")),
-                    pa.array(inter, type=pa.int32()),
-                    rb.column(names.index("tot")),
-                ],
-                ["doc_a", "doc_b", "inter", "tot"],
-            )
-
-    return j.mapInArrow(compute, out_schema)
 
 
 def jaccard_verify(
@@ -922,10 +635,7 @@ def jaccard_verify(
     #    The barrier table is 4 longs/pair, far smaller than its
     #    inputs, so it is persistable even at the 100 TB tier.
     fanout = pairs.sparkSession.sparkContext.defaultParallelism
-    if PAIR_SPREAD == "hash":
-        pairs = pairs.repartition(fanout, F.col("doc_a"), F.col("doc_b"))
-    else:
-        pairs = pairs.repartition(fanout)
+    pairs = pairs.repartition(fanout, F.col("doc_a"), F.col("doc_b"))
     toks = toks.withColumn("n_toks", F.size(F.col("toks")))
     # Size-gated broadcast: the token-hash table is ~200 B/doc, far
     # smaller than the pair list it joins against, but its size
@@ -956,24 +666,13 @@ def jaccard_verify(
         F.least("na", "nb").cast("double")
         >= F.lit(float(threshold)) * F.greatest("na", "nb")
     )
-    if INTERSECT_IMPL == "arrow":
-        # the kernel is an opaque barrier, so the threshold filter
-        # cannot be pushed back into the join condition — the pin
-        # barrier the expr path needs is unnecessary here (and
-        # skipping it saves materializing the 16 B/pair frame).
-        j = _intersect_sizes_arrow(
-            j.select(
-                "doc_a", "doc_b", "toks_a", "toks_b",
-                (F.col("na") + F.col("nb")).alias("tot"),
-            )
-        )
-    else:
-        j = j.select(
+    j = pin(
+        j.select(
             "doc_a", "doc_b",
             F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b"))).alias("inter"),
             (F.col("na") + F.col("nb")).alias("tot"),
         )
-        j = pin(j)
+    )
     jac = F.col("inter").cast("double") / (F.col("tot") - F.col("inter")).cast("double")
     return (
         j.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
@@ -981,41 +680,22 @@ def jaccard_verify(
     )
 
 
-# Same dispatch story as MINHASH_IMPL / OPH_IMPL: the per-token
-# 63-way sign fold is interpreted (aggregate + zip_with lambdas), the
-# Arrow kernel vectorizes it (SCALE.md r11).
-SIMHASH_IMPL = "arrow"
-
-
 def simhash(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 63,
-    impl: str | None = None,
 ) -> DataFrame:
-    """63-bit SimHash — canonical entry point; dispatches to the
-    Arrow kernel (`simhash_arrow`, default) or the expression form
-    (`simhash_expr`). Bit-identical either way (integer sign counts,
-    ties-to-zero on the > 0 test; asserted in tests)."""
-    impl = impl or SIMHASH_IMPL
-    fn = simhash_arrow if impl == "arrow" else simhash_expr
-    return fn(docs, text_col=text_col, id_col=id_col, bits=bits)
+    """63-bit SimHash, computed WITHOUT a shuffle: per doc, a
+    `bits`-long sign-count vector over the token hashes, with bit b
+    set where the count is positive.
 
-
-def simhash_arrow(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 63,
-) -> DataFrame:
-    """`simhash_expr` in ONE Arrow `mapInPandas` pass: the md5 token
-    hashes stay JVM-side (string work never crosses into Python);
-    the kernel unpacks each 60-bit hash into a (tokens x bits) sign
-    matrix and segment-sums it per doc (`np.add.reduceat`) — the
-    63-expression-per-token interpreted fold becomes three
-    vectorized ops. Bit-identical: same sign counts, same count > 0
-    bit test, NULL text -> NULL simhash, empty token set -> 0."""
+    ONE Arrow `mapInPandas` pass: the md5 token hashes stay JVM-side
+    (string work never crosses into Python); the kernel unpacks each
+    60-bit hash into a (tokens x bits) sign matrix and segment-sums
+    it per doc (`np.add.reduceat`) — three vectorized ops instead of
+    an interpreted per-token fold. NULL text -> NULL simhash, empty
+    token set -> 0. A map-only stage at any scale."""
     import numpy as np
     import pandas as pd
 
@@ -1088,50 +768,6 @@ def simhash_arrow(
     return base.mapInPandas(compute, schema)
 
 
-def simhash_expr(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                 bits: int = 63) -> DataFrame:
-    """63-bit SimHash, computed WITHOUT a shuffle.
-
-    Per doc: fold the token array into a 63-long sign-count vector
-    (`aggregate` + `zip_with`), then pack bits where the count is
-    positive. Linear in tokens, pure expressions — NOTE the fold is
-    an interpreted aggregate outside codegen; `simhash_arrow` is the
-    adopted default (see SIMHASH_IMPL). At 100 TB both are map-only
-    stages."""
-    positions = F.sequence(F.lit(0), F.lit(bits - 1))
-    # 2^b lookup (shiftleft takes a Python int, not a Column).
-    pow2 = F.array(*[F.lit(1 << i).cast("long") for i in range(bits)])
-    # md5 once per token; the bit fold runs over the hash array.
-    hashes = F.transform(word_set(F.col(text_col)), lambda w: md5_hash64(w, "sim"))
-
-    def sign_vec(h: Column) -> Column:
-        return F.transform(
-            positions,
-            lambda b: F.when(F.getbit(h, b) == 1, F.lit(1).cast("long")).otherwise(
-                F.lit(-1).cast("long")
-            ),
-        )
-
-    docs = ensure_parallelism(docs)
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, h: F.zip_with(acc, sign_vec(h), lambda x, y: x + y),
-    )
-    packed = F.aggregate(
-        F.zip_with(
-            counts,
-            positions,
-            lambda c, b: F.when(c > 0, F.element_at(pow2, b.cast("int") + 1)).otherwise(
-                F.lit(0).cast("long")
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return docs.select(F.col(id_col), packed.alias("simhash"))
-
-
 def simhash_candidate_pairs(
     sh: DataFrame,
     id_col: str = "doc_id",
@@ -1164,9 +800,9 @@ def simhash_candidate_pairs(
         return c.bitwiseAND(F.lit((1 << widths[band]) - 1))
 
     a = sh.alias("a")
-    # broadcast-gate audit (r12): sh is kernel-fed (SIMHASH_IMPL) but
-    # the probe side is ensure_parallelism'd inside both simhash
-    # impls — an impl-flipped hint cannot serialize the band joins.
+    # broadcast-gate audit (r12): sh is kernel-fed (`simhash`), and
+    # the probe side is ensure_parallelism'd inside it — whichever way
+    # the hint goes, it cannot serialize the band joins.
     b = maybe_broadcast(sh.alias("b"), broadcast_cap)
     hamming = F.bit_count(
         F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
@@ -1595,7 +1231,7 @@ def incremental_dedup_filter(
     bands = md5_band_rows(incoming_sigs, num_hashes, band_size, id_col)
     hits = (
         # broadcast-gate audit (r12): index is a parquet read —
-        # file-size estimate, impl-invariant; probe side is banded
+        # file-size estimate, plan-independent; probe side is banded
         # incoming sigs (parallel via token_hashes).
         bands.join(maybe_broadcast(index), ["band_id", "band_key"], "semi")
         .select(id_col)

@@ -161,7 +161,7 @@ def triangle_counts(
     # broadcast-gate audit (r12): deg aggregates the PINNED edge
     # frame, so a fresh QueryExecution resolves through the
     # CacheManager — the estimate tracks real cached bytes once e is
-    # materialized; no kernel dispatcher upstream, decision stable.
+    # materialized; no Arrow kernel upstream, decision stable.
     share_deg = maybe_broadcast(deg)
     ed = (
         e.join(share_deg.select(F.col("v").alias("a"), F.col("dg").alias("da")), "a")

@@ -224,19 +224,6 @@ def bm25_topk(
 # materialized inverted index (the 100 TB path: index once, search many)
 
 
-# r13 dispatcher for the index build's df attach. "window" (default)
-# computes df as a COUNT window over the postings — ONE tokenize
-# pass, no cache, no join (A/B med 2.42 s vs 2.70, and it halves the
-# dominant md5/tokenize CPU, the part that matters at 100 TB).
-# "recompute" keeps the r12 shape (df aggregate + join back, which
-# re-evaluates the tokenize subtree on both join sides); "pin"
-# persists the postings instead — REFUTED for wall at sf0.1 (cache
-# write of the exploded corpus costs more than the second tokenize:
-# med 3.29 vs 2.77 — the market_basket lesson). Identical rows and
-# stored integers under all three.
-BM25_BUILD_REUSE = "window"
-
-
 def bm25_index_write(
     docs: DataFrame,
     path: str,
@@ -258,49 +245,27 @@ def bm25_index_write(
     `repartition(n_buckets, bucket)` before `partitionBy` keeps the
     write at one file per bucket instead of tasks x buckets
     (measured 11x on the transfer seed, SCALE.md)."""
-    # r13: postings persisted for the duration of the build — the df
-    # aggregate is postings.groupBy(term), so the unpinned form
-    # recomputed the tokenize+explode+tf subtree on BOTH sides of the
-    # df join (the two hottest stages of the build, ~5.3 s of 7.2 s
-    # total CPU in the r13 profile). The df table is vocabulary-sized
-    # and joins back size-gated (maybe_broadcast), so with the pin
-    # the corpus text is tokenized exactly once per build. Scoped
-    # persist, released before return (job-loop caller safe).
-    from reader_spark.operators.dedup import maybe_broadcast
+    # r13: df is a COUNT window over the postings (postings are unique
+    # per (doc, term), so the term partition size IS the document
+    # frequency) — the containment_pairs pattern. The corpus is
+    # tokenized exactly once, with no cache and no join: one term
+    # exchange replaces the df aggregate + join-back, which
+    # re-evaluated the tokenize subtree on both join sides (A/B med
+    # 2.42 s vs 2.70; persisting the postings instead lost, 3.29 vs
+    # 2.77 — the cache write costs more than the second tokenize).
+    from pyspark.sql import Window as W
 
-    postings = doc_terms(docs, text_col)
-    if BM25_BUILD_REUSE == "pin":
-        postings = postings.persist()
-    try:
-        if BM25_BUILD_REUSE == "window":
-            # df via a COUNT window over the postings (postings are
-            # unique per (doc, term), so the term partition size IS
-            # the document frequency) — the containment_pairs
-            # pattern: the corpus is tokenized exactly once, with no
-            # cache and no join; one term exchange replaces the
-            # aggregate + join-back.
-            from pyspark.sql import Window as W
-
-            full = postings.withColumn(
-                "df", F.count("*").over(W.partitionBy("term"))
-            )
-        else:
-            tstats = postings.groupBy("term").agg(
-                F.count("*").alias("df")
-            )
-            full = postings.join(maybe_broadcast(tstats), "term")
-        full = full.withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets))
-        )
-        (
-            full.repartition(n_buckets, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{path}/postings")
-        )
-    finally:
-        if BM25_BUILD_REUSE == "pin":
-            postings.unpersist()
+    full = (
+        doc_terms(docs, text_col)
+        .withColumn("df", F.count("*").over(W.partitionBy("term")))
+        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
+    )
+    (
+        full.repartition(n_buckets, "bucket")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(f"{path}/postings")
+    )
     # doc -> length side table: the ONLY per-doc fact a later DELETE
     # needs (postings are keyed by term bucket, so a doc's rows are
     # unfindable without its terms; Lucene keeps the same per-doc

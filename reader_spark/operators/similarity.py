@@ -179,34 +179,22 @@ def label_seeded_centroids(
     )
 
 
-# nprobe=1 assignment implementation: "arrow" closes over the
-# collected centroid table (a handful of rows by construction) and
-# computes the distance matrix in numpy — bit-identical to the
-# expression path (sequential-cumsum dot == the left fold; the
-# (nv - 2*dot) + nc op order matches; argmin-first over ascending-cl
-# centroids == min(struct(dist, cl))) — replacing the broadcast
-# nested-loop x interpreted fold AND the groupBy-back-to-row shuffle
-# with one map-only pass. "expr" keeps the zero-Python plan.
-NEAREST_IMPL = "arrow"
-
-
 def _nearest_cluster_arrow(
     side: DataFrame, cents: DataFrame, id_col: str
 ) -> DataFrame:
     """nprobe=1 cluster attach as ONE Arrow map-only pass: every
     side column passes through untouched, `cl` is attached. No join,
     no aggregate, no shuffle — the assignment is a pure projection
-    of the row against the closed-over centroid matrix.
+    of the row against the closed-over centroid matrix. The distance
+    matrix is bit-identical to the SQL form `nv - 2*dot + nc` with a
+    left-fold dot (sequential cumsum == the fold), and argmin-first
+    over ascending-cl centroids == min(struct(dist, cl)).
 
-    Contract notes (vs the expression form, which groupBys on
-    `id_col`): this pass emits one output row PER INPUT ROW — callers
-    must feed unique ids (every in-repo caller does: the side is a
-    projected corpus keyed by its primary id; the expression form's
-    groupBy would silently collapse duplicates instead, so neither
-    path supports duplicate-id inputs by design). Output column
-    order is aligned to the expression form's (`id_col` first, then
-    passthrough, then `cl`) via a final projection, so positional
-    consumers see one shape regardless of NEAREST_IMPL. `cents` is
+    Contract notes: this pass emits one output row PER INPUT ROW —
+    callers must feed unique ids (every in-repo caller does: the side
+    is a projected corpus keyed by its primary id). Output columns
+    are `id_col` first, then passthrough, then `cl` (a final
+    projection), the same order as the nprobe>1 window. `cents` is
     collect()ed at PLAN-CONSTRUCTION time — a bounded control-plane
     read (K centroid rows by construction), same class as the IVF
     directory reads."""
@@ -215,10 +203,10 @@ def _nearest_cluster_arrow(
     rows = sorted(cents.collect(), key=lambda r: r["cl"])
     passthrough = [c for c in side.columns if c != id_col]
     if not rows:
-        # empty centroid frame: the expression path's cross join
-        # with an empty side returns an empty frame — reproduce
-        # that instead of crashing the (0,)-shape unpack below,
-        # in the SAME aligned column order as the non-empty path
+        # empty centroid frame: no row has a nearest centroid, so
+        # return an empty frame instead of crashing the (0,)-shape
+        # unpack below, in the SAME column order as the non-empty
+        # path
         return (
             side.withColumn(
                 "cl", F.lit(None).cast(cents.schema["cl"].dataType)
@@ -270,7 +258,6 @@ def nearest_clusters(
     cents: DataFrame,
     nprobe: int,
     id_col: str,
-    impl: str | None = None,
 ) -> DataFrame:
     """Attach each row's `nprobe` nearest centroids (squared-L2 argmin,
     ties broken by cluster id). Centroids are a handful of rows —
@@ -278,33 +265,17 @@ def nearest_clusters(
     ingest-time assignment job; its output column is what the big
     equi-join keys on.
 
-    nprobe=1 (the corpus-sized side) dispatches per NEAREST_IMPL:
-    the Arrow kernel (default — map-only, no shuffle at all) or the
-    expression reduce via `min(struct(dist, cl))` — lexicographic
-    struct-min == ORDER BY (dist, cl), PARTIAL-aggregated map-side so
-    the exchange carries ~N pre-reduced rows instead of N x C scored
-    rows. nprobe>1 keeps the window; it only ever runs on the tiny
-    query side. For nprobe=1, `side` rows must be unique on `id_col`
-    (the arrow kernel passes rows through 1:1 where the expression
-    form's groupBy would collapse duplicates); both paths emit
-    `id_col` first, then the passthrough columns, then `cl`."""
+    nprobe=1 (the corpus-sized side) runs the Arrow kernel
+    `_nearest_cluster_arrow`: map-only, no shuffle at all, and `side`
+    rows must be unique on `id_col` (rows pass through 1:1). nprobe>1
+    keeps the window; it only ever runs on the tiny query side. Both
+    emit `id_col` first, then the passthrough columns, then `cl`."""
     from pyspark.sql import Window as W
 
-    if nprobe == 1 and (impl or NEAREST_IMPL) == "arrow":
+    if nprobe == 1:
         return _nearest_cluster_arrow(side, cents, id_col)
     dist = F.col("nv") - F.lit(2.0) * dot(F.col("vec"), F.col("c")) + F.col("nc")
     joined = side.join(F.broadcast(cents), F.lit(True)).withColumn("__dist", dist)
-    passthrough = [c for c in side.columns if c != id_col]
-    if nprobe == 1:
-        return (
-            joined.groupBy(id_col)
-            .agg(
-                F.min(F.struct(F.col("__dist"), F.col("cl"))).alias("__m"),
-                *[F.first(c).alias(c) for c in passthrough],
-            )
-            .withColumn("cl", F.col("__m.cl"))
-            .drop("__m")
-        )
     w = W.partitionBy(id_col).orderBy(F.col("__dist").asc(), F.col("cl").asc())
     return (
         joined.withColumn("__r", F.row_number().over(w))
@@ -515,9 +486,10 @@ def kmeans_lloyd(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """`n_iters` deterministic Lloyd iterations from the label-seeded
-    centroids: re-assign (broadcast centroids, map-side struct-min
-    argmin) then re-average (sorted sequential fold — bit-identical to
-    the DuckDB oracle's `list_reduce(list(v ORDER BY id))`).
+    centroids: re-assign (`nearest_clusters`' map-only kernel over
+    the collected centroids) then re-average (sorted sequential fold
+    — bit-identical to the DuckDB oracle's
+    `list_reduce(list(v ORDER BY id))`).
 
     Returns the final centroid table (cl, c, nc). Each iteration is
     one map-only assignment pass plus one mean aggregation — the
@@ -551,9 +523,8 @@ def kmeans_clusters(
 
     All outputs are integers (ids/counts) so the oracle check is
     float-free; distances are compared, never emitted. Plan shape:
-    K-row centroid broadcasts + per-iteration (a) a map-only
-    assignment pass whose argmin PARTIAL-aggregates map-side
-    (min-struct, ~N pre-reduced rows on the exchange) and (b) the
+    K-row centroid reads + per-iteration (a) a map-only assignment
+    pass (no exchange) and (b) the
     centroid re-average, which shuffles each cluster's vectors to one
     task for the sorted sequential fold — the price of
     bit-reproducible float means (the oracle path; at 100 TB train
@@ -1774,20 +1745,6 @@ def pq_codebooks(
     ).select(F.col("e.s").alias("s"), "cw", F.col("e.c").alias("c"))
 
 
-# Same dispatch story as the dedup signature kernels: the per-
-# (piece, codeword) squared-L2 fold is interpreted, and the encode
-# fan-out (m x |codebook| evaluations per vector) is THE ingest-scan
-# cost of a PQ index at 100 TB. The Arrow kernel closes over the
-# collected codebook (m x C x sub doubles — KB, a bounded control-
-# plane read like the IVF centroid reads) and computes every
-# distance as vectorized numpy with a sequential cumsum, which is
-# bit-identical to the fold (products identical; (0.0 + x) == x; the
-# partial-sum order matches), so argmin-first == min(struct(d2, cw))
-# with ascending-cw codebooks and the DuckDB oracle never sees which
-# ran.
-PQ_ENCODE_IMPL = "arrow"
-
-
 def pq_encode(
     vecs: DataFrame,
     books: DataFrame,
@@ -1795,32 +1752,21 @@ def pq_encode(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "vec",
-    impl: str | None = None,
 ) -> DataFrame:
-    """Encode each vector as `m` codeword ids — canonical entry
-    point; dispatches per PQ_ENCODE_IMPL (arrow kernel default,
-    expression form as `pq_encode_expr`, bit-identical)."""
-    impl = impl or PQ_ENCODE_IMPL
-    fn = pq_encode_arrow if impl == "arrow" else pq_encode_expr
-    return fn(vecs, books, m, dim, id_col=id_col, vec_col=vec_col)
+    """Encode each vector as `m` codeword ids: per subspace, the
+    codeword with minimum squared L2 distance (ties to the smaller
+    codeword id). Output: (id, s, code).
 
-
-def pq_encode_arrow(
-    vecs: DataFrame,
-    books: DataFrame,
-    m: int,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "vec",
-) -> DataFrame:
-    """`pq_encode_expr` as ONE Arrow `mapInPandas` pass over the
-    vectors: the codebook (tiny by construction) is collected once
-    driver-side and closed over; each batch computes the full
-    (n, C, sub) difference tensor per subspace in numpy, reduces it
-    with a sequential cumsum (bit-identical to the left fold), and
-    emits the (id, s, code) long rows directly — no explode, no
-    m x C-way join fan-out, no shuffle (the struct-min aggregate
-    disappears because the kernel sees all codewords at once).
+    ONE Arrow `mapInPandas` pass over the vectors — the encode
+    fan-out (m x |codebook| distances per vector) is THE ingest-scan
+    cost of a PQ index at 100 TB. The codebook (m x C x sub doubles,
+    tiny by construction) is collected once driver-side and closed
+    over, a bounded control-plane read like the IVF centroid reads;
+    each batch computes the full (n, C, sub) difference tensor per
+    subspace in numpy, reduces it with a sequential cumsum (the same
+    partial-sum order as a left fold, so the DuckDB oracle's
+    distances match bit for bit), and emits the (id, s, code) rows
+    directly — no explode, no m x C-way join fan-out, no shuffle.
     Batches sub-chunk so the tensor stays ~256 MB."""
     import numpy as np
     import pandas as pd
@@ -1850,12 +1796,10 @@ def pq_encode_arrow(
             T.StructField("code", T.LongType(), True),
         ]
     )
-    # degenerate-codebook parity with pq_encode_expr (whose broadcast
-    # INNER join simply drops what the codebook lacks): an empty
-    # codebook encodes nothing, and a subspace absent from the books
-    # emits no rows for that s — the dispatcher's "bit-identical
-    # either way" contract must hold on degenerate inputs too, not
-    # raise from max()/KeyError where the expression form degrades.
+    # degenerate codebooks degrade like an inner join against the
+    # books: an empty codebook encodes nothing, and a subspace absent
+    # from the books emits no rows for that s (instead of raising
+    # from max()/KeyError).
     present = sorted(s for s in cw_by_s if 0 <= s < m)
     if not present:
         return local_df(vecs.sparkSession, [], schema)
@@ -1892,48 +1836,6 @@ def pq_encode_arrow(
             )
 
     return base.mapInPandas(compute, schema)
-
-
-def pq_encode_expr(
-    vecs: DataFrame,
-    books: DataFrame,
-    m: int,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "vec",
-) -> DataFrame:
-    """Encode each vector as `m` codeword ids: per subspace, the
-    codeword with minimum squared L2 distance (ties to the smaller
-    codeword id). One explode to (vec, subspace) rows, a broadcast
-    join against the tiny codebook, and a struct-min aggregate —
-    map-side combinable, no window. Output: (id, s, code). NOTE the
-    d2 fold is interpreted — `pq_encode_arrow` is the adopted
-    default (PQ_ENCODE_IMPL)."""
-    sub = dim // m
-    pieces = vecs.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.struct(
-                    s.alias("s"),
-                    F.slice(vec_col, s * sub + 1, sub).alias("sv"),
-                ),
-            )
-        ).alias("e"),
-    ).select(id_col, F.col("e.s").alias("s"), F.col("e.sv").alias("sv"))
-    d2 = F.aggregate(
-        F.zip_with(F.col("sv"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        pieces.join(F.broadcast(books), "s")
-        .select(id_col, "s", d2.alias("d2"), "cw")
-        .groupBy(id_col, "s")
-        .agg(F.min(F.struct(F.col("d2"), F.col("cw"))).alias("mn"))
-        .select(id_col, "s", F.col("mn.cw").alias("code"))
-    )
 
 
 def knn_pq_rescore(
@@ -2141,9 +2043,9 @@ def knn_ivf_sq8(
     pipeline has a full DuckDB oracle — the property the trained
     KMeans variant gives up.
 
-    100 TB: the only corpus-sized shuffles are the single-assignment
-    struct-min aggregate (map-side combinable) and the probed
-    equi-join, whose per-row payload is the int8 code array; full
+    100 TB: the single assignment is map-only, so the only
+    corpus-sized shuffle is the probed equi-join, whose per-row
+    payload is the int8 code array; full
     vectors are touched only for Q x rerank rescore rows.
     """
     from pyspark.sql import Window as W
@@ -2290,12 +2192,13 @@ def knn_ivf_pq(
     are rescored with exact cosine.
 
     Determinism: label-seeded Lloyd centroids for BOTH quantizers,
-    struct-min code assignment, and the ADC sums its m partials in
+    argmin-first code assignment (ties to the smaller codeword), and
+    the ADC sums its m partials in
     FIXED subspace order — the composed pipeline keeps a full DuckDB
     oracle, the property the trained-KMeans variant gives up.
 
-    100 TB: corpus-sized artifacts are the single-assignment
-    struct-min aggregate, the (id, s, code) frame, and two bounded
+    100 TB: corpus-sized artifacts are the map-only single
+    assignment, the (id, s, code) frame, and two bounded
     equi-joins (probed cells, then the broadcast LUT on tiny uniform
     keys); full vectors are touched only for Q x rerank rescore rows.
     """

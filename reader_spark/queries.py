@@ -842,7 +842,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = vecs.alias("a")
     # pinned self-join: decide the hint from the materialized cache
-    # size (impl-invariant), not the interpreted-fold-inflated plan
+    # size (plan-independent), not the interpreted-fold-inflated plan
     # estimate — the r12 should_broadcast_pinned pattern. The probe
     # side is spread above, so a broadcast build never serializes
     # the pair stage.
@@ -9905,206 +9905,6 @@ def _fresh_entry(
     wrapped.__doc__ = fn.__doc__
     return wrapped
 
-
-# --- r7 driver-window rotation -------------------------------------
-# The driver samples the first 50 CATALOG entries. Round-7 window:
-# the 13 entries with NO green driver verdict in r1-r6 — mixture_plan
-# (red r4-r6 on an oracle HUGEINT dtype, cast fixed this round) plus
-# the 12 r5 additions the driver never sampled — followed by every
-# query whose code paths changed this round (sampled_quantiles'
-# nearest-rank rewrite; the CDC pipeline behind the log-source
-# restart fix and the DDL database gate), then r5/r6-green fillers.
-# — then the four never-sampled r7 additions (the kmeans/clustering
-# family). With this window green, all 163 catalog entries have a
-# green driver verdict in r1∪…∪r7. Everything rotated out
-# (cohort_retention, incremental_snapshot, funnel_events,
-# price_outliers_mad, and the r5/r6 fillers) is at-least-double-green
-# (r5 AND r6 sampled the same window) with code untouched since.
-_WINDOW_R7 = [
-    # no green driver verdict yet (r6 verdict item 6)
-    "mixture_plan", "scd2_user_state", "event_transitions",
-    "events_ewma", "cms_term_freq", "contrastive_pairs",
-    "join_skew_report", "knn_binary", "curation_audit",
-    "props_key_census", "split_leakage", "event_path_trigrams",
-    "sampled_quantiles",
-    # code paths changed this round (restart fix / DDL gate)
-    "cdc_e2e_pipeline", "c5_schema_asof", "cdc_reconcile",
-    # r5/r6 double-green fillers, heaviest operator families first
-    "dedup_exact_normalized", "dedup_incremental", "semantic_dedup",
-    "contamination_check", "canonical_docs", "passage_dedup",
-    # source_overlap rotated out (r5/r6 double-green, code untouched)
-    # for the round-7 decontamination apply
-    "dedup_containment", "duplicate_spans", "decontaminate_train",
-    "image_phash_dedup", "pagerank_neardup", "triangles_neardup",
-    "kcore_neardup", "knn_pq", "knn_sq8", "knn_ivf_sq8",
-    "knn_filtered", "text_bm25_indexed", "text_bm25",
-    "hybrid_search_rrf", "heavy_hitters",
-    # quality_mixture rotated out (r5/r6 double-green, code untouched)
-    # for the round-7 materialized-graph-index query
-    # mixture_apply rotated out (r5/r6 double-green, code untouched)
-    # for the round-7 span-excision query
-    "kmv_distinct", "remove_dup_spans", "lpa_communities_indexed",
-    "record_linkage",
-    # new this round (never sampled)
-    "embedding_clusters", "cluster_sample", "semdedup_prune",
-    "cluster_health", "trigram_search_indexed", "ann_recall_report",
-    "knn_ivf_pq", "budget_select", "lpa_communities",
-]
-assert len(_WINDOW_R7) == 50 and set(_WINDOW_R7) <= set(CATALOG)
-
-# --- r8 driver-window rotation -------------------------------------
-# With round 7 green, EVERY catalog entry now has a green driver
-# verdict (r1 union ... r7). Round-8 window: the two NEW queries
-# (canonical_docs_indexed — the incremental component map — and
-# source_overlap_kmv), lpa_communities_indexed (reads the graph index
-# whose update path gained the self-loop guard this round), then the
-# STALEST greens: all 23 entries last sampled in round 1, and 24 of
-# the round-3 cohort (dedup/knn/envelope families first — several sit
-# behind this round's atomic_dir and dedup.py edits). Rotated-out
-# entries are all round-7 green with code untouched since, except the
-# r3 leftovers (TPC-H batch + converters) which stay multi-round
-# green and rotate in next round.
-# --- r9 driver-window rotation --------------------------------------
-# 10 never-sampled queries (the r8 post-window categorical-drift family
-# + census, and this round's embedding/quantile drift + freshness), 4 entries whose code
-# paths changed this round (transfer.py truncate/manifest ordering ->
-# k3/cdc_reconcile; similarity.py additions -> knn_ivf; sketches.py
-# cms pointer-flip -> cms_term_freq), then the stalest greens: the 4
-# remaining r1-sampled entries, the full 23-wide r3 cohort, and 11 of
-# the r4 cohort. Every window entry is multi-round green except the
-# never-sampled six.
-_WINDOW_R9 = [
-    # new / never driver-sampled
-    "snapshot_drift_categorical", "snapshot_drift_categorical_summary",
-    "snapshot_drift_categorical_by_group", "embedding_drift",
-    "embedding_drift_summary", "component_census",
-    "snapshot_drift_quantiles", "source_freshness",
-    "embedding_drift_by_group", "lsh_recall_audit",
-    # reads code changed this round
-    "k3_transfer_dedupe", "cdc_reconcile", "knn_ivf", "cms_term_freq",
-    # stalest: last sampled round 1
-    "percentiles", "pivot_status", "semi_join_customers",
-    "set_ops_customers",
-    # last sampled round 3
-    "events_cube", "events_rollup_multigrain", "p4_invalid_nulling",
-    "p7_ddl_filter", "q10_returned_items", "q11_important_parts",
-    "q12_ship_priority", "q14_promo_effect", "q15_top_supplier",
-    "q18_large_volume", "q19_discounted_revenue", "q22_global_sales",
-    "q5_local_supplier", "q6_forecast_revenue", "q7_volume_shipping",
-    "q8_market_share", "q9_product_profit", "range_join_bands",
-    "text_fingerprint", "text_lang_id", "text_quality", "text_tokens",
-    "window_frames",
-    # last sampled round 4 (first 9; the rest rotate in next round)
-    "array_functions", "audio_spectrum", "clean_corpus",
-    "data_quality_report", "doc_chunks", "json_props_stats",
-    "multimodal_resize", "pii_scrub", "pmi_bigrams",
-]
-
-_WINDOW_R8 = [
-    # new this round (never sampled)
-    "canonical_docs_indexed", "source_overlap_kmv", "snapshot_drift",
-    "split_by_component", "snapshot_drift_summary",
-    "snapshot_drift_by_group",
-    # reads code changed this round (self-loop guard, cc hook)
-    "lpa_communities_indexed",
-    # stalest: last sampled round 1 (percentiles/pivot_status stay
-    # r1-green with untouched code; they rotate in next round)
-    "anti_join_customers", "approx_distinct_users", "date_functions",
-    "events_hourly", "events_resample_locf", "lead_lag_events",
-    "max_order_per_customer",
-    "q13_customer_distribution", "q16_supplier_count",
-    "q20_excess_supply", "q2_min_supplier", "q4_order_priority",
-    "rollup_sales", "running_totals", "sample_hash_mod",
-    "sessionization",
-    "small_quantity_orders", "string_functions", "topk_per_group",
-    # last sampled round 3: dedup/knn/scan/envelope families
-    "k3_transfer_dedupe", "asof_join_orders", "b1_chunked_scan",
-    "c10_json_extract", "dedup_components", "dedup_exact",
-    "dedup_minhash_lsh", "dedup_near_dup", "dedup_ngram",
-    "dedup_simhash", "dedup_simhash_pairs", "embedding_near_dup",
-    "knn_bruteforce", "knn_ivf", "multimodal_features",
-    "p1_projection", "p2_value_parse", "p3_wire_converters",
-    "p5_envelope", "s1_snapshot_scan", "s2_pk_bounds",
-    "text_winnowing", "q1_pricing_summary", "q3_shipping_priority",
-]
-assert len(_WINDOW_R8) == 50 and set(_WINDOW_R8) <= set(CATALOG)
-assert len(_WINDOW_R9) == 50 and set(_WINDOW_R9) <= set(CATALOG)
-
-# --- r10 driver-window rotation --------------------------------------
-# 2 new queries (lsh_tuning_table, decontaminate_incremental), then
-# EVERY query whose results or code paths moved with this round's
-# banding change (the whole near-dup/graph/split/decontaminate family
-# rides the k=128 default; lsh_recall_audit re-anchored; k3/
-# cdc_reconcile sit behind the transfer layout pin;
-# embedding_drift_summary gained the empty-wave verdict guard), then
-# the stalest greens: the 15 remaining r4-sampled entries and 12 of
-# the r6 cohort. Per the standing rule nothing goes unsampled for
-# more than ~3 rounds.
-_WINDOW_R10 = [
-    # new this round (never driver-sampled)
-    "lsh_tuning_table", "decontaminate_incremental",
-    # results/code paths changed this round
-    "lsh_recall_audit", "dedup_minhash_lsh", "dedup_near_dup",
-    "dedup_ngram", "dedup_components", "dedup_incremental",
-    "canonical_docs", "canonical_docs_indexed", "component_census",
-    "split_by_component", "split_leakage", "decontaminate_train",
-    "source_overlap", "pagerank_neardup", "triangles_neardup",
-    "kcore_neardup", "lpa_communities", "lpa_communities_indexed",
-    "embedding_drift_summary", "k3_transfer_dedupe", "cdc_reconcile",
-    # stalest: last sampled round 4
-    "q21_waiting_supplier", "quality_repetition", "reservoir_sample",
-    "shard_pack_concat", "sliding_trending", "source_quality_report",
-    "source_top_terms", "stratified_sample", "temperature_resample",
-    "text_shard_pack", "text_weighted_sample", "unigram_logprob",
-    "value_histogram", "video_frames", "vocab_coverage",
-    # last sampled round 6 (first 12; the rest rotate next round)
-    "audio_fingerprint_dedup", "bigram_logprob", "cohort_retention",
-    "customer_rfm", "dataset_split", "doc_keywords", "doc_novelty",
-    "epoch_shuffle", "events_anomaly", "events_wow_trends",
-    "frame_match_search",
-    # r10 late addition: the OPH scheme audit (never sampled);
-    # funnel_events (r6-green) rotates to next round instead
-    "lsh_recall_audit_oph",
-]
-assert len(_WINDOW_R10) == 50 and set(_WINDOW_R10) <= set(CATALOG)
-
-# --- r11 driver-window rotation --------------------------------------
-# 2 new queries (degenerate-doc band-guard witness, OPH density
-# report), then every query whose code path moved this round (the
-# Arrow signature kernels sit under the whole minhash/banding family;
-# decontaminate_incremental changed its unpinned-index contract; k3/
-# cdc_reconcile sit behind the transfer layout probe), then ALL 15
-# r6-stale entries the r10 verdict listed (watch item #4), then 20 of
-# the 39 r7-sampled entries — dedup-adjacent ones first. The 19
-# remaining r7 entries front the r12 window (they hit 4 rounds stale
-# then; standing rule: nothing unsampled for more than ~3 rounds).
-_WINDOW_R11 = [
-    # new this round (never driver-sampled)
-    "dedup_degenerate_docs", "oph_density_report",
-    "bloom_seen_filter", "bloom_tuning_table",
-    # code paths changed this round (Arrow kernels / pins / probes)
-    "dedup_minhash_lsh", "dedup_near_dup", "dedup_incremental",
-    "decontaminate_incremental", "decontaminate_train",
-    "split_leakage", "source_overlap", "lsh_recall_audit",
-    "lsh_recall_audit_oph", "lsh_tuning_table", "canonical_docs",
-    "k3_transfer_dedupe", "cdc_reconcile",
-    # r6-stale cohort, complete (last driver-sampled round 6)
-    "funnel_events", "incremental_snapshot", "market_basket",
-    "mixture_apply", "ohlc_bars", "pack_sequences",
-    "price_outliers_mad", "quality_mixture", "session_window_native",
-    "supplier_hhi", "term_stats", "time_decay_features",
-    "trigram_search", "vector_quality_report",
-    "video_fingerprint_dedup",
-    # r7-sampled, dedup-adjacent first
-    "passage_dedup", "dedup_containment", "dedup_exact_normalized",
-    "semantic_dedup", "contamination_check", "duplicate_spans",
-    # r7-sampled, rest of this round's slice
-    "ann_recall_report", "budget_select", "c5_schema_asof",
-    "cdc_e2e_pipeline", "cluster_health", "cluster_sample",
-    "contrastive_pairs", "curation_audit", "embedding_clusters",
-    "event_path_trigrams", "event_transitions", "events_ewma",
-]
-assert len(_WINDOW_R11) == 50 and set(_WINDOW_R11) <= set(CATALOG)
 
 # --- r12 driver-window rotation --------------------------------------
 # The complete 21-query r7-stale cohort FIRST (4 driver-rounds stale —

@@ -13,6 +13,25 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# The default driver heap is a share of physical memory, capped at
+# 48g: a local[N] JVM (driver and executors in one process, with the
+# Python workers beside it) must never be sized past the machine, or
+# the OS kills it instead of Spark spilling.
+DRIVER_MEM_CAP_GB = 48
+DRIVER_MEM_FRACTION = 0.4
+
+
+def default_driver_mem(total_bytes: int | None = None) -> str:
+    """Default `spark.driver.memory`: DRIVER_MEM_FRACTION of physical
+    memory in whole GiB, at least 1g and at most DRIVER_MEM_CAP_GB
+    (e.g. 6g on a 15 GiB host, 48g from 120 GiB up). `total_bytes`
+    defaults to this host's physical memory.
+    SPARK_GRAFT_DRIVER_MEM overrides the result in `get_spark`."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    gb = int(total_bytes * DRIVER_MEM_FRACTION) >> 30
+    return f"{min(DRIVER_MEM_CAP_GB, max(1, gb))}g"
+
 
 def get_spark(
     app_name: str = "reader_spark",
@@ -41,7 +60,10 @@ def get_spark(
         # Driver fixtures store events.ts as TIMESTAMP(NANOS); Spark
         # has no nanos type — read as long and convert in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         # Throughput GC for batch analytics: the default G1 collector
         # spends minutes growing/ compacting regions under the
         # allocation burst of wide decimal/row aggregations (measured:

@@ -22,19 +22,13 @@ def spark():
     # execution of every catalog query is still exercised by the
     # oracle gate (scripts/check.py uses the production session
     # factory) and by bench.py. Set SPARK_GRAFT_TEST_AQE=1 to run
-    # the suite under AQE again.
-    cpus = int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))
+    # the suite under AQE again. Cores and shuffle partitions follow
+    # SPARK_GRAFT_CPUS (session.DEFAULT_CPUS), like every other entry
+    # point.
     extra = {}
     if os.environ.get("SPARK_GRAFT_TEST_AQE", "0") == "0":
         extra["spark.sql.adaptive.enabled"] = "false"
-    s = get_spark(
-        "tests",
-        cpus=cpus,
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_TEST_SHUFFLE", str(cpus))
-        ),
-        extra_conf=extra,
-    )
+    s = get_spark("tests", extra_conf=extra)
     yield s
 
 

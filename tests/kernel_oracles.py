@@ -1,0 +1,172 @@
+"""Column-expression oracles for the Arrow kernels.
+
+Each operator in `reader_spark.operators` ships one implementation: a
+vectorized Arrow/numpy `mapInPandas` kernel. The pure column-expression
+forms below compute the same outputs with zero Python workers, in the
+same shape the DuckDB oracles mirror. Tests compare each kernel to its
+oracle bit for bit:
+
+- `minhash_signature_expr` vs `dedup.minhash_signature`
+- `simhash_expr` vs `dedup.simhash`
+- `pq_encode_expr` vs `similarity.pq_encode`
+- `nearest_cluster_expr` vs `similarity.nearest_clusters(..., nprobe=1)`
+
+They are test code only: the interpreted higher-order-function folds
+run outside whole-stage codegen and lost every A/B against the kernels.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+from reader_spark.operators.dedup import (
+    MINHASH_P,
+    ensure_parallelism,
+    md5_base_mod,
+    md5_hash64,
+    minhash_mix_params,
+    word_set,
+)
+from reader_spark.operators.similarity import dot
+
+
+def minhash_signature_expr(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 8,
+    hashes_col: str | None = None,
+) -> DataFrame:
+    """MinHash signature as `num_hashes` columns h0..h{k-1}.
+
+    No shuffle: one md5 per token (materialized once as an
+    intermediate array column so Catalyst doesn't duplicate it per
+    seed), then `num_hashes` affine mixes + array_min — pure
+    projections, no Python workers.
+
+    hashes_col: name of a precomputed token-hash array column (see
+    `token_hashes`) — skips the md5 pass entirely."""
+    if hashes_col is not None:
+        base = docs.select(F.col(id_col), F.col(hashes_col).alias("__hms"))
+    else:
+        base = ensure_parallelism(docs).select(
+            F.col(id_col),
+            F.transform(word_set(F.col(text_col)), md5_base_mod).alias("__hms"),
+        )
+
+    def mixer(seed: int):
+        a, b = minhash_mix_params(seed)
+        # NB: keep the lambda unary — a 2-arg lambda would be treated
+        # by F.transform as (element, index).
+        return lambda h: (F.lit(a).cast("long") * h + F.lit(b)) % MINHASH_P
+
+    sig_cols = [
+        F.array_min(F.transform(F.col("__hms"), mixer(i))).alias(f"h{i}")
+        for i in range(num_hashes)
+    ]
+    return base.select(F.col(id_col), *sig_cols)
+
+
+def simhash_expr(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+                 bits: int = 63) -> DataFrame:
+    """63-bit SimHash, computed WITHOUT a shuffle.
+
+    Per doc: fold the token array into a 63-long sign-count vector
+    (`aggregate` + `zip_with`), then pack bits where the count is
+    positive. Linear in tokens, pure expressions."""
+    positions = F.sequence(F.lit(0), F.lit(bits - 1))
+    # 2^b lookup (shiftleft takes a Python int, not a Column).
+    pow2 = F.array(*[F.lit(1 << i).cast("long") for i in range(bits)])
+    # md5 once per token; the bit fold runs over the hash array.
+    hashes = F.transform(word_set(F.col(text_col)), lambda w: md5_hash64(w, "sim"))
+
+    def sign_vec(h: Column) -> Column:
+        return F.transform(
+            positions,
+            lambda b: F.when(F.getbit(h, b) == 1, F.lit(1).cast("long")).otherwise(
+                F.lit(-1).cast("long")
+            ),
+        )
+
+    docs = ensure_parallelism(docs)
+    counts = F.aggregate(
+        hashes,
+        F.array_repeat(F.lit(0).cast("long"), bits),
+        lambda acc, h: F.zip_with(acc, sign_vec(h), lambda x, y: x + y),
+    )
+    packed = F.aggregate(
+        F.zip_with(
+            counts,
+            positions,
+            lambda c, b: F.when(c > 0, F.element_at(pow2, b.cast("int") + 1)).otherwise(
+                F.lit(0).cast("long")
+            ),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    return docs.select(F.col(id_col), packed.alias("simhash"))
+
+
+def pq_encode_expr(
+    vecs: DataFrame,
+    books: DataFrame,
+    m: int,
+    dim: int,
+    id_col: str = "vec_id",
+    vec_col: str = "vec",
+) -> DataFrame:
+    """Encode each vector as `m` codeword ids: per subspace, the
+    codeword with minimum squared L2 distance (ties to the smaller
+    codeword id). One explode to (vec, subspace) rows, a broadcast
+    join against the tiny codebook, and a struct-min aggregate —
+    map-side combinable, no window. Output: (id, s, code)."""
+    sub = dim // m
+    pieces = vecs.select(
+        F.col(id_col),
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(m - 1)),
+                lambda s: F.struct(
+                    s.alias("s"),
+                    F.slice(vec_col, s * sub + 1, sub).alias("sv"),
+                ),
+            )
+        ).alias("e"),
+    ).select(id_col, F.col("e.s").alias("s"), F.col("e.sv").alias("sv"))
+    d2 = F.aggregate(
+        F.zip_with(F.col("sv"), F.col("c"), lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return (
+        pieces.join(F.broadcast(books), "s")
+        .select(id_col, "s", d2.alias("d2"), "cw")
+        .groupBy(id_col, "s")
+        .agg(F.min(F.struct(F.col("d2"), F.col("cw"))).alias("mn"))
+        .select(id_col, "s", F.col("mn.cw").alias("code"))
+    )
+
+
+def nearest_cluster_expr(
+    side: DataFrame, cents: DataFrame, id_col: str
+) -> DataFrame:
+    """nprobe=1 nearest centroid (squared-L2 argmin, ties to the
+    smaller cluster id) via a broadcast nested loop and
+    `min(struct(dist, cl))` — lexicographic struct-min == ORDER BY
+    (dist, cl). The groupBy on `id_col` collapses duplicate ids, so
+    compare on unique-id inputs. Emits `id_col` first, then the
+    passthrough columns, then `cl`."""
+    dist = F.col("nv") - F.lit(2.0) * dot(F.col("vec"), F.col("c")) + F.col("nc")
+    joined = side.join(F.broadcast(cents), F.lit(True)).withColumn("__dist", dist)
+    passthrough = [c for c in side.columns if c != id_col]
+    return (
+        joined.groupBy(id_col)
+        .agg(
+            F.min(F.struct(F.col("__dist"), F.col("cl"))).alias("__m"),
+            *[F.first(c).alias(c) for c in passthrough],
+        )
+        .withColumn("cl", F.col("__m.cl"))
+        .drop("__m")
+    )

@@ -1018,27 +1018,43 @@ def test_occupancy_cap_many_groups_antijoin_fallback(spark, monkeypatch):
     )
 
 
-def test_semantic_dedup_arrow_bucket_bit_identical(spark, sf_dir):
+def test_semantic_dedup_arrow_bucket_bit_identical(spark, sf_dir, monkeypatch):
     """r12 kernel: the Arrow bucket/norm pass == the expression form
     row-for-row (cumsum partial-sum order == the left fold; integer
     sign packing exact), and the full semantic_dedup output is
-    identical under either impl."""
+    identical on either side of the LSH_KERNEL_BYTES size cut."""
+    from reader_spark import cache
+    from reader_spark.operators import similarity as SIM
     from reader_spark.session import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
-    got = {
-        impl: sorted(
-            tuple(r)
-            for r in CU.semantic_dedup(emb, impl=impl).collect()
-        )
-        for impl in ("arrow", "expr")
-    }
-    assert got["arrow"] == got["expr"]
-    assert len(got["arrow"]) == emb.count()
+    planes = [CU.hyperplane(p, 64) for p in range(8)]
+    src = emb.select(
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").cast("array<double>").alias("vec"),
+    )
+    kernel = sorted(tuple(r) for r in CU._sem_vecs_arrow(src, planes).collect())
+    expr = sorted(
+        tuple(r)
+        for r in src.select(
+            "vid",
+            "vec",
+            CU.lsh_bucket(F.col("vec"), planes).alias("bucket"),
+            F.sqrt(SIM.dot(F.col("vec"), F.col("vec"))).alias("nrm"),
+        ).collect()
+    )
+    assert kernel == expr
+
+    small = sorted(tuple(r) for r in CU.semantic_dedup(emb).collect())
+    monkeypatch.setattr(CU, "LSH_KERNEL_BYTES", 0)
+    big = sorted(tuple(r) for r in CU.semantic_dedup(emb).collect())
+    cache.release_pins()
+    assert small == big
+    assert len(small) == emb.count()
 
 
 def test_semantic_dedup_auto_dispatch_size_aware(spark, sf_dir):
-    """The 'auto' default takes the expression form on small inputs
+    """semantic_dedup takes the expression form on small inputs
     (kernel fixed costs dominate below the crossover) and the Arrow
     kernel past LSH_KERNEL_BYTES — observable in the physical plan."""
     from reader_spark.session import read_table

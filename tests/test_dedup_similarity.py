@@ -52,14 +52,11 @@ def test_jaccard_verify_values(spark):
     assert vals[(0, 2)] == 0.0
 
 
-def test_jaccard_intersect_impl_parity(spark, monkeypatch):
-    """r13 dispatcher: the Arrow intersect kernel and the JVM
-    array_intersect expression emit byte-identical verified rows
-    (inter is an exact int either way; the jaccard division is the
-    same JVM expression over the same ints). The kernel lost the
-    r13 A/B (Arrow transfer of the token arrays dominates at the
-    fixture's array lengths) so "expr" is the default, but the
-    parity contract keeps the kernel honest."""
+def test_jaccard_intersect_impl_parity(spark):
+    """Every pair of a small corpus at threshold 0.0 yields exactly
+    the hand-computed token-set Jaccard, rounded to 6 places — the
+    duplicate pair (0, 6) at 1.0, the empty doc 5 at 0.0 against
+    everything, disjoint pairs at 0.0 (kept: 0.0 >= threshold)."""
     texts = [
         "a b c d", "a b c e", "x y z w", "a b c d e f",
         "p q", "", "a b c d", "p q r s t u v w",
@@ -69,14 +66,25 @@ def test_jaccard_intersect_impl_parity(spark, monkeypatch):
         [(i, j) for i in range(len(texts)) for j in range(i + 1, len(texts))],
         ["doc_a", "doc_b"],
     )
-    got = {}
-    for impl in ("expr", "arrow"):
-        monkeypatch.setattr(DD, "INTERSECT_IMPL", impl)
-        got[impl] = sorted(
-            tuple(r) for r in DD.jaccard_verify(pairs, df, threshold=0.0).collect()
-        )
-    assert got["expr"] == got["arrow"]
-    assert len(got["expr"]) > 0
+    got = sorted(
+        tuple(r) for r in DD.jaccard_verify(pairs, df, threshold=0.0).collect()
+    )
+    overlapping = {
+        (0, 1): 0.6,  # {a,b,c} / {a,b,c,d,e}
+        (0, 3): 0.666667,  # {a,b,c,d} / {a..f}
+        (0, 6): 1.0,  # identical texts
+        (1, 3): 0.666667,  # {a,b,c,e} / {a..f}
+        (1, 6): 0.6,
+        (2, 7): 0.090909,  # {w} / 11 distinct tokens
+        (3, 6): 0.666667,
+        (4, 7): 0.25,  # {p,q} / {p..w}
+    }
+    want = sorted(
+        (i, j, overlapping.get((i, j), 0.0))
+        for i in range(len(texts))
+        for j in range(i + 1, len(texts))
+    )
+    assert got == want
 
 
 def test_simhash_similar_docs_close(spark):
@@ -1107,11 +1115,13 @@ def test_neardup_index_params_pin_wins(spark, tmp_path, sf_dir):
 
 
 def test_minhash_arrow_bit_identical_to_expression(spark, sf_dir):
-    """The Arrow (mapInPandas + numpy) signature path must be
-    BIT-IDENTICAL to the expression form — same md5-base hashes, same
-    affine mix mod P (all values < 2^60, int64 never overflows), same
-    all-NULL rows for empty/NULL docs — so either can feed the same
-    banding, index layout, and DuckDB oracles interchangeably."""
+    """The Arrow (mapInPandas + numpy) signature kernel must be
+    BIT-IDENTICAL to the expression-form oracle — same md5-base
+    hashes, same affine mix mod P (all values < 2^60, int64 never
+    overflows), same all-NULL rows for empty/NULL docs — so it feeds
+    the banding, index layout, and DuckDB oracles unchanged."""
+    from kernel_oracles import minhash_signature_expr
+
     from reader_spark.operators import dedup as DD
 
     edge = spark.createDataFrame(
@@ -1123,28 +1133,21 @@ def test_minhash_arrow_bit_identical_to_expression(spark, sf_dir):
         edge,
         spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200),
     ):
-        exp = DD.minhash_signature_expr(df, num_hashes=32).orderBy(
+        exp = minhash_signature_expr(df, num_hashes=32).orderBy(
             "doc_id"
         ).collect()
-        arr = DD.minhash_signature_arrow(df, num_hashes=32).orderBy(
+        arr = DD.minhash_signature(df, num_hashes=32).orderBy(
             "doc_id"
         ).collect()
         assert [tuple(r) for r in exp] == [tuple(r) for r in arr]
-    # and the canonical entry point dispatches per MINHASH_IMPL /
-    # the impl override, producing the same rows either way
-    one = DD.minhash_signature(edge, num_hashes=8, impl="expr").orderBy(
-        "doc_id"
-    ).collect()
-    two = DD.minhash_signature(edge, num_hashes=8, impl="arrow").orderBy(
-        "doc_id"
-    ).collect()
-    assert [tuple(r) for r in one] == [tuple(r) for r in two]
 
 
 def test_simhash_arrow_bit_identical_to_expression(spark):
-    """The Arrow SimHash kernel must equal the expression fold
+    """The Arrow SimHash kernel must equal the expression-fold oracle
     bit-for-bit: same sign counts, same count > 0 bit test, NULL
-    text -> NULL simhash, and the dispatcher honors impl."""
+    text -> NULL simhash."""
+    from kernel_oracles import simhash_expr
+
     from reader_spark.operators import dedup as DD
 
     docs = spark.createDataFrame(
@@ -1152,12 +1155,9 @@ def test_simhash_arrow_bit_identical_to_expression(spark):
          (4, " ".join(f"t{i}" for i in range(700)))],
         ["doc_id", "text"],
     )
-    e = DD.simhash_expr(docs).orderBy("doc_id").collect()
-    a = DD.simhash_arrow(docs).orderBy("doc_id").collect()
+    e = simhash_expr(docs).orderBy("doc_id").collect()
+    a = DD.simhash(docs).orderBy("doc_id").collect()
     assert [tuple(r) for r in e] == [tuple(r) for r in a]
-    d1 = DD.simhash(docs, impl="expr").orderBy("doc_id").collect()
-    d2 = DD.simhash(docs, impl="arrow").orderBy("doc_id").collect()
-    assert [tuple(r) for r in d1] == [tuple(r) for r in d2]
 
 
 def test_oph_build_records_density_and_falls_back_on_short_docs(
@@ -1368,10 +1368,11 @@ def test_oph_signature_scheme(spark, tmp_path, sf_dir):
 
 
 def test_pq_encode_arrow_bit_identical_to_expression(spark, sf_dir):
-    """The Arrow PQ encoder == the expression form row-for-row: same
-    squared-L2 partial-sum order (sequential cumsum == left fold),
-    same tie-to-smaller-codeword rule (argmin-first over
-    ascending-cw codebooks == min(struct(d2, cw)))."""
+    """The Arrow PQ encoder == the expression-form oracle
+    row-for-row: same squared-L2 partial-sum order (sequential cumsum
+    == left fold), same tie-to-smaller-codeword rule (argmin-first
+    over ascending-cw codebooks == min(struct(d2, cw)))."""
+    from kernel_oracles import pq_encode_expr
     from pyspark.sql import functions as F
 
     from reader_spark.operators import similarity as SI
@@ -1388,10 +1389,10 @@ def test_pq_encode_arrow_bit_identical_to_expression(spark, sf_dir):
     from reader_spark.cache import pin
 
     books = pin(books)
-    e = SI.pq_encode_expr(vecs, books, m, dim).orderBy(
+    e = pq_encode_expr(vecs, books, m, dim).orderBy(
         "vec_id", "s"
     ).collect()
-    a = SI.pq_encode_arrow(vecs, books, m, dim).orderBy(
+    a = SI.pq_encode(vecs, books, m, dim).orderBy(
         "vec_id", "s"
     ).collect()
     assert [tuple(r) for r in e] == [tuple(r) for r in a]
@@ -1399,36 +1400,41 @@ def test_pq_encode_arrow_bit_identical_to_expression(spark, sf_dir):
 
 def test_nearest_clusters_arrow_identical_to_expression(spark, sf_dir):
     """The Arrow nprobe=1 assignment == the expression struct-min
-    path: same dot (sequential cumsum == left fold), same
+    oracle: same dot (sequential cumsum == left fold), same
     (nv - 2*dot) + nc op order, argmin-first over ascending-cl
-    centroids == min(struct(dist, cl))."""
+    centroids == min(struct(dist, cl)). Centroids come from the
+    kmeans_assign pipeline (two Lloyd iterations)."""
+    from kernel_oracles import nearest_cluster_expr
+
     from reader_spark.cache import release_pins
     from reader_spark.operators import similarity as SI
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     try:
+        vecs = SI._kmeans_vecs(emb, "vec_id", "embedding", "label")
+        cents = SI.kmeans_lloyd(vecs, n_iters=2)
+        side = vecs.drop("cluster")
         arrow = sorted(
             (r["vec_id"], r["cl"])
-            for r in SI.kmeans_assign(emb).collect()
+            for r in SI.nearest_clusters(side, cents, 1, "vec_id").collect()
         )
-        release_pins()
-        SI.NEAREST_IMPL = "expr"
         expr = sorted(
             (r["vec_id"], r["cl"])
-            for r in SI.kmeans_assign(emb).collect()
+            for r in nearest_cluster_expr(side, cents, "vec_id").collect()
         )
         assert arrow == expr
+        assert len(arrow) == emb.count()
     finally:
-        SI.NEAREST_IMPL = "arrow"
         release_pins()
 
 
 def test_pq_encode_degenerate_codebooks_parity(spark, sf_dir):
     """r12 (advice): the arrow encoder must DEGRADE exactly like the
-    expression form on degenerate codebooks — empty books encode
-    nothing (no ValueError from max()), and a subspace absent from
-    the books emits no rows for that s (no worker KeyError) — the
-    'bit-identical either way' dispatcher contract on bad inputs."""
+    expression-form oracle on degenerate codebooks — empty books
+    encode nothing (no ValueError from max()), and a subspace absent
+    from the books emits no rows for that s (no worker KeyError) —
+    the bit-identity contract holds on bad inputs too."""
+    from kernel_oracles import pq_encode_expr
     from pyspark.sql import functions as F
 
     from reader_spark.operators import similarity as SI
@@ -1444,18 +1450,18 @@ def test_pq_encode_degenerate_codebooks_parity(spark, sf_dir):
     full_books = SI.pq_codebooks(vecs, m, dim)
 
     empty_books = full_books.limit(0)
-    for impl in (SI.pq_encode_arrow, SI.pq_encode_expr):
-        out = impl(vecs, empty_books, m, dim)
+    for encode in (SI.pq_encode, pq_encode_expr):
+        out = encode(vecs, empty_books, m, dim)
         assert out.count() == 0
         assert out.columns == ["vec_id", "s", "code"]
 
-    # drop subspace 3 entirely: both impls emit rows only for the
-    # 7 remaining subspaces, identically
+    # drop subspace 3 entirely: kernel and oracle emit rows only for
+    # the 7 remaining subspaces, identically
     holey = full_books.filter(F.col("s") != 3)
-    e = SI.pq_encode_expr(vecs, holey, m, dim).orderBy(
+    e = pq_encode_expr(vecs, holey, m, dim).orderBy(
         "vec_id", "s"
     ).collect()
-    a = SI.pq_encode_arrow(vecs, holey, m, dim).orderBy(
+    a = SI.pq_encode(vecs, holey, m, dim).orderBy(
         "vec_id", "s"
     ).collect()
     assert [tuple(r) for r in e] == [tuple(r) for r in a]

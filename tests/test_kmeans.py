@@ -454,29 +454,21 @@ def test_ivf_drift_check_verdict_row(spark, sf_dir, tmp_path):
 
 def test_pinned_broadcast_decision_impl_invariant(spark, sf_dir):
     """r12 regression guard (r11 verdict #2): the pre-execution
-    Catalyst estimate for kmeans_assign_scored swings ~17 orders of
+    Catalyst estimate for kmeans_assign_scored swung ~17 orders of
     magnitude between the arrow kernel and the expression form, so
-    any estimate-gated broadcast hint flips with the NEAREST_IMPL
-    default. should_broadcast_pinned decides from the MATERIALIZED
-    cache size, which must be identical either way."""
+    any estimate-gated broadcast hint flipped with the plan shape.
+    should_broadcast_pinned decides from the MATERIALIZED cache
+    size; at test scale that frame is KB, so the answer is yes."""
     from reader_spark import cache
     from reader_spark.operators import dedup as DD
 
     emb = _emb(spark, sf_dir)
-    decisions = {}
-    old = SIM.NEAREST_IMPL
+    p = SIM.kmeans_assign_scored(emb, n_iters=2).persist()
     try:
-        for impl in ("arrow", "expr"):
-            SIM.NEAREST_IMPL = impl
-            p = SIM.kmeans_assign_scored(emb, n_iters=2).persist()
-            decisions[impl] = DD.should_broadcast_pinned(p)
-            p.unpersist()
-            cache.release_pins()
+        assert DD.should_broadcast_pinned(p) is True
     finally:
-        SIM.NEAREST_IMPL = old
-    assert decisions["arrow"] == decisions["expr"]
-    # at test scale the materialized frame is KB — both must say yes
-    assert decisions["arrow"] is True
+        p.unpersist()
+        cache.release_pins()
 
 
 def test_semdedup_probe_side_parallel(spark, sf_dir):
@@ -506,9 +498,12 @@ def test_semdedup_probe_side_parallel(spark, sf_dir):
 
 
 def test_nearest_clusters_impl_parity_columns_and_rows(spark, sf_dir):
-    """Arrow and expression nprobe=1 assignment agree on column ORDER
-    (id first, passthrough, cl) even when the side frame's id column
-    is not first, and on row multiplicity (1:1 for unique ids)."""
+    """The Arrow nprobe=1 assignment and its expression oracle agree
+    on column ORDER (id first, passthrough, cl) even when the side
+    frame's id column is not first, and on row multiplicity (1:1 for
+    unique ids)."""
+    from kernel_oracles import nearest_cluster_expr
+
     emb = _emb(spark, sf_dir)
     vecs = emb.select(
         F.col("embedding").cast("array<double>").alias("vec"),
@@ -520,8 +515,8 @@ def test_nearest_clusters_impl_parity_columns_and_rows(spark, sf_dir):
     )
     side = vecs.drop("cluster")
     outs = {
-        impl: SIM.nearest_clusters(side, cents, 1, "vec_id", impl=impl)
-        for impl in ("arrow", "expr")
+        "arrow": SIM.nearest_clusters(side, cents, 1, "vec_id"),
+        "expr": nearest_cluster_expr(side, cents, "vec_id"),
     }
     assert outs["arrow"].columns == outs["expr"].columns
     assert outs["arrow"].columns[0] == "vec_id"

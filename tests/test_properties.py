@@ -954,18 +954,20 @@ def test_arrow_signature_kernels_equal_expression_forms(spark, docsets, k):
     three must emit the same NULL/0 degenerate rows). One fixture
     run can't cover chunk boundaries and mixed-empty batches; random
     corpora can. (The OPH kernel is covered by the reference-model
-    property above, which runs through the dispatcher.)"""
+    property above.)"""
+    from kernel_oracles import minhash_signature_expr, simhash_expr
+
     from reader_spark.operators import dedup as DD
 
     rows = [(i, " ".join(ws) if ws else None) for i, ws in enumerate(docsets)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    mh_e = DD.minhash_signature_expr(df, num_hashes=k).orderBy("doc_id")
-    mh_a = DD.minhash_signature_arrow(df, num_hashes=k).orderBy("doc_id")
+    mh_e = minhash_signature_expr(df, num_hashes=k).orderBy("doc_id")
+    mh_a = DD.minhash_signature(df, num_hashes=k).orderBy("doc_id")
     assert [tuple(r) for r in mh_e.collect()] == [
         tuple(r) for r in mh_a.collect()
     ], docsets
-    sh_e = DD.simhash_expr(df).orderBy("doc_id")
-    sh_a = DD.simhash_arrow(df).orderBy("doc_id")
+    sh_e = simhash_expr(df).orderBy("doc_id")
+    sh_a = DD.simhash(df).orderBy("doc_id")
     assert [tuple(r) for r in sh_e.collect()] == [
         tuple(r) for r in sh_a.collect()
     ], docsets
