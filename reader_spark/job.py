@@ -17,6 +17,8 @@ database + driver jar.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -240,7 +242,11 @@ def _run_streaming(spark: SparkSession, settings: Settings) -> dict[str, str]:
     the tail directory (production: the binlog-shipper landing zone);
     destination `transfer` merges into current table state, anything
     else lands the envelope log."""
-    from reader_spark.plans.cdc_mysql import run_pipeline, run_pipeline_merge
+    from reader_spark.plans.cdc_mysql import (
+        run_pipeline,
+        run_pipeline_merge,
+        snapshot_then_stream,
+    )
     from reader_spark.streaming.schema_history import SchemaAdapter
 
     src = settings.source
@@ -251,6 +257,8 @@ def _run_streaming(spark: SparkSession, settings: Settings) -> dict[str, str]:
     adapter = SchemaAdapter()
     history = src.options.get("history_path")
     snap_path = src.options.get("snapshot_path")
+    n_buckets = int(dest.options.get("n_buckets", 16))
+    cap = int(src.options.get("max_records_per_trigger", 0)) or None
     if dest.kind == "transfer" and snap_path:
         # reference main flow: snapshot first, then CDC from the
         # position the snapshot was cut at (plans/cdc_mysql.py::
@@ -258,8 +266,6 @@ def _run_streaming(spark: SparkSession, settings: Settings) -> dict[str, str]:
         # consistent per-table parquet the scanner produced; DDL for
         # the tables must be bootstrapped (history replay or
         # bootstrap_ddl list), mirroring SHOW CREATE TABLE.
-        from reader_spark.plans.cdc_mysql import snapshot_then_stream
-
         for stmt in src.options.get("bootstrap_ddl", []):
             adapter.apply_ddl(stmt, 0)
         snaps = {
@@ -268,32 +274,36 @@ def _run_streaming(spark: SparkSession, settings: Settings) -> dict[str, str]:
         }
         q = snapshot_then_stream(
             spark, snaps, log_dir, dest.path, ck, src.database, adapter,
-            history_path=history,
-            n_buckets=int(dest.options.get("n_buckets", 16)),
+            history_path=history, n_buckets=n_buckets,
             snapshot_position=src.options.get("snapshot_position"),
         )
     elif dest.kind == "transfer":
+        scd2, scd2_bucketed = (
+            str(dest.options.get(k, "")).lower() in ("1", "true", "yes")
+            for k in ("scd2", "scd2_bucketed")
+        )
         q = run_pipeline_merge(
             spark, log_dir, dest.path, ck, src.database, tables,
-            adapter, history_path=history,
-            n_buckets=int(dest.options.get("n_buckets", 16)),
-            scd2=str(dest.options.get("scd2", "")).lower()
-            in ("1", "true", "yes"),
-            scd2_bucketed=str(dest.options.get("scd2_bucketed", "")).lower()
-            in ("1", "true", "yes"),
-            max_per_trigger=int(
-                src.options.get("max_records_per_trigger", 0)
-            ) or None,
+            adapter, history_path=history, n_buckets=n_buckets,
+            scd2=scd2, scd2_bucketed=scd2_bucketed, max_per_trigger=cap,
         )
     else:
         q = run_pipeline(
             spark, log_dir, dest.path, ck, src.database, tables,
-            adapter, history_path=history,
-            max_per_trigger=int(
-                src.options.get("max_records_per_trigger", 0)
-            ) or None,
+            adapter, history_path=history, max_per_trigger=cap,
         )
-    q.awaitTermination(int(src.options.get("timeout_sec", 300)))
+    timeout = int(src.options.get("timeout_sec", 300))
+    if not q.awaitTermination(timeout):
+        # an undrained stream is a failure, not a success with a
+        # _metrics row and a query left running
+        q.stop()
+        err = q.exception()
+        if err is not None:
+            raise err
+        raise TimeoutError(
+            f"streaming job did not drain {log_dir} within "
+            f"timeout_sec={timeout}"
+        )
     return {t: f"{dest.path}/{t}" for t in tables}
 
 
@@ -312,45 +322,56 @@ def main(argv: list[str] | None = None) -> None:
         print(f"{table}\t{where}")
 
 
+def _drain_file_stream(
+    spark: SparkSession, src: SourceCfg, table: str, schema: str, body,
+    default_ck: str,
+) -> None:
+    """Drain the files landing under `<source options.path>/<table>`
+    (parquet for a parquet source, else JSON) through the foreachBatch
+    `body` with availableNow semantics: one run empties the backlog
+    exactly-once (checkpointed) and returns. A user-provided
+    checkpoint_dir is still suffixed per table: sequential streaming
+    queries over DIFFERENT input dirs must never share one checkpoint
+    (Spark's offset/seen-files logs would mix across sources —
+    backlog silently skipped or misattributed for the second and
+    later tables)."""
+    ck = (
+        f"{src.options['checkpoint_dir']}/{table}"
+        if "checkpoint_dir" in src.options
+        else default_ck
+    )
+    in_dir = f"{src.options['path']}/{table}"
+    reader = spark.readStream.schema(schema)
+    stream = reader.parquet(in_dir) if src.kind == "parquet" else reader.json(in_dir)
+    (
+        stream.writeStream.foreachBatch(body)
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def _run_index_stream(
     spark: SparkSession, settings: Settings
 ) -> dict[str, str]:
-    """index: {mode: stream} — keep an EXISTING index fresh from a
-    document/vector stream: jsonl (or parquet) files landing under
-    `<options.path>/<table>` stream through the kind's maintainer
-    body (neardup_index_maintainer / bm25_index_maintainer /
-    ivf_index_maintainer) with availableNow semantics: one run drains
-    the backlog exactly-once (checkpointed) and returns. Build the
-    index first with mode: build; replay safety is each maintainer's
-    own contract (toks-gate / bare-append / cell upsert)."""
+    """index: {mode: stream} — keep an EXISTING index fresh: drain
+    the document/vector files landing under `<options.path>/<table>`
+    (`_drain_file_stream`) through the kind's maintainer body
+    (neardup_index_maintainer / bm25_index_maintainer /
+    ivf_index_maintainer). Build the index first with mode: build;
+    replay safety is each maintainer's own contract (toks-gate /
+    bare-append / cell upsert)."""
     cfg = settings.index
     src = settings.source
     dest = settings.destination
     results: dict[str, str] = {}
     for table in src.tables:
         out = f"{dest.path}/{table.name}"
-        # a user-provided checkpoint_dir is still suffixed per table:
-        # sequential streaming queries over DIFFERENT input dirs must
-        # never share one checkpoint (Spark's offset/seen-files logs
-        # would mix across sources — backlog silently skipped or
-        # misattributed for the second and later tables)
-        ck = (
-            f"{src.options['checkpoint_dir']}/{table.name}"
-            if "checkpoint_dir" in src.options
-            else f"{out}/_stream_ckpt"
-        )
         if cfg.kind == "ivf":
-            schema = (
-                f"{cfg.id_column} long, "
-                f"{cfg.vector_column} array<double>"
-            )
+            schema = f"{cfg.id_column} long, {cfg.vector_column} array<double>"
         else:
             schema = f"{cfg.id_column} long, {cfg.text_column} string"
-        in_dir = f"{src.options['path']}/{table.name}"
-        if src.kind == "parquet":
-            stream = spark.readStream.schema(schema).parquet(in_dir)
-        else:
-            stream = spark.readStream.schema(schema).json(in_dir)
         if cfg.kind == "neardup":
             from reader_spark.operators.dedup import (
                 neardup_index_maintainer,
@@ -366,22 +387,16 @@ def _run_index_stream(
                 bm25_index_maintainer,
             )
 
+            body = bm25_index_maintainer(
+                out, n_buckets=cfg.n_buckets, text_col=cfg.text_column
+            )
             if cfg.id_column != "doc_id":
-                inner = bm25_index_maintainer(
-                    out, n_buckets=cfg.n_buckets, text_col=cfg.text_column
-                )
 
-                def body(df, bid, _inner=inner):
+                def body(df, bid, _inner=body):
                     _inner(
                         df.withColumnRenamed(cfg.id_column, "doc_id"), bid
                     )
-            else:
-                body = bm25_index_maintainer(
-                    out, n_buckets=cfg.n_buckets, text_col=cfg.text_column
-                )
         elif cfg.autorefit:
-            import os
-
             from reader_spark.operators.similarity import (
                 ivf_autorefit_maintainer,
                 ivf_health_write,
@@ -404,13 +419,9 @@ def _run_index_stream(
             body = ivf_index_maintainer(
                 out, id_col=cfg.id_column, vec_col=cfg.vector_column
             )
-        q = (
-            stream.writeStream.foreachBatch(body)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        _drain_file_stream(
+            spark, src, table.name, schema, body, f"{out}/_stream_ckpt"
         )
-        q.awaitTermination()
         results[table.name] = f"{out} (stream backlog drained)"
     return results
 
@@ -544,8 +555,6 @@ def _drift_quantile_keyed(df, cfg):
     expect: the configured group column, or an injected constant key
     for ungrouped tables (tiles are per-key by construction — one
     synthetic key makes the whole wave one tile)."""
-    from pyspark.sql import functions as F
-
     if cfg.group_column:
         return df, [cfg.group_column]
     return df.withColumn("__wave", F.lit("all")), ["__wave"]
@@ -652,8 +661,6 @@ def _run_checks(spark: SparkSession, settings: Settings) -> dict[str, str]:
     The reference enforces only PK-dedupe at flush
     (writers/transfer/writer.go:329-366); at warehouse scale the gate
     runs first so bad loads never need un-publishing."""
-    from pyspark.sql import functions as F
-
     cfg = settings.checks
     results: dict[str, str] = {}
     for table in settings.source.tables:
@@ -770,8 +777,6 @@ def _run_checks(spark: SparkSession, settings: Settings) -> dict[str, str]:
         # exact mergeSchema failure the long form exists to end. Move
         # the legacy log aside (still readable on its own) and start
         # the fixed-schema log fresh.
-        import os
-
         if os.path.isdir(log):
             try:
                 # mergeSchema: a dir that already MIXES wide and long
@@ -815,15 +820,14 @@ def _run_checks(spark: SparkSession, settings: Settings) -> dict[str, str]:
 def _run_drift_watch(
     spark: SparkSession, settings: Settings
 ) -> dict[str, str]:
-    """drift: {mode: watch} — stream files landing under
-    `<source options.path>/<table>` through the drift family's
-    foreachBatch watch body against the PUBLISHED reference
+    """drift: {mode: watch} — drain the files landing under
+    `<source options.path>/<table>` (`_drain_file_stream`) through
+    the drift family's watch body against the PUBLISHED reference
     (`<destination>/<table>/_driftref`, from a prior mode: baseline
-    run). availableNow semantics: one run drains the backlog
-    exactly-once (checkpointed) and returns; each micro-batch logs
-    one verdict row at `<destination>/<table>/_driftwatch`
-    (replace-on-replay by batch id — the watch bodies' contract).
-    All three families route by the configured column kind."""
+    run); each micro-batch logs one verdict row at
+    `<destination>/<table>/_driftwatch` (replace-on-replay by batch
+    id — the watch bodies' contract). All three families route by
+    the configured column kind."""
     from reader_spark.operators.curation import (
         drift_watch,
         drift_watch_categorical,
@@ -838,21 +842,12 @@ def _run_drift_watch(
         base = f"{dest.path}/{table.name}"
         ref_path = f"{base}/_driftref"
         log = f"{base}/_driftwatch"
-        ck = (
-            f"{src.options['checkpoint_dir']}/{table.name}"
-            if "checkpoint_dir" in src.options
-            else f"{base}/_driftwatch_ckpt"
-        )
         if cfg.vector_column is not None:
             schema = f"{cfg.vector_column} array<double>"
             body = embedding_drift_watch(
                 ref_path, log, cfg.vector_column, cfg.alert_delta
             )
         elif cfg.quantile_column is not None:
-            import os
-
-            from pyspark.sql import functions as F
-
             from reader_spark.operators.sketches import (
                 bottomk_tiles_write,
                 quantile_drift_watch,
@@ -883,14 +878,9 @@ def _run_drift_watch(
                 ref_path, cur_path, log, keys, cfg.quantile_column,
                 k=cfg.k, id_col=cfg.id_column, alert_ppm=cfg.alert_ppm,
             )
-            if cfg.group_column:
-                body = inner
-            else:
-                def body(batch_df, batch_id, _inner=inner):
-                    _inner(
-                        batch_df.withColumn("__wave", F.lit("all")),
-                        batch_id,
-                    )
+
+            def body(batch_df, batch_id, _inner=inner):
+                _inner(_drift_quantile_keyed(batch_df, cfg)[0], batch_id)
         elif cfg.category_column is not None:
             schema = f"{cfg.category_column} string"
             body = drift_watch_categorical(
@@ -899,18 +889,9 @@ def _run_drift_watch(
         else:
             schema = f"{cfg.value_column} double"
             body = drift_watch(ref_path, log, cfg.value_column, cfg.alert_ppm)
-        in_dir = f"{src.options['path']}/{table.name}"
-        if src.kind == "parquet":
-            stream = spark.readStream.schema(schema).parquet(in_dir)
-        else:
-            stream = spark.readStream.schema(schema).json(in_dir)
-        q = (
-            stream.writeStream.foreachBatch(body)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        _drain_file_stream(
+            spark, src, table.name, schema, body, f"{base}/_driftwatch_ckpt"
         )
-        q.awaitTermination()
         results[table.name] = log
     return results
 
@@ -952,8 +933,6 @@ def _run_sketch(spark: SparkSession, settings: Settings) -> dict[str, str]:
                 k=cfg.k, id_col=cfg.id_column,
             )
         else:  # cms
-            from pyspark.sql import functions as F
-
             from reader_spark.operators.sketches import cms_tiles_write
 
             cms_tiles_write(
@@ -967,13 +946,12 @@ def _run_sketch(spark: SparkSession, settings: Settings) -> dict[str, str]:
 def _run_sketch_stream(
     spark: SparkSession, settings: Settings
 ) -> dict[str, str]:
-    """sketch: {mode: stream} — keep EXISTING tiles fresh from files
-    landing under `<source options.path>/<table>` via the kind's
-    maintainer body (kmv_maintainer / bottomk_maintainer /
-    cms_maintainer) with availableNow semantics: one run drains the
-    backlog exactly-once (checkpointed; the tile merges themselves
-    are epoch-gated against crash replay) and returns. Build the
-    tiles first with mode: build; the delete path stays mode:
+    """sketch: {mode: stream} — keep EXISTING tiles fresh: drain the
+    files landing under `<source options.path>/<table>`
+    (`_drain_file_stream`) through the kind's maintainer body
+    (kmv_maintainer / bottomk_maintainer / cms_maintainer; the tile
+    merges themselves are epoch-gated against crash replay). Build
+    the tiles first with mode: build; the delete path stays mode:
     rebuild (monotone merges cannot un-merge)."""
     from reader_spark.operators.sketches import (
         bottomk_maintainer,
@@ -987,11 +965,6 @@ def _run_sketch_stream(
     results: dict[str, str] = {}
     for table in src.tables:
         out = f"{dest.path}/{table.name}"
-        ck = (
-            f"{src.options['checkpoint_dir']}/{table.name}"
-            if "checkpoint_dir" in src.options
-            else f"{out}_stream_ckpt"
-        )
         if cfg.kind == "cms":
             schema = f"{cfg.value_column} {cfg.value_type}"
             body = cms_maintainer(
@@ -1010,18 +983,9 @@ def _run_sketch_stream(
                     out, cfg.key_columns, cfg.value_column,
                     k=cfg.k, id_col=cfg.id_column,
                 )
-        in_dir = f"{src.options['path']}/{table.name}"
-        if src.kind == "parquet":
-            stream = spark.readStream.schema(schema).parquet(in_dir)
-        else:
-            stream = spark.readStream.schema(schema).json(in_dir)
-        q = (
-            stream.writeStream.foreachBatch(body)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        _drain_file_stream(
+            spark, src, table.name, schema, body, f"{out}_stream_ckpt"
         )
-        q.awaitTermination()
         results[table.name] = out
     return results
 
@@ -1035,8 +999,6 @@ def _bloom_ready(path: str) -> bool:
     readiness lets the rerun fall through to "no filter yet" (gate
     passes everything, the post-write publish creates the artifact
     properly; atomic_dir.publish handles the half-created dir)."""
-    import os
-
     from reader_spark.operators import atomic_dir
 
     if not os.path.isdir(path):
@@ -1300,8 +1262,6 @@ def _run_curate(spark: SparkSession, settings: Settings) -> dict[str, str]:
             # crashed-and-rerun wave re-folds the same bits; the
             # first run creates the filter (geometry pinned in the
             # artifact from then on).
-            import os as _os
-
             from reader_spark.operators import sketches as SK
 
             written = (

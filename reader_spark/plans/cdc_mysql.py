@@ -20,13 +20,18 @@ history for replay-on-boot (iterator.go:26-70).
 
 from __future__ import annotations
 
+import json
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from reader_spark.envelope import cdc_envelope
 from reader_spark.functions.localrel import local_df
+from reader_spark.operators.transfer import TransferWriter
 from reader_spark.streaming.binlog import gtid_dedupe_batch, gtid_highwater_filter
+from reader_spark.streaming.log_source import LogTailDataSource, LogTailStreamReader
 from reader_spark.streaming.schema_history import SchemaAdapter
 
 # Raw record shape emitted by a binlog decoder into the log files.
@@ -52,21 +57,14 @@ def open_stream(
     offset-YAML pattern) so the cap holds from the first
     post-restart trigger; the pipelines place it INSIDE the
     checkpoint dir so the two share a lifecycle."""
-    from reader_spark.streaming.log_source import LogTailDataSource
-
-    try:
-        spark.dataSource.register(LogTailDataSource)
-    except Exception:
-        pass  # already registered
+    spark.dataSource.register(LogTailDataSource)
     reader = (
         spark.readStream.format("logtail")
         .schema(BINLOG_SCHEMA)
         .option("path", path)
     )
     if start_offsets:
-        import json as _json
-
-        reader = reader.option("startoffsets", _json.dumps(start_offsets))
+        reader = reader.option("startoffsets", json.dumps(start_offsets))
     if max_per_trigger:
         reader = reader.option("maxrecordspertrigger", str(max_per_trigger))
     if statedir:
@@ -79,16 +77,7 @@ def log_position(log_dir: str) -> dict:
     reference records as Position when a snapshot is cut
     (sources/mysql/streaming/offset.go:12-79). A stream started from
     this position sees exactly the events AFTER the snapshot."""
-    import os as _os
-
-    pos = {}
-    if _os.path.isdir(log_dir):
-        for name in sorted(_os.listdir(log_dir)):
-            fp = _os.path.join(log_dir, name)
-            if name.endswith((".json", ".jsonl")) and _os.path.isfile(fp):
-                with open(fp) as f:
-                    pos[name] = sum(1 for _ in f)
-    return pos
+    return LogTailStreamReader.lengths(log_dir)
 
 
 def _apply_ddl_batch(
@@ -123,23 +112,20 @@ def _apply_ddl_batch(
         adapter.dump(history_path)
 
 
-def process_batch(
+def _gated_changes(
     batch: DataFrame,
     adapter: SchemaAdapter,
     db: str,
     tables: list[str],
-    history_path: str | None = None,
-    topic_prefix: str = "cdc",
-    gtid_highwater: dict[str, int] | None = None,
-    quarantine_path: str | None = None,
-) -> dict[str, DataFrame]:
-    """foreachBatch body (K1 Writer facade): apply DDL first (ordered
-    by seq — control events are few and collected to the driver, as
-    in the reference), then decode + envelope DML per table.
-
-    Returns {table: envelope_df} for the sink to publish; offset
-    commit happens via the checkpoint after this returns
-    (write-then-commit, writer.go:44-50)."""
+    history_path: str | None,
+    gtid_highwater: dict[str, int] | None,
+    quarantine_path: str | None,
+) -> dict[str, tuple[list[str], DataFrame]]:
+    """The CDC gate chain both batch bodies share: apply the batch's
+    DDL first (ordered by seq — control events are few and collected
+    to the driver, as in the reference), then gate the DML. Returns
+    {table: (active columns, that table's gated DML rows)} for every
+    requested table the schema registry knows."""
     _apply_ddl_batch(batch, adapter, db, history_path)
     # A DDL statement against a replicated table that matched NO
     # dispatcher rule is a potential missed schema mutation — the
@@ -148,8 +134,6 @@ def process_batch(
     # dead-letter log with its position and keep the stream running
     # (same contract as poison DML rows).
     if adapter.unmatched:
-        import logging
-
         for u in adapter.unmatched:
             logging.getLogger(__name__).warning(
                 "quarantining unmatched DDL at ts=%s: %s",
@@ -166,15 +150,8 @@ def process_batch(
                 "unix_ts long, tbl string, statement string, reason string",
             ).write.mode("append").json(f"{quarantine_path}/_ddl")
         adapter.unmatched.clear()
-    # Envelope mode has no destination table state to clear — the
-    # TRUNCATE maps to the transfer verb only in the MERGE pipeline
-    # (run_pipeline_merge). Drain the queue here so it cannot grow
-    # unbounded; downstream envelope consumers see the statement in
-    # the DDL/schema-history stream.
-    adapter.truncates.clear()
 
     first_version = adapter.history[0]["unix_ts"] if adapter.history else None
-    out: dict[str, DataFrame] = {}
     dml = batch.filter((F.col("kind") == "dml") & (F.col("db") == db))
     # resume gate first (drop replayed transactions below the GTID
     # checkpoint), then exact per-row replay dedupe within the batch
@@ -184,10 +161,42 @@ def process_batch(
         # late-data gate: events older than the oldest known schema
         # version cannot be decoded correctly -> dropped (dml.go:44-52)
         dml = dml.filter(F.col("ts_ms").cast("long") >= first_version)
-    for table in tables:
-        if table not in adapter.tables:
-            continue
-        cols = adapter.tables[table]
+    return {
+        table: (adapter.tables[table], dml.filter(F.col("tbl") == table))
+        for table in tables
+        if table in adapter.tables
+    }
+
+
+def process_batch(
+    batch: DataFrame,
+    adapter: SchemaAdapter,
+    db: str,
+    tables: list[str],
+    history_path: str | None = None,
+    topic_prefix: str = "cdc",
+    gtid_highwater: dict[str, int] | None = None,
+    quarantine_path: str | None = None,
+) -> dict[str, DataFrame]:
+    """foreachBatch body (K1 Writer facade): the shared gate chain,
+    then decode + envelope DML per table.
+
+    Returns {table: envelope_df} for the sink to publish; offset
+    commit happens via the checkpoint after this returns
+    (write-then-commit, writer.go:44-50)."""
+    gated = _gated_changes(
+        batch, adapter, db, tables, history_path, gtid_highwater,
+        quarantine_path,
+    )
+    # Envelope mode has no destination table state to clear — the
+    # TRUNCATE maps to the transfer verb only in the MERGE pipeline
+    # (run_pipeline_merge). Drain the queue here so it cannot grow
+    # unbounded; downstream envelope consumers see the statement in
+    # the DDL/schema-history stream.
+    adapter.truncates.clear()
+
+    out: dict[str, DataFrame] = {}
+    for table, (cols, rows) in gated.items():
         row_schema = T.StructType(
             [T.StructField(c, T.StringType()) for c in cols]
         )
@@ -199,7 +208,7 @@ def process_batch(
             [*row_schema.fields, T.StructField("_corrupt", T.StringType())]
         )
         opts = {"columnNameOfCorruptRecord": "_corrupt"}
-        shaped = dml.filter(F.col("tbl") == table).select(
+        shaped = rows.select(
             F.from_json("before", q_schema, opts).alias("before"),
             F.from_json("after", q_schema, opts).alias("after"),
             F.col("before").alias("before_raw"),
@@ -261,24 +270,16 @@ def decoded_changes(
     """Like `process_batch` but stops before the envelope: per table a
     flat change frame (decoded columns + op + seq) — the input shape
     of the transfer writer's MERGE paths. Delete rows take their PK
-    columns from the before-image."""
-    _apply_ddl_batch(batch, adapter, db, history_path)
-
-    first_version = adapter.history[0]["unix_ts"] if adapter.history else None
+    columns from the before-image. Replicated TRUNCATEs stay queued
+    on `adapter.truncates` for the merge handler."""
     out: dict[str, DataFrame] = {}
-    dml = batch.filter((F.col("kind") == "dml") & (F.col("db") == db))
-    dml = gtid_highwater_filter(dml, gtid_highwater)
-    dml = gtid_dedupe_batch(dml)
-    if first_version is not None:
-        dml = dml.filter(F.col("ts_ms").cast("long") >= first_version)
-    for table in tables:
-        if table not in adapter.tables:
-            continue
-        cols = adapter.tables[table]
+    for table, (cols, rows) in _gated_changes(
+        batch, adapter, db, tables, history_path, gtid_highwater, None
+    ).items():
         row_schema = T.StructType(
             [T.StructField(c, T.StringType()) for c in cols]
         )
-        shaped = dml.filter(F.col("tbl") == table).select(
+        shaped = rows.select(
             F.from_json("before", row_schema).alias("before"),
             F.from_json("after", row_schema).alias("after"),
             F.col("op"),
@@ -295,6 +296,46 @@ def decoded_changes(
         )
         out[table] = flat
     return out
+
+
+def _drain_log(
+    spark: SparkSession,
+    log_dir: str,
+    checkpoint_dir: str,
+    handle,
+    start_offsets: dict | None = None,
+    max_per_trigger: int | None = None,
+):
+    """The runner both CDC pipelines share: tail `log_dir` (source
+    floor persisted INSIDE the checkpoint, so the two share a
+    lifecycle) and drain the backlog once through `handle(batch,
+    epoch_id)` with availableNow semantics."""
+    stream = open_stream(
+        spark, log_dir, start_offsets=start_offsets,
+        max_per_trigger=max_per_trigger,
+        statedir=f"{checkpoint_dir}/_logtail_state",
+    )
+
+    def scoped(batch: DataFrame, epoch_id: int) -> None:
+        # cache the micro-batch for the handler's lifetime: the DDL
+        # collect and every per-table write are separate actions, and
+        # each would otherwise re-read the batch through the Python
+        # data source's partition readers (measured on the e2e
+        # pipeline: the uncached addBatch ran ~2x the same work on a
+        # static frame). Scoped persist, released before the offset
+        # commit — never a cross-batch or cross-run cache.
+        batch.persist()
+        try:
+            handle(batch, epoch_id)
+        finally:
+            batch.unpersist()
+
+    return (
+        stream.writeStream.foreachBatch(scoped)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def run_pipeline_merge(
@@ -329,31 +370,15 @@ def run_pipeline_merge(
     semantics but lays the history out as pk-hash bucket partitions
     and rewrites only touched buckets per batch
     (`TransferWriter.upsert_scd2_bucketed`) — the 100 TB path."""
-    from reader_spark.operators.transfer import TransferWriter
-
+    if scd2_bucketed and not scd2:
+        raise ValueError(
+            "scd2_bucketed=True lays out SCD2 history and needs scd2=True; "
+            "alone it would silently run the current-state merge"
+        )
     adapter = adapter or SchemaAdapter()
     writer = TransferWriter(spark, dest_dir)
-    stream = open_stream(
-        spark, log_dir, start_offsets=start_offsets,
-        max_per_trigger=max_per_trigger,
-        statedir=f"{checkpoint_dir}/_logtail_state",
-    )
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        # cache the micro-batch for the handler's lifetime: the DDL
-        # collect and every per-table merge are separate actions, and
-        # each would otherwise re-read the batch through the Python
-        # data source's partition readers (measured on the e2e
-        # pipeline: the uncached addBatch ran ~2x the same work on a
-        # static frame). Scoped persist, released before the offset
-        # commit — never a cross-batch or cross-run cache.
-        batch.persist()
-        try:
-            _handle_merge_batch(batch)
-        finally:
-            batch.unpersist()
-
-    def _handle_merge_batch(batch: DataFrame) -> None:
         changed = decoded_changes(batch, adapter, db, tables, history_path)
         # Replicated TRUNCATE TABLE maps onto the transfer truncate
         # verb (writer.go:310-327): clear the destination behind a
@@ -390,7 +415,7 @@ def run_pipeline_merge(
                     F.col("seq") > F.lit(trunc_seq[table])
                 )
             pk = adapter.tables[table][0]
-            if scd2 and scd2_bucketed:
+            if scd2_bucketed:
                 writer.upsert_scd2_bucketed(
                     table, changes, [pk], "seq", n_buckets=n_buckets
                 )
@@ -401,11 +426,8 @@ def run_pipeline_merge(
                     table, changes, [pk], "seq", n_buckets=n_buckets
                 )
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_log(
+        spark, log_dir, checkpoint_dir, handle, start_offsets, max_per_trigger
     )
 
 
@@ -433,25 +455,9 @@ def run_pipeline(
     write action itself, no second pass over the batch (subtract
     max_source_ts_ms from wall clock for the lag gauge — the log
     keeps event time so replays stay byte-comparable)."""
-    import json
-
     adapter = adapter or SchemaAdapter()
-    stream = open_stream(
-        spark, log_dir, max_per_trigger=max_per_trigger,
-        statedir=f"{checkpoint_dir}/_logtail_state",
-    )
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        # scoped micro-batch cache — same rationale as the merge
-        # pipeline's handler: the DDL collect and the per-table
-        # publishes are separate actions over a Python-source batch
-        batch.persist()
-        try:
-            _publish_batch(batch, epoch_id)
-        finally:
-            batch.unpersist()
-
-    def _publish_batch(batch: DataFrame, epoch_id: int) -> None:
         for table, env in process_batch(
             batch, adapter, db, tables, history_path
         ).items():
@@ -485,11 +491,8 @@ def run_pipeline(
                         + "\n"
                     )
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_log(
+        spark, log_dir, checkpoint_dir, handle, max_per_trigger=max_per_trigger
     )
 
 
@@ -525,10 +528,6 @@ def snapshot_then_stream(
 
     Returns the streaming query; tables = snapshots.keys().
     """
-    from pyspark.sql import functions as F
-
-    from reader_spark.operators.transfer import TransferWriter
-
     pos = snapshot_position if snapshot_position is not None else log_position(log_dir)
     writer = TransferWriter(spark, dest_dir)
     for table, df in snapshots.items():

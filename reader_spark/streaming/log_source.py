@@ -1,18 +1,15 @@
-"""Custom streaming source: append-only log tail with explicit
-offsets (PySpark 4 Python Data Source API).
+"""File-backed stream sources with explicit offsets (PySpark 4
+Python Data Source API).
 
 This is the Spark-native analogue of the reference's hand-rolled
 streaming iterators — binlog tailer (C1, offsets = file/pos,
 sources/mysql/streaming/offset.go:12-79) and DynamoDB shard consumer
 (C9, shards-as-partitions with per-shard sequence offsets,
-sources/dynamodb/stream/shard.go:46-148):
-
-  * each log FILE is a shard/partition -> Spark schedules shards
-    concurrently, per-shard record order preserved (shard.go parent/
-    child ordering == per-partition ordered processing);
-  * the offset is {file: records_consumed} -> checkpointed by the
-    engine (replaces PersistedMap YAML);
-  * commit() is the write-then-commit hook (writers/writer.go:44-50).
+sources/dynamodb/stream/shard.go:46-148; see shard_source.py). Each
+log FILE is a shard/partition: Spark schedules shards concurrently
+and preserves per-shard record order (shard.go parent/child ordering
+== per-partition ordered processing). `LineOffsetStreamReader` holds
+the offset protocol both readers share.
 
 Register with `spark.dataSource.register(LogTailDataSource)`, then
 `spark.readStream.format("logtail").schema(...).option("path", dir)`.
@@ -40,71 +37,95 @@ class FileSlice(InputPartition):
         self.end = end
 
 
-class LogTailStreamReader(DataSourceStreamReader):
-    def __init__(self, schema, options):
+class LineOffsetStreamReader(DataSourceStreamReader):
+    """The offset protocol of the file-backed stream sources (the
+    reference's StreamingIterator: an iterator plus CommitOffset,
+    lib/iterator/iterator.go:8-11). Subclasses choose which files in
+    `path` count (`suffixes`), how a file name becomes its offset key
+    (`key_suffix` is stripped), the fresh-start position and the
+    advance policy (`latestOffset`).
+
+    Offsets are {key: records_consumed} dicts checkpointed by the
+    engine (replacing the reference's PersistedMap YAML); commit() is
+    the write-then-commit hook (writers/writer.go:44-50). Two
+    positions are tracked per key:
+
+      * `_floor`, the engine-confirmed floor: the highest offsets the
+        ENGINE has mentioned (initialOffset on a fresh start, every
+        partitions(start, end) range, every commit(end)). Offsets
+        returned by latestOffset() must never sit below it —
+        otherwise a regressed end lands in the offset log and the
+        NEXT batch's start regresses with it, re-delivering records
+        that were committed before a driver restart (the reference's
+        write-then-commit contract, writers/writer.go:44-50, forbids
+        exactly that).
+      * `_last_end`, the last end this reader handed out: the
+        baseline the next trigger advances from.
+
+    The engine's FIRST call of any session is a latestOffset
+    (empirically verified: it precedes even initialOffset on fresh
+    starts, and its value becomes batch 1's end; on a restart it is
+    the first batch end), so the first call runs with
+    `_floor_known=False` and must return the only values provably >=
+    any checkpoint of an append-only log: the current line counts.
+    The per-trigger cap is skipped for exactly that one trigger per
+    session; monotone, never a duplicate.
+
+    Opt-in persisted floor (the reference's offset-YAML pattern,
+    sources/mysql/streaming/offset.go:12-79): with option 'statedir',
+    commit() persists the floor to a `<format>-floor.json` sidecar
+    and a restarted reader loads it, so the cap holds from the FIRST
+    post-restart trigger instead of falling back to full counts for
+    one. CONTRACT: the statedir pairs with the checkpoint and they
+    are deleted together; a fresh start (initialOffset) with a
+    leftover sidecar fails fast — trusting a stale-high floor against
+    a fresh checkpoint would silently lose records that later appear
+    under the already-logged offsets."""
+
+    format_name = ""
+    suffixes: tuple[str, ...] = ()
+    key_suffix = ""
+
+    def __init__(self, schema, options, start: dict):
         self.path = options.get("path")
         if not self.path:
-            raise ValueError("logtail source requires option 'path'")
+            raise ValueError(f"{self.format_name} source requires option 'path'")
         self.fields = schema.fieldNames()
-        # Resume position (reference Position{File, Pos}: a snapshot
-        # records the log position it was cut at, and the stream
-        # starts THERE — the snapshot->CDC handoff contract). JSON
-        # {file: records_already_consumed}; only consulted when no
-        # checkpoint exists, exactly like the reference's offset YAML
-        # vs a fresh boot.
-        self.start = json.loads(options.get("startoffsets", "{}"))
-        # B3 parity (reference: batch up to batchSize events per
-        # iteration, iterator.go:149-233): cap how far one trigger
-        # may advance, across files in sorted-name order. 0 = no cap.
-        self.max_per_trigger = int(options.get("maxrecordspertrigger", 0) or 0)
-        # High-water of the last offsets THIS reader handed out —
-        # the per-trigger budget baseline.
-        self._last_end: dict = dict(self.start)
-        # Engine-confirmed floor: the highest per-file offsets the
-        # ENGINE has mentioned (initialOffset on a fresh start, every
-        # partitions(start, end) range, every commit(end)). Offsets
-        # returned by latestOffset() must never sit below this —
-        # otherwise a regressed end lands in the offset log and the
-        # NEXT batch's start regresses with it, re-delivering records
-        # that were committed before a driver restart (the reference's
-        # write-then-commit contract, writers/writer.go:44-50, forbids
-        # exactly that). The engine's FIRST call of any session is a
-        # latestOffset (empirically verified: it precedes even
-        # initialOffset on fresh starts, and its value becomes batch
-        # 1's end), so the first call always runs with
-        # _floor_known=False and must return the only values provably
-        # >= any checkpoint of an append-only log: the current file
-        # lengths. Net effect: the per-trigger cap is skipped for
-        # exactly one trigger per session; monotone, never a
-        # duplicate.
+        self.start = start
+        self._last_end: dict = dict(start)
         self._floor: dict = {}
         self._floor_known = False
-        # Opt-in persisted floor (the reference's offset-YAML
-        # pattern, sources/mysql/streaming/offset.go:12-79): with
-        # option 'statedir', commit() persists the engine-confirmed
-        # floor to a sidecar, and a restarted reader loads it — the
-        # per-trigger cap then holds from the FIRST post-restart
-        # trigger instead of falling back to full lengths for one.
-        # CONTRACT: the statedir pairs with the checkpoint and they
-        # are deleted together; a fresh start (initialOffset) with a
-        # leftover sidecar fails fast below — trusting a stale-high
-        # floor against a fresh checkpoint would silently lose
-        # records that later appear under the already-logged offsets.
         self.statedir = options.get("statedir")
         if self.statedir:
             side = self._sidecar_read()
             if side is not None:
-                self._floor = dict(side)
+                self._floor = side
                 self._floor_known = True
 
+    @classmethod
+    def lengths(cls, path: str) -> dict[str, int]:
+        """{key: line count} over the log files under `path` — the
+        current end of the log."""
+        out = {}
+        if os.path.isdir(path):
+            for name in sorted(os.listdir(path)):
+                fp = os.path.join(path, name)
+                if name.endswith(cls.suffixes) and os.path.isfile(fp):
+                    key = name[: len(name) - len(cls.key_suffix)]
+                    with open(fp) as f:
+                        out[key] = sum(1 for _ in f)
+        return out
+
+    def _have(self, key: str) -> int:
+        return max(int(self._last_end.get(key, 0)), int(self._floor.get(key, 0)))
+
     def _sidecar_path(self) -> str:
-        return os.path.join(self.statedir, "logtail-floor.json")
+        return os.path.join(self.statedir, f"{self.format_name}-floor.json")
 
     def _sidecar_read(self) -> dict | None:
         try:
             with open(self._sidecar_path()) as f:
-                data = json.load(f)
-            return {str(k): int(v) for k, v in data.items()}
+                return {str(k): int(v) for k, v in json.load(f).items()}
         except (OSError, ValueError):
             return None
 
@@ -121,12 +142,12 @@ class LogTailStreamReader(DataSourceStreamReader):
 
     def initialOffset(self) -> dict:
         # Only called when no checkpoint exists (fresh start): the
-        # start options ARE the engine's position — a known floor.
+        # start position IS the engine's position — a known floor.
         if self.statedir and self._sidecar_read() is not None:
             raise ValueError(
-                "logtail: fresh start (no checkpoint) but the statedir "
-                f"holds a persisted floor ({self._sidecar_path()}). The "
-                "statedir pairs with the checkpoint — delete both "
+                f"{self.format_name}: fresh start (no checkpoint) but the "
+                f"statedir holds a persisted floor ({self._sidecar_path()}). "
+                "The statedir pairs with the checkpoint — delete both "
                 "together, or point 'statedir' elsewhere. Proceeding "
                 "would risk silently skipping records."
             )
@@ -136,45 +157,13 @@ class LogTailStreamReader(DataSourceStreamReader):
 
     def _observe_engine(self, *offsets: dict) -> None:
         for off in offsets:
-            for name, n in off.items():
+            for key, n in off.items():
                 n = int(n)
-                if n > int(self._floor.get(name, 0)):
-                    self._floor[name] = n
-                if n > int(self._last_end.get(name, 0)):
-                    self._last_end[name] = n
+                if n > int(self._floor.get(key, 0)):
+                    self._floor[key] = n
+                if n > int(self._last_end.get(key, 0)):
+                    self._last_end[key] = n
         self._floor_known = True
-
-    def latestOffset(self) -> dict:
-        offsets = {}
-        if os.path.isdir(self.path):
-            for name in sorted(os.listdir(self.path)):
-                fp = os.path.join(self.path, name)
-                if name.endswith((".json", ".jsonl")) and os.path.isfile(fp):
-                    with open(fp) as f:
-                        offsets[name] = sum(1 for _ in f)
-        if not self.max_per_trigger or not self._floor_known:
-            # No cap, or first trigger after a restart whose
-            # checkpoint we can't see: full lengths are the only
-            # offsets guaranteed not to regress. At-least-once is
-            # preserved; the cap resumes next trigger.
-            self._last_end = {
-                k: max(int(v), int(self._last_end.get(k, 0)))
-                for k, v in offsets.items()
-            }
-            return offsets
-        budget = self.max_per_trigger
-        capped: dict = {}
-        for name in sorted(offsets):
-            have = max(
-                int(self._last_end.get(name, 0)),
-                int(self._floor.get(name, 0)),
-            )
-            avail = int(offsets[name]) - have
-            take = max(0, min(avail, budget))
-            capped[name] = have + take
-            budget -= take
-        self._last_end = dict(capped)
-        return capped
 
     def partitions(self, start: dict, end: dict) -> list[FileSlice]:
         # Both bounds are engine-provided (offset log / checkpoint):
@@ -182,11 +171,15 @@ class LogTailStreamReader(DataSourceStreamReader):
         # latestOffset can never hand out offsets behind them.
         self._observe_engine(start, end)
         parts = []
-        for name, end_n in end.items():
-            start_n = int(start.get(name, 0))
-            if end_n > start_n:
+        for key, end_n in end.items():
+            start_n = int(start.get(key, 0))
+            if int(end_n) > start_n:
                 parts.append(
-                    FileSlice(os.path.join(self.path, name), start_n, int(end_n))
+                    FileSlice(
+                        os.path.join(self.path, key + self.key_suffix),
+                        start_n,
+                        int(end_n),
+                    )
                 )
         # Zero-progress micro-batches still need >=1 partition.
         return parts or [FileSlice("", 0, 0)]
@@ -208,8 +201,8 @@ class LogTailStreamReader(DataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         # Write-then-commit: the engine calls this after the sink
-        # batch succeeds; a real binlog client would ACK/advance its
-        # server-side position here. Committed offsets are the
+        # batch succeeds; a live binlog or Streams client would ACK
+        # its server-side position here. Committed offsets are the
         # strongest floor we can learn from the engine — persisted to
         # the sidecar when a statedir is configured.
         self._observe_engine(end)
@@ -218,6 +211,51 @@ class LogTailStreamReader(DataSourceStreamReader):
                 self._sidecar_write()
             except OSError:
                 pass  # floor persistence is an optimization, not a gate
+
+
+class LogTailStreamReader(LineOffsetStreamReader):
+    """Every `*.json`/`*.jsonl` file is one shard, keyed by its full
+    file name."""
+
+    format_name = "logtail"
+    suffixes = (".json", ".jsonl")
+
+    def __init__(self, schema, options):
+        # Resume position (reference Position{File, Pos}: a snapshot
+        # records the log position it was cut at, and the stream
+        # starts THERE — the snapshot->CDC handoff contract). JSON
+        # {file: records_already_consumed}; only consulted when no
+        # checkpoint exists, exactly like the reference's offset YAML
+        # vs a fresh boot.
+        super().__init__(
+            schema, options, json.loads(options.get("startoffsets", "{}"))
+        )
+        # B3 parity (reference: batch up to batchSize events per
+        # iteration, iterator.go:149-233): cap how far one trigger
+        # may advance, across files in sorted-name order. 0 = no cap.
+        self.max_per_trigger = int(options.get("maxrecordspertrigger", 0) or 0)
+
+    def latestOffset(self) -> dict:
+        offsets = self.lengths(self.path)
+        if not self.max_per_trigger or not self._floor_known:
+            # No cap, or first trigger after a restart whose
+            # checkpoint we can't see: full lengths are the only
+            # offsets guaranteed not to regress. At-least-once is
+            # preserved; the cap resumes next trigger.
+            self._last_end = {
+                k: max(int(v), int(self._last_end.get(k, 0)))
+                for k, v in offsets.items()
+            }
+            return offsets
+        budget = self.max_per_trigger
+        capped: dict = {}
+        for name in sorted(offsets):
+            have = self._have(name)
+            take = max(0, min(int(offsets[name]) - have, budget))
+            capped[name] = have + take
+            budget -= take
+        self._last_end = dict(capped)
+        return capped
 
 
 class LogTailDataSource(DataSource):

@@ -34,79 +34,28 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource
+
+from reader_spark.streaming.log_source import FileSlice, LineOffsetStreamReader
 
 MANIFEST = "shards.json"
 
-
-class ShardSlice(InputPartition):
-    def __init__(self, path: str, start: int, end: int):
-        self.path = path
-        self.start = start
-        self.end = end
+ShardSlice = FileSlice
 
 
-class ShardStreamReader(DataSourceStreamReader):
+class ShardStreamReader(LineOffsetStreamReader):
+    """Every `<shard>.jsonl` file is one shard, keyed by its stem;
+    fresh starts begin every shard at its oldest record
+    (TRIM_HORIZON)."""
+
+    format_name = "shardstream"
+    suffixes = (".jsonl",)
+    key_suffix = ".jsonl"
+
     def __init__(self, schema, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("shardstream source requires option 'path'")
-        self.fields = schema.fieldNames()
+        super().__init__(schema, options, {})
         self.max_per_batch = int(options.get("maxRecordsPerBatch", "1000"))
-        # Engine calls latestOffset() after planning each batch; track
-        # the last end so child gating sees the parent's progress.
-        self._last_end: dict = {}
-        # Engine-confirmed floor (same contract as log_source.py):
-        # offsets returned by latestOffset() must never sit below what
-        # the engine has already logged/committed — a regressed end in
-        # the offset log makes the NEXT batch's start regress and
-        # re-deliver committed records. The floor is learned from
-        # initialOffset (fresh start), every partitions(start, end)
-        # range, and every commit(end). Until it is known (first
-        # trigger after a restart from a checkpoint this reader can't
-        # see), latestOffset returns full line counts — the only
-        # values provably >= any checkpoint of append-only shards; the
-        # per-batch cap and the parent->child gate resume on the next
-        # trigger (one-batch degradation, documented, vs duplicates).
-        self._floor_known = False
-        # Opt-in persisted floor (reference offsets.go pattern; same
-        # contract as log_source: statedir pairs with the checkpoint,
-        # deleted together). With it, cap AND parent->child gating
-        # hold from the first post-restart trigger.
-        self.statedir = options.get("statedir")
-        if self.statedir:
-            side = self._sidecar_read()
-            if side is not None:
-                self._last_end = dict(side)
-                self._floor_known = True
-
-    def _sidecar_path(self) -> str:
-        return os.path.join(self.statedir, "shardstream-floor.json")
-
-    def _sidecar_read(self) -> dict | None:
-        try:
-            with open(self._sidecar_path()) as f:
-                data = json.load(f)
-            return {str(k): int(v) for k, v in data.items()}
-        except (OSError, ValueError):
-            return None
-
-    def _sidecar_write(self) -> None:
-        os.makedirs(self.statedir, exist_ok=True)
-        tmp = self._sidecar_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._last_end, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._sidecar_path())
-
-    # -- discovery ---------------------------------------------------------
 
     def _manifest(self) -> dict:
         mp = os.path.join(self.path, MANIFEST)
@@ -115,132 +64,35 @@ class ShardStreamReader(DataSourceStreamReader):
                 return json.load(f)
         return {}
 
-    def _shard_lines(self) -> dict[str, int]:
-        out = {}
-        if os.path.isdir(self.path):
-            for name in sorted(os.listdir(self.path)):
-                fp = os.path.join(self.path, name)
-                if name.endswith(".jsonl") and os.path.isfile(fp):
-                    with open(fp) as f:
-                        out[name[: -len(".jsonl")]] = sum(1 for _ in f)
-        return out
-
-    # -- offsets -----------------------------------------------------------
-
-    def initialOffset(self) -> dict:
-        # Only called when no checkpoint exists (fresh start): empty
-        # positions ARE the engine's truth — the floor is known.
-        if self.statedir and self._sidecar_read() is not None:
-            raise ValueError(
-                "shardstream: fresh start (no checkpoint) but the "
-                f"statedir holds a persisted floor "
-                f"({self._sidecar_path()}). The statedir pairs with "
-                "the checkpoint — delete both together. Proceeding "
-                "would risk silently skipping records."
-            )
-        self._floor_known = True
-        return {}  # TRIM_HORIZON: start every shard at its oldest record
-
-    def _observe_engine(self, *offsets: dict) -> None:
-        for off in offsets:
-            for shard, n in off.items():
-                if int(n) > int(self._last_end.get(shard, 0)):
-                    self._last_end[shard] = int(n)
-        self._floor_known = True
-
     def latestOffset(self) -> dict:
-        lines = self._shard_lines()
-        if not self._floor_known:
-            # First call of a session (the engine asks for the latest
-            # offset once BEFORE initialOffset on fresh starts, and as
-            # the first batch end on restarts — empirically verified;
-            # the two are indistinguishable here). The checkpoint, if
-            # one exists, is invisible, so nothing below the current
-            # line counts is provably non-regressing. Return full
-            # counts — EXCEPT children of open parents, held at 0:
-            # shard closure is permanent and the gate never releases a
-            # child before its parent closes, so such a child's
-            # checkpoint is provably 0. At-least-once holds; the
-            # per-batch cap (and parent-tail/child interleaving
-            # within that one batch for closed parents) resumes
-            # normal behavior on the next trigger.
-            manifest = self._manifest()
-            end = {}
-            for shard, n in lines.items():
-                parent = manifest.get(shard, {}).get("parent")
-                if parent is not None and not manifest.get(parent, {}).get(
-                    "closed", False
-                ):
-                    end[shard] = 0
-                else:
-                    end[shard] = max(int(n), int(self._last_end.get(shard, 0)))
-            self._last_end = dict(end)
-            return dict(end)
+        lines = self.lengths(self.path)
         manifest = self._manifest()
         end = {}
         for shard, n in lines.items():
-            consumed = int(self._last_end.get(shard, 0))
-            meta = manifest.get(shard, {})
-            parent = meta.get("parent")
-            if parent is not None:
-                p_total = lines.get(parent, 0)
-                p_done = int(self._last_end.get(parent, 0)) >= p_total
-                p_closed = manifest.get(parent, {}).get("closed", False)
-                if not (p_done and p_closed):
-                    # Parent still live: hold the child at its current
-                    # position (shard.go:46-67 ordering contract).
-                    end[shard] = consumed
-                    continue
-            end[shard] = min(n, consumed + self.max_per_batch)
+            have = self._have(shard)
+            parent = manifest.get(shard, {}).get("parent")
+            p_closed = parent is None or manifest.get(parent, {}).get(
+                "closed", False
+            )
+            if not self._floor_known:
+                # First call of a session: full counts (see the base
+                # class) — EXCEPT children of open parents, held at 0:
+                # shard closure is permanent and the gate never
+                # releases a child before its parent closes, so such a
+                # child's checkpoint is provably 0. The per-batch cap
+                # (and parent-tail/child interleaving within that one
+                # batch for closed parents) resumes on the next trigger.
+                end[shard] = max(int(n), have) if p_closed else 0
+            elif parent is not None and not (
+                p_closed and self._have(parent) >= lines.get(parent, 0)
+            ):
+                # Parent still live: hold the child at its current
+                # position (shard.go:46-67 ordering contract).
+                end[shard] = have
+            else:
+                end[shard] = min(n, have + self.max_per_batch)
         self._last_end = dict(end)
         return end
-
-    def partitions(self, start: dict, end: dict) -> list[ShardSlice]:
-        # Restart reconciliation: both bounds are engine-provided
-        # (offset log / checkpoint) — raise the floor before planning
-        # so a later latestOffset can never hand out offsets behind
-        # them.
-        self._observe_engine(start, end)
-        parts = []
-        for shard, end_n in end.items():
-            start_n = int(start.get(shard, 0))
-            if int(end_n) > start_n:
-                parts.append(
-                    ShardSlice(
-                        os.path.join(self.path, f"{shard}.jsonl"),
-                        start_n,
-                        int(end_n),
-                    )
-                )
-        return parts or [ShardSlice("", 0, 0)]
-
-    def read(self, partition: ShardSlice) -> Iterator[tuple]:
-        if not partition.path:
-            return
-        with open(partition.path) as f:
-            for i, line in enumerate(f):
-                if i < partition.start:
-                    continue
-                if i >= partition.end:
-                    break
-                rec = json.loads(line)
-                yield tuple(
-                    None if rec.get(k) is None else str(rec.get(k))
-                    for k in self.fields
-                )
-
-    def commit(self, end: dict) -> None:
-        # Write-then-commit (writers/writer.go:44-50): a live Streams
-        # client would persist per-shard sequence numbers here; with
-        # files the checkpoint is the offset store. Committed offsets
-        # are the strongest floor the engine can teach us — persisted
-        # to the sidecar when a statedir is configured.
-        self._observe_engine(end)
-        if self.statedir:
-            try:
-                self._sidecar_write()
-            except OSError:
-                pass  # floor persistence is an optimization, not a gate
 
 
 class ShardStreamDataSource(DataSource):

@@ -351,6 +351,38 @@ def test_unmatched_ddl_quarantined_not_silently_dropped(spark, tmp_path):
     assert spark.read.json(f"{qdir}/_ddl").count() == 1
 
 
+def test_merge_pipeline_drains_unmatched_ddl(spark, tmp_path, caplog):
+    """The Transfer merge path runs the same gate chain as the
+    envelope path: an unmatched ALTER against a replicated table is
+    logged and drained, not left queued, while the DML still merges."""
+    import logging
+
+    from reader_spark.plans.cdc_mysql import run_pipeline_merge
+
+    log = tmp_path / "log"
+    log.mkdir()
+    dest = str(tmp_path / "dest")
+    _append(log / "binlog.jsonl", [
+        rec(1, "ddl", statement="CREATE TABLE users (id int, name text)"),
+        rec(2, "ddl",
+            statement="ALTER TABLE users PARTITION BY HASH(id) PARTITIONS 4"),
+        rec(3, "dml", op="c", after='{"id": 1, "name": "ada"}'),
+    ])
+    adapter = SchemaAdapter()
+    with caplog.at_level(logging.WARNING, logger="reader_spark.plans.cdc_mysql"):
+        q = run_pipeline_merge(spark, str(log), dest, str(tmp_path / "ck"),
+                               "app", ["users"], adapter, n_buckets=4)
+        q.awaitTermination(90)
+    assert q.exception() is None
+    assert adapter.unmatched == []
+    assert any(
+        "unmatched DDL" in r.getMessage() and "PARTITION BY" in r.getMessage()
+        for r in caplog.records
+    )
+    rows = spark.read.parquet(f"{dest}/users").collect()
+    assert [(r["id"], r["name"]) for r in rows] == [("1", "ada")]
+
+
 def test_quarantine_skips_clean_batches(spark, tmp_path):
     """A fully-healthy batch must not create (empty) quarantine
     output dirs — the write is gated on an existence probe (r4

@@ -396,6 +396,91 @@ destination:
     assert rows == [("1", "ada", 2, 3), ("1", "ada2", 3, None)]
 
 
+def test_job_runner_streaming_scd2_bucketed_requires_scd2(spark, tmp_path):
+    """A config that sets scd2_bucketed without scd2 is rejected: it
+    would otherwise silently load the current-state table shape."""
+    from reader_spark.config import load_settings
+    from reader_spark.job import run_job
+
+    log = tmp_path / "log"
+    log.mkdir()
+    cfg = f"""
+source:
+  kind: mysql
+  database: app
+  streaming: true
+  options:
+    log_dir: {log}
+    checkpoint_dir: {tmp_path}/ck
+  tables:
+    - name: users
+destination:
+  kind: transfer
+  path: {tmp_path}/dest
+  options:
+    scd2_bucketed: true
+"""
+    with pytest.raises(ValueError, match="scd2_bucketed"):
+        run_job(spark, load_settings(cfg))
+    assert not (tmp_path / "dest").exists()
+
+
+def test_job_runner_streaming_timeout_fails_and_stops(
+    spark, tmp_path, monkeypatch
+):
+    """A stream that has not drained when timeout_sec runs out fails
+    the job: the query is stopped, the job raises, and no _metrics
+    row records a success."""
+    from reader_spark.config import load_settings
+    from reader_spark.job import run_job
+    from reader_spark.plans import cdc_mysql
+
+    class StuckQuery:
+        stopped = False
+
+        def awaitTermination(self, timeout=None):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+        def exception(self):
+            return None
+
+    q = StuckQuery()
+    monkeypatch.setattr(cdc_mysql, "run_pipeline", lambda *a, **k: q)
+    cfg = f"""
+source:
+  kind: mysql
+  database: app
+  streaming: true
+  options:
+    log_dir: {tmp_path}/log
+    timeout_sec: 1
+  tables:
+    - name: users
+destination:
+  kind: parquet
+  path: {tmp_path}/dest
+"""
+    with pytest.raises(TimeoutError, match="timeout_sec=1"):
+        run_job(spark, load_settings(cfg))
+    assert q.stopped
+    assert not (tmp_path / "dest" / "_metrics").exists()
+
+    # a query that failed surfaces its own error instead
+    class FailedQuery(StuckQuery):
+        def exception(self):
+            return RuntimeError("batch 3 failed")
+
+    monkeypatch.setattr(
+        cdc_mysql, "run_pipeline", lambda *a, **k: FailedQuery()
+    )
+    with pytest.raises(RuntimeError, match="batch 3 failed"):
+        run_job(spark, load_settings(cfg))
+    assert not (tmp_path / "dest" / "_metrics").exists()
+
+
 def test_write_training_shards_layout_and_order(spark, sf_dir, tmp_path):
     from reader_spark.operators.transfer import write_training_shards
     from reader_spark.session import read_table
