@@ -240,8 +240,9 @@ def _dispatch_job(spark: SparkSession, settings: Settings) -> dict[str, str]:
 def _run_streaming(spark: SparkSession, settings: Settings) -> dict[str, str]:
     """Streaming job: the composed binlog pipeline. options.log_dir is
     the tail directory (production: the binlog-shipper landing zone);
-    destination `transfer` merges into current table state, anything
-    else lands the envelope log."""
+    destination `transfer` merges into bucketed table state (current
+    rows, or SCD2 history with `scd2: true`), anything else lands the
+    envelope log."""
     from reader_spark.plans.cdc_mysql import (
         run_pipeline,
         run_pipeline_merge,
@@ -257,6 +258,16 @@ def _run_streaming(spark: SparkSession, settings: Settings) -> dict[str, str]:
     adapter = SchemaAdapter()
     history = src.options.get("history_path")
     snap_path = src.options.get("snapshot_path")
+    if dest.kind == "transfer":
+        # the only transfer destination options: a typo (`n_bucket`)
+        # or a retired key must not silently fall back to a default
+        # (a default n_buckets is then pinned on the table for good)
+        unknown = sorted(set(dest.options) - {"n_buckets", "scd2"})
+        if unknown:
+            raise ValueError(
+                f"unknown transfer destination option(s) {unknown}; "
+                "accepted: n_buckets, scd2"
+            )
     n_buckets = int(dest.options.get("n_buckets", 16))
     cap = int(src.options.get("max_records_per_trigger", 0)) or None
     if dest.kind == "transfer" and snap_path:
@@ -278,14 +289,13 @@ def _run_streaming(spark: SparkSession, settings: Settings) -> dict[str, str]:
             snapshot_position=src.options.get("snapshot_position"),
         )
     elif dest.kind == "transfer":
-        scd2, scd2_bucketed = (
-            str(dest.options.get(k, "")).lower() in ("1", "true", "yes")
-            for k in ("scd2", "scd2_bucketed")
+        scd2 = str(dest.options.get("scd2", "")).lower() in (
+            "1", "true", "yes",
         )
         q = run_pipeline_merge(
             spark, log_dir, dest.path, ck, src.database, tables,
             adapter, history_path=history, n_buckets=n_buckets,
-            scd2=scd2, scd2_bucketed=scd2_bucketed, max_per_trigger=cap,
+            scd2=scd2, max_per_trigger=cap,
         )
     else:
         q = run_pipeline(

@@ -7,25 +7,30 @@ Reference behavior:
   * optional truncate/drop before a backfill (writer.go:310-327);
   * final dedupe on PKs keeping the latest (writer.go:329-366).
 
-Spark-first: Append = mode("append") write; Merge = MERGE INTO when a
-Delta/Iceberg catalog exists — this container has neither, so
-`upsert_parquet` emulates MERGE with anti-join + union (the canonical
-pre-Delta pattern), publishing the new snapshot via an atomic
+Spark-first: Append = mode("append") write; Merge would be MERGE INTO
+on a Delta/Iceberg catalog, but none is wired here, so the upsert verbs
+emulate it with anti-join + union (the canonical pre-Delta pattern).
+Each verb is one merge function (`apply_changes` for current state,
+`TransferWriter._scd2_merge` for history) run by one of two bodies:
+the whole-table body publishes the new snapshot via an atomic
 pointer-file flip (operators/atomic_dir.py — readers never see a
-missing or partial dataset, crashes leave the previous snapshot
-live). At 100 TB the emulation is replaced by Delta MERGE (one
-config switch in TransferWriter); the dedupe window and the
-change-event application logic are identical either way.
+missing or partial dataset, crashes leave the previous snapshot live),
+and the bucketed body swaps only the `bucket=` dirs holding changed
+keys. A Delta MERGE would replace those publish steps; the dedupe
+window and the change-event application logic would stay as they are.
 """
 
 from __future__ import annotations
 
+import json
+import math
 import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from reader_spark.operators import atomic_dir
 from reader_spark.plans.snapshot import transfer_dedupe
@@ -35,9 +40,7 @@ def _write_schema_manifest(root: str, df) -> None:
     """Persist the table schema as a manifest next to the data
     (underscore-prefixed: invisible to Spark's file listing).
     Written via tmp + os.replace so readers never see a torn file."""
-    import uuid as _uuid
-
-    tmp = os.path.join(root, "._schema.tmp-" + _uuid.uuid4().hex[:8])
+    tmp = os.path.join(root, "._schema.tmp-" + uuid.uuid4().hex[:8])
     with open(tmp, "w") as f:
         f.write(df.schema.json())
     os.replace(tmp, os.path.join(root, "_schema.json"))
@@ -45,15 +48,11 @@ def _write_schema_manifest(root: str, df) -> None:
 
 def _read_schema_manifest(root: str):
     """The pinned table schema, or None for legacy layouts."""
-    import json as _json
-
-    from pyspark.sql import types as _T
-
     p = os.path.join(root, "_schema.json")
     if not os.path.isfile(p):
         return None
     with open(p) as f:
-        return _T.StructType.fromJson(_json.load(f))
+        return T.StructType.fromJson(json.load(f))
 
 
 def _write_layout_manifest(root: str, n_buckets: int) -> None:
@@ -65,31 +64,39 @@ def _write_layout_manifest(root: str, n_buckets: int) -> None:
     default. The layout is therefore a property of the TABLE,
     recorded once at seed time, and every bucketed verb resolves it
     from here instead of trusting its caller."""
-    import json as _json
-
     tmp = os.path.join(root, "._layout.tmp-" + uuid.uuid4().hex[:8])
     with open(tmp, "w") as f:
-        _json.dump({"n_buckets": int(n_buckets)}, f)
+        json.dump({"n_buckets": int(n_buckets)}, f)
     os.replace(tmp, os.path.join(root, "_layout.json"))
 
 
 def _read_layout_manifest(root: str) -> int | None:
     """The pinned n_buckets, or None for legacy/unbucketed layouts."""
-    import json as _json
-
     p = os.path.join(root, "_layout.json")
     if not os.path.isfile(p):
         return None
     with open(p) as f:
-        return int(_json.load(f)["n_buckets"])
+        return int(json.load(f)["n_buckets"])
 
 
-def latest_changes(
-    changes: DataFrame, pk_cols: list[str], seq_col: str
-) -> DataFrame:
-    """Collapse a micro-batch of change events to one terminal row per
-    PK (writer.go:329-366): last-write-wins by seq."""
-    return transfer_dedupe(changes, pk_cols, seq_col)
+def _bucket_ids(root: str) -> list[int]:
+    """The ids of the `bucket=<id>` dirs laid out under `root`."""
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(root)
+        if d.startswith("bucket=")
+    )
+
+
+def _require_pk(changes: DataFrame, pk_cols: list[str]) -> None:
+    """The PRIMARY KEY is exempt from schema evolution: a change set
+    without it is unmergeable and must fail loudly, not null-fill
+    into one giant group (or fail deep inside the bucket hash)."""
+    missing_pk = [c for c in pk_cols if c not in changes.columns]
+    if missing_pk:
+        raise ValueError(
+            f"change set is missing primary-key column(s) {missing_pk}"
+        )
 
 
 def align_schemas(
@@ -124,37 +131,42 @@ def align_schemas(
 
 
 def apply_changes(
-    base: DataFrame,
+    base: DataFrame | None,
     changes: DataFrame,
     pk_cols: list[str],
     seq_col: str,
     op_col: str = "op",
 ) -> DataFrame:
-    """MERGE semantics as a plan: delete rows whose terminal event is
-    'd', upsert the rest. One shuffle on the PK for the anti-join;
-    the change set is typically << base, so Catalyst broadcasts it.
-    Schemas evolve (`align_schemas`) before merging, so upstream
-    column adds/drops land as NULL-padded columns instead of dropped
-    data or a crashed load. The PRIMARY KEY is exempt from evolution:
-    a change set without it is unmergeable and must fail loudly, not
-    null-fill into one giant group."""
-    missing_pk = [c for c in pk_cols if c not in changes.columns]
-    if missing_pk:
-        raise ValueError(
-            f"change set is missing primary-key column(s) {missing_pk}"
-        )
+    """MERGE semantics as a plan: collapse the change set to one
+    terminal row per PK (writer.go:329-366, last-write-wins by seq),
+    delete rows whose terminal event is 'd', upsert the rest. One
+    shuffle on the PK for the anti-join; the change set is typically
+    << base, so Catalyst broadcasts it. `base=None` seeds a new table
+    from the change set alone. Schemas evolve (`align_schemas`)
+    before merging, so upstream column adds/drops land as
+    NULL-padded columns instead of dropped data or a crashed load.
+    The writer verbs reject a change set without its PK before
+    merging (`_require_pk`)."""
+    if base is None:
+        term = transfer_dedupe(changes, pk_cols, seq_col)
+        return term.filter(F.col(op_col) != "d").drop(op_col, seq_col)
     base, changes = align_schemas(base, changes, op_col, seq_col)
-    value_cols = [c for c in base.columns]
-    term = latest_changes(changes, pk_cols, seq_col)
-    keys = term.select(*pk_cols)
-    survivors = base.join(keys, pk_cols, "left_anti")
-    upserts = term.filter(F.col(op_col) != "d").select(*value_cols)
+    term = transfer_dedupe(changes, pk_cols, seq_col)
+    survivors = base.join(term.select(*pk_cols), pk_cols, "left_anti")
+    upserts = term.filter(F.col(op_col) != "d").select(*base.columns)
     return survivors.unionByName(upserts)
 
 
 class TransferWriter:
     """Parquet-backed transfer destination with Append / Upsert /
-    backfill-truncate, mirroring writers/transfer/writer.go flow."""
+    backfill-truncate, mirroring writers/transfer/writer.go flow.
+
+    Every MERGE verb is a merge function run by one of two bodies:
+    `_merge_whole` (read the table, merge, `_publish` a new snapshot)
+    or `_merge_bucketed` (merge and swap only the touched `bucket=`
+    dirs). The merge functions share the signature
+    `(base | None, changes, pk_cols, seq_col, op_col) -> DataFrame`;
+    `base=None` seeds a new table."""
 
     def __init__(
         self,
@@ -266,7 +278,6 @@ class TransferWriter:
         if not self.exists(table):
             return
         base = self.read(table)
-        pinned_buckets = _read_layout_manifest(self._data_root(table))
         closed = base.withColumn(
             "eff_to",
             F.coalesce(
@@ -277,15 +288,35 @@ class TransferWriter:
                 ),
             ),
         )
+        if "bucket" in closed.columns:
+            closed = closed.repartition("bucket")
+        self._publish(table, closed)
+
+    def create_empty(self, table: str, df: DataFrame) -> None:
+        """K4: empty-table path — persist schema with zero rows
+        (sources/mysql/snapshot.go:49-66)."""
+        df.limit(0).write.mode("overwrite").parquet(self._path(table))
+
+    def _publish(self, table: str, df: DataFrame) -> None:
+        """The one whole-table publish: write `df` into a fresh
+        version dir (as `bucket=` partitions when it carries the
+        bucket column), with the schema manifest and the table's
+        carried-forward layout pin, and flip the pointer to it
+        (operators/atomic_dir.py): readers always resolve to a
+        complete snapshot, and a crash mid-publish leaves the
+        previous snapshot live (a Delta MERGE makes this
+        transactional for real)."""
+        pinned_buckets = _read_layout_manifest(self._data_root(table))
 
         def write_fn(vdir: str) -> None:
-            if "bucket" in closed.columns:
-                closed.repartition("bucket").write.partitionBy(
-                    "bucket"
-                ).parquet(vdir)
-            else:
-                closed.write.parquet(vdir)
-            _write_schema_manifest(vdir, closed)
+            out = df.write.mode("overwrite")
+            if "bucket" in df.columns:
+                out = out.partitionBy("bucket")
+            out.parquet(vdir)
+            # the rewrite must carry the table's identity forward:
+            # the pinned schema (bucketed reads depend on it) and the
+            # bucket-layout pin both live in the version dir
+            _write_schema_manifest(vdir, df)
             if pinned_buckets is not None:
                 _write_layout_manifest(vdir, pinned_buckets)
 
@@ -293,98 +324,77 @@ class TransferWriter:
             self._path(table), write_fn, keep=self.keep_versions
         )
 
-    def create_empty(self, table: str, df: DataFrame) -> None:
-        """K4: empty-table path — persist schema with zero rows
-        (sources/mysql/snapshot.go:49-66)."""
-        df.limit(0).write.mode("overwrite").parquet(self._path(table))
-
-    def upsert(
-        self,
-        table: str,
-        changes: DataFrame,
-        pk_cols: list[str],
-        seq_col: str,
-        op_col: str = "op",
+    def _merge_whole(
+        self, table: str, changes: DataFrame, pk_cols: list[str],
+        seq_col: str, op_col: str, merge,
     ) -> None:
-        """MERGE emulation with an atomic pointer-flip publish
-        (operators/atomic_dir.py): readers always resolve to a
-        complete snapshot, and a crash mid-publish leaves the
-        previous snapshot live (a Delta MERGE makes this
-        transactional for real)."""
-        if not self.exists(table):
-            base = changes.select(
-                *[c for c in changes.columns if c not in (op_col, seq_col)]
-            ).limit(0)
-        else:
-            base = self.read(table)
-        merged = apply_changes(base, changes, pk_cols, seq_col, op_col)
+        """The whole-table MERGE body: `merge` the change set into
+        the live table (or seed it) and publish the result."""
+        _require_pk(changes, pk_cols)
+        base = self.read(table) if self.exists(table) else None
+        self._publish(table, merge(base, changes, pk_cols, seq_col, op_col))
 
-        def write_fn(vdir: str) -> None:
-            merged.write.mode("overwrite").parquet(vdir)
-            _write_schema_manifest(vdir, merged)
-
-        atomic_dir.publish(
-            self._path(table), write_fn, keep=self.keep_versions
-        )
-
-    def upsert_bucketed(
-        self,
-        table: str,
-        changes: DataFrame,
-        pk_cols: list[str],
-        seq_col: str,
-        op_col: str = "op",
-        n_buckets: int = 64,
+    def _merge_bucketed(
+        self, table: str, changes: DataFrame, pk_cols: list[str],
+        seq_col: str, op_col: str, n_buckets: int, merge,
     ) -> list[int]:
-        """Incremental MERGE for big tables: the sink is laid out as
-        `bucket=pmod(xxhash64(pk), n)` directory partitions, and an
-        upsert reads, merges, and atomically swaps ONLY the buckets
-        that contain changed keys. `upsert` rewrites the whole
-        snapshot — fine for modest tables, quadratic pain at 100 TB
-        where a micro-batch touches a handful of keys; here the
-        rewrite cost is O(changed_buckets / n_buckets) of the table,
-        and partition pruning keeps the read side just as narrow
-        (the bucket filter prunes directories, not files). Returns
-        the list of bucket ids rewritten.
+        """The bucketed MERGE body: the sink is laid out as
+        `bucket=pmod(xxhash64(pk), n)` directory partitions, and a
+        merge reads, merges, and atomically swaps ONLY the buckets
+        that contain changed keys — the rewrite cost is
+        O(changed_buckets / n_buckets) of the table, and partition
+        pruning keeps the read side just as narrow (the bucket filter
+        prunes directories, not files). The bucket key hashes the PK
+        alone, so everything `merge` needs about a key (its row, or
+        its whole interval chain) lives in that key's one bucket.
+        Returns the bucket ids written.
 
         `n_buckets` only matters at SEED time; it is pinned in the
         table's `_layout.json` and every later merge resolves the
         pinned value (`_resolve_n_buckets`) — a caller passing a
         different default can no longer scatter keys across the
         wrong bucket dirs."""
+        _require_pk(changes, pk_cols)
         # per-bucket swaps happen under the LIVE data root — the
         # pointer-published version dir if a full-rewrite verb
         # (compact/upsert) converted this table's layout
         path = self._data_root(table)
-        if self.exists(table):
+        exists = self.exists(table)
+        if exists:
+            live = self.read(table)
+            # refuse BEFORE anything is pinned: a flat table must not
+            # gain a `_layout.json` from a merge that cannot run on it
+            if "bucket" not in live.columns:
+                raise ValueError(
+                    f"table {table!r} has a flat layout (no bucket "
+                    "column); a bucketed merge cannot run on it — use "
+                    "the flat verb (upsert / upsert_scd2) or reseed it"
+                )
             n_buckets = self._resolve_n_buckets(path, n_buckets, pk_cols)
-        bucket = F.pmod(F.xxhash64(*[F.col(c) for c in pk_cols]), F.lit(n_buckets))
+        bucket = F.pmod(
+            F.xxhash64(*[F.col(c) for c in pk_cols]), F.lit(n_buckets)
+        )
         changes = changes.withColumn("bucket", bucket.cast("int"))
-        if not self.exists(table):
-            term = latest_changes(changes, pk_cols, seq_col)
-            first = term.filter(F.col(op_col) != "d").drop(op_col, seq_col)
+        if not exists:
+            seeded = merge(None, changes, pk_cols, seq_col, op_col)
             # cluster rows by bucket BEFORE partitionBy: otherwise every
             # task writes a file into every bucket directory (tasks x
             # buckets files — measured 11x slower seed write)
-            first.repartition(n_buckets, "bucket").write.mode(
+            seeded.repartition(n_buckets, "bucket").write.mode(
                 "overwrite"
             ).partitionBy("bucket").parquet(path)
-            _write_schema_manifest(path, first)
+            _write_schema_manifest(path, seeded)
             _write_layout_manifest(path, n_buckets)
             # read the written layout, never recompute the input: a
-            # distinct() over `first` would re-run the whole upstream
+            # distinct() over `seeded` would re-run the whole upstream
             # pipeline a second time (measured 3x seed cost on a
             # generated 2 GB input)
-            return sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(path)
-                if d.startswith("bucket=")
-            )
+            return _bucket_ids(path)
         touched = sorted(
             r["bucket"] for r in changes.select("bucket").distinct().collect()
         )
-        base = self.read(table).filter(F.col("bucket").isin(touched))
-        merged = apply_changes(base, changes, pk_cols, seq_col, op_col)
+        base = live.filter(F.col("bucket").isin(touched))
+        merged = merge(base, changes, pk_cols, seq_col, op_col)
         staging = path + ".staging-" + uuid.uuid4().hex[:8]
         merged.repartition(max(1, len(touched)), "bucket").write.mode(
             "overwrite"
@@ -398,6 +408,40 @@ class TransferWriter:
         _write_schema_manifest(path, merged)
         self._swap_buckets(path, staging, touched)
         return touched
+
+    def upsert(
+        self,
+        table: str,
+        changes: DataFrame,
+        pk_cols: list[str],
+        seq_col: str,
+        op_col: str = "op",
+    ) -> None:
+        """Current-state MERGE (`apply_changes`) rewriting the whole
+        table behind the pointer-flip publish. Fine for modest
+        tables; at the 100 TB tier, where a micro-batch touches a
+        handful of keys, use `upsert_bucketed`."""
+        self._merge_whole(
+            table, changes, pk_cols, seq_col, op_col, apply_changes
+        )
+
+    def upsert_bucketed(
+        self,
+        table: str,
+        changes: DataFrame,
+        pk_cols: list[str],
+        seq_col: str,
+        op_col: str = "op",
+        n_buckets: int = 64,
+    ) -> list[int]:
+        """Current-state MERGE (`apply_changes`) for big tables:
+        rewrites only the buckets containing changed keys
+        (`_merge_bucketed`). Returns the list of bucket ids
+        rewritten."""
+        return self._merge_bucketed(
+            table, changes, pk_cols, seq_col, op_col, n_buckets,
+            apply_changes,
+        )
 
     def _resolve_n_buckets(
         self, path: str, requested: int, pk_cols: list[str] | None = None
@@ -425,11 +469,7 @@ class TransferWriter:
         pinned = _read_layout_manifest(path)
         if pinned is not None:
             return pinned
-        existing = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(path)
-            if d.startswith("bucket=")
-        )
+        existing = _bucket_ids(path)
         if existing and max(existing) >= requested:
             raise ValueError(
                 f"table at {path} has bucket ids up to {max(existing)} "
@@ -524,14 +564,12 @@ class TransferWriter:
         table, or just the touched buckets — a key's entire history
         lives in one bucket, so the chaining is complete either
         way)."""
-        from pyspark.sql import Window as W
-
         attr_cols = [
             c
             for c in changes.columns
             if c not in (*pk_cols, seq_col, op_col)
         ]
-        w = W.partitionBy(*pk_cols).orderBy(F.col(seq_col))
+        w = Window.partitionBy(*pk_cols).orderBy(F.col(seq_col))
         delta = changes.withColumn(
             "__next", F.lead(seq_col).over(w)
         )
@@ -546,26 +584,10 @@ class TransferWriter:
         first_seq = changes.groupBy(*pk_cols).agg(
             F.min(seq_col).alias("__close")
         )
-        # Schema evolution: an attr the DDL added mid-stream
-        # exists on the delta but not in stored history (null for
-        # rows that predate it), and a dropped attr survives in
-        # history but is absent from the delta (null on new
-        # rows). Conform BOTH sides to the ordered union instead
-        # of silently projecting the new column away.
-        delta_types = dict(new_rows.dtypes)
-        base_types = dict(base.dtypes)
-        all_cols = list(base.columns) + [
-            c for c in new_rows.columns if c not in base_types
-        ]
-        for c in all_cols:
-            if c not in base_types:
-                base = base.withColumn(
-                    c, F.lit(None).cast(delta_types[c])
-                )
-            if c not in delta_types:
-                new_rows = new_rows.withColumn(
-                    c, F.lit(None).cast(base_types[c])
-                )
+        # Schema evolution: an attr the DDL added mid-stream is NULL
+        # on stored history, a dropped attr is NULL on new rows
+        base, new_rows = align_schemas(base, new_rows, op_col, seq_col)
+        all_cols = base.columns
         closed = base.filter(F.col("eff_to").isNotNull())
         opened = base.filter(F.col("eff_to").isNull())
         now_closed = (
@@ -597,22 +619,14 @@ class TransferWriter:
         `_scd2_merge`.
 
         The warehouse analogue of `queries.scd2_user_state`, on the
-        same atomic pointer-flip publish as `upsert`. At-least-once
-        streams must dedupe replayed positions upstream (the GTID
-        gate) — a replayed batch would re-close already-closed
-        intervals. Scale: the merge reads and rewrites the whole
-        table — fine below ~1 GB; at the 100 TB tier use
-        `upsert_scd2_bucketed`, which rewrites only buckets
-        containing changed keys."""
-        base = self.read(table) if self.exists(table) else None
-        merged = self._scd2_merge(base, changes, pk_cols, seq_col, op_col)
-
-        def write_fn(vdir: str) -> None:
-            merged.write.mode("overwrite").parquet(vdir)
-            _write_schema_manifest(vdir, merged)
-
-        atomic_dir.publish(
-            self._path(table), write_fn, keep=self.keep_versions
+        same whole-table publish as `upsert`. At-least-once streams
+        must dedupe replayed positions upstream (the GTID gate) — a
+        replayed batch would re-close already-closed intervals.
+        Scale: the merge reads and rewrites the whole table — fine
+        below ~1 GB; at the 100 TB tier use `upsert_scd2_bucketed`,
+        which rewrites only buckets containing changed keys."""
+        self._merge_whole(
+            table, changes, pk_cols, seq_col, op_col, self._scd2_merge
         )
 
     def upsert_scd2_bucketed(
@@ -624,55 +638,16 @@ class TransferWriter:
         op_col: str = "op",
         n_buckets: int = 64,
     ) -> list[int]:
-        """SCD2 MERGE for big histories: the sink is laid out as
-        `bucket=pmod(xxhash64(pk), n)` directory partitions and a
-        micro-batch reads, chains, and atomically swaps ONLY the
-        buckets containing changed keys — `upsert_bucketed`'s
-        economics applied to the history-preserving merge (rewrite
-        cost O(touched_buckets / n) of the history instead of all of
-        it). The load-bearing invariant: the bucket key hashes the PK
-        alone, so a key's ENTIRE interval chain lives in exactly one
-        bucket and chaining within the touched subset is complete
-        (the same single-home argument as the bm25 term buckets).
-        Returns the bucket ids rewritten. `n_buckets` is a seed-time
-        knob, pinned in `_layout.json` and resolved from there on
-        every later merge (see `upsert_bucketed`)."""
-        path = self._data_root(table)
-        if self.exists(table):
-            n_buckets = self._resolve_n_buckets(path, n_buckets, pk_cols)
-        bucket = F.pmod(
-            F.xxhash64(*[F.col(c) for c in pk_cols]), F.lit(n_buckets)
+        """SCD2 MERGE for big histories: `_scd2_merge` run by the
+        bucketed body, so a micro-batch reads, chains, and swaps ONLY
+        the buckets containing changed keys (a key's ENTIRE interval
+        chain lives in its one bucket, so chaining within the touched
+        subset is complete — the same single-home argument as the
+        bm25 term buckets). Returns the bucket ids rewritten."""
+        return self._merge_bucketed(
+            table, changes, pk_cols, seq_col, op_col, n_buckets,
+            self._scd2_merge,
         )
-        changes = changes.withColumn("bucket", bucket.cast("int"))
-        if not self.exists(table):
-            merged = self._scd2_merge(
-                None, changes, pk_cols, seq_col, op_col
-            )
-            merged.repartition(n_buckets, "bucket").write.mode(
-                "overwrite"
-            ).partitionBy("bucket").parquet(path)
-            _write_schema_manifest(path, merged)
-            _write_layout_manifest(path, n_buckets)
-            return sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(path)
-                if d.startswith("bucket=")
-            )
-        touched = sorted(
-            r["bucket"] for r in changes.select("bucket").distinct().collect()
-        )
-        base = self.read(table).filter(F.col("bucket").isin(touched))
-        merged = self._scd2_merge(base, changes, pk_cols, seq_col, op_col)
-        staging = path + ".staging-" + uuid.uuid4().hex[:8]
-        merged.repartition(max(1, len(touched)), "bucket").write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(staging)
-        # manifest BEFORE swap — same crash-ordering argument as
-        # upsert_bucketed: widened-but-unswapped is safe, swapped-but-
-        # stale loses data on the next merge
-        _write_schema_manifest(path, merged)
-        self._swap_buckets(path, staging, touched)
-        return touched
 
     def compact(self, table: str, target_bytes: int = 128 << 20) -> int:
         """Small-files compaction: every CDC upsert / append round
@@ -681,62 +656,20 @@ class TransferWriter:
         before it is IO-bound. Rewrite the table into
         ceil(total_bytes / target_bytes) files (round-robin
         repartition — parquet re-encodes, so output sizes track row
-        counts) behind the same pointer-flip publish the upsert path
-        uses. Returns the new file count."""
-        import math
-
+        counts; clustered by bucket for bucketed tables, whose
+        `bucket=` dirs the publish keeps) behind the whole-table
+        publish. Returns the new file count."""
         root = self._data_root(table)
-        files = [
-            os.path.join(dp, f)
+        total = sum(
+            os.path.getsize(os.path.join(dp, f))
             for dp, _dn, fns in os.walk(root)
             for f in fns
             if f.endswith(".parquet")
-        ]
-        total = sum(os.path.getsize(f) for f in files)
-        n_out = max(1, math.ceil(total / target_bytes))
-        # preserve a key=value directory layout (bucketed tables):
-        # the rewrite must keep the partition dirs or later
-        # partition-pruned merges would find a flat table
-        part_keys = sorted(
-            {
-                d.split("=", 1)[0]
-                for d in os.listdir(root)
-                if "=" in d and os.path.isdir(os.path.join(root, d))
-            }
         )
+        n_out = max(1, math.ceil(total / target_bytes))
         df = self.spark.read.parquet(root)
-        pinned_buckets = _read_layout_manifest(root)
-
-        def manifests(vdir: str) -> None:
-            # the rewrite must carry the table's identity forward:
-            # the pinned schema (bucketed reads depend on it) and the
-            # bucket-layout pin both live in the version dir
-            _write_schema_manifest(vdir, df)
-            if pinned_buckets is not None:
-                _write_layout_manifest(vdir, pinned_buckets)
-
-        if part_keys:
-            df = df.repartition(n_out, *part_keys)
-
-            def write_parted(vdir: str) -> None:
-                df.write.mode("overwrite").partitionBy(*part_keys).parquet(
-                    vdir
-                )
-                manifests(vdir)
-
-            atomic_dir.publish(
-                self._path(table), write_parted, keep=self.keep_versions
-            )
-        else:
-            df = df.repartition(n_out)
-
-            def write_flat(vdir: str) -> None:
-                df.write.mode("overwrite").parquet(vdir)
-                manifests(vdir)
-
-            atomic_dir.publish(
-                self._path(table), write_flat, keep=self.keep_versions
-            )
+        keys = ["bucket"] if "bucket" in df.columns else []
+        self._publish(table, df.repartition(n_out, *keys))
         return n_out
 
 
@@ -764,8 +697,6 @@ def compact_partition_dirs(
     Scale: each rewrite reads + writes one partition's bytes; the
     scheduler cost this removes grows with file count, which is why
     the trigger is max_files, not size."""
-    import math
-
     out: dict[str, int] = {}
     if not os.path.isdir(root):
         return out

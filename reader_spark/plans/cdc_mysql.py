@@ -350,31 +350,22 @@ def run_pipeline_merge(
     n_buckets: int = 16,
     start_offsets: dict | None = None,
     scd2: bool = False,
-    scd2_bucketed: bool = False,
     max_per_trigger: int | None = None,
 ):
     """Streaming CDC straight into MERGED table state: each micro-batch
-    flows logtail -> decode -> `TransferWriter.upsert_bucketed`, so the
-    destination holds current rows (not an envelope log) and every
-    batch rewrites only the pk-hash buckets it touched. The checkpoint
-    commits AFTER the merge (write-then-commit) — replays are absorbed
-    by last-write-wins on seq.
+    flows logtail -> decode -> a bucketed `TransferWriter` merge, so
+    the destination is laid out as pk-hash bucket partitions and every
+    batch rewrites only the buckets it touched. The checkpoint commits
+    AFTER the merge (write-then-commit).
 
-    scd2=True swaps the merge for `TransferWriter.upsert_scd2`: the
-    destination keeps EVERY version as a validity interval
-    ([eff_from, eff_to) on the binlog seq, live rows open) — the
-    history-preserving warehouse load. Note the replay contract
-    differs: last-write-wins absorbs replays in current-state mode,
-    while interval chaining relies on the GTID resume gate upstream
-    to drop replayed positions. scd2_bucketed=True keeps the SCD2
-    semantics but lays the history out as pk-hash bucket partitions
-    and rewrites only touched buckets per batch
-    (`TransferWriter.upsert_scd2_bucketed`) — the 100 TB path."""
-    if scd2_bucketed and not scd2:
-        raise ValueError(
-            "scd2_bucketed=True lays out SCD2 history and needs scd2=True; "
-            "alone it would silently run the current-state merge"
-        )
+    `scd2` picks the merge semantics: False (`upsert_bucketed`) keeps
+    current rows — replays are absorbed by last-write-wins on seq;
+    True (`upsert_scd2_bucketed`) keeps EVERY version as a validity
+    interval ([eff_from, eff_to) on the binlog seq, live rows open) —
+    the history-preserving warehouse load, whose interval chaining
+    relies on the GTID resume gate upstream to drop replayed
+    positions. A destination created flat (by `upsert_scd2`) is
+    refused with a ValueError naming the flat layout."""
     adapter = adapter or SchemaAdapter()
     writer = TransferWriter(spark, dest_dir)
 
@@ -414,17 +405,11 @@ def run_pipeline_merge(
                 changes = changes.filter(
                     F.col("seq") > F.lit(trunc_seq[table])
                 )
+            merge = (
+                writer.upsert_scd2_bucketed if scd2 else writer.upsert_bucketed
+            )
             pk = adapter.tables[table][0]
-            if scd2_bucketed:
-                writer.upsert_scd2_bucketed(
-                    table, changes, [pk], "seq", n_buckets=n_buckets
-                )
-            elif scd2:
-                writer.upsert_scd2(table, changes, [pk], "seq")
-            else:
-                writer.upsert_bucketed(
-                    table, changes, [pk], "seq", n_buckets=n_buckets
-                )
+            merge(table, changes, [pk], "seq", n_buckets=n_buckets)
 
     return _drain_log(
         spark, log_dir, checkpoint_dir, handle, start_offsets, max_per_trigger

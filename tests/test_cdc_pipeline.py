@@ -412,7 +412,12 @@ def test_quarantine_skips_clean_batches(spark, tmp_path):
 def test_streaming_merge_scd2_history(spark, tmp_path):
     """CDC stream -> SCD2 sink: the destination keeps EVERY version
     as a [eff_from, eff_to) interval on the binlog seq; updates chain,
-    deletes close without reopening, live rows are open."""
+    deletes close without reopening, live rows are open. The history
+    is bucket-partitioned and each batch rewrites only touched
+    buckets, as the current-state merge does."""
+    import os
+
+    from reader_spark.operators.transfer import TransferWriter
     from reader_spark.plans.cdc_mysql import run_pipeline_merge
 
     log = tmp_path / "log"
@@ -427,7 +432,7 @@ def test_streaming_merge_scd2_history(spark, tmp_path):
     ])
     adapter = SchemaAdapter()
     q = run_pipeline_merge(spark, str(log), dest, ck, "app", ["users"],
-                           adapter, scd2=True)
+                           adapter, scd2=True, n_buckets=4)
     q.awaitTermination(90)
     _append(log / "binlog.jsonl", [
         rec(4, "dml", op="u", before='{"id": 1, "name": "ada"}',
@@ -435,64 +440,18 @@ def test_streaming_merge_scd2_history(spark, tmp_path):
         rec(5, "dml", op="d", before='{"id": 2, "name": "bob"}'),
     ])
     q2 = run_pipeline_merge(spark, str(log), dest, ck, "app", ["users"],
-                            adapter, scd2=True)
+                            adapter, scd2=True, n_buckets=4)
     q2.awaitTermination(90)
-    from reader_spark.operators import atomic_dir
 
-    rows = sorted(
-        (r["id"], r["name"], int(r["eff_from"]),
-         None if r["eff_to"] is None else int(r["eff_to"]))
-        for r in spark.read.parquet(
-            atomic_dir.resolve(f"{dest}/users")  # SCD2 sink is pointer-published
-        ).collect()
-    )
-    assert rows == [
-        ("1", "ada", 2, 4),
-        ("1", "ada2", 4, None),
-        ("2", "bob", 3, 5),
-    ]
-
-
-def test_streaming_merge_scd2_bucketed_history(spark, tmp_path):
-    """CDC stream -> BUCKETED SCD2 sink: identical interval semantics
-    to the full-rewrite path, but the history is bucket-partitioned
-    and each batch rewrites only touched buckets (the 100 TB path)."""
-    from reader_spark.plans.cdc_mysql import run_pipeline_merge
-
-    log = tmp_path / "log"
-    log.mkdir()
-    dest = str(tmp_path / "dest_scd2b")
-    ck = str(tmp_path / "ck_scd2b")
-
-    _append(log / "binlog.jsonl", [
-        rec(1, "ddl", statement="CREATE TABLE users (id int, name text)"),
-        rec(2, "dml", op="c", after='{"id": 1, "name": "ada"}'),
-        rec(3, "dml", op="c", after='{"id": 2, "name": "bob"}'),
-    ])
-    adapter = SchemaAdapter()
-    q = run_pipeline_merge(spark, str(log), dest, ck, "app", ["users"],
-                           adapter, scd2=True, scd2_bucketed=True,
-                           n_buckets=4)
-    q.awaitTermination(90)
-    _append(log / "binlog.jsonl", [
-        rec(4, "dml", op="u", before='{"id": 1, "name": "ada"}',
-            after='{"id": 1, "name": "ada2"}'),
-        rec(5, "dml", op="d", before='{"id": 2, "name": "bob"}'),
-    ])
-    q2 = run_pipeline_merge(spark, str(log), dest, ck, "app", ["users"],
-                            adapter, scd2=True, scd2_bucketed=True,
-                            n_buckets=4)
-    q2.awaitTermination(90)
-    import os
-
+    writer = TransferWriter(spark, dest)
     # bucket-partitioned layout on disk
     assert any(
-        d.startswith("bucket=") for d in os.listdir(f"{dest}/users")
+        d.startswith("bucket=") for d in os.listdir(writer._data_root("users"))
     )
     rows = sorted(
         (r["id"], r["name"], int(r["eff_from"]),
          None if r["eff_to"] is None else int(r["eff_to"]))
-        for r in spark.read.parquet(f"{dest}/users").drop("bucket").collect()
+        for r in writer.read("users").drop("bucket").collect()
     )
     assert rows == [
         ("1", "ada", 2, 4),
@@ -684,7 +643,7 @@ def test_truncate_scd2_closes_intervals_keeps_history(spark, tmp_path):
     adapter = SchemaAdapter()
     q = run_pipeline_merge(
         spark, str(log), dest, ck, "app", ["users"], adapter,
-        scd2=True, scd2_bucketed=True, n_buckets=4,
+        scd2=True, n_buckets=4,
     )
     q.awaitTermination(90)
 
@@ -694,7 +653,7 @@ def test_truncate_scd2_closes_intervals_keeps_history(spark, tmp_path):
     ])
     q2 = run_pipeline_merge(
         spark, str(log), dest, ck, "app", ["users"], adapter,
-        scd2=True, scd2_bucketed=True, n_buckets=4,
+        scd2=True, n_buckets=4,
     )
     q2.awaitTermination(90)
 

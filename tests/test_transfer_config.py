@@ -338,8 +338,8 @@ destination:
 
 
 def test_job_runner_streaming_scd2_bucketed_yaml(spark, tmp_path):
-    """YAML destination options scd2 + scd2_bucketed drive the
-    bucket-partitioned history-preserving merge end-to-end."""
+    """YAML destination option scd2 drives the history-preserving
+    merge end-to-end, bucket-partitioned like the current-state one."""
     import json
     import os
 
@@ -382,7 +382,6 @@ destination:
   options:
     n_buckets: 4
     scd2: true
-    scd2_bucketed: true
 """
     out = run_job(spark, load_settings(cfg))
     assert any(
@@ -397,14 +396,17 @@ destination:
 
 
 def test_job_runner_streaming_scd2_bucketed_requires_scd2(spark, tmp_path):
-    """A config that sets scd2_bucketed without scd2 is rejected: it
-    would otherwise silently load the current-state table shape."""
+    """A transfer destination accepts only n_buckets and scd2: the
+    retired scd2_bucketed key and a typo (n_bucket, which would
+    otherwise seed and pin the default 16 buckets) are rejected by
+    name before any stream starts."""
     from reader_spark.config import load_settings
     from reader_spark.job import run_job
 
     log = tmp_path / "log"
     log.mkdir()
-    cfg = f"""
+    for option in ("scd2_bucketed: true", "n_bucket: 64"):
+        cfg = f"""
 source:
   kind: mysql
   database: app
@@ -418,11 +420,11 @@ destination:
   kind: transfer
   path: {tmp_path}/dest
   options:
-    scd2_bucketed: true
+    {option}
 """
-    with pytest.raises(ValueError, match="scd2_bucketed"):
-        run_job(spark, load_settings(cfg))
-    assert not (tmp_path / "dest").exists()
+        with pytest.raises(ValueError, match=option.split(":")[0]):
+            run_job(spark, load_settings(cfg))
+        assert not (tmp_path / "dest").exists()
 
 
 def test_job_runner_streaming_timeout_fails_and_stops(
@@ -1050,10 +1052,12 @@ def test_scd2_current_and_as_of_views(spark, tmp_path):
     } == {("A", "v2")}
 
 
-def test_upsert_scd2_bucketed_matches_full_rewrite(spark, tmp_path):
-    """The bucketed SCD2 merge is semantics-identical to the
-    full-rewrite one (a key's whole interval chain lives in one
-    bucket, so chaining within touched buckets is complete), and a
+@pytest.mark.parametrize("semantics", ["current", "scd2"])
+def test_upsert_scd2_bucketed_matches_full_rewrite(spark, tmp_path, semantics):
+    """Each bucketed merge is semantics-identical to its full-rewrite
+    verb — upsert_bucketed to upsert, upsert_scd2_bucketed to
+    upsert_scd2 (everything a merge needs about a key, its row or its
+    whole interval chain, lives in the key's one bucket) — and a
     batch rewrites ONLY the buckets containing changed keys."""
     import os
 
@@ -1061,16 +1065,17 @@ def test_upsert_scd2_bucketed_matches_full_rewrite(spark, tmp_path):
 
     tw_full = TransferWriter(spark, str(tmp_path / "full"))
     tw_bkt = TransferWriter(spark, str(tmp_path / "bkt"))
+    verb = "upsert_scd2" if semantics == "scd2" else "upsert"
+    full = getattr(tw_full, verb)
+    bucketed = getattr(tw_bkt, verb + "_bucketed")
     n_buckets = 8
 
     b1 = spark.createDataFrame(
         [(f"k{i}", f"v{i}", i, "c") for i in range(40)],
         "id string, val string, seq long, op string",
     )
-    tw_full.upsert_scd2("t", b1, ["id"], "seq")
-    touched1 = tw_bkt.upsert_scd2_bucketed(
-        "t", b1, ["id"], "seq", n_buckets=n_buckets
-    )
+    full("t", b1, ["id"], "seq")
+    touched1 = bucketed("t", b1, ["id"], "seq", n_buckets=n_buckets)
     assert len(touched1) <= n_buckets  # seed touches every populated bucket
 
     # snapshot per-bucket file listings before the incremental batch
@@ -1079,10 +1084,10 @@ def test_upsert_scd2_bucketed_matches_full_rewrite(spark, tmp_path):
         out = {}
         for d in os.listdir(root):
             if d.startswith("bucket="):
-                full = os.path.join(root, d)
+                full_dir = os.path.join(root, d)
                 out[d] = sorted(
-                    (f, os.path.getmtime(os.path.join(full, f)))
-                    for f in os.listdir(full)
+                    (f, os.path.getmtime(os.path.join(full_dir, f)))
+                    for f in os.listdir(full_dir)
                     if f.endswith(".parquet")
                 )
         return out
@@ -1095,10 +1100,8 @@ def test_upsert_scd2_bucketed_matches_full_rewrite(spark, tmp_path):
          ("k3", None, 102, "d")],
         "id string, val string, seq long, op string",
     )
-    tw_full.upsert_scd2("t", b2, ["id"], "seq")
-    touched2 = tw_bkt.upsert_scd2_bucketed(
-        "t", b2, ["id"], "seq", n_buckets=n_buckets
-    )
+    full("t", b2, ["id"], "seq")
+    touched2 = bucketed("t", b2, ["id"], "seq", n_buckets=n_buckets)
     assert 1 <= len(touched2) <= 3  # at most one bucket per changed key
 
     after = bucket_files()
@@ -1108,19 +1111,23 @@ def test_upsert_scd2_bucketed_matches_full_rewrite(spark, tmp_path):
             continue
         assert after[d] == files, f"untouched {d} was rewritten"
 
+    cols = ["id", "val"] + (["eff_from", "eff_to"] if semantics == "scd2" else [])
+
     def canon(tw):
         return sorted(
-            (r["id"], r["val"], r["eff_from"],
-             None if r["eff_to"] is None else int(r["eff_to"]))
-            for r in tw.read("t").drop("bucket").collect()
+            (tuple(r) for r in tw.read("t").select(*cols).collect()), key=repr
         )
 
     assert canon(tw_bkt) == canon(tw_full)
-    # SCD2 invariants hold in the bucketed layout too
     rows = canon(tw_bkt)
-    open_rows = [r for r in rows if r[3] is None]
-    assert len(open_rows) == 39  # 40 keys - 1 deleted
-    assert ("k1", "V1", 100, None) in rows and ("k1", "v1", 1, 100) in rows
+    if semantics == "scd2":
+        # SCD2 invariants hold in the bucketed layout too
+        open_rows = [r for r in rows if r[3] is None]
+        assert len(open_rows) == 39  # 40 keys - 1 deleted
+        assert ("k1", "V1", 100, None) in rows and ("k1", "v1", 1, 100) in rows
+    else:
+        assert len(rows) == 39 and ("k1", "V1") in rows
+        assert not any(r[0] == "k3" for r in rows)
 
 
 def test_index_job_neardup_build_and_maintain(spark, tmp_path, sf_dir):
@@ -1699,17 +1706,45 @@ index:
     assert sum(r[1] for r in got) == emb.count()
 
 
-def test_upsert_missing_pk_fails_loudly(spark, tmp_path):
+@pytest.mark.parametrize(
+    "verb",
+    ["upsert", "upsert_bucketed", "upsert_scd2", "upsert_scd2_bucketed"],
+)
+def test_upsert_missing_pk_fails_loudly(spark, tmp_path, verb):
     """Schema evolution must never null-fill the PRIMARY KEY: a
-    change set without it is unmergeable and raises instead of
-    collapsing into one null-key group."""
+    change set without it is unmergeable, and every MERGE verb raises
+    the same ValueError instead of collapsing into one null-key group
+    or failing inside the bucket hash or the interval window."""
     tw = TransferWriter(spark, str(tmp_path))
-    tw.append("t", base_df(spark))
+    kw = {"n_buckets": 4} if verb.endswith("_bucketed") else {}
+    merge = getattr(tw, verb)
+    merge("t", changes_df(spark), ["id"], "seq", **kw)
     bad = spark.createDataFrame(
         [("x", "c", 1)], "val string, op string, seq long"
     )
     with pytest.raises(ValueError, match="missing primary-key"):
-        tw.upsert("t", bad, ["id"], "seq")
+        merge("t", bad, ["id"], "seq", **kw)
+
+
+@pytest.mark.parametrize("verb", ["upsert", "upsert_scd2"])
+def test_bucketed_verb_on_flat_table_raises_before_pinning(
+    spark, tmp_path, verb
+):
+    """A bucketed merge on a table the flat verb created fails with a
+    ValueError naming the flat layout, and writes no `_layout.json`
+    into the flat version dir (a false pin would ride along through
+    later truncate/compact calls). The table is left as it was."""
+    from reader_spark.operators.transfer import _read_layout_manifest
+
+    tw = TransferWriter(spark, str(tmp_path))
+    getattr(tw, verb)("t", changes_df(spark), ["id"], "seq")
+    before = sorted((tuple(r) for r in tw.read("t").collect()), key=repr)
+    with pytest.raises(ValueError, match="flat layout"):
+        getattr(tw, verb + "_bucketed")(
+            "t", changes_df(spark), ["id"], "seq", n_buckets=4
+        )
+    assert _read_layout_manifest(tw._data_root("t")) is None
+    assert sorted((tuple(r) for r in tw.read("t").collect()), key=repr) == before
 
 
 def test_schema_manifest_pins_reads_no_footer_merge(spark, tmp_path):
