@@ -412,11 +412,7 @@ def test_quarantine_skips_clean_batches(spark, tmp_path):
 def test_streaming_merge_scd2_history(spark, tmp_path):
     """CDC stream -> SCD2 sink: the destination keeps EVERY version
     as a [eff_from, eff_to) interval on the binlog seq; updates chain,
-    deletes close without reopening, live rows are open. The history
-    is bucket-partitioned and each batch rewrites only touched
-    buckets, as the current-state merge does."""
-    import os
-
+    deletes close without reopening, live rows are open."""
     from reader_spark.operators.transfer import TransferWriter
     from reader_spark.plans.cdc_mysql import run_pipeline_merge
 
@@ -424,6 +420,51 @@ def test_streaming_merge_scd2_history(spark, tmp_path):
     log.mkdir()
     dest = str(tmp_path / "dest_scd2")
     ck = str(tmp_path / "ck_scd2")
+
+    _append(log / "binlog.jsonl", [
+        rec(1, "ddl", statement="CREATE TABLE users (id int, name text)"),
+        rec(2, "dml", op="c", after='{"id": 1, "name": "ada"}'),
+        rec(3, "dml", op="c", after='{"id": 2, "name": "bob"}'),
+    ])
+    adapter = SchemaAdapter()
+    q = run_pipeline_merge(spark, str(log), dest, ck, "app", ["users"],
+                           adapter, scd2=True)
+    q.awaitTermination(90)
+    _append(log / "binlog.jsonl", [
+        rec(4, "dml", op="u", before='{"id": 1, "name": "ada"}',
+            after='{"id": 1, "name": "ada2"}'),
+        rec(5, "dml", op="d", before='{"id": 2, "name": "bob"}'),
+    ])
+    q2 = run_pipeline_merge(spark, str(log), dest, ck, "app", ["users"],
+                            adapter, scd2=True)
+    q2.awaitTermination(90)
+
+    rows = sorted(
+        (r["id"], r["name"], int(r["eff_from"]),
+         None if r["eff_to"] is None else int(r["eff_to"]))
+        for r in TransferWriter(spark, dest).read("users")
+        .drop("bucket").collect()
+    )
+    assert rows == [
+        ("1", "ada", 2, 4),
+        ("1", "ada2", 4, None),
+        ("2", "bob", 3, 5),
+    ]
+
+
+def test_streaming_merge_scd2_bucketed_history(spark, tmp_path):
+    """CDC stream -> SCD2 sink with an explicit bucket count: the
+    history is bucket-partitioned and each batch rewrites only touched
+    buckets, with the same interval rows as the default layout."""
+    import os
+
+    from reader_spark.operators.transfer import TransferWriter
+    from reader_spark.plans.cdc_mysql import run_pipeline_merge
+
+    log = tmp_path / "log"
+    log.mkdir()
+    dest = str(tmp_path / "dest_scd2b")
+    ck = str(tmp_path / "ck_scd2b")
 
     _append(log / "binlog.jsonl", [
         rec(1, "ddl", statement="CREATE TABLE users (id int, name text)"),
