@@ -268,6 +268,17 @@ def _run_streaming(spark: SparkSession, settings: Settings) -> dict[str, str]:
                 f"unknown transfer destination option(s) {unknown}; "
                 "accepted: n_buckets, scd2"
             )
+        scd2 = str(dest.options.get("scd2", "")).lower() in (
+            "1", "true", "yes",
+        )
+        if scd2 and snap_path:
+            # snapshot_then_stream seeds and merges current state
+            # only: running it would drop the history asked for
+            raise ValueError(
+                "transfer destination scd2: true cannot start from "
+                "source.options.snapshot_path (the snapshot hand-off "
+                "keeps current state only)"
+            )
     n_buckets = int(dest.options.get("n_buckets", 16))
     cap = int(src.options.get("max_records_per_trigger", 0)) or None
     if dest.kind == "transfer" and snap_path:
@@ -289,9 +300,6 @@ def _run_streaming(spark: SparkSession, settings: Settings) -> dict[str, str]:
             snapshot_position=src.options.get("snapshot_position"),
         )
     elif dest.kind == "transfer":
-        scd2 = str(dest.options.get("scd2", "")).lower() in (
-            "1", "true", "yes",
-        )
         q = run_pipeline_merge(
             spark, log_dir, dest.path, ck, src.database, tables,
             adapter, history_path=history, n_buckets=n_buckets,
@@ -1028,9 +1036,15 @@ def _run_curate(spark: SparkSession, settings: Settings) -> dict[str, str]:
     the minimum id; minhash dedup keeps each near-dup component's
     minimum id (LSH + Jaccard verify + connected components — no
     all-pairs anywhere); the shard write is partitionBy(shard) with a
-    per-partition sort. Returns {table: out_path} plus a per-shard
-    doc-count manifest under the 'manifest:<table>' key.
+    per-partition sort. With a split configured, the survivor frame
+    (after gates, dedup, split assignment and chunking) is pinned
+    once: the first split write computes it, and the train/val/test
+    writes each filter it instead of re-running the chain. Pins are
+    released after the table's writes. Returns {table: out_path}
+    plus the written row count under 'manifest:<table>' (or
+    'manifest:<table>/<split>' per split).
     """
+    from reader_spark.cache import pin, release_pins
     from reader_spark.functions.text import quality_score
     from reader_spark.operators import dedup as DD
     from reader_spark.operators.transfer import write_training_shards
@@ -1138,8 +1152,6 @@ def _run_curate(spark: SparkSession, settings: Settings) -> dict[str, str]:
         if need_derive:
             # one near-dup derivation feeds BOTH the keep-one dedup
             # and the leakage-free split when both are configured
-            from reader_spark.cache import pin
-
             # the recall-tuned production banding (k=128/r=8) — the
             # old 16/8 here caught ~46% of true near-dups at j=0.8
             base = pin(DD.token_hashes(docs))
@@ -1224,6 +1236,10 @@ def _run_curate(spark: SparkSession, settings: Settings) -> dict[str, str]:
         # without a single extra scan
         write_counts: list[tuple[str, int]] = []
         if cfg.split:
+            # three writes read one survivor frame: computed (gate
+            # Observations included) by the first, filtered from the
+            # cache by the other two
+            docs = pin(docs)
             for s in ("train", "val", "test"):
                 part = docs.filter(F.col("split") == s).drop("split")
                 manifest = write_training_shards(
@@ -1312,8 +1328,6 @@ def _run_curate(spark: SparkSession, settings: Settings) -> dict[str, str]:
             else:
                 SK.bloom_write(ids, cfg.seen_index, "doc_id")
         # shard write materialized everything — drop the pinned
-        # token-hash/signature frames before the next table
-        from reader_spark.cache import release_pins
-
+        # token-hash/signature/survivor frames before the next table
         release_pins()
     return results

@@ -1020,6 +1020,20 @@ def budget_select(
 # deterministic epoch shuffle
 
 
+def _epoch_shard(
+    id_col: str, n_shards: int, epoch: int, draw: str = "draw"
+):
+    """The epoch shuffle's two columns: the md5 draw keyed by
+    (epoch, id), aliased `draw`, and the shard it maps to,
+    pmod(draw, n_shards) — which reads the `draw` column, so select
+    the draw first. `epoch_shuffle` and `write_training_shards` both
+    build their assignment from here."""
+    h = DD.md5_hash64(
+        F.concat(F.lit(f"ep{epoch}:"), F.col(id_col).cast("string")), "shuf"
+    )
+    return h.alias(draw), F.pmod(F.col(draw), F.lit(n_shards)).cast("int")
+
+
 def epoch_shuffle(
     docs: DataFrame,
     n_shards: int = 16,
@@ -1041,14 +1055,12 @@ def epoch_shuffle(
     """
     from pyspark.sql import Window as W
 
-    h = DD.md5_hash64(
-        F.concat(F.lit(f"ep{epoch}:"), F.col(id_col).cast("string")), "shuf"
-    )
+    draw, shard = _epoch_shard(id_col, n_shards, epoch)
     w = W.partitionBy("shard").orderBy("draw", id_col)
     return (
         DD.ensure_parallelism(docs)
-        .select(id_col, h.alias("draw"))
-        .withColumn("shard", F.pmod(F.col("draw"), F.lit(n_shards)).cast("int"))
+        .select(id_col, draw)
+        .withColumn("shard", shard)
         .withColumn("pos", F.row_number().over(w))
         .select(id_col, "shard", "pos")
     )

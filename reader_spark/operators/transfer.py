@@ -930,50 +930,52 @@ def write_training_shards(
     epoch_shuffle assignment, written as parquet partitioned by
     shard, rows ordered by their in-shard position — the layout a
     sequential data loader streams without any further shuffling.
+    Files hold `id_col` first, then the other input columns, then
+    `pos`. Returns the manifest {shard: rows} (driver-side, bounded
+    by n_shards) for the job log; an empty input writes no shard
+    and returns {}.
 
-    Scale shape: `repartition(n_shards, shard)` puts each shard's
-    rows on one writer task; `sortWithinPartitions(shard, pos)` is a
-    PER-PARTITION sort (never a global orderBy — no single-partition
-    exchange, no range-exchange sampling pass); partitionBy("shard")
-    then writes one directory per shard. n_shards is chosen so a
-    shard is a few GB; `maxRecordsPerFile` caps file size within a
-    shard. Returns a tiny manifest dict (driver-side, bounded by
-    n_shards) for the job log.
+    Scale shape: ONE exchange. The draw and shard are computed on
+    the input rows themselves (no assignment frame joined back), and
+    `repartition(n_shards, shard)` both puts each shard's rows on one
+    writer task and serves the per-shard rank window, which needs
+    exactly that clustering. The ranked frame is persisted for the
+    write: `sortWithinPartitions(shard, pos)` is a PER-PARTITION sort
+    (never a global orderBy), partitionBy("shard") writes one
+    directory per shard, and the manifest is a groupBy(shard) count
+    over the same materialized frame — no read-back of the written
+    files. n_shards is chosen so a shard is a few GB;
+    `maxRecordsPerFile` caps file size within a shard.
     """
-    from reader_spark.operators.curation import epoch_shuffle
+    from reader_spark.operators.curation import _epoch_shard
 
-    assigned = epoch_shuffle(docs, n_shards=n_shards, epoch=epoch, id_col=id_col)
-    rows = docs.join(assigned, id_col)
-    (
-        rows.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", "pos")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", 1_000_000)
-        .partitionBy("shard")
-        .parquet(out_dir)
-    )
-    spark = docs.sparkSession
-    from pyspark.errors import AnalysisException
-
-    try:
-        manifest = (
-            spark.read.parquet(out_dir)
-            .groupBy("shard")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .collect()
+    draw, shard = _epoch_shard(id_col, n_shards, epoch, draw="__draw")
+    cols = [id_col] + [c for c in docs.columns if c != id_col]
+    rows = (
+        docs.select(*cols, draw)
+        .withColumn("shard", shard)
+        .repartition(n_shards, F.col("shard"))
+        .withColumn(
+            "pos",
+            F.row_number().over(
+                Window.partitionBy("shard").orderBy("__draw", id_col)
+            ),
         )
-    except AnalysisException as e:
-        # an EMPTY wave (e.g. fully screened by the seen-set gate)
-        # writes a dir with no parquet footers — schema inference
-        # then raises. Zero shards is a legitimate result, not a
-        # failed job. ONLY that shape maps to {}: any other failure
-        # (permissions, a corrupt footer, lost executor) must
-        # surface — an empty manifest for a wave that DID ship would
-        # read downstream as "nothing written".
-        if "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return {}
-        raise
-    return {int(r["shard"]): int(r["n_docs"]) for r in manifest}
+        .drop("__draw")
+        .persist()
+    )
+    try:
+        (
+            rows.sortWithinPartitions("shard", "pos")
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", 1_000_000)
+            .partitionBy("shard")
+            .parquet(out_dir)
+        )
+        manifest = rows.groupBy("shard").count().collect()
+    finally:
+        rows.unpersist()
+    return {int(r["shard"]): int(r["count"]) for r in manifest}
 
 
 def scd2_current(history: DataFrame) -> DataFrame:

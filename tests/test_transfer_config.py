@@ -427,6 +427,55 @@ destination:
         assert not (tmp_path / "dest").exists()
 
 
+def test_job_runner_streaming_scd2_rejects_snapshot_path(spark, tmp_path):
+    """scd2: true with a snapshot hand-off is refused: the hand-off
+    seeds and merges current state only, so running it would silently
+    drop the history the destination asks for. The error comes before
+    the seed is written — nothing lands under the destination."""
+    import json
+
+    from reader_spark.config import load_settings
+    from reader_spark.job import run_job
+
+    log = tmp_path / "log"
+    log.mkdir()
+    with open(log / "binlog.jsonl", "w") as f:
+        f.write(json.dumps({
+            "seq": 1, "ts_ms": 100, "db": "app", "tbl": "users",
+            "kind": "dml", "op": "c", "gtid_sid": "s1", "gtid_tx": 1,
+            "statement": None, "before": None,
+            "after": '{"id": 1, "name": "ada"}',
+        }) + "\n")
+    snapdir = tmp_path / "snap"
+    spark.createDataFrame([(1, "ada")], "id int, name string").write.parquet(
+        str(snapdir / "users.parquet")
+    )
+    dest = tmp_path / "dest"
+    cfg = f"""
+source:
+  kind: mysql
+  database: app
+  streaming: true
+  tables: [{{name: users}}]
+  options:
+    log_dir: {log}
+    checkpoint_dir: {tmp_path}/ck
+    snapshot_path: {snapdir}
+    snapshot_position: {{"binlog.jsonl": 1}}
+    bootstrap_ddl: ["CREATE TABLE users (id int, name text)"]
+    timeout_sec: 90
+destination:
+  kind: transfer
+  path: {dest}
+  options:
+    scd2: true
+"""
+    with pytest.raises(ValueError, match="snapshot_path"):
+        run_job(spark, load_settings(cfg))
+    assert not dest.exists()
+    assert not (tmp_path / "ck").exists()
+
+
 def test_job_runner_streaming_timeout_fails_and_stops(
     spark, tmp_path, monkeypatch
 ):
@@ -502,6 +551,122 @@ def test_write_training_shards_layout_and_order(spark, sf_dir, tmp_path):
     one = spark.read.parquet(f"{out}/shard=0").collect()
     poss = [r["pos"] for r in one]
     assert poss == sorted(poss)
+
+
+@pytest.mark.parametrize("n_shards,epoch", [(1, 0), (1, 1), (4, 0), (4, 1)])
+def test_write_training_shards_matches_epoch_shuffle(
+    spark, sf_dir, tmp_path, n_shards, epoch
+):
+    """The write assigns shard and pos itself; every written
+    (doc_id, shard, pos) row is epoch_shuffle's, and the files hold the
+    id column first, then the other input columns, then pos — also
+    when the id column is not first in the input."""
+    from reader_spark.operators.curation import epoch_shuffle
+    from reader_spark.operators.transfer import write_training_shards
+    from reader_spark.session import read_table
+
+    docs = read_table(spark, sf_dir, "documents").select(
+        "text", "doc_id", "lang"
+    )
+    out = str(tmp_path / "shards")
+    manifest = write_training_shards(
+        docs, out, n_shards=n_shards, epoch=epoch
+    )
+    back = spark.read.parquet(out)
+    assert back.columns == ["doc_id", "text", "lang", "pos", "shard"]
+    written = sorted(
+        tuple(r) for r in back.select("doc_id", "shard", "pos").collect()
+    )
+    want = sorted(
+        tuple(r)
+        for r in epoch_shuffle(docs, n_shards=n_shards, epoch=epoch)
+        .select("doc_id", "shard", "pos")
+        .collect()
+    )
+    assert written == want
+    per_shard: dict[int, int] = {}
+    for _, shard, _ in want:
+        per_shard[shard] = per_shard.get(shard, 0) + 1
+    assert manifest == per_shard
+
+
+def test_write_training_shards_empty_input(spark, sf_dir, tmp_path):
+    """An empty input (e.g. a wave the seen-set gate screened out
+    entirely) writes no shard and returns an empty manifest."""
+    import os
+
+    from reader_spark.operators.transfer import write_training_shards
+    from reader_spark.session import read_table
+
+    docs = read_table(spark, sf_dir, "documents").filter("doc_id < 0")
+    out = str(tmp_path / "empty")
+    assert write_training_shards(docs, out, n_shards=4) == {}
+    assert not [n for n in os.listdir(out) if n.startswith("shard=")]
+
+
+def _curate_minhash_component_cfg(sf_dir, out):
+    return f"""
+source:
+  kind: parquet
+  options: {{path: {sf_dir}}}
+  tables: [{{name: documents}}]
+destination:
+  kind: parquet
+  path: {out}
+curate:
+  dedup: minhash
+  split: component
+  n_shards: 2
+"""
+
+
+def test_curate_split_job_leaves_no_cached_frame(spark, sf_dir, tmp_path):
+    """The split writes read one pinned survivor frame and each write
+    persists its ranked frame; both are released by the end of the
+    job, so the session CacheManager is as empty as it started."""
+    from reader_spark.config import load_settings
+    from reader_spark.job import run_job
+
+    spark.catalog.clearCache()
+    out = str(tmp_path / "curated")
+    res = run_job(
+        spark, load_settings(_curate_minhash_component_cfg(sf_dir, out))
+    )
+    assert all(
+        int(res[f"manifest:documents/{s}"]) > 0
+        for s in ("train", "val", "test")
+    )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_curate_split_job_spark_job_count(spark, sf_dir, tmp_path):
+    """Regression guard on the work a minhash + component-split
+    curate run starts: the survivor chain is computed once for the
+    three split writes, and each write is one exchange with its
+    manifest taken from the materialized frame (no read-back). In the
+    test session this run starts 24 jobs in its own job group, the
+    same count on every repeat: 26 without the survivor pin, 31 with
+    the old join-back write. The bound leaves a margin of 1 so that
+    either regression fails. Broadcast jobs run in their own group
+    and are not counted."""
+    from reader_spark.config import load_settings
+    from reader_spark.job import run_job
+
+    sc = spark.sparkContext
+    group = f"curate-job-count-{tmp_path.name}"
+    sc.setJobGroup(group, "curate job-count guard")
+    try:
+        run_job(
+            spark,
+            load_settings(
+                _curate_minhash_component_cfg(sf_dir, str(tmp_path / "c"))
+            ),
+        )
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 25, n_jobs
 
 
 def test_curate_job_end_to_end(spark, sf_dir, tmp_path):
