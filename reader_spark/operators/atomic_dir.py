@@ -27,6 +27,14 @@ pins itself to.
 
 Single-writer per dataset (same assumption the rename swap made);
 readers need no coordination.
+
+Maintained artifacts (sketch tiles, index scalars, health tables)
+also keep their replay position here: a `write_fn` stamps its version
+dir with `write_epoch`, so the `_epoch` marker and the data it
+describes go live together in one pointer flip, and `read_epoch` of
+the live data root is the last-applied batch id. `epoch_gate` skips
+a `foreachBatch` batch whose id is not above it — the idempotent-sink
+half of Structured Streaming's exactly-once.
 """
 
 from __future__ import annotations
@@ -93,6 +101,41 @@ def resolve(path: str, version: int | None = None) -> str:
         if name:
             return os.path.join(path, name)
     return path
+
+
+def _epoch_file(data_root: str) -> str:
+    return os.path.join(data_root, "_epoch")
+
+
+def read_epoch(data_root: str) -> int:
+    """Last-applied update epoch of a resolved data root; -1 when the
+    marker is absent or empty (never epoched, or a seed)."""
+    ep = _epoch_file(data_root)
+    if os.path.isfile(ep):
+        with open(ep) as f:
+            return int(f.read().strip() or -1)
+    return -1
+
+
+def epoch_gate(data_root: str, epoch: int | None) -> int | None:
+    """The batch-id gate of an epoched update against the live data
+    root: the epoch its publish stamps — `epoch`, or the stored one
+    carried forward when the update has none — or None when `epoch`
+    is already applied (a replayed batch: skip the update)."""
+    stored = read_epoch(data_root)
+    if epoch is None:
+        return stored
+    return None if stored >= epoch else epoch
+
+
+def write_epoch(version_dir: str, epoch: int | None) -> None:
+    """Stamp the version dir a `publish` write_fn is filling with its
+    `_epoch` marker (None writes none). The marker goes live with the
+    data at the flip; a write_fn that raises leaves the previous data
+    AND epoch live."""
+    if epoch is not None:
+        with open(_epoch_file(version_dir), "w") as f:
+            f.write(str(epoch))
 
 
 def publish(path: str, write_fn, keep: int = 1) -> str:

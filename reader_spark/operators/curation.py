@@ -1845,19 +1845,11 @@ def drift_watch(
         # empty must still REPLACE its stale row to keep the
         # per-batch-id exactly-once contract.
         spark = batch_df.sparkSession
-        row = drift_check(
-            spark, ref_path, batch_df, value_col, alert_ppm
-        ).withColumn("batch", F.lit(batch_id))
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        SIM.log_batch_verdict(
+            drift_check(spark, ref_path, batch_df, value_col, alert_ppm),
+            batch_id,
+            log_path,
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            row.coalesce(1).write.partitionBy("batch").mode(
-                "overwrite"
-            ).parquet(log_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     return body
 
@@ -2223,19 +2215,13 @@ def drift_watch_categorical(
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        row = drift_check_categorical(
-            spark, ref_path, batch_df, cat_col, alert_ppm
-        ).withColumn("batch", F.lit(batch_id))
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        SIM.log_batch_verdict(
+            drift_check_categorical(
+                spark, ref_path, batch_df, cat_col, alert_ppm
+            ),
+            batch_id,
+            log_path,
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            row.coalesce(1).write.partitionBy("batch").mode(
-                "overwrite"
-            ).parquet(log_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     return body
 

@@ -829,41 +829,26 @@ def connected_components(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 30,
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """Dedup CLUSTER assignment: connected components over the
     near-dup pair graph — (node, label) with label = the component's
     minimum id, i.e. the canonical representative a keep-one dedup
     policy retains.
 
-    Two bodies behind the `algorithm` flag (identical results,
-    property-tested against each other in test_dedup_similarity.py):
-
-    * "propagation" (default): min-label propagation. Per iteration:
-      one equi-join of edges to labels (propagate) and one map-side-
-      combinable groupBy-min (reduce) — 2 shuffles, both on uniform id
-      keys. Iterations = graph DIAMETER; near-dup graphs are dense
-      cliques stitched by hubs, so convergence is fast (observed ≤ 4
-      rounds on the fixture corpus). The right default below ~1 B
-      edges.
-    * "star": alternating large-star/small-star (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond", SoCC'14) — the
-      extreme-scale tier. Each round REWRITES the edge set toward
-      star graphs rooted at component minima; rounds are O(log n) in
-      the worst case regardless of diameter, and the edge set shrinks
-      monotonically toward one edge per node, so late rounds get
-      cheaper — unlike propagation, whose per-round cost is constant.
-      Pick this when the pair graph has long chains (diameter >> 10)
-      or when edges >> nodes.
+    Min-label propagation. Per iteration: one equi-join of edges to
+    labels (propagate) and one map-side-combinable groupBy-min
+    (reduce) — 2 shuffles, both on uniform id keys. Iterations = graph
+    DIAMETER; near-dup graphs are dense cliques stitched by hubs, so
+    convergence is fast (observed ≤ 4 rounds on the fixture corpus).
+    Alternating large-star/small-star (Kiveris et al., SoCC'14), whose
+    rounds are O(log n) regardless of diameter, is kept as a test
+    oracle (tests/kernel_oracles.py) until a scaled workload shows a
+    long-chain graph where it wins.
 
     Lineage is truncated per round with localCheckpoint — without it
     the iterated join plan grows exponentially and analysis dominates.
     On a real cluster use reliable checkpointing (localCheckpoint
     trades fault-tolerance for speed)."""
-    if algorithm == "star":
-        return _connected_components_star(pairs, id_a, id_b, max_iter)
-    if algorithm != "propagation":
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
     edges = (
         pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
         .unionByName(pairs.select(F.col(id_b).alias("s"), F.col(id_a).alias("d")))
@@ -905,103 +890,6 @@ def connected_components(
             break
     edges.unpersist()
     return labels
-
-
-def _connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Alternating large-star/small-star (Kiveris et al., SoCC'14).
-
-    Edge-rewriting formulation, no per-node neighbor collection (a
-    collect_set would OOM on hub nodes — every step is groupBy-min +
-    equi-join, both map-side-combinable on uniform id keys):
-
-    * large-star: for each node u, m(u) = min(Γ(u) ∪ {u}); every
-      neighbor v > u is re-attached to m(u). Strictly-larger guard
-      keeps the rewrite acyclic.
-    * small-star: orient each edge (hi, lo); for each hi,
-      m = min(Γ_lo(hi)); every lo-neighbor AND hi itself attach to m.
-
-    Both phases preserve connectivity exactly; at the fixpoint the
-    edge set IS the answer — stars (node → component min). Convergence
-    is detected by edge-set equality (count + order-independent
-    bit_xor checksum: O(1) driver data, no subtract shuffle).
-    """
-    edges = (
-        pairs.filter(F.col(id_a) != F.col(id_b))
-        .select(
-            F.least(id_a, id_b).alias("lo"), F.greatest(id_a, id_b).alias("hi")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    singletons = (
-        pairs.filter(F.col(id_a) == F.col(id_b))
-        .select(F.col(id_a).alias("node"))
-        .distinct()
-    )
-
-    def signature(e: DataFrame) -> tuple[int, int]:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.bit_xor(F.xxhash64("lo", "hi")), F.lit(0)
-            ).alias("sig"),
-        ).collect()[0]
-        return row["n"], row["sig"]
-
-    sig = signature(edges)
-    for _ in range(max_iter):
-        # large-star over the symmetric view
-        sym = edges.select(
-            F.col("lo").alias("u"), F.col("hi").alias("v")
-        ).unionByName(
-            edges.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        )
-        m = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", "u").alias("m"))
-        )
-        edges = (
-            sym.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.least("v", "m").alias("lo"), F.greatest("v", "m").alias("hi"))
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-        )
-        # small-star on the (hi, lo) orientation
-        m2 = edges.groupBy("hi").agg(F.min("lo").alias("m"))
-        attached = (
-            edges.join(m2, "hi")
-            .select(F.col("m").alias("lo"), F.col("lo").alias("hi"))
-        )
-        roots = m2.select(F.col("m").alias("lo"), F.col("hi"))
-        edges = (
-            attached.unionByName(roots)
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-            .localCheckpoint()
-        )
-        new_sig = signature(edges)
-        if new_sig == sig:
-            break
-        sig = new_sig
-
-    # Fixpoint edges are stars (lo = component min). Labels: leaves
-    # point at their root; roots and singleton self-pairs label
-    # themselves.
-    leaves = edges.select(F.col("hi").alias("node"), F.col("lo").alias("label"))
-    roots_self = edges.select(F.col("lo").alias("node")).unionByName(singletons)
-    self_labels = roots_self.distinct().withColumn("label", F.col("node"))
-    return (
-        leaves.unionByName(self_labels)
-        .groupBy("node")
-        .agg(F.min("label").alias("label"))
-    )
 
 
 def lsh_candidate_pairs_capped(
@@ -1489,7 +1377,7 @@ def neardup_index_update(
     )
     bands_new = pin(md5_band_rows(sigs_new, num_hashes, band_size, id_col))
     old_bands = spark.read.parquet(_nd_root(path, "bands"))
-    dead = _nd_tombstones(spark, path)
+    dead = _tombstones(spark, path)
     if dead is not None:
         # deleted docs must not resurrect as a delta's neighbors
         old_bands = old_bands.join(
@@ -1616,7 +1504,7 @@ def decontaminate_incremental(
     )
     bands_delta = md5_band_rows(sigs, num_hashes, band_size, id_col)
     bench_bands = spark.read.parquet(_nd_root(benchmark_index, "bands"))
-    dead = _nd_tombstones(spark, benchmark_index)
+    dead = _tombstones(spark, benchmark_index)
     if dead is not None:
         bench_bands = bench_bands.join(
             F.broadcast(dead.select(F.col("doc_id").alias(id_col))),
@@ -1709,7 +1597,7 @@ def neardup_edges(spark, path: str) -> DataFrame:
         .where(F.col("doc_a") != F.col("doc_b"))
         .distinct()
     )
-    dead = _nd_tombstones(spark, path)
+    dead = _tombstones(spark, path)
     if dead is None:
         return edges
     dead = F.broadcast(dead.select("doc_id"))
@@ -1752,9 +1640,10 @@ def neardup_index_maintainer(
     return body
 
 
-def _nd_tombstones(spark, path: str):
-    """The published tombstone id table of the near-dup graph index,
-    or None if no delete has ever run."""
+def _tombstones(spark, path: str):
+    """The published tombstone table of an index's deleted docs
+    (doc_id, plus BM25's stored `dl`), or None if no delete has ever
+    run against the index at `path`."""
     import os
 
     from reader_spark.operators import atomic_dir
@@ -1763,6 +1652,48 @@ def _nd_tombstones(spark, path: str):
     if not os.path.isdir(root):
         return None
     return spark.read.parquet(root)
+
+
+def _tombstone_delete(
+    spark, path: str, doc_ids: list, indexed: DataFrame | None
+) -> int:
+    """The one delete body of the tombstone-model indexes (BM25,
+    trigram, near-dup): newly = (requested ∩ `indexed`) minus
+    already-tombstoned, and the merged table publishes in ONE pointer
+    flip — idempotent (a re-run adds nothing, returns 0) and atomic
+    (a crash leaves the previous tombstones live). `indexed` is the
+    index's doc_id frame, whose other columns ride into the tombstone
+    rows; None tombstones every requested id. Returns the number of
+    newly deleted docs."""
+    from reader_spark.operators import atomic_dir
+
+    ids = local_df(
+        spark, [(int(i),) for i in doc_ids], "doc_id long"
+    ).distinct()
+    newly = (
+        ids
+        if indexed is None
+        else indexed.dropDuplicates(["doc_id"]).join(
+            F.broadcast(ids), "doc_id", "left_semi"
+        )
+    )
+    existing = _tombstones(spark, path)
+    if existing is not None:
+        newly = newly.join(
+            F.broadcast(existing.select("doc_id")), "doc_id", "left_anti"
+        )
+    n_new = newly.count()
+    if n_new == 0:
+        return 0
+    merged = newly if existing is None else (
+        existing.select(*newly.columns).unionByName(newly)
+    )
+
+    def write_fn(vdir: str) -> None:
+        merged.coalesce(1).write.mode("overwrite").parquet(vdir)
+
+    atomic_dir.publish(f"{path}/tombstones", write_fn)
+    return n_new
 
 
 def neardup_index_delete(spark, path: str, doc_ids: list) -> int:
@@ -1781,34 +1712,10 @@ def neardup_index_delete(spark, path: str, doc_ids: list) -> int:
     be re-submitted to `update` before a rebuild (its toks/ row — the
     replay gate — is still physically present). Returns the number
     of newly deleted docs."""
-    from reader_spark.operators import atomic_dir
-
-    ids = local_df(
-        spark, [(int(i),) for i in doc_ids], "doc_id long"
-    ).distinct()
-    newly = (
-        spark.read.parquet(_nd_root(path, "toks"))
-        .select("doc_id")
-        .dropDuplicates(["doc_id"])
-        .join(F.broadcast(ids), "doc_id", "left_semi")
+    return _tombstone_delete(
+        spark, path, doc_ids,
+        spark.read.parquet(_nd_root(path, "toks")).select("doc_id"),
     )
-    existing = _nd_tombstones(spark, path)
-    if existing is not None:
-        newly = newly.join(
-            F.broadcast(existing.select("doc_id")), "doc_id", "left_anti"
-        )
-    n_new = newly.count()
-    if n_new == 0:
-        return 0
-    merged = newly if existing is None else (
-        existing.select("doc_id").unionByName(newly)
-    )
-
-    def write_fn(vdir: str) -> None:
-        merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-
-    atomic_dir.publish(f"{path}/tombstones", write_fn)
-    return n_new
 
 
 def _nd_root(path: str, sub: str) -> str:
@@ -1840,7 +1747,7 @@ def neardup_index_maintain(
 
     from reader_spark.operators import atomic_dir
 
-    dead = _nd_tombstones(spark, path)
+    dead = _tombstones(spark, path)
     dead_ids = F.broadcast(dead.select("doc_id")) if dead is not None else None
     out: dict[str, int] = {}
     for sub in ("edges", "bands", "toks"):
@@ -1910,7 +1817,7 @@ def neardup_index_health(spark, path: str) -> DataFrame:
         )
 
     edges_raw = spark.read.parquet(_nd_root(path, "edges"))
-    dead = _nd_tombstones(spark, path)
+    dead = _tombstones(spark, path)
     n_dead = dead.count() if dead is not None else 0
     dead_edge_rows = 0
     if n_dead:
@@ -1998,7 +1905,7 @@ def neardup_cc_write(spark, path: str, n_buckets: int = 32) -> int:
 
     edges = neardup_edges(spark, path)
     nodes = spark.read.parquet(_nd_root(path, "toks")).select("doc_id").distinct()
-    dead = _nd_tombstones(spark, path)
+    dead = _tombstones(spark, path)
     if dead is not None:
         nodes = nodes.join(
             F.broadcast(dead.select("doc_id")), "doc_id", "left_anti"
@@ -2213,7 +2120,7 @@ def neardup_canonical(spark, path: str) -> DataFrame:
     out = spark.read.parquet(_nd_root(path, "cc")).select(
         "doc_id", F.col("label").alias("component_id")
     )
-    dead = _nd_tombstones(spark, path)
+    dead = _tombstones(spark, path)
     if dead is None:
         return out
     return out.join(

@@ -31,8 +31,6 @@ DuckDB's libm).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -334,7 +332,7 @@ def bm25_topk_indexed(
     from reader_spark.operators import atomic_dir
 
     scalars = spark.read.parquet(atomic_dir.resolve(f"{path}/scalars"))
-    tomb = _tombstones(spark, path)
+    tomb = DD._tombstones(spark, path)
     if tomb is not None:
         t = tomb.agg(
             F.count("*").alias("tn"),
@@ -524,31 +522,7 @@ def trigram_index_delete(spark, path: str, doc_ids: list) -> int:
     Idempotent (already-tombstoned ids add nothing; unknown ids are
     harmless dead rows) and atomic (one pointer flip). Physical
     removal at the next rebuild."""
-    from reader_spark.operators import atomic_dir
-
-    ids = local_df(
-        spark, [(int(i),) for i in doc_ids], "doc_id long"
-    ).distinct()
-    existing = _tombstones(spark, path)
-    newly = (
-        ids
-        if existing is None
-        else ids.join(
-            F.broadcast(existing.select("doc_id")), "doc_id", "left_anti"
-        )
-    )
-    n_new = newly.count()
-    if n_new == 0:
-        return 0
-    merged = newly if existing is None else (
-        existing.select("doc_id").unionByName(newly)
-    )
-
-    def write_fn(vdir: str) -> None:
-        merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-
-    atomic_dir.publish(f"{path}/tombstones", write_fn)
-    return n_new
+    return DD._tombstone_delete(spark, path, doc_ids, None)
 
 
 def trigram_search_indexed(
@@ -585,7 +559,7 @@ def trigram_search_indexed(
     postings = spark.read.parquet(f"{path}/postings").filter(
         F.col("bucket").isin(buckets)
     )
-    tomb = _tombstones(spark, path)
+    tomb = DD._tombstones(spark, path)
     if tomb is not None:
         postings = postings.join(
             F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
@@ -606,23 +580,6 @@ def trigram_search_indexed(
         .join(F.broadcast(pats), "pattern_id")
         .filter(F.col(text_col).contains(F.col("pat")))
         .select("pattern_id", "doc_id")
-    )
-
-
-def trigram_index_maintain(
-    spark,
-    path: str,
-    max_files_per_bucket: int = 4,
-    target_bytes: int = 128 << 20,
-) -> dict[str, int]:
-    """Compact the trigram index's bucket directories after append
-    waves — row-preserving, same OPTIMIZE contract as
-    `bm25_index_maintain` (duplicate rows survive compaction and stay
-    harmless under the distinct-count candidate test)."""
-    from reader_spark.operators.transfer import compact_partition_dirs
-
-    return compact_partition_dirs(
-        spark, f"{path}/postings", max_files_per_bucket, target_bytes
     )
 
 
@@ -671,17 +628,6 @@ def bm25_index_maintain(
     )
 
 
-def _tombstones(spark, path: str):
-    """The published tombstone table (doc_id, dl) of deleted docs, or
-    None if no delete has ever run against this index."""
-    from reader_spark.operators import atomic_dir
-
-    root = atomic_dir.resolve(f"{path}/tombstones")
-    if not os.path.isdir(root):
-        return None
-    return spark.read.parquet(root)
-
-
 def bm25_index_delete(spark, path: str, doc_ids: list) -> int:
     """Delete documents from a materialized BM25 index — Lucene's
     tombstone model, because a doc's postings are scattered across
@@ -705,42 +651,9 @@ def bm25_index_delete(spark, path: str, doc_ids: list) -> int:
     rebuild: its physical postings are still present, so the merge
     dedupes the re-add away and the tombstone keeps suppressing it —
     the same id-discipline contract as the append-only update."""
-    from reader_spark.operators import atomic_dir
-
-    ids = local_df(
-        spark, [(int(i),) for i in doc_ids], "doc_id long"
-    ).distinct()
-    newly = (
-        spark.read.parquet(f"{path}/doc_lengths")
-        .dropDuplicates(["doc_id"])
-        .join(F.broadcast(ids), "doc_id", "left_semi")
+    return DD._tombstone_delete(
+        spark, path, doc_ids, spark.read.parquet(f"{path}/doc_lengths")
     )
-    existing = _tombstones(spark, path)
-    if existing is not None:
-        newly = newly.join(
-            F.broadcast(existing.select("doc_id")), "doc_id", "left_anti"
-        )
-    n_new = newly.count()
-    if n_new == 0:
-        return 0
-    merged = newly if existing is None else existing.unionByName(newly)
-
-    def write_fn(vdir: str) -> None:
-        merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-
-    atomic_dir.publish(f"{path}/tombstones", write_fn)
-    return n_new
-
-
-def _read_epoch(scalars_root: str) -> int:
-    """Last-applied update epoch, stored as an underscore-prefixed
-    text file beside the scalars parquet (invisible to Spark's
-    listing); -1 when the index has never seen an epoched update."""
-    ep = os.path.join(scalars_root, "_epoch")
-    if os.path.isfile(ep):
-        with open(ep) as f:
-            return int(f.read().strip() or -1)
-    return -1
 
 
 def bm25_index_update(
@@ -779,7 +692,8 @@ def bm25_index_update(
     from reader_spark.operators import atomic_dir
 
     scalars_root = atomic_dir.resolve(f"{path}/scalars")
-    if epoch is not None and _read_epoch(scalars_root) >= epoch:
+    stamp = atomic_dir.epoch_gate(scalars_root, epoch)
+    if stamp is None:
         return []
     delta = doc_terms(new_docs, text_col).withColumn(
         "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets))
@@ -796,19 +710,13 @@ def bm25_index_update(
         merged = old.unionByName(delta).dropDuplicates(["doc_id", "term"])
         tstats = merged.groupBy("term").agg(F.count("*").alias("df"))
         full = merged.join(tstats, "term")
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        (
+            full.repartition(len(touched), "bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(f"{path}/postings")
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                full.repartition(len(touched), "bucket")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(f"{path}/postings")
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     # scalars update even for a postings-free delta: documents with
     # empty text still count toward n_docs (dl = 0). A fully empty
     # delta frame (dn == 0) leaves the index untouched.
@@ -832,12 +740,10 @@ def bm25_index_update(
     new_scalars = local_df(
         spark, [(n, sd, sd / n)], "n_docs long, sum_dl long, avgdl double"
     )
-    new_epoch = epoch if epoch is not None else _read_epoch(scalars_root)
 
     def write_fn(vdir: str) -> None:
         new_scalars.write.mode("overwrite").parquet(vdir)
-        with open(os.path.join(vdir, "_epoch"), "w") as f:
-            f.write(str(new_epoch))
+        atomic_dir.write_epoch(vdir, stamp)
 
     atomic_dir.publish(f"{path}/scalars", write_fn)
     return touched

@@ -877,18 +877,14 @@ def _overwrite_cells(spark, merged: DataFrame, dest: str, touched: list) -> None
     import shutil
 
     surviving = {r["cl"] for r in merged.select("cl").distinct().collect()}
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if surviving:
-            (
-                merged.repartition(F.col("cl"))
-                .write.mode("overwrite")
-                .partitionBy("cl")
-                .parquet(dest)
-            )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    if surviving:
+        (
+            merged.repartition(F.col("cl"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("cl")
+            .parquet(dest)
+        )
     for c in touched:
         if c not in surviving:
             shutil.rmtree(f"{dest}/cl={c}", ignore_errors=True)
@@ -973,8 +969,6 @@ def ivf_health_write(
     and the stream checkpoint commit would let the REPLAYED batch's
     `ivf_health_update` monoid-merge a delta the rescan already
     counted — double-counted n_members/sum_err_ppm."""
-    import os
-
     from reader_spark.operators import atomic_dir
 
     corpus = spark.read.parquet(
@@ -984,24 +978,9 @@ def ivf_health_write(
 
     def write_fn(vdir: str) -> None:
         stats.coalesce(1).write.mode("overwrite").parquet(vdir)
-        if epoch is not None:
-            with open(os.path.join(vdir, "_epoch"), "w") as f:
-                f.write(str(epoch))
+        atomic_dir.write_epoch(vdir, epoch)
 
     atomic_dir.publish(health_path, write_fn)
-
-
-def _health_epoch(data_root: str) -> int:
-    """Last-applied update epoch (underscore-prefixed marker inside
-    the published version dir — invisible to Spark, atomic with the
-    stats); -1 if never epoched."""
-    import os
-
-    ep = os.path.join(data_root, "_epoch")
-    if os.path.isfile(ep):
-        with open(ep) as f:
-            return int(f.read().strip() or -1)
-    return -1
 
 
 def ivf_health_update(
@@ -1029,14 +1008,12 @@ def ivf_health_update(
     ATOMICALLY with the stats via the pointer flip, an
     already-applied epoch is skipped, and a crash mid-publish leaves
     the previous stats+epoch live."""
-    import os
-
     from reader_spark.operators import atomic_dir
 
     root = atomic_dir.resolve(health_path)
-    if epoch is not None and _health_epoch(root) >= epoch:
+    stamp = atomic_dir.epoch_gate(root, epoch)
+    if stamp is None:
         return
-    new_epoch = epoch if epoch is not None else _health_epoch(root)
     vecs = new_embeddings.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
@@ -1067,8 +1044,7 @@ def ivf_health_update(
 
     def write_fn(vdir: str) -> None:
         merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-        with open(os.path.join(vdir, "_epoch"), "w") as f:
-            f.write(str(new_epoch))
+        atomic_dir.write_epoch(vdir, stamp)
 
     atomic_dir.publish(health_path, write_fn)
 
@@ -1167,7 +1143,7 @@ def ivf_health_repair(
     if not cells:
         return
     root = atomic_dir.resolve(health_path)
-    epoch = _health_epoch(root)
+    epoch = atomic_dir.read_epoch(root)
     corpus = (
         spark.read.parquet(f"{atomic_dir.resolve(index_path)}/corpus")
         .filter(F.col("cl").isin(list(cells)))
@@ -1181,12 +1157,8 @@ def ivf_health_repair(
     )
 
     def write_fn(vdir: str) -> None:
-        import os
-
         merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-        if epoch >= 0:
-            with open(os.path.join(vdir, "_epoch"), "w") as f:
-                f.write(str(epoch))
+        atomic_dir.write_epoch(vdir, epoch if epoch >= 0 else None)
 
     atomic_dir.publish(health_path, write_fn)
 
@@ -2802,25 +2774,33 @@ def embedding_drift_watch(
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        row = embedding_drift_check(
-            spark, ref_path, batch_df, vec_col, alert_delta
-        ).withColumn("batch", F.lit(batch_id))
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        log_batch_verdict(
+            embedding_drift_check(
+                spark, ref_path, batch_df, vec_col, alert_delta
+            ),
+            batch_id,
+            log_path,
         )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            row.coalesce(1).write.partitionBy("batch").mode(
-                "overwrite"
-            ).parquet(log_path)
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
 
     return body
+
+
+def log_batch_verdict(
+    verdict: DataFrame, batch_id: int, log_path: str
+) -> None:
+    """Write one micro-batch's drift verdict rows into the drift-watch
+    log, partitioned by `batch` with a per-write dynamic partition
+    overwrite: a crash-replayed batch REPLACES its own partition
+    (exactly-once without a dedup read) and every other batch's rows
+    stay put. The session's overwrite mode is left untouched."""
+    (
+        verdict.withColumn("batch", F.lit(batch_id))
+        .coalesce(1)
+        .write.partitionBy("batch")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(log_path)
+    )
 
 
 def embedding_drift_grouped(

@@ -288,26 +288,10 @@ def cms_tiles_write(
     tiles = count_min_tiles(tokens, width=width, depth=depth)
 
     def write_fn(vdir: str) -> None:
-        import os
-
         tiles.coalesce(1).write.mode("overwrite").parquet(vdir)
-        with open(os.path.join(vdir, "_epoch"), "w") as f:
-            f.write("-1")
+        atomic_dir.write_epoch(vdir, -1)
 
     atomic_dir.publish(path, write_fn)
-
-
-def _cms_epoch(data_root: str) -> int:
-    """Last-applied update epoch, written atomically WITH the
-    counters (an underscore-prefixed file inside the published
-    version dir, invisible to Spark's listing); -1 if never set."""
-    import os
-
-    ep = os.path.join(data_root, "_epoch")
-    if os.path.isfile(ep):
-        with open(ep) as f:
-            return int(f.read().strip() or -1)
-    return -1
 
 
 def cms_tiles_update(
@@ -329,14 +313,11 @@ def cms_tiles_update(
     ATOMICALLY with the counters, an already-applied epoch is
     skipped, and a crash mid-publish leaves the previous
     counters+epoch live — exactly-once under replay."""
-    import os
-
     from reader_spark.operators import atomic_dir
 
-    root = atomic_dir.resolve(path)
-    if epoch is not None and _cms_epoch(root) >= epoch:
+    stamp = atomic_dir.epoch_gate(atomic_dir.resolve(path), epoch)
+    if stamp is None:
         return
-    new_epoch = epoch if epoch is not None else _cms_epoch(root)
     delta = count_min_tiles(new_tokens, term_col, width, depth)
     merged = (
         cms_tiles_read(spark, path)
@@ -347,8 +328,7 @@ def cms_tiles_update(
 
     def write_fn(vdir: str) -> None:
         merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-        with open(os.path.join(vdir, "_epoch"), "w") as f:
-            f.write(str(new_epoch))
+        atomic_dir.write_epoch(vdir, stamp)
 
     atomic_dir.publish(path, write_fn)
 
@@ -548,11 +528,8 @@ def kmv_tiles_write(
     tiles = kmv_tiles(df, key_cols, value_col, k)
 
     def write_fn(vdir: str) -> None:
-        import os
-
         tiles.coalesce(1).write.mode("overwrite").parquet(vdir)
-        with open(os.path.join(vdir, "_epoch"), "w") as f:
-            f.write("-1")
+        atomic_dir.write_epoch(vdir, -1)
 
     atomic_dir.publish(path, write_fn)
 
@@ -578,19 +555,11 @@ def kmv_tiles_update(
     KMV merge is idempotent (re-merging the same hashes changes
     nothing), but the epoch marker still gates replays for symmetry
     with the CMS/health maintainers and to skip the wasted work."""
-    import os
-
     from reader_spark.operators import atomic_dir
 
-    root = atomic_dir.resolve(path)
-    ep = os.path.join(root, "_epoch")
-    stored_epoch = -1
-    if os.path.isfile(ep):
-        with open(ep) as f:
-            stored_epoch = int(f.read().strip() or -1)
-    if epoch is not None and stored_epoch >= epoch:
+    stamp = atomic_dir.epoch_gate(atomic_dir.resolve(path), epoch)
+    if stamp is None:
         return
-    new_epoch = epoch if epoch is not None else stored_epoch
     delta = kmv_tiles(batch, key_cols, value_col, k)
     merged = (
         kmv_tiles_read(spark, path)
@@ -603,8 +572,7 @@ def kmv_tiles_update(
 
     def write_fn(vdir: str) -> None:
         merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-        with open(os.path.join(vdir, "_epoch"), "w") as f:
-            f.write(str(new_epoch))
+        atomic_dir.write_epoch(vdir, stamp)
 
     atomic_dir.publish(path, write_fn)
 
@@ -645,11 +613,8 @@ def bottomk_tiles_write(
     tiles = bottomk_sample_tiles(df, key_cols, value_col, k, id_col=id_col)
 
     def write_fn(vdir: str) -> None:
-        import os
-
         tiles.coalesce(1).write.mode("overwrite").parquet(vdir)
-        with open(os.path.join(vdir, "_epoch"), "w") as f:
-            f.write("-1")
+        atomic_dir.write_epoch(vdir, -1)
 
     atomic_dir.publish(path, write_fn)
 
@@ -674,19 +639,11 @@ def bottomk_tiles_update(
     row-for-row, and quantiles read off it are the same data. KB of
     state per key; pointer flip + epoch replay gate (the merge is
     idempotent — the gate just skips wasted work)."""
-    import os
-
     from reader_spark.operators import atomic_dir
 
-    root = atomic_dir.resolve(path)
-    ep = os.path.join(root, "_epoch")
-    stored_epoch = -1
-    if os.path.isfile(ep):
-        with open(ep) as f:
-            stored_epoch = int(f.read().strip() or -1)
-    if epoch is not None and stored_epoch >= epoch:
+    stamp = atomic_dir.epoch_gate(atomic_dir.resolve(path), epoch)
+    if stamp is None:
         return
-    new_epoch = epoch if epoch is not None else stored_epoch
     delta = bottomk_sample_tiles(batch, key_cols, value_col, k, id_col=id_col)
     merged = (
         bottomk_tiles_read(spark, path)
@@ -699,8 +656,7 @@ def bottomk_tiles_update(
 
     def write_fn(vdir: str) -> None:
         merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-        with open(os.path.join(vdir, "_epoch"), "w") as f:
-            f.write(str(new_epoch))
+        atomic_dir.write_epoch(vdir, stamp)
 
     atomic_dir.publish(path, write_fn)
 
@@ -818,26 +774,18 @@ def quantile_drift_watch(
                 spark, cur_path, batch_df, key_cols, value_col,
                 k=k, id_col=id_col, epoch=batch_id,
             )
-        verdict = quantile_drift_from_tiles(
-            bottomk_tiles_read(spark, ref_path),
-            bottomk_tiles_read(spark, cur_path),
-            probs=probs,
-            alert_ppm=alert_ppm,
-        ).withColumn("batch", F.lit(batch_id))
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        from reader_spark.operators.similarity import log_batch_verdict
+
+        log_batch_verdict(
+            quantile_drift_from_tiles(
+                bottomk_tiles_read(spark, ref_path),
+                bottomk_tiles_read(spark, cur_path),
+                probs=probs,
+                alert_ppm=alert_ppm,
+            ),
+            batch_id,
+            log_path,
         )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            verdict.coalesce(1).write.partitionBy("batch").mode(
-                "overwrite"
-            ).parquet(log_path)
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
 
     return body
 

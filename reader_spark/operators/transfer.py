@@ -840,7 +840,7 @@ def reconcile_repair(
     # the full-outer classification is consumed three times (census,
     # upsert side, delete side) — persist it so the (pk, hash) join
     # runs once, not per consumer (measured 12.3 s -> one join's
-    # worth on the 2M-row probe, scripts/probe_repair.py)
+    # worth on a 2M-row, 64-bucket table)
     keys = reconcile_keys(source, sink, pk_cols, compare_cols).persist()
     try:
         counts = {

@@ -53,27 +53,5 @@ def write_kafka(
     writer.save()
 
 
-def write_kafka_stream(
-    env: DataFrame,
-    bootstrap_servers: str,
-    checkpoint_dir: str,
-    extra: dict[str, str] | None = None,
-):
-    """Streaming publish with checkpointed offsets (at-least-once +
-    keyed messages == the reference's idempotent-downstream
-    contract, §2.7)."""
-    writer = (
-        env.selectExpr(
-            "topic", "CAST(key AS BINARY) AS key", "CAST(value AS BINARY) AS value"
-        )
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    for k, v in {**KAFKA_DEFAULTS, **(extra or {})}.items():
-        writer = writer.option(k, v)
-    return writer.start()
-
-
 def write_file_fallback(env: DataFrame, path: str, fmt: str = "parquet") -> None:
     env.write.mode("append").format(fmt).save(path)

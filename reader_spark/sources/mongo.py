@@ -14,10 +14,8 @@ shaping below are plain column expressions and run anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-MONGO_FORMAT = "mongodb"
 
 # Mongo change stream operationType -> Debezium op
 OP_MAP = {
@@ -69,19 +67,6 @@ def snapshot_read_options(
         "aggregation.pipeline": snapshot_pipeline(min_id, max_id),
         "partitioner.options.partition.field": partitioner_field,
     }
-
-
-def mongo_available(spark: SparkSession) -> bool:
-    """True when the Mongo Spark connector jar is on the classpath."""
-    try:
-        spark.read.format(MONGO_FORMAT)
-        # Cheap probe: resolving the format class happens lazily on
-        # load(); check the JVM-side DataSource lookup instead.
-        jvm = spark._jvm  # noqa: SLF001
-        jvm.Class.forName("com.mongodb.spark.sql.connector.MongoTableProvider")
-        return True
-    except Exception:
-        return False
 
 
 def ext_json_value(c: Column, dt, oid: bool = False) -> Column:

@@ -8,8 +8,9 @@ already seen per server-uuid (lib/mysql/gtid.go:10-51).
 
 Spark-first: positional decode is element_at over the value array —
 one select, no Python; update pairing is a filter on even/odd
-positions after posexplode of row-pair chunks; GTID dedup is
-dropDuplicates (stateful with watermark on streams, exact in batch).
+positions after posexplode of row-pair chunks; GTID dedup is an
+exact dropDuplicates per batch, behind a per-server high-water
+resume gate.
 """
 
 from __future__ import annotations
@@ -90,17 +91,4 @@ def gtid_highwater_filter(events: DataFrame,
     hw = F.element_at(F.create_map(*pairs), F.col(sid_col))
     return events.filter(
         hw.isNull() | (F.col(tx_col).cast("long") >= hw)
-    )
-
-
-def gtid_dedupe_stream(events: DataFrame, ts_col: str,
-                       sid_col: str = "gtid_sid",
-                       tx_col: str = "gtid_tx",
-                       seq_col: str = "seq",
-                       watermark: str = "1 hour") -> DataFrame:
-    """C4 streaming form: checkpointed dropDuplicates state on the
-    per-row identity, bounded by the watermark (the reference's
-    TTL-less map grows forever — the watermark is the at-scale fix)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicates(
-        [sid_col, tx_col, seq_col]
     )

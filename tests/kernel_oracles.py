@@ -1,4 +1,5 @@
-"""Column-expression oracles for the Arrow kernels.
+"""Column-expression oracles for the Arrow kernels, plus a second
+connected-components body.
 
 Each operator in `reader_spark.operators` ships one implementation: a
 vectorized Arrow/numpy `mapInPandas` kernel. The pure column-expression
@@ -10,9 +11,12 @@ oracle bit for bit:
 - `simhash_expr` vs `dedup.simhash`
 - `pq_encode_expr` vs `similarity.pq_encode`
 - `nearest_cluster_expr` vs `similarity.nearest_clusters(..., nprobe=1)`
+- `connected_components_star` vs `dedup.connected_components`
 
 They are test code only: the interpreted higher-order-function folds
-run outside whole-stage codegen and lost every A/B against the kernels.
+run outside whole-stage codegen and lost every A/B against the kernels,
+and no workload here has the long-chain graphs where star's
+O(log n) rounds would beat propagation.
 """
 
 from __future__ import annotations
@@ -169,4 +173,104 @@ def nearest_cluster_expr(
         )
         .withColumn("cl", F.col("__m.cl"))
         .drop("__m")
+    )
+
+
+def connected_components_star(
+    pairs: DataFrame,
+    id_a: str = "doc_a",
+    id_b: str = "doc_b",
+    max_iter: int = 50,
+) -> DataFrame:
+    """Alternating large-star/small-star (Kiveris et al., SoCC'14):
+    the same (node, label) map as `dedup.connected_components`, by
+    edge rewriting toward stars rooted at component minima — rounds
+    are O(log n) regardless of graph diameter.
+
+    Edge-rewriting formulation, no per-node neighbor collection (a
+    collect_set would OOM on hub nodes — every step is groupBy-min +
+    equi-join, both map-side-combinable on uniform id keys):
+
+    * large-star: for each node u, m(u) = min(Γ(u) ∪ {u}); every
+      neighbor v > u is re-attached to m(u). Strictly-larger guard
+      keeps the rewrite acyclic.
+    * small-star: orient each edge (hi, lo); for each hi,
+      m = min(Γ_lo(hi)); every lo-neighbor AND hi itself attach to m.
+
+    Both phases preserve connectivity exactly; at the fixpoint the
+    edge set IS the answer — stars (node → component min). Convergence
+    is detected by edge-set equality (count + order-independent
+    bit_xor checksum: O(1) driver data, no subtract shuffle).
+    """
+    edges = (
+        pairs.filter(F.col(id_a) != F.col(id_b))
+        .select(
+            F.least(id_a, id_b).alias("lo"), F.greatest(id_a, id_b).alias("hi")
+        )
+        .distinct()
+        .localCheckpoint()
+    )
+    singletons = (
+        pairs.filter(F.col(id_a) == F.col(id_b))
+        .select(F.col(id_a).alias("node"))
+        .distinct()
+    )
+
+    def signature(e: DataFrame) -> tuple[int, int]:
+        row = e.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(
+                F.bit_xor(F.xxhash64("lo", "hi")), F.lit(0)
+            ).alias("sig"),
+        ).collect()[0]
+        return row["n"], row["sig"]
+
+    sig = signature(edges)
+    for _ in range(max_iter):
+        # large-star over the symmetric view
+        sym = edges.select(
+            F.col("lo").alias("u"), F.col("hi").alias("v")
+        ).unionByName(
+            edges.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
+        )
+        m = (
+            sym.groupBy("u")
+            .agg(F.min("v").alias("mn"))
+            .select("u", F.least("mn", "u").alias("m"))
+        )
+        edges = (
+            sym.join(m, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.least("v", "m").alias("lo"), F.greatest("v", "m").alias("hi"))
+            .filter(F.col("lo") != F.col("hi"))
+            .distinct()
+        )
+        # small-star on the (hi, lo) orientation
+        m2 = edges.groupBy("hi").agg(F.min("lo").alias("m"))
+        attached = (
+            edges.join(m2, "hi")
+            .select(F.col("m").alias("lo"), F.col("lo").alias("hi"))
+        )
+        roots = m2.select(F.col("m").alias("lo"), F.col("hi"))
+        edges = (
+            attached.unionByName(roots)
+            .filter(F.col("lo") != F.col("hi"))
+            .distinct()
+            .localCheckpoint()
+        )
+        new_sig = signature(edges)
+        if new_sig == sig:
+            break
+        sig = new_sig
+
+    # Fixpoint edges are stars (lo = component min). Labels: leaves
+    # point at their root; roots and singleton self-pairs label
+    # themselves.
+    leaves = edges.select(F.col("hi").alias("node"), F.col("lo").alias("label"))
+    roots_self = edges.select(F.col("lo").alias("node")).unionByName(singletons)
+    self_labels = roots_self.distinct().withColumn("label", F.col("node"))
+    return (
+        leaves.unionByName(self_labels)
+        .groupBy("node")
+        .agg(F.min("label").alias("label"))
     )

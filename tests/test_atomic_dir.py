@@ -195,3 +195,40 @@ def test_publish_gc_spares_nested_published_dataset(tmp_path):
     assert not os.path.exists(stray)
     assert not os.path.exists(os.path.join(idx, "stray.parquet"))
     assert _read(health) == "h0"
+
+
+def test_epoch_marker_publishes_with_the_version(tmp_path):
+    """The replay position every maintained artifact gates on: the
+    marker lands inside the version dir, so it flips live together
+    with the data it describes; absent or empty reads as -1."""
+    path = str(tmp_path / "ds")
+    assert A.read_epoch(A.resolve(path)) == -1  # nothing published
+    root = A.publish(path, _write_marker("v1"))
+    assert A.read_epoch(root) == -1  # published without a marker
+    with open(os.path.join(root, "_epoch"), "w"):
+        pass
+    assert A.read_epoch(root) == -1  # empty marker
+
+    def stamped(content, epoch, fail=False):
+        def fn(vdir):
+            _write_marker(content)(vdir)
+            A.write_epoch(vdir, epoch)
+            if fail:
+                raise RuntimeError("died after writing")
+
+        return fn
+
+    root = A.publish(path, stamped("v2", 3))
+    assert os.listdir(path).count("_epoch") == 0
+    assert os.path.isfile(os.path.join(root, "_epoch"))
+    assert A.read_epoch(A.resolve(path)) == 3
+    # the replay gate: an applied epoch skips, a new one stamps, and an
+    # un-epoched update carries the stored epoch forward
+    assert A.epoch_gate(root, 3) is None
+    assert A.epoch_gate(root, 4) == 4
+    assert A.epoch_gate(root, None) == 3
+
+    with pytest.raises(RuntimeError):
+        A.publish(path, stamped("partial", 4, fail=True))
+    assert _read(path) == "v2"
+    assert A.read_epoch(A.resolve(path)) == 3

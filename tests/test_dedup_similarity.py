@@ -413,8 +413,9 @@ def test_connected_components_long_chain_converges(spark):
 
 
 def test_connected_components_star_matches_propagation(spark):
-    # large-star/small-star (Kiveris et al.) is the extreme-scale
-    # body; both algorithms must produce identical (node, label) maps.
+    # large-star/small-star (Kiveris et al.) is the test oracle for
+    # min-label propagation; both must produce identical (node, label)
+    # maps.
     # Mixed shapes: long path (worst case for propagation), star hub,
     # triangle, bridged cliques, self-pair singleton, isolated edge.
     edges = (
@@ -425,11 +426,13 @@ def test_connected_components_star_matches_propagation(spark):
         + [(90, 90)]  # self-pair singleton
         + [(95, 96)]
     )
+    from kernel_oracles import connected_components_star
+
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
     prop = {r["node"]: r["label"] for r in DD.connected_components(pairs).collect()}
     star = {
         r["node"]: r["label"]
-        for r in DD.connected_components(pairs, algorithm="star").collect()
+        for r in connected_components_star(pairs).collect()
     }
     assert star == prop
     assert star[35] == 20 and star[82] == 70 and star[90] == 90
@@ -440,6 +443,8 @@ def test_connected_components_star_random_graphs(spark):
     # randomized equivalence: 5 seeded Erdos-Renyi-ish graphs, star vs
     # propagation vs a driver-side union-find ground truth
     import random
+
+    from kernel_oracles import connected_components_star
 
     for seed in range(5):
         rng = random.Random(seed)
@@ -468,7 +473,7 @@ def test_connected_components_star_random_graphs(spark):
         pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
         star = {
             r["node"]: r["label"]
-            for r in DD.connected_components(pairs, algorithm="star").collect()
+            for r in connected_components_star(pairs).collect()
         }
         prop = {
             r["node"]: r["label"] for r in DD.connected_components(pairs).collect()

@@ -444,13 +444,13 @@ def test_neardup_index_maintain_compacts_and_purges(spark, tmp_path):
     assert set(stats) == {"edges", "bands", "toks"}
     assert _edges(spark, path) == want
     # physical purge: doc 3 gone from every subdir, tombstones empty
-    from reader_spark.operators.dedup import _nd_root, _nd_tombstones
+    from reader_spark.operators.dedup import _nd_root, _tombstones
 
     raw_edges = spark.read.parquet(_nd_root(path, "edges"))
     assert raw_edges.filter("doc_a = 3 or doc_b = 3").count() == 0
     assert spark.read.parquet(_nd_root(path, "toks")).filter(
         "doc_id = 3").count() == 0
-    assert _nd_tombstones(spark, path).count() == 0
+    assert _tombstones(spark, path).count() == 0
     # compaction really reduced the file count
     assert len(glob.glob(f"{_nd_root(path, 'toks')}/*.parquet")) == stats["toks"]
     # updates still work against the maintained (pointer-flip) layout
