@@ -3,14 +3,14 @@
 Wires the pieces end-to-end the way sources/mysql/streaming does:
 
   logtail source (C1: shards-as-partitions, checkpointed offsets)
-    -> route DDL / DML / bookkeeping (C2, P7)
-    -> GTID dedupe (C4)
-    -> schema-history as-of gate: drop DML older than the first
+    -> gate chain (`_gated_changes`): route DDL / DML / bookkeeping
+       (C2, P7), replicate filter on db and table (P8), GTID dedupe
+       (C4), schema-history as-of gate: drop DML older than the first
        schema version (C5 / dml.go:44-52)
-    -> positional decode via the active schema (C3)
-    -> replicate filter (P8)
-    -> Debezium envelope (P5/P6)
-    -> sink (K1/K2 contract: topic/key/value)
+    -> one JSON decode of the before/after row images against the
+       active columns (`_decoded_images`)
+    -> Debezium envelope (P5/P6) -> sink (K1/K2 contract:
+       topic/key/value), or a bucketed Transfer MERGE (K3)
 
 The DDL branch mutates the SchemaAdapter on the DRIVER between
 micro-batches (schema changes are rare control events; the reference
@@ -168,6 +168,71 @@ def _gated_changes(
     }
 
 
+def _decoded_images(
+    rows: DataFrame,
+    cols: list[str],
+    table: str,
+    quarantine_path: str | None,
+) -> DataFrame:
+    """The one decode of a table's gated DML: `from_json` of the
+    before/after images against the active (all-string) columns,
+    returned as `before`/`after` structs (the columns + `_corrupt`,
+    null on every row returned) and `op`, `seq`, `ts_ms`.
+
+    A corrupt image never passes through: PERMISSIVE from_json
+    null-fills the fields of garbled input, so malformed bytes are
+    only detectable via columnNameOfCorruptRecord. With
+    `quarantine_path`, poison rows divert to a dead-letter log (raw
+    bytes + position, replayable after a fix) and the healthy rest of
+    the batch still publishes; the write is gated on a limit(1) probe
+    so clean batches pay no extra evaluation and leave no empty dirs,
+    and `seq` is the idempotency key replayed appends dedupe on.
+    Without it the batch fails inside the caller's write, naming the
+    table and seq, as the reference's DML decoder aborts on a decode
+    error (dml.go:17-123)."""
+    q_schema = T.StructType(
+        [
+            *[T.StructField(c, T.StringType()) for c in cols],
+            T.StructField("_corrupt", T.StringType()),
+        ]
+    )
+    opts = {"columnNameOfCorruptRecord": "_corrupt"}
+    shaped = rows.select(
+        F.from_json("before", q_schema, opts).alias("before"),
+        F.from_json("after", q_schema, opts).alias("after"),
+        F.col("before").alias("before_raw"),
+        F.col("after").alias("after_raw"),
+        F.col("op"),
+        F.col("seq"),
+        F.col("ts_ms").cast("long").alias("ts_ms"),
+    )
+    corrupt = F.col("before._corrupt").isNotNull() | F.col(
+        "after._corrupt"
+    ).isNotNull()
+    if quarantine_path:
+        poison = shaped.filter(corrupt).select(
+            "seq", "ts_ms", "op", "before_raw", "after_raw"
+        )
+        if poison.limit(1).count() > 0:
+            poison.write.mode("append").json(f"{quarantine_path}/{table}")
+        shaped = shaped.filter(~corrupt)
+    else:
+        # a filter, not a projected column: a column the caller's
+        # projection drops would be pruned and never fire
+        shaped = shaped.filter(
+            F.when(
+                corrupt,
+                F.raise_error(
+                    F.concat(
+                        F.lit(f"corrupt row image in {table} at seq "),
+                        F.col("seq").cast("string"),
+                    )
+                ),
+            ).otherwise(F.lit(True))
+        )
+    return shaped.select("before", "after", "op", "seq", "ts_ms")
+
+
 def process_batch(
     batch: DataFrame,
     adapter: SchemaAdapter,
@@ -194,62 +259,17 @@ def process_batch(
     # unbounded; downstream envelope consumers see the statement in
     # the DDL/schema-history stream.
     adapter.truncates.clear()
-
     out: dict[str, DataFrame] = {}
     for table, (cols, rows) in gated.items():
-        row_schema = T.StructType(
-            [T.StructField(c, T.StringType()) for c in cols]
-        )
-        # Decode with an explicit corrupt-record column: PERMISSIVE
-        # from_json never returns a null struct for garbled input
-        # (it null-fills the fields), so malformed bytes are only
-        # detectable via columnNameOfCorruptRecord.
-        q_schema = T.StructType(
-            [*row_schema.fields, T.StructField("_corrupt", T.StringType())]
-        )
-        opts = {"columnNameOfCorruptRecord": "_corrupt"}
-        shaped = rows.select(
-            F.from_json("before", q_schema, opts).alias("before"),
-            F.from_json("after", q_schema, opts).alias("after"),
-            F.col("before").alias("before_raw"),
-            F.col("after").alias("after_raw"),
-            F.col("op"),
-            F.col("seq"),
-            F.col("ts_ms").cast("long").alias("ts_ms"),
-        )
-        # Dead-letter routing: garbled/truncated row images would
-        # otherwise publish change events with every field nulled —
-        # a silent data-loss class the reference surfaces as a
-        # decode error (the streaming DML decoder aborts the batch).
-        # Poison rows divert to a quarantine log (raw bytes +
-        # position, replayable after a fix); the healthy rest of the
-        # batch still publishes. The write is gated on an existence
-        # probe (limit(1)) so the no-corruption common case skips the
-        # extra batch evaluation and never creates empty output dirs;
-        # `seq` (the log position) is the idempotency key — a
-        # replayed micro-batch appends records with the SAME seq, so
-        # quarantine consumers dedupe on it.
-        corrupt = F.col("before._corrupt").isNotNull() | F.col(
-            "after._corrupt"
-        ).isNotNull()
-        if quarantine_path:
-            poison = shaped.filter(corrupt).select(
-                "seq", "ts_ms", "op", "before_raw", "after_raw"
-            )
-            if poison.limit(1).count() > 0:
-                poison.write.mode("append").json(
-                    f"{quarantine_path}/{table}"
-                )
-            shaped = shaped.filter(~corrupt)
+        # the envelope's row structs carry the table's columns only
         clean = lambda side: F.when(  # noqa: E731 - local reshape
             F.col(side).isNotNull(),
             F.struct(*[F.col(f"{side}.{c}").alias(c) for c in cols]),
         ).alias(side)
-        shaped = shaped.select(
-            clean("before"), clean("after"), "op", "ts_ms"
-        )
         out[table] = cdc_envelope(
-            shaped,
+            _decoded_images(rows, cols, table, quarantine_path).select(
+                clean("before"), clean("after"), "op", "ts_ms"
+            ),
             pk_cols=[cols[0]],
             db=db,
             table=table,
@@ -270,31 +290,22 @@ def decoded_changes(
     """Like `process_batch` but stops before the envelope: per table a
     flat change frame (decoded columns + op + seq) — the input shape
     of the transfer writer's MERGE paths. Delete rows take their PK
-    columns from the before-image. Replicated TRUNCATEs stay queued
-    on `adapter.truncates` for the merge handler."""
+    columns from the before-image. A corrupt row image fails the
+    batch. Replicated TRUNCATEs stay queued on `adapter.truncates`
+    for the merge handler."""
     out: dict[str, DataFrame] = {}
     for table, (cols, rows) in _gated_changes(
         batch, adapter, db, tables, history_path, gtid_highwater, None
     ).items():
-        row_schema = T.StructType(
-            [T.StructField(c, T.StringType()) for c in cols]
-        )
-        shaped = rows.select(
-            F.from_json("before", row_schema).alias("before"),
-            F.from_json("after", row_schema).alias("after"),
-            F.col("op"),
-            F.col("seq").cast("long").alias("seq"),
-        )
         pk = cols[0]
-        flat = shaped.select(
+        out[table] = _decoded_images(rows, cols, table, None).select(
             F.when(F.col("op") == "d", F.col(f"before.{pk}"))
             .otherwise(F.col(f"after.{pk}"))
             .alias(pk),
             *[F.col(f"after.{c}").alias(c) for c in cols[1:]],
             "op",
-            "seq",
+            F.col("seq").cast("long").alias("seq"),
         )
-        out[table] = flat
     return out
 
 

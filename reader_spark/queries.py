@@ -16,6 +16,10 @@ value-hashing). Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,6 +45,20 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from reader_spark.session import read_table
 
     return read_table(spark, sf_dir, name)
+
+
+@functools.cache
+def _work_root() -> str:
+    """The one per-process parent of the index-backed builders' work
+    dirs. The frames those builders return read their dirs lazily, so
+    no builder can remove its own; the root goes at interpreter exit."""
+    root = tempfile.mkdtemp(prefix="reader_spark_work_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _work_dir(prefix: str) -> str:
+    return tempfile.mkdtemp(prefix=prefix, dir=_work_root())
 
 
 def _fmt_ts(c, alias: str):
@@ -3353,20 +3371,19 @@ def cdc_e2e_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     and exact GTID replays, mid-stream ALTER ADD COLUMN, updates,
     deletes), stream it through the custom logtail source ->
     foreachBatch pipeline (route / GTID dedupe / schema history /
-    positional decode / Debezium envelope) -> parquet sink, then MERGE
+    JSON row-image decode / Debezium envelope) -> parquet sink, then MERGE
     the envelopes into final table state with the transfer writer and
     return that state. The oracle derives the same edit script's final
     state directly from orders — if any composed stage drops, dups, or
     mis-decodes a row, the census diverges."""
     import json
     import os
-    import tempfile
 
     from reader_spark.operators.transfer import TransferWriter
     from reader_spark.plans.cdc_mysql import run_pipeline
     from reader_spark.streaming.schema_history import SchemaAdapter
 
-    work = tempfile.mkdtemp(prefix="cdc_e2e_")
+    work = _work_dir("cdc_e2e_")
     log_dir = os.path.join(work, "log")
     os.makedirs(log_dir)
 
@@ -3946,9 +3963,7 @@ def text_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     searches read only the probed buckets (PartitionFilters,
     plan-asserted in test_retrieval.py). Same oracle as text_bm25 —
     the index round-trip must not change a single score."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bm25_idx_")
+    work = _work_dir("bm25_idx_")
     RT.bm25_index_write(_t(spark, sf_dir, "documents"), work, n_buckets=16)
     return RT.bm25_topk_indexed(spark, work, _BM25_QUERIES, k=10, n_buckets=16)
 
@@ -4094,10 +4109,8 @@ def trigram_search_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_retrieval.py). Lossless like the direct path, so the oracle
     is the same plain `contains` — the index changes the plan, not
     the answer."""
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="trgm_idx_")
+    work = _work_dir("trgm_idx_")
     RT.trigram_index_write(docs, work, n_buckets=16)
     return RT.trigram_search_indexed(
         spark, work, docs,
@@ -7195,12 +7208,10 @@ def lpa_communities_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer. At 100 TB the edge materialization replaces the
     in-memory edges checkpoint SCALE.md's LPA probe found to be the
     single-box limit."""
-    import tempfile
-
     from reader_spark.operators import graph as GR
 
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="ndidx_")
+    work = _work_dir("ndidx_")
     DD.neardup_index_write(
         docs.filter(F.col("doc_id") % 5 != 0), work,
         num_hashes=_MH_K, band_size=_MH_BAND, threshold=0.8,
@@ -7224,10 +7235,8 @@ def canonical_docs_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer. The 100 TB story: cluster assignment becomes an O(delta)
     maintenance verb instead of the per-wave full-graph shuffle
     SCALE.md's LPA probe measured as the single-box limit."""
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="ccidx_")
+    work = _work_dir("ccidx_")
     DD.neardup_index_write(
         docs.filter(F.col("doc_id") % 5 != 0), work,
         num_hashes=_MH_K, band_size=_MH_BAND, threshold=0.8,
@@ -7270,10 +7279,8 @@ def component_census_indexed_q(
     occupancy_ppm view is layout-specific and file-level tested).
     Built over the same 80% write + 20% incremental update as
     `canonical_docs_indexed`."""
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="ccocc_")
+    work = _work_dir("ccocc_")
     DD.neardup_index_write(
         docs.filter(F.col("doc_id") % 5 != 0), work,
         num_hashes=_MH_K, band_size=_MH_BAND, threshold=0.8,
@@ -8973,8 +8980,6 @@ def decontaminate_incremental_q(
     The cross-pair candidate set equals corpus-wide banding's
     (train x benchmark) pairs — two docs band-collide by their own
     signatures alone — so the oracle IS `DECONTAMINATE_SQL`."""
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
     splits = CU.dataset_split(docs).select("doc_id", "split")
     bench = docs.join(
@@ -8985,7 +8990,7 @@ def decontaminate_incremental_q(
         splits.filter(F.col("split") == "train").select("doc_id"),
         "doc_id", "left_semi",
     )
-    idx = tempfile.mkdtemp(prefix="declidx_")
+    idx = _work_dir("declidx_")
     DD.neardup_index_write(
         bench, idx, num_hashes=_MH_K, band_size=_MH_BAND, threshold=0.8
     )

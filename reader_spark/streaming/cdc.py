@@ -1,132 +1,19 @@
-"""CDC ingestion as Structured Streaming (reference §2.2, §3.2).
+"""Spark-native streaming operators over event streams (reference
+§2.7): the event-time semantics the reference's hand-rolled iterators
+lack, each a Structured Streaming building block whose state the
+watermark bounds: tumbling, sliding and session window counts, an
+interval-bounded stream-stream join, within-watermark dedup,
+stream-static anomaly alerts, and a rollup table that each micro-batch
+merges incrementally.
 
-The reference tails binlogs / change streams / shard streams with
-hand-rolled iterators, offsets committed after each written batch
-(writers/writer.go:44-50). Spark-first mapping:
-
-  raw change records (Kafka / connector / file fixtures)
-    -> readStream micro-batches        (B3: batch deadline == trigger)
-    -> event routing                   (C2: DDL vs DML vs bookkeeping)
-    -> schema as-of resolution         (C5/§2.7 late-data semantics)
-    -> converter select + envelope     (P3/P5)
-    -> sink via foreachBatch           (K1/K2: write-then-commit ==
-                                        checkpoint commit log)
-
-Offsets (C6): the checkpointLocation's offset/commit logs replace the
-reference's YAML Position files — same at-least-once,
-commit-after-write contract, plus replay on restart for free.
-
-In this container there is no Kafka/Mongo/binlog endpoint, so the
-stream source is a FILE source over JSONL change-record fixtures —
-the pipeline from route->envelope->sink is identical whatever the
-source; swapping `readStream.format("kafka")` in is a config change.
+The CDC ingest path itself (logtail source -> gate chain -> decode ->
+envelope or MERGE) is `reader_spark.plans.cdc_mysql`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from reader_spark.streaming.schema_history import DDL_SKIP_RE
-
-# Canonical raw change-record schema (the shape a binlog/ change-
-# stream decoder emits before enveloping; cf. dml.go:17-123).
-CHANGE_RECORD_SCHEMA = T.StructType(
-    [
-        T.StructField("seq", T.LongType()),          # offset within the log
-        T.StructField("ts_ms", T.LongType()),        # source event time
-        T.StructField("db", T.StringType()),
-        T.StructField("table", T.StringType()),
-        T.StructField("kind", T.StringType()),       # dml | ddl | bookkeeping
-        T.StructField("op", T.StringType()),         # c/u/d for dml
-        T.StructField("before", T.StringType()),     # JSON row or null
-        T.StructField("after", T.StringType()),      # JSON row or null
-        T.StructField("statement", T.StringType()),  # DDL text
-    ]
-)
-
-
-def read_change_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 10
-) -> DataFrame:
-    """File-backed change stream (fixtures / replays). The
-    maxFilesPerTrigger knob plays the role of the reference's
-    batchSize/10s deadline (iterator.go:149-233)."""
-    return (
-        spark.readStream.schema(CHANGE_RECORD_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(path)
-    )
-
-
-def route_events(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """C2/P7: split DML from schema-relevant DDL, dropping
-    bookkeeping events and skip-listed statements."""
-    dml = raw.filter(F.col("kind") == "dml")
-    ddl = raw.filter(
-        (F.col("kind") == "ddl")
-        & ~F.col("statement").rlike(DDL_SKIP_RE.pattern)
-    )
-    return dml, ddl
-
-
-def replicate_filter(
-    dml: DataFrame, db: str, tables: list[str]
-) -> DataFrame:
-    """P8 ShouldReplicate: keep only configured db/tables
-    (dml.go:24-40)."""
-    return dml.filter(
-        (F.col("db") == db) & F.col("table").isin(tables)
-    )
-
-
-def dml_to_envelope(
-    dml: DataFrame,
-    pk_cols: list[str],
-    row_schema: T.StructType,
-    db: str = "db",
-    schema: str = "public",
-    table: str = "table",
-    topic_prefix: str = "cdc",
-) -> DataFrame:
-    """Decode JSON before/after rows against the current schema and
-    wrap the Debezium envelope (light_transformer.go:48-90). All
-    column work is from_json + struct expressions — streaming-safe,
-    codegen'd."""
-    from reader_spark.envelope import cdc_envelope
-
-    shaped = dml.select(
-        F.from_json("before", row_schema).alias("before"),
-        F.from_json("after", row_schema).alias("after"),
-        F.col("op"),
-        F.col("ts_ms"),
-    )
-    return cdc_envelope(
-        shaped,
-        pk_cols=pk_cols,
-        db=db,
-        schema=schema,
-        table=table,
-        topic_prefix=topic_prefix,
-        ts_col=F.col("ts_ms"),
-    )
-
-
-def start_to_memory(
-    env: DataFrame, name: str, checkpoint_dir: str, once: bool = True
-):
-    """Test/demo sink. Production swaps format("kafka") — the
-    envelope already matches the (topic, key, value) contract."""
-    writer = (
-        env.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_event_counts(
@@ -303,21 +190,15 @@ def maintain_rollup(
     from reader_spark.operators.transfer import TransferWriter
 
     writer = TransferWriter(spark, dest_dir)
-    agg = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window), F.col(key_col))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            key_col,
-            "n",
-            "total_value",
-        )
+    agg = windowed_event_counts(
+        events, ts_col, key_col, window=window, watermark=watermark
+    ).select(
+        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
+            "window_start"
+        ),
+        key_col,
+        "n",
+        "total_value",
     )
 
     def merge(batch: DataFrame, epoch_id: int) -> None:

@@ -279,7 +279,7 @@ def test_pipeline_progress_metrics(spark, tmp_path):
 def test_quarantine_routes_malformed_rows(spark, tmp_path):
     """Poison rows (garbled JSON images) divert to the dead-letter
     log with their position; the healthy rest of the batch still
-    publishes. Without a quarantine path behavior is unchanged."""
+    publishes. Without a quarantine path the batch fails."""
     from reader_spark.plans.cdc_mysql import process_batch
 
     qdir = str(tmp_path / "dlq")
@@ -302,9 +302,42 @@ def test_quarantine_routes_malformed_rows(spark, tmp_path):
     bad = spark.read.json(f"{qdir}/users").collect()
     assert {r["seq"] for r in bad} == {3, 4}
     assert any(r["after_raw"] == '{"id": 2, ' for r in bad)
-    # no quarantine path: nothing filtered (nulled rows pass through)
+    # no quarantine path: a corrupt image fails the batch, naming the
+    # table and the log position, instead of publishing nulled rows
     out2 = process_batch(batch, SchemaAdapter(), "app", ["users"])
-    assert out2["users"].count() == 3
+    with pytest.raises(Exception, match=r"users at seq [34]"):
+        out2["users"].count()
+
+
+def test_merge_pipeline_fails_on_corrupt_image(spark, tmp_path):
+    """The MERGE path decodes like the envelope path: a truncated
+    after-image ends the query with an error naming the table and the
+    log position, and never merges a null-key row."""
+    from reader_spark.plans.cdc_mysql import run_pipeline_merge
+
+    log = tmp_path / "log"
+    log.mkdir()
+    dest = str(tmp_path / "dest")
+    ck = str(tmp_path / "ck")
+    _append(log / "binlog.jsonl", [
+        rec(1, "ddl", statement="CREATE TABLE users (id int, name text)"),
+        rec(2, "dml", op="c", after='{"id": 1, "name": "ada"}'),
+    ])
+    adapter = SchemaAdapter()
+    run_pipeline_merge(spark, str(log), dest, ck, "app", ["users"],
+                       adapter, n_buckets=4).awaitTermination(90)
+
+    _append(log / "binlog.jsonl", [
+        rec(3, "dml", op="u", before='{"id": 1, "name": "ada"}',
+            after='{"id": 1, '),  # truncated JSON
+    ])
+    q = run_pipeline_merge(spark, str(log), dest, ck, "app", ["users"],
+                           adapter, n_buckets=4)
+    with pytest.raises(Exception, match="users at seq 3"):
+        q.awaitTermination(90)
+    # no null-key row: the destination holds the first wave only
+    rows = spark.read.parquet(f"{dest}/users").collect()
+    assert [(r["id"], r["name"]) for r in rows] == [("1", "ada")]
 
 
 def test_unmatched_ddl_quarantined_not_silently_dropped(spark, tmp_path):

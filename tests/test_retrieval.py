@@ -155,6 +155,32 @@ def test_bm25_indexed_roundtrip_and_pruning(spark, tmp_path):
     assert n_dirs > 3  # the filter has something to prune
 
 
+def test_indexed_builder_work_dir_removed_at_exit(spark, sf_dir):
+    """Index-backed catalog builders make their work dir under one
+    per-process root (their lazy frames read it, so no builder can
+    remove its own), and that root is removed at interpreter exit."""
+    import os
+    import subprocess
+    import sys
+
+    from reader_spark import queries as Q
+
+    Q.text_bm25_indexed(spark, sf_dir)
+    root = Q._work_root()
+    built = [d for d in os.listdir(root) if d.startswith("bm25_idx_")]
+    assert built and os.listdir(os.path.join(root, built[0]))
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = subprocess.run(
+        [sys.executable, "-c",
+         "from reader_spark import queries as Q; print(Q._work_dir('probe_'))"],
+        cwd=repo, capture_output=True, text=True, check=True,
+    )
+    work = probe.stdout.strip().splitlines()[-1]
+    assert os.path.basename(work).startswith("probe_")
+    assert not os.path.exists(os.path.dirname(work))
+
+
 def test_trigram_search_pruning_and_exactness(spark):
     """The trigram prefilter is LOSSLESS (results == plain contains)
     and actually prunes: a rare pattern's candidate set is a small

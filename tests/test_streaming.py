@@ -1,104 +1,97 @@
-"""Streaming CDC pipeline: file-backed change stream end-to-end
-(route -> envelope -> checkpointed sink), schema history replay,
-as-of version resolution, watermark windowed agg."""
+"""Streaming CDC pipeline: the live logtail path end-to-end
+(gate chain -> decode -> envelope -> checkpointed sink), schema history
+replay, as-of version resolution, watermark windowed agg."""
 
 import json
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from reader_spark.plans.cdc_mysql import BINLOG_SCHEMA, process_batch, run_pipeline
 from reader_spark.streaming import cdc
 from reader_spark.streaming.schema_history import (
     SchemaAdapter,
     asof_schema_version,
 )
 
-ROW_SCHEMA = T.StructType(
-    [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
-)
 
-
-def write_fixture(tmp_path, records):
-    p = tmp_path / "stream_in"
-    p.mkdir()
-    with open(p / "batch0.json", "w") as f:
+def _append(path, records):
+    with open(path, "a") as f:
         for r in records:
             f.write(json.dumps(r) + "\n")
-    return str(p)
 
 
-def change_records():
-    return [
-        {"seq": 1, "ts_ms": 1000, "db": "d", "table": "t", "kind": "dml",
-         "op": "c", "before": None, "after": '{"id": 1, "v": "a"}',
-         "statement": None},
-        {"seq": 2, "ts_ms": 2000, "db": "d", "table": "t", "kind": "dml",
-         "op": "u", "before": '{"id": 1, "v": "a"}',
-         "after": '{"id": 1, "v": "b"}', "statement": None},
-        {"seq": 3, "ts_ms": 2500, "db": "d", "table": "t", "kind": "ddl",
-         "op": None, "before": None, "after": None,
-         "statement": "BEGIN"},  # skip-listed
-        {"seq": 4, "ts_ms": 3000, "db": "d", "table": "t", "kind": "ddl",
-         "op": None, "before": None, "after": None,
-         "statement": "ALTER TABLE t ADD COLUMN w int"},
-        {"seq": 5, "ts_ms": 4000, "db": "d", "table": "t", "kind": "dml",
-         "op": "d", "before": '{"id": 1, "v": "b"}', "after": None,
-         "statement": None},
-        {"seq": 6, "ts_ms": 4500, "db": "other", "table": "t", "kind": "dml",
-         "op": "c", "before": None, "after": '{"id": 9, "v": "x"}',
-         "statement": None},
-    ]
+def rec(seq, kind, **kw):
+    base = {
+        "seq": seq, "ts_ms": seq * 1000, "db": "d", "tbl": "t",
+        "kind": kind, "op": None, "gtid_sid": "s1", "gtid_tx": seq,
+        "statement": None, "before": None, "after": None,
+    }
+    base.update(kw)
+    return base
+
+
+def write_log(tmp_path):
+    log = tmp_path / "log"
+    log.mkdir()
+    _append(log / "binlog.jsonl", [
+        rec(1, "ddl", statement="CREATE TABLE t (id int, v text)"),
+        rec(2, "dml", op="c", after='{"id": 1, "v": "a"}'),
+        rec(3, "dml", op="u", before='{"id": 1, "v": "a"}',
+            after='{"id": 1, "v": "b"}'),
+        rec(4, "ddl", statement="BEGIN"),  # skip-listed
+        rec(5, "ddl", statement="ALTER TABLE t ADD COLUMN w int"),
+        rec(6, "dml", op="d", before='{"id": 1, "v": "b"}'),
+        rec(7, "dml", db="other", op="c", after='{"id": 9, "v": "x"}'),
+        rec(8, "bookkeeping"),
+    ])
+    return str(log)
 
 
 def test_cdc_stream_end_to_end(spark, tmp_path):
-    src = write_fixture(tmp_path, change_records())
-    raw = cdc.read_change_stream(spark, src)
-    assert raw.isStreaming
-    dml, ddl = cdc.route_events(raw)
-    dml = cdc.replicate_filter(dml, "d", ["t"])
-    env = cdc.dml_to_envelope(dml, ["id"], ROW_SCHEMA, db="d", table="t")
-    q = cdc.start_to_memory(env, "cdc_out", str(tmp_path / "ckpt"))
+    sink = str(tmp_path / "sink")
+    q = run_pipeline(spark, write_log(tmp_path), sink,
+                     str(tmp_path / "ckpt"), "d", ["t"])
     q.awaitTermination(60)
-    out = spark.sql("SELECT * FROM cdc_out").collect()
+    out = spark.read.parquet(f"{sink}/t").collect()
     assert len(out) == 3  # c, u, d for db 'd' only
     by_op = {json.loads(r["value"])["payload"]["op"]: r for r in out}
     assert set(by_op) == {"c", "u", "d"}
-    # delete keys off before; key carries the PrimaryKeyPayload wrapper
-    assert json.loads(by_op["d"]["key"])["payload"] == {"id": 1}
-    assert json.loads(by_op["u"]["value"])["payload"]["after"] == {"id": 1, "v": "b"}
+    # delete keys off before; key carries the PrimaryKeyPayload wrapper.
+    # The decode is all-string; typing is the converter layer's (P3).
+    assert json.loads(by_op["d"]["key"])["payload"] == {"id": "1"}
+    # the batch decodes against its schema after its DDL (w added)
+    assert json.loads(by_op["u"]["value"])["payload"]["after"] == {
+        "id": "1", "v": "b", "w": None,
+    }
     assert all(r["topic"] == "cdc.d.t" for r in out)
 
 
 def test_ddl_routing_applies_skip_list(spark, tmp_path):
-    src = write_fixture(tmp_path, change_records())
-    raw = spark.read.schema(cdc.CHANGE_RECORD_SCHEMA).json(src)  # batch read
-    _, ddl = cdc.route_events(raw)
-    stmts = [r["statement"] for r in ddl.collect()]
-    assert stmts == ["ALTER TABLE t ADD COLUMN w int"]
+    batch = spark.read.schema(BINLOG_SCHEMA).json(write_log(tmp_path))
+    sa = SchemaAdapter()
+    process_batch(batch, sa, "d", ["t"])
+    stmts = [h["statement"] for h in sa.history]
+    assert "BEGIN" not in stmts
+    assert stmts == [
+        "CREATE TABLE t (id int, v text)", "ALTER TABLE t ADD COLUMN w int",
+    ]
 
 
 def test_checkpoint_no_reprocess_on_restart(spark, tmp_path):
     """Write-then-commit contract (writer.go:44-50): a restarted query
     with the same checkpoint must not re-emit processed batches."""
-    src = write_fixture(tmp_path, change_records())
-    raw = cdc.read_change_stream(spark, src)
-    dml, _ = cdc.route_events(raw)
-    env = cdc.dml_to_envelope(
-        cdc.replicate_filter(dml, "d", ["t"]), ["id"], ROW_SCHEMA, db="d", table="t"
-    )
+    log = write_log(tmp_path)
     ck = str(tmp_path / "ckpt2")
-    out_dir = str(tmp_path / "sink2")
+    sink = str(tmp_path / "sink2")
+    adapter = SchemaAdapter()
 
     def run_once():
-        q = (env.writeStream.outputMode("append").format("json")
-             .option("path", out_dir).option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(60)
+        run_pipeline(spark, log, sink, ck, "d", ["t"], adapter).awaitTermination(60)
+        return spark.read.parquet(f"{sink}/t").count()
 
-    run_once()
-    n1 = spark.read.json(out_dir).count()
-    run_once()  # restart on same checkpoint: no new input -> no new rows
-    n2 = spark.read.json(out_dir).count()
+    n1 = run_once()
+    n2 = run_once()  # restart on same checkpoint: no new input -> no new rows
     assert n1 == 3 and n2 == 3
 
 
