@@ -3,9 +3,10 @@ analogue of the reference binary's `reader --config config.yaml` run
 loop (main.go: config load -> source build -> writer build -> Run).
 
 Snapshot jobs: per table, read -> PK-guarded projection -> Debezium
-snapshot envelope -> destination. Streaming jobs: the composed binlog
-pipeline (plans/cdc_mysql), either as an envelope log or merged table
-state (`destination.kind: transfer` -> incremental bucketed MERGE).
+snapshot envelope -> destination, the tables concurrently. Streaming
+jobs: the composed binlog pipeline (plans/cdc_mysql), either as an
+envelope log or merged table state (`destination.kind: transfer` ->
+incremental bucketed MERGE).
 
 Kinds wired for in-container execution: `parquet` sources and
 `parquet`/`transfer` destinations run anywhere; `kafka` publishes when
@@ -22,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reader_spark import sinks
 from reader_spark.config import Settings, SourceCfg, TableCfg
 from reader_spark.functions.localrel import local_df
 from reader_spark.envelope import snapshot_envelope
@@ -89,17 +91,15 @@ def _pk_cols(src: SourceCfg, table: TableCfg, df: DataFrame) -> list[str]:
 def _publish(env: DataFrame, settings: Settings, table: str) -> str:
     dest = settings.destination
     if dest.kind == "kafka":
-        from reader_spark import sinks
-
         try:
             sinks.write_kafka(env, dest.options["bootstrap"])
             return f"kafka:{dest.options['bootstrap']}"
         except Exception:
             fallback = f"{dest.path or '/tmp/reader_spark_out'}/{table}"
-            sinks.write_file_fallback(env, fallback)
+            sinks.write_parquet(env, fallback)
             return fallback
     out = f"{dest.path}/{table}"
-    env.write.mode("append").parquet(out)
+    sinks.write_parquet(env, out)
     return out
 
 
@@ -184,56 +184,98 @@ def _dispatch_job(spark: SparkSession, settings: Settings) -> dict[str, str]:
         return _run_curate(spark, settings)
     if src.streaming:
         return _run_streaming(spark, settings)
-    results: dict[str, str] = {}
-    for table in src.tables:
-        df = _read_table(spark, src, table)
-        pk = _pk_cols(src, table, df)
-        df = project_columns(
-            df,
-            pk,
-            include=table.include_columns or None,
-            exclude=table.exclude_columns or None,
-        )
-        zorder = settings.destination.options.get("zorder", {}).get(table.name)
-        if zorder and settings.destination.kind == "parquet":
-            # warehouse materialization clustered for multi-column
-            # data skipping: the RAW projected table (not the Kafka
-            # envelope) in Z-order — overwrite semantics, since a
-            # z-ordered layout is a whole-table property
-            from reader_spark.operators.partitioning import zorder_write
+    return _run_snapshot(spark, settings)
 
-            out = f"{settings.destination.path}/{table.name}"
-            zorder_write(
-                df,
-                out,
-                list(zorder),
-                n_files=int(
-                    settings.destination.options.get("zorder_files", 16)
-                ),
+
+def _snapshot_table(
+    spark: SparkSession, settings: Settings, table: TableCfg
+) -> tuple[str, int | None]:
+    """One table's snapshot chain: read -> PK-guarded projection ->
+    envelope -> publish. Returns the destination and the rows the
+    write observed (None for a z-ordered write)."""
+    src = settings.source
+    df = _read_table(spark, src, table)
+    pk = _pk_cols(src, table, df)
+    df = project_columns(
+        df,
+        pk,
+        include=table.include_columns or None,
+        exclude=table.exclude_columns or None,
+    )
+    zorder = settings.destination.options.get("zorder", {}).get(table.name)
+    if zorder and settings.destination.kind == "parquet":
+        # warehouse materialization clustered for multi-column
+        # data skipping: the RAW projected table (not the Kafka
+        # envelope) in Z-order — overwrite semantics, since a
+        # z-ordered layout is a whole-table property
+        from reader_spark.operators.partitioning import zorder_write
+
+        out = f"{settings.destination.path}/{table.name}"
+        zorder_write(
+            df,
+            out,
+            list(zorder),
+            n_files=int(settings.destination.options.get("zorder_files", 16)),
+        )
+        return out, None
+    env = snapshot_envelope(
+        df,
+        pk_cols=pk,
+        db=src.database or "db",
+        schema=table.schema,
+        table=table.name,
+        topic_prefix=settings.destination.topic_prefix,
+        dialect=_DIALECT.get(src.kind, "mysql"),
+        ts_col=F.lit(src.options.get("snapshot_ts", 0)).cast("long"),
+    )
+    # rows-written for the _metrics row WITHOUT a second scan:
+    # an Observation rides the write action itself
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    env = env.observe(obs, F.count(F.lit(1)).alias("n"))
+    out = _publish(env, settings, table.name)
+    try:
+        return out, int(obs.get["n"])
+    except Exception:
+        return out, None
+
+
+def _run_snapshot(spark: SparkSession, settings: Settings) -> dict[str, str]:
+    """Snapshot job. The reference snapshots tables one after another;
+    here each table's chain runs on its own thread, so one table's
+    schema inference, write and commit overlap another's (a single
+    table's jobs leave cores idle between stages). The pool is
+    min(tables, default parallelism) wide. `inheritable_thread_target`
+    is wrapped per table: each thread gets its own copy of the
+    caller's local properties, so the job group (and cancelling it)
+    still covers every table's jobs, and concurrent SQL executions do
+    not share one property set. Results and `_JOB_OBS` are filled in
+    config order; the first failing table (config order) is re-raised
+    after every table has finished, so a failed job writes no
+    `_metrics` row."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    tables = settings.source.tables
+    if not tables:
+        return {}
+    width = min(len(tables), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        futures = [
+            pool.submit(
+                inheritable_thread_target(spark)(_snapshot_table),
+                spark, settings, table,
             )
-            results[table.name] = out
-            continue
-        env = snapshot_envelope(
-            df,
-            pk_cols=pk,
-            db=src.database or "db",
-            schema=table.schema,
-            table=table.name,
-            topic_prefix=settings.destination.topic_prefix,
-            dialect=_DIALECT.get(src.kind, "mysql"),
-            ts_col=F.lit(src.options.get("snapshot_ts", 0)).cast("long"),
-        )
-        # rows-written for the _metrics row WITHOUT a second scan:
-        # an Observation rides the write action itself
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        env = env.observe(obs, F.count(F.lit(1)).alias("n"))
-        results[table.name] = _publish(env, settings, table.name)
-        try:
-            _JOB_OBS[table.name] = int(obs.get["n"])
-        except Exception:
-            pass
+            for table in tables
+        ]
+    results: dict[str, str] = {}
+    for table, fut in zip(tables, futures):
+        out, rows = fut.result()
+        results[table.name] = out
+        if rows is not None:
+            _JOB_OBS[table.name] = rows
     return results
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 from reader_spark.envelope import cdc_envelope
 from reader_spark.functions.localrel import local_df
 from reader_spark.operators.transfer import TransferWriter
+from reader_spark.sinks import write_parquet
 from reader_spark.streaming.binlog import gtid_dedupe_batch, gtid_highwater_filter
 from reader_spark.streaming.log_source import LogTailDataSource, LogTailStreamReader
 from reader_spark.streaming.schema_history import SchemaAdapter
@@ -197,9 +198,21 @@ def _decoded_images(
         ]
     )
     opts = {"columnNameOfCorruptRecord": "_corrupt"}
+    # The images are parsed inside a one-row `inline` (a Generate),
+    # not a projection. A filter on the parsed structs cannot be
+    # pushed below a Generate, while Spark pushes it below a Project
+    # and copies both from_json calls into it, which parses every
+    # image twice. The guard must be a filter: a projected column
+    # (even `op`) is pruned by a caller's count() and never fires.
     shaped = rows.select(
-        F.from_json("before", q_schema, opts).alias("before"),
-        F.from_json("after", q_schema, opts).alias("after"),
+        F.inline(
+            F.array(
+                F.struct(
+                    F.from_json("before", q_schema, opts).alias("before"),
+                    F.from_json("after", q_schema, opts).alias("after"),
+                )
+            )
+        ),
         F.col("before").alias("before_raw"),
         F.col("after").alias("after_raw"),
         F.col("op"),
@@ -217,8 +230,6 @@ def _decoded_images(
             poison.write.mode("append").json(f"{quarantine_path}/{table}")
         shaped = shaped.filter(~corrupt)
     else:
-        # a filter, not a projected column: a column the caller's
-        # projection drops would be pruned and never fire
         shaped = shaped.filter(
             F.when(
                 corrupt,
@@ -471,7 +482,7 @@ def run_pipeline(
                         ).cast("long")
                     ).alias("max_source_ts_ms"),
                 )
-            env.write.mode("append").parquet(f"{sink_dir}/{table}")
+            write_parquet(env, f"{sink_dir}/{table}")
             if obs is not None:
                 m = obs.get
                 with open(metrics_path, "a") as f:

@@ -76,6 +76,13 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"),
         )
         .config("spark.ui.enabled", "false")
+        # A curate run needs more generated classes than the default
+        # 100-entry codegen cache holds, so each run evicted and
+        # recompiled them: a second identical minhash + component-split
+        # curate run (pytest session, local[4], sf0.001) compiled 121
+        # classes with Janino at the default size, 16 with room for
+        # 1000. Static conf: it must be set at build time.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

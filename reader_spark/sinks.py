@@ -7,8 +7,9 @@ with jitter. On Spark, every one of those is a sink/client option on
 (topic, key, value) columns, which reader_spark.envelope already
 does.
 
-No Kafka broker exists in this container; kafka_available() gates the
-real sink and the parquet/json fallback keeps pipelines runnable.
+kafka_available() gates the real sink; without a broker, envelopes
+land as parquet through `write_parquet`, the one file writer for
+envelope frames.
 """
 
 from __future__ import annotations
@@ -53,5 +54,24 @@ def write_kafka(
     writer.save()
 
 
-def write_file_fallback(env: DataFrame, path: str, fmt: str = "parquet") -> None:
-    env.write.mode("append").format(fmt).save(path)
+# Envelope `key`/`value` are JSON documents: unique per row, so a
+# dictionary only fills up and falls back to PLAIN, and they share a
+# several-hundred-byte schema prefix, so min/max statistics cost a long
+# byte compare per value and prune nothing; both are executor CPU spent
+# on every value for no gain. `topic` (one value per table) keeps its
+# dictionary and statistics.
+_ENVELOPE_OPTIONS = {
+    f"{opt}#{col}": "false"
+    for col in ("key", "value")
+    for opt in (
+        "parquet.enable.dictionary",
+        "parquet.column.statistics.enabled",
+        "parquet.size.statistics.enabled",
+    )
+}
+
+
+def write_parquet(env: DataFrame, path: str) -> None:
+    """Append an envelope frame (topic, key, value) to `path` as
+    parquet."""
+    env.write.mode("append").options(**_ENVELOPE_OPTIONS).parquet(path)

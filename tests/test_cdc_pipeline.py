@@ -340,6 +340,43 @@ def test_merge_pipeline_fails_on_corrupt_image(spark, tmp_path):
     assert [(r["id"], r["name"]) for r in rows] == [("1", "ada")]
 
 
+def test_decode_parses_each_image_once(spark, tmp_path):
+    """Each row image is parsed by one from_json in the optimized plan
+    of both decode callers, with the fail-the-batch guard and with a
+    quarantine path alike (a filter pushed below the decode would copy
+    the parse into it). A garbled row of an unreplicated table does
+    not fail the batch."""
+    from reader_spark.plans.cdc_mysql import decoded_changes, process_batch
+
+    batch = spark.createDataFrame(
+        [
+            rec(1, "ddl", statement="CREATE TABLE users (id int, name text)"),
+            rec(2, "dml", op="c", after='{"id": 1, "name": "ada"}'),
+            rec(3, "dml", op="u", before='{"id": 1, "name": "ada"}',
+                after='{"id": 1, "name": "ada2"}'),
+            rec(4, "dml", tbl="other", op="c", after='{"id": 2, '),
+        ]
+    )
+    frames = {
+        "process_batch": process_batch(batch, SchemaAdapter(), "app", ["users"]),
+        "quarantine": process_batch(
+            batch, SchemaAdapter(), "app", ["users"],
+            quarantine_path=str(tmp_path / "dlq"),
+        ),
+        "decoded_changes": decoded_changes(
+            batch, SchemaAdapter(), "app", ["users"]
+        ),
+    }
+    for name, out in frames.items():
+        plan = out["users"]._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("from_json(") == 2, (name, plan)
+        assert out["users"].count() == 2, name
+    got = frames["decoded_changes"]["users"].collect()
+    assert {(r["id"], r["name"], r["op"]) for r in got} == {
+        ("1", "ada", "c"), ("1", "ada2", "u"),
+    }
+
+
 def test_unmatched_ddl_quarantined_not_silently_dropped(spark, tmp_path):
     """A schema-mutating-shaped DDL the dispatcher has no rule for
     (here: ALTER ... PARTITION BY) must land in the dead-letter log

@@ -293,6 +293,136 @@ destination:
     assert spark.read.parquet(f"{tmp_path}/out/region").count() == 5
 
 
+SNAPSHOT_TABLES = ["supplier", "nation", "customer", "region"]
+
+
+def _snapshot_cfg(sf_dir, out, tables=SNAPSHOT_TABLES):
+    names = "".join(f"\n    - name: {t}" for t in tables)
+    return f"""
+source:
+  kind: parquet
+  database: tpch
+  options:
+    path: {sf_dir}
+  tables:{names}
+destination:
+  kind: parquet
+  topic_prefix: snap
+  path: {out}
+"""
+
+
+def _sequential_snapshot(spark, settings):
+    """The snapshot chain run table by table on the calling thread."""
+    from reader_spark import job
+
+    results = {}
+    for t in settings.source.tables:
+        out, rows = job._snapshot_table(spark, settings, t)
+        results[t.name] = out
+        if rows is not None:
+            job._JOB_OBS[t.name] = rows
+    return results
+
+
+def test_snapshot_job_concurrent_tables_match_sequential(spark, sf_dir, tmp_path):
+    """Snapshot tables publish concurrently, yet the results come back
+    in config order, each table's _metrics row counts its own rows,
+    and the published envelopes equal a table-by-table run's."""
+    from reader_spark.job import run_job
+
+    out = str(tmp_path / "conc")
+    res = run_job(spark, load_settings(_snapshot_cfg(sf_dir, out)))
+    assert list(res) == SNAPSHOT_TABLES
+    metrics = {
+        r["table"]: r["rows"]
+        for r in spark.read.parquet(f"{out}/_metrics").collect()
+    }
+    assert metrics == {
+        t: spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
+        for t in SNAPSHOT_TABLES
+    }
+    seq_out = str(tmp_path / "seq")
+    _sequential_snapshot(spark, load_settings(_snapshot_cfg(sf_dir, seq_out)))
+    for t in SNAPSHOT_TABLES:
+        conc = spark.read.parquet(f"{out}/{t}")
+        seq = spark.read.parquet(f"{seq_out}/{t}")
+        assert conc.count() == metrics[t]
+        assert conc.exceptAll(seq).count() == 0
+        assert seq.exceptAll(conc).count() == 0
+
+
+def test_snapshot_job_missing_table_fails_without_metrics(spark, sf_dir, tmp_path):
+    """One table's failure fails the job after the others finish, and
+    a failed job writes no _metrics row."""
+    import os
+
+    from reader_spark.job import run_job
+
+    out = str(tmp_path / "out")
+    cfg = _snapshot_cfg(sf_dir, out, ["nation", "no_such_table", "region"])
+    with pytest.raises(Exception, match="no_such_table"):
+        run_job(spark, load_settings(cfg))
+    assert not os.path.exists(f"{out}/_metrics")
+
+
+def test_snapshot_job_threads_keep_callers_job_group(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Every Spark job a concurrent snapshot starts runs in the
+    caller's job group, as many as a table-by-table run starts there;
+    a plain thread would start the table jobs outside the group."""
+    from reader_spark import job
+
+    sc = spark.sparkContext
+
+    def jobs_in_group(group, out):
+        sc.setJobGroup(group, group)
+        try:
+            job.run_job(spark, load_settings(_snapshot_cfg(sf_dir, out)))
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    concurrent = jobs_in_group(f"conc-{tmp_path.name}", str(tmp_path / "c"))
+    monkeypatch.setattr(job, "_run_snapshot", _sequential_snapshot)
+    sequential = jobs_in_group(f"seq-{tmp_path.name}", str(tmp_path / "s"))
+    assert concurrent == sequential > len(SNAPSHOT_TABLES)
+
+
+def test_snapshot_envelope_parquet_encoding(spark, sf_dir, tmp_path):
+    """The envelope's unique JSON columns are written PLAIN without
+    min/max statistics; `topic` keeps its dictionary. (A footer cannot
+    show whether a dictionary was tried and abandoned for PLAIN, which
+    unique values always are; the statistics check is what a writer
+    without the envelope options fails.)"""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from reader_spark.job import run_job
+
+    out = str(tmp_path / "out")
+    run_job(spark, load_settings(_snapshot_cfg(sf_dir, out, ["nation"])))
+    files = glob.glob(f"{out}/nation/part-*.parquet")
+    assert files
+    for path in files:
+        meta = pq.ParquetFile(path).metadata
+        for g in range(meta.num_row_groups):
+            cols = {
+                meta.row_group(g).column(i).path_in_schema:
+                meta.row_group(g).column(i)
+                for i in range(meta.num_columns)
+            }
+            for name in ("key", "value"):
+                c = cols[name]
+                assert not c.has_dictionary_page, name
+                assert "PLAIN" in c.encodings, (name, c.encodings)
+                assert c.statistics is None or not c.statistics.has_min_max, name
+            assert cols["topic"].has_dictionary_page
+
+
 def test_job_runner_streaming_merge_yaml(spark, tmp_path):
     import json
 
@@ -667,6 +797,26 @@ def test_curate_split_job_spark_job_count(spark, sf_dir, tmp_path):
             sc.setLocalProperty(key, None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n_jobs <= 25, n_jobs
+
+
+def test_curate_rerun_reuses_generated_code(spark, sf_dir, tmp_path):
+    """A curate run needs more generated classes than Spark's default
+    100-entry codegen cache holds, so with that default every run
+    recompiled them all. With the session's larger cache, a second
+    identical run compiles 16 classes with Janino in the test session,
+    the same on every repeat; with the default cache it compiled 121.
+    The bound leaves room for a few new plans, not for the old
+    recompile-everything behaviour."""
+    from reader_spark.job import run_job
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    cfg = _curate_minhash_component_cfg(sf_dir, str(tmp_path / "first"))
+    run_job(spark, load_settings(cfg))
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    cfg = _curate_minhash_component_cfg(sf_dir, str(tmp_path / "second"))
+    run_job(spark, load_settings(cfg))
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount() - before
+    assert compiles <= 30, compiles
 
 
 def test_curate_job_end_to_end(spark, sf_dir, tmp_path):
