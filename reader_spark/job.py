@@ -1078,18 +1078,23 @@ def _run_curate(spark: SparkSession, settings: Settings) -> dict[str, str]:
     the minimum id; minhash dedup keeps each near-dup component's
     minimum id (LSH + Jaccard verify + connected components — no
     all-pairs anywhere); the shard write is partitionBy(shard) with a
-    per-partition sort. With a split configured, the survivor frame
-    (after gates, dedup, split assignment and chunking) is pinned
-    once: the first split write computes it, and the train/val/test
-    writes each filter it instead of re-running the chain. Pins are
-    released after the table's writes. Returns {table: out_path}
-    plus the written row count under 'manifest:<table>' (or
-    'manifest:<table>/<split>' per split).
+    per-partition sort. With a split configured, ONE write
+    (`write_split_shards`) takes the survivor frame (after gates,
+    dedup, split assignment and chunking) with its split column and
+    lays out train/val/test in one pass, so the survivor chain runs
+    once and is never cached whole. The dedup pins are released after
+    the table's write. Returns {table: out_path} plus the written row
+    count under 'manifest:<table>' (or 'manifest:<table>/<split>' per
+    split).
     """
     from reader_spark.cache import pin, release_pins
     from reader_spark.functions.text import quality_score
     from reader_spark.operators import dedup as DD
-    from reader_spark.operators.transfer import write_training_shards
+    from reader_spark.operators.transfer import (
+        SPLITS,
+        write_split_shards,
+        write_training_shards,
+    )
 
     cfg = settings.curate
     src = settings.source
@@ -1278,16 +1283,12 @@ def _run_curate(spark: SparkSession, settings: Settings) -> dict[str, str]:
         # without a single extra scan
         write_counts: list[tuple[str, int]] = []
         if cfg.split:
-            # three writes read one survivor frame: computed (gate
-            # Observations included) by the first, filtered from the
-            # cache by the other two
-            docs = pin(docs)
-            for s in ("train", "val", "test"):
-                part = docs.filter(F.col("split") == s).drop("split")
-                manifest = write_training_shards(
-                    part, f"{out}/{s}", n_shards=cfg.n_shards,
-                    epoch=cfg.epoch,
-                )
+            # one write for all three splits: the survivor frame
+            # (gate Observations included) is computed once, by it
+            manifests = write_split_shards(
+                docs, out, n_shards=cfg.n_shards, epoch=cfg.epoch
+            )
+            for s, manifest in manifests.items():
                 results[f"manifest:{table.name}/{s}"] = str(
                     sum(manifest.values())
                 )
@@ -1333,7 +1334,7 @@ def _run_curate(spark: SparkSession, settings: Settings) -> dict[str, str]:
             from reader_spark.operators import sketches as SK
 
             written = (
-                [f"{out}/{s_}" for s_ in ("train", "val", "test")]
+                [f"{out}/{s_}" for s_ in SPLITS]
                 if cfg.split
                 else [out]
             )
@@ -1370,6 +1371,6 @@ def _run_curate(spark: SparkSession, settings: Settings) -> dict[str, str]:
             else:
                 SK.bloom_write(ids, cfg.seen_index, "doc_id")
         # shard write materialized everything — drop the pinned
-        # token-hash/signature/survivor frames before the next table
+        # token-hash/signature/component frames before the next table
         release_pins()
     return results

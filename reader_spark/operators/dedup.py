@@ -21,7 +21,7 @@ reproducible (the DuckDB oracle computes the identical signature).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from reader_spark.cache import pin
@@ -840,56 +840,69 @@ def connected_components(
     (reduce) — 2 shuffles, both on uniform id keys. Iterations = graph
     DIAMETER; near-dup graphs are dense cliques stitched by hubs, so
     convergence is fast (observed ≤ 4 rounds on the fixture corpus).
+    The first round needs no labels to propagate — every node's label
+    is its own id — so the seed is that round, least(node, min
+    neighbour) from one groupBy on the edges: a clique's labels are
+    final at the seed and the first loop round only confirms them.
     Alternating large-star/small-star (Kiveris et al., SoCC'14), whose
     rounds are O(log n) regardless of diameter, is kept as a test
     oracle (tests/kernel_oracles.py) until a scaled workload shows a
-    long-chain graph where it wins.
+    long-chain graph where it wins. A graph whose labels still change
+    after `max_iter` rounds raises instead of returning labels that
+    split a component.
 
     Lineage is truncated per round with localCheckpoint — without it
     the iterated join plan grows exponentially and analysis dominates.
-    On a real cluster use reliable checkpointing (localCheckpoint
-    trades fault-tolerance for speed)."""
+    Whether a round changed any label is an Observation riding that
+    checkpoint's own job, so a round costs one Spark job. On a real
+    cluster use reliable checkpointing (localCheckpoint trades
+    fault-tolerance for speed)."""
     edges = (
         pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
         .unionByName(pairs.select(F.col(id_b).alias("s"), F.col(id_a).alias("d")))
         .persist()
     )
-    labels = (
-        edges.select(F.col("s").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges.s == labels.node)
-            .groupBy(F.col("d").alias("node"))
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        # a node's label changes iff a neighbor offered a smaller one
-        # — carry that as a flag through the SAME checkpoint, so
-        # convergence detection is a filter over materialized rows
-        # instead of a second join-the-old-labels job per round
-        new_labels = (
-            labels.alias("l")
-            .join(nbr_min.alias("m"), "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("l.label"), F.coalesce(F.col("m.nbr_min"), F.col("l.label"))
-                ).alias("label"),
-                F.coalesce(
-                    F.col("m.nbr_min") < F.col("l.label"), F.lit(False)
-                ).alias("__chg"),
-            )
+    try:
+        labels = (
+            edges.groupBy("s")
+            .agg(F.least(F.col("s"), F.min("d")).alias("label"))
+            .withColumnRenamed("s", "node")
             .localCheckpoint()
         )
-        changed = new_labels.where("__chg").limit(1).count()
-        labels = new_labels.drop("__chg")
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels
+        for _ in range(max_iter):
+            nbr_min = (
+                edges.join(labels, edges.s == labels.node)
+                .groupBy(F.col("d").alias("node"))
+                .agg(F.min("label").alias("nbr_min"))
+            )
+            # a node's label changes iff a neighbor offered a smaller
+            # one; the round's checkpoint job also counts those nodes
+            changed = Observation()
+            labels = (
+                labels.alias("l")
+                .join(nbr_min.alias("m"), "node", "left")
+                .observe(
+                    changed,
+                    F.count_if(F.col("m.nbr_min") < F.col("l.label")).alias(
+                        "n"
+                    ),
+                )
+                .select(
+                    "node",
+                    F.least(F.col("l.label"), F.col("m.nbr_min")).alias(
+                        "label"
+                    ),
+                )
+                .localCheckpoint()
+            )
+            if changed.get["n"] == 0:
+                return labels
+    finally:
+        edges.unpersist()
+    raise RuntimeError(
+        f"connected_components: labels still changing after {max_iter} "
+        "rounds (max_iter); the graph's diameter needs more"
+    )
 
 
 def lsh_candidate_pairs_capped(
@@ -1069,22 +1082,18 @@ def md5_band_rows(
     A NULL-signature doc can never verify at any threshold > 0, so
     no true pair is lost."""
     assert num_hashes % band_size == 0
-    keys = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "_",
-                    *[
-                        F.col(f"h{band * band_size + j}")
-                        for j in range(band_size)
-                    ],
-                )
-            )
-            for band in range(num_hashes // band_size)
-        ]
+    # one SQL string, parsed once on the JVM: building the same array
+    # from Column calls costs a py4j round trip per column reference
+    # (~180 at k=128/r=8) for an identical analyzed expression
+    keys = ", ".join(
+        "md5(concat_ws('_', "
+        + ", ".join(f"h{band * band_size + j}" for j in range(band_size))
+        + "))"
+        for band in range(num_hashes // band_size)
     )
     return sigs.where(F.col("h0").isNotNull()).select(
-        F.col(id_col), F.posexplode(keys).alias("band_id", "band_key")
+        F.col(id_col),
+        F.posexplode(F.expr(f"array({keys})")).alias("band_id", "band_key"),
     )
 
 

@@ -412,6 +412,51 @@ def test_connected_components_long_chain_converges(spark):
     assert set(out.values()) == {0} and len(out) == 12
 
 
+def _union_find_minima(edges):
+    """{node: component minimum} by driver-side union-find."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
+def test_connected_components_matches_union_find(spark):
+    """A random 200-node graph plus paths of 20 and 28 nodes (27
+    propagation rounds, inside the default 30): every label is the
+    union-find component minimum."""
+    import random
+
+    rng = random.Random(5)
+    edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
+    edges += [(1000 + i, 1001 + i) for i in range(19)]
+    edges += [(2000 + i, 2001 + i) for i in range(27)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    out = {r["node"]: r["label"] for r in DD.connected_components(pairs).collect()}
+    assert out == _union_find_minima(edges)
+
+
+def test_connected_components_unconverged_raises(spark):
+    """A 40-node path needs 39 propagation rounds. With the default
+    30 the labels are still changing when the rounds run out, and the
+    function fails naming the round count instead of returning labels
+    that split the path into several components."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(39)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="after 30 rounds"):
+        DD.connected_components(pairs)
+
+
 def test_connected_components_star_matches_propagation(spark):
     # large-star/small-star (Kiveris et al.) is the test oracle for
     # min-label propagation; both must produce identical (node, label)
