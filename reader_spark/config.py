@@ -143,7 +143,7 @@ class IndexCfg:
     # mode 'build' writes a fresh index; mode 'maintain' compacts an
     # existing one (small-files OPTIMIZE over the bucket/cell dirs —
     # bm25_index_maintain / ivf_index_maintain — or, for neardup,
-    # the pointer-flip rewrite that also purges tombstones); mode
+    # the pointer-flip rewrite that also purges replay duplicates); mode
     # 'stream' keeps an EXISTING index fresh from a document stream
     # (the maintainer family as foreachBatch bodies; availableNow —
     # one run drains the backlog and exits, re-run on your cadence)

@@ -91,14 +91,15 @@ def _pk_cols(src: SourceCfg, table: TableCfg, df: DataFrame) -> list[str]:
 def _publish(env: DataFrame, settings: Settings, table: str) -> str:
     dest = settings.destination
     if dest.kind == "kafka":
-        try:
+        if sinks.kafka_available(env.sparkSession):
+            # a publish error fails the table (and the job); it never
+            # falls back to a file path
             sinks.write_kafka(env, dest.options["bootstrap"])
             return f"kafka:{dest.options['bootstrap']}"
-        except Exception:
-            fallback = f"{dest.path or '/tmp/reader_spark_out'}/{table}"
-            sinks.write_parquet(env, fallback)
-            return fallback
-    out = f"{dest.path}/{table}"
+        # no Kafka connector on the classpath: envelopes land as parquet
+        out = f"{dest.path or '/tmp/reader_spark_out'}/{table}"
+    else:
+        out = f"{dest.path}/{table}"
     sinks.write_parquet(env, out)
     return out
 

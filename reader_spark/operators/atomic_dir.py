@@ -19,11 +19,8 @@ listing, so a bare legacy directory that gains version dirs is still
 readable as-is until its first pointer flip.
 
 Version dirs carry a monotone sequence number
-(``.v-<seq:08d>-<hex>``), which buys TIME TRAVEL for free:
-``publish(..., keep=N)`` retains the N most recent displaced
-versions and ``resolve(path, version=seq)`` reads a historical
-snapshot — the reproducible point-in-time dataset a training run
-pins itself to.
+(``.v-<seq:08d>-<hex>``). A publish keeps the one version it
+displaces, for readers that resolved just before the flip.
 
 Single-writer per dataset (same assumption the rename swap made);
 readers need no coordination.
@@ -56,9 +53,7 @@ def _seq_of(name: str) -> int | None:
 
 def versions(path: str) -> list[int]:
     """Sequence numbers of the version dirs present on disk (oldest
-    first). The live one is `current_version(path)`; older entries
-    are readable via `resolve(path, version=seq)` until their
-    retention (publish keep=N) expires."""
+    first): the live one and the one its publish displaced."""
     if not os.path.isdir(path):
         return []
     out = []
@@ -69,31 +64,9 @@ def versions(path: str) -> list[int]:
     return sorted(out)
 
 
-def current_version(path: str) -> int | None:
-    """Sequence number of the live version; None for a bare layout
-    (or a legacy unsequenced version name)."""
-    ptr = os.path.join(path, CURRENT)
-    if os.path.isfile(ptr):
-        with open(ptr) as f:
-            return _seq_of(f.read().strip())
-    return None
-
-
-def resolve(path: str, version: int | None = None) -> str:
+def resolve(path: str) -> str:
     """Data root for reading: the live version dir if `path` is
-    pointer-published, else `path` itself (bare legacy layout).
-    `version` time-travels to a retained historical snapshot
-    (raises FileNotFoundError if it has been GC'd)."""
-    if version is not None:
-        for entry in os.listdir(path):
-            if _seq_of(entry) == version and os.path.isdir(
-                os.path.join(path, entry)
-            ):
-                return os.path.join(path, entry)
-        raise FileNotFoundError(
-            f"version {version} of {path} not present "
-            f"(retained: {versions(path)})"
-        )
+    pointer-published, else `path` itself (bare legacy layout)."""
     ptr = os.path.join(path, CURRENT)
     if os.path.isfile(ptr):
         with open(ptr) as f:
@@ -138,14 +111,13 @@ def write_epoch(version_dir: str, epoch: int | None) -> None:
             f.write(str(epoch))
 
 
-def publish(path: str, write_fn, keep: int = 1) -> str:
+def publish(path: str, write_fn) -> str:
     """Publish a full rewrite of the dataset at `path`.
 
     `write_fn(version_dir)` must write a COMPLETE dataset into the
     (not yet existing) version dir; the pointer then flips atomically.
-    The `keep` most recent displaced versions are retained (in-flight
-    readers that resolved just before a flip, plus time travel via
-    `resolve(path, version=...)`); everything older, stale pointer
+    The displaced version is retained for in-flight readers that
+    resolved just before the flip; every older version, stale pointer
     tmp files and — once the layout has flipped twice — any bare
     legacy root files are garbage-collected. Returns the new data
     root."""
@@ -170,19 +142,8 @@ def publish(path: str, write_fn, keep: int = 1) -> str:
     os.replace(tmp, ptr)  # the commit point
 
     # -- GC (best-effort; failures leave garbage, never break readers)
-    # retained: the new version, the displaced pointer target, and
-    # the `keep` highest-sequenced other versions. Unsequenced
-    # (crash-orphaned or legacy-named) version dirs are not retained.
-    others = sorted(
-        (
-            e
-            for e in os.listdir(path)
-            if _seq_of(e) is not None and e != vname
-        ),
-        key=_seq_of,
-        reverse=True,
-    )
-    retain = {vname, prev, CURRENT, *others[: max(0, keep)]}
+    # retained: the new version and the displaced pointer target.
+    retain = {vname, prev, CURRENT}
     for entry in os.listdir(path):
         if entry in retain:
             continue

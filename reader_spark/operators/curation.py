@@ -1296,69 +1296,6 @@ def remove_duplicate_spans(
 
 
 # ---------------------------------------------------------------------------
-# trained quality classifier (production path)
-
-
-def quality_classifier_fit(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_features: int = 1024,
-    label_threshold: float = 0.5,
-):
-    """Production-path quality model: a fastText-shaped linear
-    classifier (hashed bag-of-words -> logistic regression) fitted on
-    WEAK labels from the deterministic `quality_score` heuristic —
-    the standard bootstrap when no human labels exist (the heuristic
-    labels a seed set; the trained model generalizes to signals the
-    heuristic can't express and is cheap to apply corpus-wide).
-
-    Mirrors `ivf_fit`'s contract: fit ONCE at ingest on a sample
-    (driver holds only the coefficient vector — n_features floats),
-    score with `quality_classifier_score` as a map-only stage. The
-    deterministic heuristic remains the DuckDB-oracle-checkable
-    path; this is the pyspark.ml swap.
-    """
-    from pyspark.ml import Pipeline
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import HashingTF, RegexTokenizer
-
-    from reader_spark.functions.text import quality_score
-
-    labeled = docs.withColumn(
-        "label",
-        (quality_score(F.col(text_col)) >= label_threshold).cast("double"),
-    )
-    pipe = Pipeline(
-        stages=[
-            RegexTokenizer(
-                inputCol=text_col, outputCol="__toks", pattern=r"\s+"
-            ),
-            HashingTF(
-                inputCol="__toks", outputCol="features", numFeatures=n_features
-            ),
-            LogisticRegression(maxIter=30, regParam=1e-3),
-        ]
-    )
-    return pipe.fit(labeled)
-
-
-def quality_classifier_score(
-    model, docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Apply the fitted quality model: (id, p_quality). Map-only —
-    the model broadcast is a coefficient vector, the tokenize/hash/
-    dot-product chain runs in the scan stage; nothing shuffles."""
-    from pyspark.ml.functions import vector_to_array
-
-    return model.transform(docs).select(
-        id_col,
-        F.round(vector_to_array(F.col("probability"))[1], 6).alias(
-            "p_quality"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
 # unigram language-model scoring
 
 

@@ -905,59 +905,6 @@ def connected_components(
     )
 
 
-def lsh_candidate_pairs_capped(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    band_size: int = 2,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Skew-guarded LSH banding — the adversarial-corpus variant of
-    `lsh_candidate_pairs`. Real crawls carry boilerplate (empty docs,
-    cookie banners, license headers) whose shared signatures form HOT
-    band buckets: a bucket of k members emits k(k-1)/2 candidate
-    pairs, and at 10^8 docs one boilerplate cluster is an O(10^12)
-    pair explosion no executor survives.
-
-    Here the bands are materialized as (band_id, band_key) rows, any
-    bucket with more than `max_bucket` members is dropped BEFORE the
-    self-join (a per-key count — map-side combinable, uniform keys),
-    and the join runs per surviving bucket. Documented recall
-    tradeoff: pairs inside a dropped bucket are found only if a
-    different, colder band catches them — acceptable because a
-    boilerplate cluster's members are better handled by exact dedup on
-    the content hash. The pair stream is de-duplicated across bands
-    (unlike the first-match-only trick, a pair can surface from
-    several surviving bands)."""
-    assert num_hashes % band_size == 0
-    # One posexplode melt (NOT a per-band union: union branches
-    # re-evaluate the shared signature expressions once per band) —
-    # and md5_band_rows' all-NULL guard keeps empty-doc signatures
-    # out of the bucket census entirely.
-    melted = md5_band_rows(sigs, num_hashes, band_size, id_col)
-    cold = (
-        melted.groupBy("band_id", "band_key")
-        .count()
-        .filter((F.col("count") > 1) & (F.col("count") <= max_bucket))
-        .select("band_id", "band_key")
-    )
-    b = melted.join(cold, ["band_id", "band_key"])
-    a2, b2 = b.alias("a"), b.alias("b")
-    return (
-        a2.join(
-            b2,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
-        .distinct()
-    )
-
-
 # ---------------------------------------------------------------------------
 # asymmetric containment (doc-inside-doc)
 
@@ -1047,8 +994,8 @@ def containment_pairs(
 
 
 # ---------------------------------------------------------------------------
-# incremental (delta-vs-corpus) dedup — the batch shape of
-# streaming/dedup_stream.py, md5-banded so a SQL oracle reproduces it
+# incremental (delta-vs-corpus) dedup, md5-banded so a SQL oracle
+# reproduces it
 
 
 def md5_band_rows(
@@ -1119,12 +1066,11 @@ def incremental_dedup_filter(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Keep only incoming docs with NO band-bucket hit in the index —
-    any-band-full-match semantics, identical to the streaming filter
-    (streaming/dedup_stream.py::stream_dedup_filter) but expressed as
-    two batch joins: a semi-join marks hit docs, an anti-join drops
-    them. Both joins are keyed on the uniform (band_id, band_key) —
-    broadcast-eligible when the index fits (maybe_broadcast), shuffle
-    otherwise; never a cartesian."""
+    any-band-full-match semantics, expressed as two batch joins: a
+    semi-join marks hit docs, an anti-join drops them. Both joins
+    are keyed on the uniform (band_id, band_key) — broadcast-eligible
+    when the index fits (maybe_broadcast), shuffle otherwise; never
+    a cartesian."""
     bands = md5_band_rows(incoming_sigs, num_hashes, band_size, id_col)
     hits = (
         # broadcast-gate audit (r12): index is a parquet read —
@@ -1272,8 +1218,8 @@ def neardup_index_write(
 
     A write is a from-scratch REBUILD: any previous layout at `path`
     (including pointer-flip version dirs a `neardup_index_maintain`
-    left, and tombstones) is removed first — a bare overwrite under a
-    stale `_CURRENT` pointer would be invisible to readers."""
+    left) is removed first — a bare overwrite under a stale
+    `_CURRENT` pointer would be invisible to readers."""
     import shutil
     import warnings
 
@@ -1345,8 +1291,7 @@ def neardup_index_update(
     first, so a crash-replayed micro-batch appends nothing. Append
     order is edges -> bands -> toks: `toks/` is the replay gate, so
     a crash mid-update re-appends at worst already-written edge rows
-    — harmless, every consumer `.distinct()`s the pair list (the
-    trigram index's duplication-immunity argument).
+    — harmless, every consumer `.distinct()`s the pair list.
 
     LSH parameters resolve from the index's `_params.json` pin (see
     `_nd_params_write`): a caller passing different values would
@@ -1386,13 +1331,6 @@ def neardup_index_update(
     )
     bands_new = pin(md5_band_rows(sigs_new, num_hashes, band_size, id_col))
     old_bands = spark.read.parquet(_nd_root(path, "bands"))
-    dead = _tombstones(spark, path)
-    if dead is not None:
-        # deleted docs must not resurrect as a delta's neighbors
-        old_bands = old_bands.join(
-            F.broadcast(dead.select(F.col("doc_id").alias(id_col))),
-            id_col, "left_anti",
-        )
     no = (
         bands_new.select(
             F.col(id_col).alias("__new"), "band_id", "band_key"
@@ -1489,7 +1427,7 @@ def decontaminate_incremental(
     error, the exact failure the pin exists to prevent. Ids must be
     distinct across delta and benchmark (the index-update contract).
     The delta is NOT added to the index — the benchmark is static by
-    definition; tombstoned benchmark docs stop contaminating."""
+    definition."""
     params = _nd_params(benchmark_index)
     if params is None:
         if num_hashes is None or band_size is None:
@@ -1513,12 +1451,6 @@ def decontaminate_incremental(
     )
     bands_delta = md5_band_rows(sigs, num_hashes, band_size, id_col)
     bench_bands = spark.read.parquet(_nd_root(benchmark_index, "bands"))
-    dead = _tombstones(spark, benchmark_index)
-    if dead is not None:
-        bench_bands = bench_bands.join(
-            F.broadcast(dead.select(F.col("doc_id").alias(id_col))),
-            id_col, "left_anti",
-        )
     cand = (
         bands_delta.select(
             F.col(id_col).alias("doc_a"), "band_id", "band_key"
@@ -1545,74 +1477,16 @@ def decontaminate_incremental(
     return delta_docs.join(contaminated, id_col, "anti")
 
 
-def decontaminate_maintainer(
-    benchmark_index: str,
-    clean_out: str,
-    threshold: float | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """`foreachBatch` body for the ingest loop: each micro-batch of
-    candidate training docs is decontaminated against the benchmark
-    index and the SURVIVORS append to `clean_out` — contaminated
-    docs never land. Replay-idempotent the same way the index update
-    is: ids already in the output are anti-joined away first, so a
-    crash-replayed batch appends nothing.
-
-        docs.writeStream.foreachBatch(
-            decontaminate_maintainer(idx, out)).start()
-    """
-    import os
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        fresh = batch_df.dropDuplicates([id_col])
-        if os.path.isdir(clean_out):
-            # A crash mid-append (the very replay this guard exists
-            # for) can leave the dir with only _temporary/partial
-            # files and no readable footers — schema inference then
-            # raises and the stream wedges instead of recovering.
-            # No committed part files == nothing written == nothing
-            # to anti-join.
-            committed = any(
-                f.startswith("part-") and not f.endswith((".tmp", ".crc"))
-                for f in os.listdir(clean_out)
-            )
-            if committed:
-                seen = spark.read.parquet(clean_out).select(id_col)
-                fresh = fresh.join(seen, id_col, "anti")
-        survivors = decontaminate_incremental(
-            spark, fresh, benchmark_index,
-            threshold=threshold, id_col=id_col, text_col=text_col,
-        )
-        survivors.write.mode("append").parquet(clean_out)
-        from reader_spark.cache import release_pins
-
-        release_pins()
-
-    return body
-
-
 def neardup_edges(spark, path: str) -> DataFrame:
     """The materialized verified pair list (doc_a, doc_b), distinct —
-    drop-in input for every graph-family operator. Tombstoned docs
-    (see `neardup_index_delete`) are anti-joined on BOTH endpoints.
-    Self-loops (legacy crash-replay residue, see the guard in
-    `neardup_index_update`) are dropped defensively."""
-    edges = (
+    drop-in input for every graph-family operator. Self-loops (legacy
+    crash-replay residue, see the guard in `neardup_index_update`)
+    are dropped defensively."""
+    return (
         spark.read.parquet(_nd_root(path, "edges"))
         .where(F.col("doc_a") != F.col("doc_b"))
         .distinct()
     )
-    dead = _tombstones(spark, path)
-    if dead is None:
-        return edges
-    dead = F.broadcast(dead.select("doc_id"))
-    return edges.join(
-        dead.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_anti"
-    ).join(dead.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_anti")
 
 
 def neardup_index_maintainer(
@@ -1649,84 +1523,6 @@ def neardup_index_maintainer(
     return body
 
 
-def _tombstones(spark, path: str):
-    """The published tombstone table of an index's deleted docs
-    (doc_id, plus BM25's stored `dl`), or None if no delete has ever
-    run against the index at `path`."""
-    import os
-
-    from reader_spark.operators import atomic_dir
-
-    root = atomic_dir.resolve(f"{path}/tombstones")
-    if not os.path.isdir(root):
-        return None
-    return spark.read.parquet(root)
-
-
-def _tombstone_delete(
-    spark, path: str, doc_ids: list, indexed: DataFrame | None
-) -> int:
-    """The one delete body of the tombstone-model indexes (BM25,
-    trigram, near-dup): newly = (requested ∩ `indexed`) minus
-    already-tombstoned, and the merged table publishes in ONE pointer
-    flip — idempotent (a re-run adds nothing, returns 0) and atomic
-    (a crash leaves the previous tombstones live). `indexed` is the
-    index's doc_id frame, whose other columns ride into the tombstone
-    rows; None tombstones every requested id. Returns the number of
-    newly deleted docs."""
-    from reader_spark.operators import atomic_dir
-
-    ids = local_df(
-        spark, [(int(i),) for i in doc_ids], "doc_id long"
-    ).distinct()
-    newly = (
-        ids
-        if indexed is None
-        else indexed.dropDuplicates(["doc_id"]).join(
-            F.broadcast(ids), "doc_id", "left_semi"
-        )
-    )
-    existing = _tombstones(spark, path)
-    if existing is not None:
-        newly = newly.join(
-            F.broadcast(existing.select("doc_id")), "doc_id", "left_anti"
-        )
-    n_new = newly.count()
-    if n_new == 0:
-        return 0
-    merged = newly if existing is None else (
-        existing.select(*newly.columns).unionByName(newly)
-    )
-
-    def write_fn(vdir: str) -> None:
-        merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-
-    atomic_dir.publish(f"{path}/tombstones", write_fn)
-    return n_new
-
-
-def neardup_index_delete(spark, path: str, doc_ids: list) -> int:
-    """Delete documents from the graph index — the BM25 tombstone
-    model: a doc's edges are scattered across the pair list and its
-    band rows across `bands/`, so rather than rewrite both, the ids
-    land in a tiny tombstone table that `neardup_edges` anti-joins on
-    BOTH endpoints and `neardup_index_update` anti-joins out of the
-    stored band rows (a deleted doc must neither appear in results
-    nor resurrect as a future delta's neighbor). Physical removal at
-    the next rebuild.
-
-    Idempotent and atomic: newly = (requested ∩ indexed) minus
-    already-tombstoned; the merged table publishes in one pointer
-    flip. Same id-discipline contract as BM25: a deleted id must not
-    be re-submitted to `update` before a rebuild (its toks/ row — the
-    replay gate — is still physically present). Returns the number
-    of newly deleted docs."""
-    return _tombstone_delete(
-        spark, path, doc_ids,
-        spark.read.parquet(_nd_root(path, "toks")).select("doc_id"),
-    )
-
-
 def _nd_root(path: str, sub: str) -> str:
     """Data root of one index subdir: the live pointer-flip version
     if `neardup_index_maintain` has ever published it, else the bare
@@ -1743,21 +1539,16 @@ def neardup_index_maintain(
     set into edges/bands/toks, and a read through hundreds of tiny
     files is scheduler-bound. Rewrites each subdir into
     ceil(bytes/target) files behind a pointer flip (readers resolve
-    through `_nd_root`), folding in the physical work deferred by
-    the cheap verbs: tombstoned docs drop out of all three subdirs,
-    duplicate edge rows (crash-replay residue) collapse, and the
-    tombstone table is then published EMPTY — last, so a crash
-    anywhere mid-maintain leaves every reader correct (rows already
-    pruned are also still anti-joined; nothing double-applies).
-    Returns per-subdir output file counts (plus, when the component
-    map is materialized, `cc` = its rebuilt doc count)."""
+    through `_nd_root`), collapsing duplicate edge rows and
+    self-loops (crash-replay residue) on the way; a crash anywhere
+    mid-maintain leaves every reader correct. Returns per-subdir
+    output file counts (plus, when the component map is
+    materialized, `cc` = its rebuilt doc count)."""
     import math
     import os
 
     from reader_spark.operators import atomic_dir
 
-    dead = _tombstones(spark, path)
-    dead_ids = F.broadcast(dead.select("doc_id")) if dead is not None else None
     out: dict[str, int] = {}
     for sub in ("edges", "bands", "toks"):
         root = _nd_root(path, sub)
@@ -1771,102 +1562,18 @@ def neardup_index_maintain(
         df = spark.read.parquet(root)
         if sub == "edges":
             df = df.where(F.col("doc_a") != F.col("doc_b")).distinct()
-            if dead_ids is not None:
-                df = df.join(
-                    dead_ids.withColumnRenamed("doc_id", "doc_a"),
-                    "doc_a", "left_anti",
-                ).join(
-                    dead_ids.withColumnRenamed("doc_id", "doc_b"),
-                    "doc_b", "left_anti",
-                )
-        elif dead_ids is not None:
-            df = df.join(dead_ids, "doc_id", "left_anti")
         df = df.repartition(n_out)
         atomic_dir.publish(
             f"{path}/{sub}",
             lambda vdir, d=df: d.write.mode("overwrite").parquet(vdir),
         )
         out[sub] = n_out
-    # the component map cannot be incrementally repaired across a
-    # delete (removing a cut vertex SPLITS a component — invisible to
-    # any relabel that never re-reads edges), so maintain rebuilds it
-    # from the freshly compacted edges, BEFORE the tombstones are
-    # cleared (the rebuild must still exclude them)
+    # the component map is rebuilt from the freshly compacted edges,
+    # which compacts its label-bucket files too
     if os.path.isdir(f"{path}/cc"):
         n_buckets = _cc_meta(_nd_root(path, "cc"))
         out["cc"] = neardup_cc_write(spark, path, n_buckets=n_buckets)
-    if dead is not None:
-        empty = local_df(spark, [], "doc_id long")
-        atomic_dir.publish(
-            f"{path}/tombstones",
-            lambda vdir: empty.coalesce(1).write.mode("overwrite").parquet(vdir),
-        )
     return out
-
-
-def neardup_index_health(spark, path: str) -> DataFrame:
-    """One-row ops report that drives the `neardup_index_maintain`
-    cadence — the graph-index sibling of the IVF health table, but
-    direct-scan (no stored stats to keep fresh: bands/toks are linear
-    in docs and far smaller than text, one bounded aggregate each).
-
-    Signals: `dup_edge_ppm` (crash-replay residue a maintain
-    collapses), `n_tombstoned` + `dead_edge_rows` (logical deletes a
-    maintain makes physical), and per-subdir file counts (append-wave
-    small-file pressure). All integers."""
-    import os
-
-    def _n_files(sub: str) -> int:
-        root = _nd_root(path, sub)
-        return sum(
-            1
-            for _dp, _dn, fns in os.walk(root)
-            for f in fns
-            if f.endswith(".parquet")
-        )
-
-    edges_raw = spark.read.parquet(_nd_root(path, "edges"))
-    dead = _tombstones(spark, path)
-    n_dead = dead.count() if dead is not None else 0
-    dead_edge_rows = 0
-    if n_dead:
-        d = F.broadcast(dead.select("doc_id"))
-        dead_edge_rows = (
-            edges_raw.join(
-                d.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi"
-            )
-            .unionByName(
-                edges_raw.join(
-                    d.withColumnRenamed("doc_id", "doc_b"), "doc_b",
-                    "left_semi",
-                )
-            )
-            .count()
-        )
-    counts = edges_raw.agg(
-        F.count(F.lit(1)).alias("raw"),
-        F.count_distinct("doc_a", "doc_b").alias("dedup"),
-    ).collect()[0]
-    n_docs = (
-        spark.read.parquet(_nd_root(path, "toks"))
-        .select("doc_id").distinct().count()
-    )
-    dup_ppm = (
-        (counts["raw"] - counts["dedup"]) * 1_000_000 // counts["raw"]
-        if counts["raw"]
-        else 0
-    )
-    return local_df(
-        spark,
-        [(
-            n_docs, counts["raw"], counts["dedup"], dup_ppm, n_dead,
-            dead_edge_rows, _n_files("edges"), _n_files("bands"),
-            _n_files("toks"),
-        )],
-        "n_docs long, n_edges_raw long, n_edges_distinct long, "
-        "dup_edge_ppm long, n_tombstoned long, dead_edge_rows long, "
-        "files_edges long, files_bands long, files_toks long",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1914,11 +1621,6 @@ def neardup_cc_write(spark, path: str, n_buckets: int = 32) -> int:
 
     edges = neardup_edges(spark, path)
     nodes = spark.read.parquet(_nd_root(path, "toks")).select("doc_id").distinct()
-    dead = _tombstones(spark, path)
-    if dead is not None:
-        nodes = nodes.join(
-            F.broadcast(dead.select("doc_id")), "doc_id", "left_anti"
-        )
     comp = connected_components(edges)
     labels = (
         nodes.join(comp, nodes.doc_id == comp.node, "left")
@@ -2121,19 +1823,9 @@ def _label_graph_min(spark, t_edges) -> DataFrame:
 def neardup_canonical(spark, path: str) -> DataFrame:
     """The component map (doc_id, component_id) from the materialized
     cc/ artifact — cluster assignment with NO connected-components
-    run at read time. Tombstoned docs drop out of the output; their
-    merges are only undone physically at the next
-    `neardup_cc_write` / `neardup_index_maintain` (a delete can SPLIT
-    a component, which no incremental relabel can see without edges —
-    same deferred-physical-work contract as the rest of the index)."""
-    out = spark.read.parquet(_nd_root(path, "cc")).select(
+    run at read time."""
+    return spark.read.parquet(_nd_root(path, "cc")).select(
         "doc_id", F.col("label").alias("component_id")
-    )
-    dead = _tombstones(spark, path)
-    if dead is None:
-        return out
-    return out.join(
-        F.broadcast(dead.select("doc_id")), "doc_id", "left_anti"
     )
 
 

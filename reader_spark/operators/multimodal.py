@@ -5,10 +5,11 @@ The Spark-side plumbing is real and tested — schema, Arrow batch
 shape, mapInPandas partitioning. The codec layer decodes PPM / 24-bit
 BMP images and PCM WAV audio natively (numpy + stdlib, no external
 libs; see decode_ppm / decode_bmp / decode_wav and the
-extract_media_stats pipeline); compressed formats (JPEG, MP3, video)
-need PIL/librosa/ffmpeg, which this container lacks — those paths
-raise NotImplementedError in one obvious place and the generic
-feature extractor falls back to a deterministic content-hash fake.
+`_stats_row` / `_resize_row` row transforms); compressed images and
+audio need PIL/librosa, which this package does not depend on —
+those decodes raise NotImplementedError in one obvious place and the
+generic feature extractor falls back to a deterministic content-hash
+fake.
 
 Scale design: media bytes NEVER pass through a shuffle — decode /
 feature-extract runs mapInPandas on the scan partitioning, emitting
@@ -24,30 +25,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-# Canonical media-row schema: opaque payload + typed metadata.
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.LongType()),
-                    T.StructField("sample_rate", T.IntegerType()),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 # feat is array<double>, not float: each component is a 32-bit int
 # over 2^32 — a dyadic rational, exact in IEEE double on every
@@ -202,22 +179,6 @@ def _decode_audio(payload: bytes) -> object:
         ) from e
 
 
-def _decode_video(payload: bytes) -> object:
-    try:
-        import av  # type: ignore
-        import io
-
-        return av.open(io.BytesIO(payload))
-    except ImportError as e:  # pragma: no cover - lib not in container
-        raise NotImplementedError(
-            "video decode requires PyAV/ffmpeg; container ships without "
-            "them — frame sampling plans stay real, the codec is stubbed"
-        ) from e
-
-
-DECODERS = {"image": _decode_image, "audio": _decode_audio, "video": _decode_video}
-
-
 def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """mapInPandas feature extraction: per-partition Arrow batches of
     (id, payload) -> small feature rows. This is the pattern for ANY
@@ -251,7 +212,7 @@ MEDIA_STATS_SCHEMA = (
 
 
 def _stats_row(media_id, kind, payload):
-    """One `extract_media_stats` output row — module-level so fused
+    """One per-blob decode-stats row — module-level so fused
     kernels (`synth_image_stats_resized`) compose it with upstream
     row transforms inside a single mapInPandas pass."""
     import math
@@ -290,54 +251,6 @@ def _stats_row(media_id, kind, payload):
     return row
 
 
-def extract_media_stats(media: DataFrame) -> DataFrame:
-    """REAL decode path over mapInPandas for the formats this
-    container can decode (PPM/BMP images, PCM WAV audio): per-blob
-    typed stats — image dims + channel means, audio sample rate /
-    duration / RMS. Formats needing absent codecs yield
-    decoded=false with null stats instead of failing the batch, so
-    mixed corpora stream through. Same scale shape as
-    extract_features: blobs never shuffle, only small stat rows do."""
-    one = _stats_row
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    one(m, k, p)
-                    for m, k, p in zip(pdf["media_id"], pdf["kind"], pdf["payload"])
-                ]
-            )
-
-    return media.mapInPandas(op, schema=MEDIA_STATS_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1_000) -> DataFrame:
-    """Video frame-sampling PLAN: explode sample timestamps from
-    metadata (pure expressions); the per-timestamp frame decode is the
-    stubbed codec step. Demonstrates how the row explosion stays
-    JVM-side while only the codec is Python."""
-    return (
-        media.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0).cast("long"),
-                    F.coalesce(F.col("meta.duration_ms"), F.lit(0)).cast("long"),
-                    F.lit(every_ms).cast("long"),
-                )
-            ).alias("sample_ms"),
-        )
-    )
-
-
-RESIZE_SCHEMA = (
-    "media_id long, decoded boolean, in_w int, in_h int, "
-    "out_w int, out_h int, payload binary"
-)
-
-
 def encode_ppm(img) -> bytes:
     """(h, w, 3) uint8 -> binary PPM (P6). The inverse of decode_ppm,
     stdlib only."""
@@ -346,8 +259,8 @@ def encode_ppm(img) -> bytes:
 
 
 def _resize_row(media_id, kind, payload, out_w: int, out_h: int):
-    """One `resize_images` output row — module-level for fused
-    kernels (see `_stats_row`)."""
+    """One nearest-neighbor resize row, re-encoded as PPM —
+    module-level for fused kernels (see `_stats_row`)."""
     import numpy as np
 
     row = {
@@ -374,32 +287,6 @@ def _resize_row(media_id, kind, payload, out_w: int, out_h: int):
         payload=bytearray(encode_ppm(np.ascontiguousarray(resized))),
     )
     return row
-
-
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """REAL nearest-neighbor image resize over mapInPandas (numpy
-    index arithmetic — no PIL). Decodable rasters (PPM / 24-bit BMP)
-    come back re-encoded as PPM at (out_w, out_h); undecodable
-    payloads yield decoded=false rows instead of failing the batch.
-
-    Scale shape: identical to extract_media_stats — blobs transform
-    on the scan partitioning and never shuffle; the output payload is
-    bounded by out_w*out_h*3 regardless of input size, so a
-    downstream shuffle of resized thumbnails is safe where one of
-    raw scans is not."""
-    def one(media_id, kind, payload):
-        return _resize_row(media_id, kind, payload, out_w, out_h)
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    one(m, k, p)
-                    for m, k, p in zip(pdf["media_id"], pdf["kind"], pdf["payload"])
-                ]
-            )
-
-    return media.mapInPandas(op, schema=RESIZE_SCHEMA)
 
 
 DHASH_SCHEMA = "media_id long, decoded boolean, dhash long"
@@ -449,13 +336,13 @@ def image_dhash(
     luma grayscale (g = (299r + 587g + 114b) // 1000 — integer
     division so a SQL oracle reproduces every bit), nearest-neighbor
     sample to a (hash_w+1) x hash_h grid with the same
-    center-of-pixel rule as `resize_images`, then one bit per
+    center-of-pixel rule as `_resize_row`, then one bit per
     horizontal neighbor pair: bit (y*hash_w + x) set iff
     g[y][x+1] > g[y][x]. Default 8x7 = 56 bits — fits a positive
     int64 in both Spark and DuckDB (64 bits would need the sign
     bit).
 
-    Scale shape: identical to `extract_media_stats` — blobs hash on
+    Scale shape: identical to `extract_features` — blobs hash on
     the scan partitioning and never shuffle; only (id, int64) rows
     leave the stage. Downstream exact-dup clustering is a uniform
     groupBy on the hash; near-dup pairing composes with
@@ -687,11 +574,11 @@ def _synth_wav_row(mid: int, sample_rate: int, n_samples: int) -> dict:
 
 # Toy-but-real container for the video pipeline: b"PPMV" + u32be
 # n_frames + u32be fps_milli + concatenated P6 PPM frames. Compressed
-# codecs still require PyAV/ffmpeg (stubbed, _decode_video); this
-# container is what the pipeline uses to exercise REAL frame
-# extraction end-to-end — parse, seek, per-frame decode, sampling —
-# with stdlib+numpy only. The schema/partitioning/UDF shape is
-# identical for an ffmpeg-backed decoder.
+# codecs would require PyAV/ffmpeg; this container is what the
+# pipeline uses to exercise REAL frame extraction end-to-end —
+# parse, seek, per-frame decode, sampling — with stdlib+numpy only.
+# The schema/partitioning/UDF shape is identical for an
+# ffmpeg-backed decoder.
 
 PPMV_MAGIC = b"PPMV"
 
@@ -766,44 +653,6 @@ FRAME_SCHEMA = (
 )
 
 
-def extract_frames(media: DataFrame, every_n: int = 1) -> DataFrame:
-    """REAL frame extraction: parse the container, decode every
-    `every_n`-th frame, emit one small stat row per sampled frame
-    (ordinal, timestamp from the container fps, dims, channel means).
-    Blobs never shuffle — the explode happens inside the Arrow batch
-    and only stat rows leave the scan stage; at 100 TB this is the
-    map-only pass that feeds frame-level dedup/embedding jobs.
-    Undecodable payloads are skipped (mixed-corpus contract, same as
-    extract_media_stats)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                try:
-                    fps_milli, frames = decode_ppmv(bytes(payload))
-                except Exception:
-                    continue
-                frame_ms = 1_000_000 // max(fps_milli, 1)
-                for i in range(0, len(frames), every_n):
-                    img = frames[i]
-                    h, w, _ = img.shape
-                    means = img.reshape(-1, 3).mean(axis=0)
-                    rows.append(
-                        (int(mid), i, i * frame_ms, w, h,
-                         float(means[0]), float(means[1]), float(means[2]))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_id", "ts_ms", "width",
-                         "height", "mean_r", "mean_g", "mean_b"],
-            )
-
-    return media.mapInPandas(op, schema=FRAME_SCHEMA)
-
-
 VIDEO_DHASH_SCHEMA = "media_id long, frame_id int, dhash long"
 
 
@@ -850,8 +699,8 @@ def video_dhash(
 # kernel — every MapInPandas node is its own PythonRunner, so a
 # 3-stage chain serialized the blobs through Arrow three times just
 # to hand them to the next Python function. These entry points run
-# the SAME module-level row transforms (single source of truth with
-# the unfused operators, parity-tested) composed inside ONE
+# module-level row transforms (the chained mapInPandas forms survive
+# as test oracles, parity-tested) composed inside ONE
 # mapInPandas pass: one boundary crossing, blobs never leave the
 # Python worker between steps (guide §4). Output schemas/rows are
 # identical to the chained forms.
@@ -860,8 +709,9 @@ def video_dhash(
 def synth_image_stats_resized(
     ids: DataFrame, out_w: int, out_h: int, id_col: str = "media_id"
 ) -> DataFrame:
-    """Fused synthesize_images -> resize_images -> extract_media_stats
-    (the multimodal_resize query path), one Python pass."""
+    """Fused synthesize_images -> nearest-neighbor resize ->
+    per-blob decode stats (the multimodal_resize query path), one
+    Python pass."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1003,8 +853,10 @@ def synth_video_frames(
     n_frames_base: int = 3,
     every_n: int = 1,
 ) -> DataFrame:
-    """Fused synthesize_videos -> extract_frames (video_frames),
-    one Python pass."""
+    """Fused synthesize_videos -> per-frame stat extraction
+    (video_frames), one Python pass: one row per `every_n`-th frame
+    (ordinal, timestamp from the container fps, dims, channel
+    means); undecodable payloads are skipped."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -1,99 +1,18 @@
-"""Partitioning strategies for 100 TB joins: bucketing (co-located,
-shuffle-free joins for repeatedly-joined tables) and key salting
-(hot-key skew spreading when AQE's skew splitting isn't enough).
+"""Partitioning strategies for 100 TB scans: Z-order clustered
+writes, so a selective filter on any of several columns skips most
+files.
 
-The reference never needs these — it scans one table at a time over
+The reference never needs this — it scans one table at a time over
 JDBC (`/root/reference/lib/rdbms/scan/scan.go:43-161`) — but any
-warehouse consumer of its CDC output joins fact tables continuously,
-and at 1000-executor scale the difference between a bucketed and a
-shuffled join on a 100 TB fact is the job's dominant cost.
-
-Bucketing contract (Spark native, hive-style layout):
-  * both sides written with `bucketBy(n, key)` and the SAME n;
-  * `spark.sql.sources.bucketing.enabled=true` (default);
-  * equi-join on the bucket key then plans SortMergeJoin with NO
-    Exchange on either side (sort may remain unless also sortBy'd).
-
-Salting contract:
-  * deterministic (retry-safe) salt derived by hashing a
-    high-cardinality column — never `rand()`, which changes value on
-    task retry and silently duplicates/drops rows;
-  * the small side replicates `n_salts`×, so salting trades a
-    bounded broadcast-style blowup of the small side for an even
-    spread of the hot key's rows across `n_salts` tasks.
+warehouse consumer of its CDC output filters fact tables on more
+than one column, and a single-column sort leaves every other
+dimension unpruned.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_key: str,
-    num_buckets: int,
-    sort: bool = True,
-) -> None:
-    """Persist `df` as a bucketed (and bucket-sorted) table in the
-    session catalog. Pair tables bucketed on their join key with the
-    same `num_buckets` to get shuffle-free (and with `sort=True`,
-    sort-free) sort-merge joins."""
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, bucket_key)
-    if sort:
-        writer = writer.sortBy(bucket_key)
-    writer.saveAsTable(table_name)
-
-
-def co_located_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: str | list[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Join two same-bucketed catalog tables on the bucket key. The
-    plan must contain no Exchange on either scan — verified by
-    `tests/test_partitioning.py`."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
-
-
-def deterministic_salt(c: Column, n_salts: int) -> Column:
-    """Retry-safe salt in [0, n_salts): hash of an existing
-    high-cardinality column (NOT rand(): non-deterministic across
-    task retries, which corrupts joins)."""
-    return F.pmod(F.xxhash64(c), F.lit(n_salts)).cast("int")
-
-
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_source: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where `skewed` has hot keys: spread each key's rows
-    over `n_salts` sub-keys (salt hashed from `salt_source`, a
-    high-cardinality column of `skewed`), replicate `small` to every
-    salt, join on (key, salt). The hot key's probe rows now land on
-    `n_salts` tasks instead of one.
-
-    Prefer AQE's skew-join splitting when it fires (it's free); use
-    explicit salting when a single key exceeds what one task can
-    hold even after AQE splitting, or when the skew is in a
-    broadcast-ineligible aggregation feeding the join."""
-    left = skewed.withColumn("__salt", deterministic_salt(F.col(salt_source), n_salts))
-    right = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out = left.join(right, [key, "__salt"], how)
-    return out.drop("__salt")
-
-
-# ---------------------------------------------------------------------------
-# Z-order clustering (multi-dimensional data skipping)
 
 
 def zvalue_expr(

@@ -264,36 +264,18 @@ def bm25_index_write(
         .partitionBy("bucket")
         .parquet(f"{path}/postings")
     )
-    # doc -> length side table: the ONLY per-doc fact a later DELETE
-    # needs (postings are keyed by term bucket, so a doc's rows are
-    # unfindable without its terms; Lucene keeps the same per-doc
-    # norms file). Tiny relative to postings: one long per doc.
-    # r12: computed ONCE and persisted for the function's two writes —
-    # the scalars job below derives n_docs / sum_dl from this frame
-    # instead of re-scanning and re-splitting the corpus text a third
-    # time (same integers: count over the same rows, sum over the same
-    # per-doc sizes). Scoped persist, released before return — never a
-    # lingering cache in job-loop callers.
-    dls = docs.select(
-        F.col("doc_id"),
-        F.size(F.split(F.col(text_col), " ")).alias("dl"),
-    ).persist()
-    try:
-        dls.write.mode("overwrite").parquet(f"{path}/doc_lengths")
-        # sum_dl stored as an exact integer so INCREMENTAL updates
-        # (bm25_index_update) can recompute avgdl = sum_dl / n_docs
-        # with arithmetic identical to a full rebuild — no float
-        # accumulation drift between the two paths.
-        dls.agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.col("dl")).alias("sum_dl"),
-        ).select(
-            "n_docs",
-            "sum_dl",
-            (F.col("sum_dl") / F.col("n_docs")).alias("avgdl"),
-        ).write.mode("overwrite").parquet(f"{path}/scalars")
-    finally:
-        dls.unpersist()
+    # sum_dl stored as an exact integer so INCREMENTAL updates
+    # (bm25_index_update) can recompute avgdl = sum_dl / n_docs
+    # with arithmetic identical to a full rebuild — no float
+    # accumulation drift between the two paths.
+    docs.agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.size(F.split(F.col(text_col), " "))).alias("sum_dl"),
+    ).select(
+        "n_docs",
+        "sum_dl",
+        (F.col("sum_dl") / F.col("n_docs")).alias("avgdl"),
+    ).write.mode("overwrite").parquet(f"{path}/scalars")
 
 
 def bm25_topk_indexed(
@@ -332,38 +314,6 @@ def bm25_topk_indexed(
     from reader_spark.operators import atomic_dir
 
     scalars = spark.read.parquet(atomic_dir.resolve(f"{path}/scalars"))
-    tomb = DD._tombstones(spark, path)
-    if tomb is not None:
-        t = tomb.agg(
-            F.count("*").alias("tn"),
-            F.coalesce(F.sum("dl"), F.lit(0)).alias("tdl"),
-        ).collect()[0]
-        if t["tn"]:
-            # Tombstoned docs drop out of scoring; the stored df and
-            # corpus scalars still count them, so both are re-derived
-            # EXACTLY: a term's full posting list lives in one bucket
-            # and the probe reads that bucket entirely, so distinct
-            # surviving docs per term IS the live df. Scores equal a
-            # fresh index without the deleted docs.
-            matches = matches.join(
-                F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
-            )
-            live_df = matches.groupBy("term").agg(
-                F.count_distinct("doc_id").alias("__live_df")
-            )
-            matches = (
-                matches.drop("df")
-                .join(live_df, "term")
-                .withColumnRenamed("__live_df", "df")
-            )
-            s0 = scalars.collect()[0]
-            n_live = max(s0["n_docs"] - t["tn"], 1)
-            sd_live = s0["sum_dl"] - t["tdl"]
-            scalars = local_df(
-                spark,
-                [(n_live, sd_live, sd_live / n_live)],
-                "n_docs long, sum_dl long, avgdl double",
-            )
     idf = F.log(
         F.lit(1.0)
         + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
@@ -470,8 +420,7 @@ def trigram_index_write(
     docstring promises: a pattern of g trigrams probes at most g
     bucket DIRECTORIES (PartitionFilters prune the rest), instead of
     re-deriving the corpus' trigrams per query. No df/scalars — the
-    candidate test is pure set-intersection, which keeps every
-    maintenance verb trivial (update = append, delete = tombstone).
+    candidate test is pure set-intersection.
 
     The exact `contains` verify still needs the document text: the
     index restricts candidates, the caller keeps the corpus — Zoekt's
@@ -487,44 +436,6 @@ def trigram_index_write(
     )
 
 
-def trigram_index_update(
-    spark,
-    path: str,
-    new_docs: DataFrame,
-    n_buckets: int = 64,
-    text_col: str = "text",
-) -> list[int]:
-    """Append-only trigram-index maintenance: the new documents'
-    postings APPEND into their touched bucket partitions — no merge,
-    no df recompute, because the candidate test counts DISTINCT
-    trigrams per (pattern, doc), which double-appended rows (a
-    crash-replayed micro-batch) cannot inflate. The cheapest
-    maintenance contract of the three indexes. Returns touched
-    buckets."""
-    delta = doc_trigrams(new_docs, text_col).withColumn(
-        "bucket", F.pmod(F.xxhash64("trigram"), F.lit(n_buckets))
-    )
-    touched = [r["bucket"] for r in delta.select("bucket").distinct().collect()]
-    if touched:
-        (
-            delta.repartition(len(touched), "bucket")
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(f"{path}/postings")
-        )
-    return touched
-
-
-def trigram_index_delete(spark, path: str, doc_ids: list) -> int:
-    """Tombstone deletes for the trigram index — same model as
-    `bm25_index_delete` but simpler: no scalars or df to correct, so
-    the tombstone table is bare doc ids that searches anti-join.
-    Idempotent (already-tombstoned ids add nothing; unknown ids are
-    harmless dead rows) and atomic (one pointer flip). Physical
-    removal at the next rebuild."""
-    return DD._tombstone_delete(spark, path, doc_ids, None)
-
-
 def trigram_search_indexed(
     spark,
     path: str,
@@ -537,8 +448,7 @@ def trigram_search_indexed(
     identical results to `trigram_search` (the prefilter is lossless
     either way), but candidates come from reading ONLY the probed
     trigram buckets — plan-asserted PartitionFilters — instead of
-    re-derived corpus trigrams. Tombstoned docs are anti-joined out
-    before the candidate count; the exact `contains` verify runs
+    re-derived corpus trigrams. The exact `contains` verify runs
     against the caller's docs frame on candidates only."""
     prows = []
     n_grams = {}
@@ -559,16 +469,10 @@ def trigram_search_indexed(
     postings = spark.read.parquet(f"{path}/postings").filter(
         F.col("bucket").isin(buckets)
     )
-    tomb = DD._tombstones(spark, path)
-    if tomb is not None:
-        postings = postings.join(
-            F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
-        )
     need = F.create_map(*[F.lit(x) for kv in n_grams.items() for x in kv])
     cands = (
         postings.join(F.broadcast(pat_grams), "trigram")
-        # DISTINCT trigrams per (pattern, doc): immune to the
-        # double-appended rows a crash-replayed update leaves behind
+        # a candidate hits every DISTINCT trigram of its pattern
         .groupBy("pattern_id", "doc_id")
         .agg(F.count_distinct("trigram").alias("n_hit"))
         .filter(F.col("n_hit") == need[F.col("pattern_id")])
@@ -581,31 +485,6 @@ def trigram_search_indexed(
         .filter(F.col(text_col).contains(F.col("pat")))
         .select("pattern_id", "doc_id")
     )
-
-
-def trigram_index_maintainer(
-    path: str, n_buckets: int = 64, text_col: str = "text"
-):
-    """`foreachBatch` body keeping the materialized trigram index
-    fresh from a document STREAM — the maintainer family's simplest
-    member because `trigram_index_update` is a bare APPEND and the
-    distinct-count candidate test is duplication-immune: a crash-
-    replayed micro-batch appends the same postings twice and search
-    results do not change (no epoch bookkeeping needed, unlike BM25's
-    scalar merges).
-
-        docs.writeStream.foreachBatch(trigram_index_maintainer(path))
-            .option("checkpointLocation", ckpt).start()
-    """
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        trigram_index_update(
-            batch_df.sparkSession, path, batch_df, n_buckets, text_col
-        )
-
-    return body
 
 
 def bm25_index_maintain(
@@ -625,34 +504,6 @@ def bm25_index_maintain(
 
     return compact_partition_dirs(
         spark, f"{path}/postings", max_files_per_bucket, target_bytes
-    )
-
-
-def bm25_index_delete(spark, path: str, doc_ids: list) -> int:
-    """Delete documents from a materialized BM25 index — Lucene's
-    tombstone model, because a doc's postings are scattered across
-    term buckets that only its TERMS identify: rather than scan every
-    bucket, the doc ids land in a tiny tombstone table that searches
-    anti-join (broadcast) and that carries each doc's stored length,
-    so the corpus scalars (n_docs, sum_dl, avgdl) and per-term df are
-    DERIVED exactly at query time — `bm25_topk_indexed` after a
-    delete equals a fresh index without the docs (asserted in
-    test_retrieval.py). Physical removal happens at the next full
-    rebuild; until then deleted postings cost dead bytes in probed
-    buckets, never wrong scores.
-
-    Idempotent and atomic by construction: the new-tombstone set is
-    derived (requested ∩ indexed) minus already-tombstoned, and the
-    merged table publishes in ONE pointer flip — re-running the same
-    delete is a no-op (returns 0), a crash leaves the previous
-    tombstones live. Returns the number of newly deleted docs.
-
-    A deleted id must NOT be re-added by `bm25_index_update` before a
-    rebuild: its physical postings are still present, so the merge
-    dedupes the re-add away and the tombstone keeps suppressing it —
-    the same id-discipline contract as the append-only update."""
-    return DD._tombstone_delete(
-        spark, path, doc_ids, spark.read.parquet(f"{path}/doc_lengths")
     )
 
 
@@ -728,13 +579,6 @@ def bm25_index_update(
     ).collect()[0]
     if d["dn"] == 0:
         return touched
-    # doc_lengths append (delete-path lookup): a crash AFTER this
-    # append but BEFORE the scalars publish makes the replay append
-    # again — readers dedupe on doc_id, so duplicates are harmless.
-    new_docs.select(
-        F.col("doc_id"),
-        F.size(F.split(F.col(text_col), " ")).alias("dl"),
-    ).write.mode("append").parquet(f"{path}/doc_lengths")
     s = spark.read.parquet(scalars_root).collect()[0]
     n, sd = s["n_docs"] + d["dn"], s["sum_dl"] + d["dsum"]
     new_scalars = local_df(

@@ -15,7 +15,8 @@ Scale design (100 TB):
     big join is an equi-join on the cluster key (skew handled by
     AQE). The quantizer is either one deterministic label-seeded
     Lloyd iteration (oracle-reproducible) or a pyspark.ml KMeans
-    fitted once at ingest (`ivf_fit` / `knn_ivf_trained`).
+    fitted once at ingest (`ivf_fit`, searched through the
+    materialized index: `ivf_index_write` / `knn_ivf_indexed`).
 
 The dot product folds LEFT-TO-RIGHT (`aggregate` over `zip_with`) so
 the float result is bit-reproducible against the DuckDB oracle's
@@ -38,10 +39,6 @@ def dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 def knn_bruteforce(
@@ -328,11 +325,11 @@ def knn_ivf(
     nearest centroid; each query probes its `nprobe` nearest centroids.
 
     The coarse quantizer here is one label-seeded Lloyd iteration
-    (deterministic -> oracle-reproducible); `ivf_fit`/`knn_ivf_trained`
-    is the pyspark.ml KMeans production path with identical probe
-    mechanics. The big join is an equi-join on the cluster key — the
-    candidate set shrinks ~n_clusters/nprobe-fold vs brute force, and
-    AQE handles cluster-size skew."""
+    (deterministic -> oracle-reproducible); `ivf_fit` +
+    `knn_ivf_indexed` is the pyspark.ml KMeans production path with
+    identical probe mechanics. The big join is an equi-join on the
+    cluster key — the candidate set shrinks ~n_clusters/nprobe-fold vs
+    brute force, and AQE handles cluster-size skew."""
     vecs = embeddings.select(
         F.col(id_col),
         F.col(cluster_col).alias("cluster"),
@@ -419,39 +416,6 @@ def ivf_fit(
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
     )
     return KMeans(k=n_clusters, seed=seed, featuresCol="features").fit(feats)
-
-
-def knn_ivf_trained(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    model,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 2,
-) -> DataFrame:
-    """Multi-probe IVF over a fitted KMeans model's centroids — same
-    probe mechanics as `knn_ivf`, quantizer swapped for the trained
-    one."""
-    spark = embeddings.sparkSession
-    cents = local_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cl int, c array<double>",
-    ).withColumn("nc", dot(F.col("c"), F.col("c")))
-    vecs = embeddings.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("vec")
-    ).withColumn("nv", dot(F.col("vec"), F.col("vec")))
-    corpus = nearest_clusters(vecs, cents, 1, id_col)
-    probes = nearest_clusters(
-        vecs.filter(F.col(id_col).isin(query_ids)), cents, nprobe, id_col
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("nv").alias("nq"),
-        F.col("cl").alias("qcl"),
-    )
-    return _topk_probed(corpus, probes, k, id_col)
 
 
 def _kmeans_vecs(
@@ -651,34 +615,6 @@ def _with_mean_err(stats: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_assign_trained(
-    embeddings: DataFrame,
-    model,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Production-path cluster assignment: the fitted pyspark.ml
-    KMeans model's JVM transform — (id_col, cl), map-only, zero
-    shuffle. This is the ingest labeling job at 100 TB: measured 65x
-    faster than the interpreted broadcast-argmin at K=64 over 200k
-    vectors (0.72s vs 46.9s, SCALE.md r7 — zip_with/aggregate folds
-    are CodegenFallback, the ML predictor is vectorized JVM). Use
-    `kmeans_assign` only where bit-reproducibility against the
-    DuckDB oracle matters; feed this frame to
-    `cluster_balanced_sample` / SemDeDup-style passes otherwise."""
-    from pyspark.ml.functions import array_to_vector
-
-    feats = embeddings.select(
-        F.col(id_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias(
-            "features"
-        ),
-    )
-    return model.transform(feats).select(
-        F.col(id_col), F.col("prediction").alias("cl")
-    )
-
-
 def kmeans_assign_scored(
     embeddings: DataFrame,
     n_iters: int = 2,
@@ -705,46 +641,6 @@ def kmeans_assign_scored(
             + F.col("nc"),
         )
         .drop("c", "nc")
-    )
-
-
-def pca_fit(embeddings: DataFrame, k: int = 16, vec_col: str = "embedding"):
-    """Production dimensionality reduction: pyspark.ml PCA fitted
-    ONCE over the corpus (the model is a dim x k loading matrix —
-    driver-tiny). At 100 TB the projection both shrinks every
-    downstream vector op (dot products, SQ8/PQ codes, index bytes)
-    by dim/k and runs as one JVM matrix-multiply per row at ingest.
-    Like ivf_fit/quality_classifier_fit, this is the trained-model
-    tier: no DuckDB oracle (SVD sign/rotation freedom), graded by
-    variance-capture and recall-preservation tests instead."""
-    from pyspark.ml.feature import PCA
-    from pyspark.ml.functions import array_to_vector
-
-    feats = embeddings.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    return PCA(k=k, inputCol="features", outputCol="pca").fit(feats)
-
-
-def pca_project(
-    embeddings: DataFrame,
-    model,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Project vectors through a fitted PCA model: (id, array<double>
-    of k components) — drop-in input for every ANN operator here
-    (they take any (id, vec) frame)."""
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    feats = embeddings.select(
-        F.col(id_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias(
-            "features"
-        ),
-    )
-    return model.transform(feats).select(
-        id_col, vector_to_array("pca").alias("embedding")
     )
 
 
@@ -782,8 +678,8 @@ def ivf_index_write(
     # REFIT writes a complete fresh version while searches keep
     # reading the live one, then flips — a crash mid-refit leaves the
     # previous index intact (before this, a crashed rebuild left a
-    # torn corpus and no recovery short of re-embedding). keep=1
-    # retains the displaced version one publish long (in-flight
+    # torn corpus and no recovery short of re-embedding). The
+    # displaced version is retained one publish long (in-flight
     # readers), so refits transiently hold 2x index storage — the
     # same retention economics as every pointer-flip sink here.
     def write_fn(vdir: str) -> None:
@@ -839,8 +735,7 @@ def ivf_index_update(
 
     # Updates mutate the LIVE version's cell dirs in place (dynamic
     # partition overwrite is already the per-cell idempotent-replace
-    # contract); only full rebuilds/refits publish a new version, so
-    # index time travel is snapshot-to-snapshot, not per-update.
+    # contract); only full rebuilds/refits publish a new version.
     root = atomic_dir.resolve(path)
     cents = spark.read.parquet(f"{root}/centroids")
     vecs = new_embeddings.select(
@@ -871,9 +766,8 @@ def _overwrite_cells(spark, merged: DataFrame, dest: str, touched: list) -> None
     """Dynamic-partition-overwrite `merged` into `dest`'s cell dirs,
     then REMOVE the directories of touched cells that ended empty —
     dynamic overwrite cannot express an empty partition, so without
-    this a cell whose every row moved away in an update (or was
-    deleted) would keep its stale files and resurrect moved ids at
-    search time."""
+    this a cell whose every row moved away in an update would keep
+    its stale files and resurrect moved ids at search time."""
     import shutil
 
     surviving = {r["cl"] for r in merged.select("cl").distinct().collect()}
@@ -1057,112 +951,6 @@ def ivf_health_read(spark, health_path: str) -> DataFrame:
     return _with_mean_err(spark.read.parquet(atomic_dir.resolve(health_path)))
 
 
-def ivf_health_maintainer(
-    index_path: str,
-    health_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """`foreachBatch` body keeping the IVF health table fresh from
-    the SAME embedding stream that feeds `ivf_index_maintainer` —
-    the refit signal updates in lockstep with the index, and neither
-    ever rescans the corpus. Epoch idempotence makes crash-replays
-    exactly-once (the CMS/BM25 maintainer contract).
-
-        stream.writeStream.foreachBatch(
-            ivf_health_maintainer(idx, idx + "/health")
-        ).option("checkpointLocation", ckpt).start()
-    """
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ivf_health_update(
-            batch_df.sparkSession,
-            index_path,
-            health_path,
-            batch_df,
-            id_col,
-            vec_col,
-            epoch=batch_id,
-        )
-
-    return body
-
-
-def ivf_index_delete(
-    spark, path: str, ids: list, id_col: str = "vec_id"
-) -> list[int]:
-    """Physical delete from a materialized IVF index — the
-    right-to-be-forgotten verb the append/upsert maintenance path
-    lacks. Home cells are found with an (id, cl)-column-pruned probe
-    against a broadcast id set (the `ivf_index_update` old-home
-    probe), then ONLY those cell directories are rewritten without
-    the deleted rows; a cell left empty has its directory removed
-    outright (dynamic partition overwrite cannot express an empty
-    partition). Untouched cells keep their files byte-identical.
-    Returns the touched cell ids — hand them to `ivf_health_repair`,
-    since health sums can be monoid-subtracted but a deleted WORST
-    member cannot be un-maxed without re-reading its cell."""
-    from reader_spark.operators import atomic_dir
-
-    root = atomic_dir.resolve(path)
-    idf = local_df(
-        spark, [(int(i),) for i in ids], f"{id_col} long"
-    ).distinct()
-    corpus = spark.read.parquet(f"{root}/corpus")
-    touched = sorted(
-        r["cl"]
-        for r in corpus.select(id_col, "cl")
-        .join(F.broadcast(idf), id_col, "left_semi")
-        .select("cl")
-        .distinct()
-        .collect()
-    )
-    if not touched:
-        return []
-    kept = corpus.filter(F.col("cl").isin(touched)).join(
-        F.broadcast(idf), id_col, "left_anti"
-    )
-    _overwrite_cells(spark, kept, f"{root}/corpus", touched)
-    return touched
-
-
-def ivf_health_repair(
-    spark, index_path: str, health_path: str, cells: list[int]
-) -> None:
-    """Recompute the health rows of the given cells from the stored
-    corpus (partition-pruned read — only those cell directories) and
-    replace them in the published health table; emptied cells simply
-    lose their row. The delete-path companion of `ivf_health_update`:
-    counts and error sums could be monoid-SUBTRACTED, but the worst
-    member cannot be un-maxed, so the touched cells re-scan — bounded
-    by the cells the delete itself already rewrote."""
-    from reader_spark.operators import atomic_dir
-
-    if not cells:
-        return
-    root = atomic_dir.resolve(health_path)
-    epoch = atomic_dir.read_epoch(root)
-    corpus = (
-        spark.read.parquet(f"{atomic_dir.resolve(index_path)}/corpus")
-        .filter(F.col("cl").isin(list(cells)))
-        .select("vec_id", "vec", "nv")
-    )
-    fresh = _health_stats(_scored_under_stored(spark, index_path, corpus))
-    merged = (
-        spark.read.parquet(root)
-        .filter(~F.col("cluster_id").isin(list(cells)))
-        .unionByName(fresh)
-    )
-
-    def write_fn(vdir: str) -> None:
-        merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-        atomic_dir.write_epoch(vdir, epoch if epoch >= 0 else None)
-
-    atomic_dir.publish(health_path, write_fn)
-
-
 def ivf_refit_check(
     spark,
     health_path: str,
@@ -1209,41 +997,6 @@ def ivf_refit_check(
         "baseline_mean_err_ppm": base_mean,
         "n_members": n_total,
     }
-
-
-def ivf_drift_check(
-    spark,
-    health_path: str,
-    baseline_path: str,
-    max_skew_ppm: int = 4_000_000,
-    max_err_growth_ppm: int = 300_000,
-) -> "DataFrame":
-    """`ivf_refit_check`'s evidence as a ONE-ROW drift verdict frame —
-    the vector-index member of the drift family, shaped like
-    `drift_check`/`drift_summary_categorical` so the same alerting
-    path consumes scalar, categorical, and embedding drift. Occupancy
-    skew and quantization-error growth vs the fit-time baseline ARE
-    distribution drift as the index experiences it: vectors moving
-    away from their centroids. Reads two K-row health tables, never
-    the corpus."""
-    ev = ivf_refit_check(
-        spark, health_path, baseline_path, max_skew_ppm, max_err_growth_ppm
-    )
-    return local_df(
-        spark,
-        [
-            (
-                int(ev["n_members"]),
-                int(ev["skew_ppm"]),
-                int(ev["err_growth_ppm"]),
-                int(ev["mean_err_ppm"]),
-                int(ev["baseline_mean_err_ppm"]),
-                bool(ev["refit"]),
-            )
-        ],
-        "n_members long, skew_ppm long, err_growth_ppm long, "
-        "mean_err_ppm long, baseline_mean_err_ppm long, drifted boolean",
-    )
 
 
 def ivf_autorefit_maintainer(
@@ -1565,102 +1318,6 @@ def knn_ivf_pq_indexed(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cos_sim")
     )
-
-
-def ivf_pq_index_update(
-    spark,
-    path: str,
-    new_embeddings: DataFrame,
-    m: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[int]:
-    """Incremental maintenance for the PQ-resident layout: the delta
-    assigns under the STORED centroids and encodes under the STORED
-    books (books are never refit incrementally — the writer's
-    contract), then BOTH the corpus and codes directories of the
-    touched cells rewrite via the same dynamic-partition-overwrite +
-    empty-cell removal the plain layout uses. Per-id replace
-    semantics make crash replays idempotent; update == a rebuild
-    under the same quantizers exactly (asserted in tests). Returns
-    touched cell ids."""
-    from reader_spark.operators import atomic_dir
-
-    root = atomic_dir.resolve(path)
-    cents = spark.read.parquet(f"{root}/centroids")
-    books = spark.read.parquet(f"{root}/books")
-    vecs = new_embeddings.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("vec")
-    ).withColumn("nv", dot(F.col("vec"), F.col("vec")))
-    assigned = pin(nearest_clusters(vecs, cents, 1, id_col))
-    corpus = spark.read.parquet(f"{root}/corpus")
-    delta_ids = assigned.select(id_col).distinct()
-    old_homes = (
-        corpus.select(id_col, "cl")
-        .join(F.broadcast(delta_ids), id_col, "left_semi")
-        .select("cl")
-        .distinct()
-    )
-    touched = sorted(
-        {r["cl"] for r in assigned.select("cl").distinct().collect()}
-        | {r["cl"] for r in old_homes.collect()}
-    )
-    old = corpus.filter(F.col("cl").isin(touched))
-    merged = old.join(
-        assigned.select(id_col), id_col, "left_anti"
-    ).unionByName(assigned.select(*old.columns))
-    _overwrite_cells(spark, merged, f"{root}/corpus", touched)
-    new_codes = pq_encode(assigned, books, m, dim, id_col=id_col).join(
-        assigned.select(id_col, "cl"), id_col
-    )
-    old_codes = spark.read.parquet(f"{root}/codes").filter(
-        F.col("cl").isin(touched)
-    )
-    merged_codes = old_codes.join(
-        assigned.select(id_col), id_col, "left_anti"
-    ).unionByName(new_codes.select(*old_codes.columns))
-    _overwrite_cells(spark, merged_codes, f"{root}/codes", touched)
-    return touched
-
-
-def ivf_pq_index_delete(
-    spark, path: str, ids: list, id_col: str = "vec_id"
-) -> list[int]:
-    """Physical delete from the PQ-resident index: the plain layout's
-    (id, cl)-pruned home-cell rewrite applied to BOTH the corpus and
-    the codes directories — after it, neither a vector nor any of its
-    m codes survives anywhere in the index (right-to-be-forgotten
-    includes the quantized representation). Idempotent; returns
-    touched cells."""
-    from reader_spark.operators import atomic_dir
-
-    root = atomic_dir.resolve(path)
-    idf = local_df(
-        spark, [(int(i),) for i in ids], f"{id_col} long"
-    ).distinct()
-    corpus = spark.read.parquet(f"{root}/corpus")
-    touched = sorted(
-        r["cl"]
-        for r in corpus.select(id_col, "cl")
-        .join(F.broadcast(idf), id_col, "left_semi")
-        .select("cl")
-        .distinct()
-        .collect()
-    )
-    if not touched:
-        return []
-    kept = corpus.filter(F.col("cl").isin(touched)).join(
-        F.broadcast(idf), id_col, "left_anti"
-    )
-    _overwrite_cells(spark, kept, f"{root}/corpus", touched)
-    kept_codes = (
-        spark.read.parquet(f"{root}/codes")
-        .filter(F.col("cl").isin(touched))
-        .join(F.broadcast(idf), id_col, "left_anti")
-    )
-    _overwrite_cells(spark, kept_codes, f"{root}/codes", touched)
-    return touched
 
 
 # ---------------------------------------------------------------------------

@@ -163,32 +163,6 @@ def kmv_tiles(
     )
 
 
-def kmv_merge(
-    tiles: DataFrame,
-    group_cols: list[str],
-    k: int = 64,
-) -> DataFrame:
-    """Merge KMV tiles up a hierarchy (hours -> day, cells -> total):
-    union the tiles' hash lists, keep the k smallest distinct,
-    estimate (k-1) / (kth/2^60). EXACT merge: the global k smallest
-    hashes are always contained in the union of per-tile k smallest,
-    so a merged estimate equals the directly-computed one —
-    property-asserted in test_sketches.py."""
-    exploded = tiles.select(*group_cols, F.explode("kmv").alias("h")).distinct()
-    merged = exploded.groupBy(*group_cols).agg(
-        F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("kmv")
-    )
-    kth = F.when(
-        F.size("kmv") >= k, F.element_at("kmv", k)
-    ).otherwise(F.lit(None))
-    scale = float(1 << 60)
-    return merged.select(
-        *group_cols,
-        F.size("kmv").alias("n_kept"),
-        F.round((k - 1) / (kth / F.lit(scale)), 6).alias("estimate"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Count-Min sketch: deterministic, mergeable, point-queryable
 
@@ -426,20 +400,6 @@ def bottomk_sample_tiles(
     )
 
 
-def bottomk_merge(
-    tiles: DataFrame, group_cols: list[str], k: int = 128
-) -> DataFrame:
-    """Merge sample tiles up a hierarchy: union the samples, keep the
-    global bottom k — EXACT (equals sampling the concatenated input
-    directly; property-asserted in test_sketches.py)."""
-    exploded = tiles.select(
-        *group_cols, F.explode("sample").alias("s")
-    ).distinct()
-    return exploded.groupBy(*group_cols).agg(
-        F.slice(F.array_sort(F.collect_list("s")), 1, k).alias("sample")
-    )
-
-
 def quantiles_from_tiles(
     tiles: DataFrame, probs: list[float]
 ) -> DataFrame:
@@ -547,7 +507,7 @@ def kmv_tiles_update(
 ) -> None:
     """Incremental KMV maintenance: sketch the delta and merge tile-
     wise with the stored table (union hashes, keep the k smallest —
-    EXACT, the kmv_merge containment property: update == rebuild over
+    EXACT, the KMV containment property: update == rebuild over
     the concatenated corpus, asserted in test_sketches.py). The
     rewrite touches a key-count-sized frame of k-long arrays — KB,
     nothing to partition; the pointer flip keeps readers consistent.
@@ -850,20 +810,6 @@ def bloom_geometry(
     return m_words, k_hashes
 
 
-def bloom_fp_rate(n_keys: int, m_words: int, k_hashes: int) -> float:
-    """Expected false-positive rate of an m_words x 60-bit filter
-    holding n_keys: (1 - e^(-kn/m))^k. Operational estimate (load
-    monitoring), never part of an oracle comparison."""
-    import math
-
-    m_bits = m_words * BLOOM_WORD_BITS
-    if m_bits <= 0 or k_hashes <= 0:
-        return 1.0
-    return (
-        1.0 - math.exp(-k_hashes * max(0, n_keys) / m_bits)
-    ) ** k_hashes
-
-
 def bloom_tiles(
     df: DataFrame,
     key_col: str,
@@ -1137,30 +1083,3 @@ def _bloom_load_warn(spark, path: str) -> None:
             f"keys) or route maybes through the exact re-check",
             stacklevel=2,
         )
-
-
-def bloom_maintainer(path: str, key_col: str = "doc_id"):
-    """`foreachBatch` body keeping a materialized seen-set filter
-    fresh from an ingest stream — the membership-gate member of the
-    maintainer family. Pair with a probe at the STORED geometry
-    upstream of the expensive stages (definitely-new rows skip the
-    exact dedup entirely) — geometry always comes from the artifact
-    pin, never from caller defaults:
-
-        stored, m_w, k_h = bloom_read(spark, path)
-        verdict = bloom_probe(wave, stored, "doc_id",
-                              m_words=m_w, k_hashes=k_h)
-
-        docs.writeStream.foreachBatch(
-            bloom_maintainer(path, "doc_id")).start()
-    """
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        bloom_update(
-            batch_df.sparkSession, path, batch_df, key_col,
-            epoch=batch_id,
-        )
-
-    return body

@@ -168,18 +168,9 @@ class TransferWriter:
     `(base | None, changes, pk_cols, seq_col, op_col) -> DataFrame`;
     `base=None` seeds a new table."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        base_dir: str,
-        keep_versions: int = 1,
-    ):
+    def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base_dir = base_dir
-        # how many displaced snapshots the full-rewrite verbs retain:
-        # >1 buys TIME TRAVEL (read(table, version=seq)) — the
-        # point-in-time dataset a training run pins itself to
-        self.keep_versions = keep_versions
 
     def _path(self, table: str) -> str:
         return os.path.join(self.base_dir, table)
@@ -193,14 +184,8 @@ class TransferWriter:
     def exists(self, table: str) -> bool:
         return os.path.isdir(self._path(table))
 
-    def read(self, table: str, version: int | None = None) -> DataFrame:
-        """Read the live table state; `version` time-travels to a
-        retained historical snapshot (atomic_dir sequence number —
-        see `versions()`)."""
-        if version is not None:
-            return self.spark.read.parquet(
-                atomic_dir.resolve(self._path(table), version)
-            )
+    def read(self, table: str) -> DataFrame:
+        """Read the live table state."""
         # A bucketed upsert that evolved the schema only rewrote the
         # TOUCHED buckets, so files legitimately disagree — the read
         # schema from one sampled footer could silently drop a fresh
@@ -214,10 +199,6 @@ class TransferWriter:
         if schema is not None:
             return self.spark.read.schema(schema).parquet(root)
         return self.spark.read.option("mergeSchema", "true").parquet(root)
-
-    def versions(self, table: str) -> list[int]:
-        """Retained snapshot sequence numbers, oldest first."""
-        return atomic_dir.versions(self._path(table))
 
     def append(self, table: str, df: DataFrame) -> None:
         df.write.mode("append").parquet(self._data_root(table))
@@ -255,7 +236,7 @@ class TransferWriter:
             if pinned_buckets is not None:
                 _write_layout_manifest(vdir, pinned_buckets)
 
-        atomic_dir.publish(path, write_empty, keep=self.keep_versions)
+        atomic_dir.publish(path, write_empty)
 
     def scd2_close_all(self, table: str, at_seq: int) -> None:
         """The TRUNCATE verb for a HISTORY-PRESERVING (SCD2)
@@ -320,9 +301,7 @@ class TransferWriter:
             if pinned_buckets is not None:
                 _write_layout_manifest(vdir, pinned_buckets)
 
-        atomic_dir.publish(
-            self._path(table), write_fn, keep=self.keep_versions
-        )
+        atomic_dir.publish(self._path(table), write_fn)
 
     def _merge_whole(
         self, table: str, changes: DataFrame, pk_cols: list[str],
@@ -818,107 +797,6 @@ def reconcile_keys(
     return joined.select(*pk_cols, status.alias("status"))
 
 
-def reconcile_repair(
-    writer: "TransferWriter",
-    table: str,
-    source: DataFrame,
-    pk_cols: list[str],
-    compare_cols: list[str] | None = None,
-    n_buckets: int = 64,
-) -> dict[str, int]:
-    """Anti-entropy REPAIR: apply the reconcile verdict instead of
-    just reporting it — missing/mismatched keys upsert their source
-    row, extra keys delete, ok keys are untouched (and their buckets
-    never rewrite: the change set is exactly the divergent keys, so
-    `upsert_bucketed`'s touched-bucket economics bound the repair to
-    the damage, not the table). The divergence census is returned so
-    operators can log WHAT was repaired; a follow-up `reconcile` run
-    reads all-ok by construction. The reference trusts
-    write-then-commit and has no repair verb (writer.go:44-50) — at
-    warehouse scale you verify the pipe AND heal it."""
-    sink = writer.read(table)
-    # the full-outer classification is consumed three times (census,
-    # upsert side, delete side) — persist it so the (pk, hash) join
-    # runs once, not per consumer (measured 12.3 s -> one join's
-    # worth on a 2M-row, 64-bucket table)
-    keys = reconcile_keys(source, sink, pk_cols, compare_cols).persist()
-    try:
-        counts = {
-            r["status"]: r["n"]
-            for r in keys.groupBy("status")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        if set(counts) <= {"ok"}:
-            return counts  # healthy: no damage, nothing to write
-        bad = keys.filter(
-            F.col("status").isin("missing", "mismatch")
-        ).select(*pk_cols)
-        ups = source.join(bad, pk_cols, "left_semi").select(
-            *source.columns,
-            F.lit("c").alias("op"),
-            F.lit(1).alias("__repair_seq"),
-        )
-        dels = (
-            keys.filter(F.col("status") == "extra")
-            .select(
-                *pk_cols,
-                *[
-                    F.lit(None).cast(dict(source.dtypes)[c]).alias(c)
-                    for c in source.columns
-                    if c not in pk_cols
-                ],
-                F.lit("d").alias("op"),
-                F.lit(1).alias("__repair_seq"),
-            )
-        )
-        changes = ups.unionByName(dels)
-        writer.upsert_bucketed(
-            table, changes, pk_cols, "__repair_seq", n_buckets=n_buckets
-        )
-    finally:
-        keys.unpersist()
-    return counts
-
-
-def table_diff(
-    writer: "TransferWriter",
-    table: str,
-    version_old: int,
-    pk_cols: list[str],
-    version_new: int | None = None,
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
-    """Time-travel diff between two retained snapshots of a transfer
-    table: one row per key that changed — status added / removed /
-    changed (unchanged keys are filtered out, so the result is
-    delta-sized). `version_new=None` diffs the retained snapshot
-    against the LIVE state — "what did the pipeline do since I
-    pinned this version", the audit a training run asks before
-    re-reading a pinned dataset. Same (pk, hash)-only shuffle as
-    `reconcile`; the snapshots never join row-to-row at full width."""
-    old = writer.read(table, version=version_old)
-    new = (
-        writer.read(table)
-        if version_new is None
-        else writer.read(table, version=version_new)
-    )
-    # `bucket` is layout, not data: comparing it would flag every key
-    # as changed after an n_buckets change between versions
-    compare_cols = compare_cols or [
-        c for c in new.columns if c not in pk_cols and c != "bucket"
-    ]
-    keys = reconcile_keys(new, old, pk_cols, compare_cols)
-    status = (
-        F.when(F.col("status") == "missing", F.lit("added"))
-        .when(F.col("status") == "extra", F.lit("removed"))
-        .when(F.col("status") == "mismatch", F.lit("changed"))
-    )
-    return keys.filter(F.col("status") != "ok").select(
-        *pk_cols, status.alias("status")
-    )
-
-
 def write_training_shards(
     docs: DataFrame,
     out_dir: str,
@@ -1050,22 +928,3 @@ def _write_shards(
         tuple(r[k] for k in by) + (int(r["shard"]),): int(r["count"])
         for r in manifest
     }
-
-
-def scd2_current(history: DataFrame) -> DataFrame:
-    """The live snapshot of an SCD2 table: the one open interval per
-    key (eff_to NULL). Partition-prunable at scale if the sink
-    partitions on an is_current derivative."""
-    return history.filter(F.col("eff_to").isNull()).drop("eff_to")
-
-
-def scd2_as_of(history: DataFrame, seq: int) -> DataFrame:
-    """Point-in-time read of an SCD2 table: the version valid at
-    `seq` — eff_from <= seq < eff_to (open intervals extend to
-    infinity). The time-travel SELECT the history-preserving load
-    exists for; at most one row per key by the interval invariants
-    (property-asserted in test_properties.py)."""
-    return history.filter(
-        (F.col("eff_from") <= seq)
-        & (F.col("eff_to").isNull() | (F.col("eff_to") > seq))
-    )

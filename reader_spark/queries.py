@@ -4981,8 +4981,7 @@ FROM b GROUP BY 1
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-vs-corpus dedup — the batch shape of the streaming
-    ingest filter (streaming/dedup_stream.py), md5-banded so it has a
+    """Delta-vs-corpus dedup, md5-banded so it has a
     full oracle: docs with doc_id % 10 >= 8 play the incoming delta,
     the rest are the existing corpus whose DISTINCT band buckets form
     the index; an incoming doc survives iff every band misses. At
@@ -5816,7 +5815,7 @@ def video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END oracle-checked video path: deterministic PPMV
     containers (3 + id%3 frames of the pixel formula, 2 fps), REAL
     parse + per-frame decode + stat extraction in mapInPandas
-    (operators/multimodal.py::extract_frames); the oracle reproduces
+    (operators/multimodal.py::synth_video_frames); the oracle reproduces
     every frame's channel means from the pixel formula in SQL."""
     from reader_spark.operators import multimodal as MM
 
@@ -8541,8 +8540,8 @@ def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     heaviest key itself (deterministic min-id tiebreak). This is the
     operational input to the salting decision: a ratio around 1e6
     means uniform (hash-partition freely), orders of magnitude above
-    means the hot key serializes a join task (reach for
-    partitioning.salted_join or AQE skew handling).
+    means the hot key serializes a join task (reach for key salting
+    or AQE skew handling).
 
     Scale: one count-per-key aggregate per key space (map-side
     combined), then a 1-row struct-max — never a sort; the four

@@ -7,9 +7,10 @@ with jitter. On Spark, every one of those is a sink/client option on
 (topic, key, value) columns, which reader_spark.envelope already
 does.
 
-kafka_available() gates the real sink; without a broker, envelopes
-land as parquet through `write_parquet`, the one file writer for
-envelope frames.
+kafka_available() gates the real sink: without the Kafka connector
+on the classpath, envelopes land as parquet through `write_parquet`,
+the one file writer for envelope frames; with it, a publish error
+fails the job.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ KAFKA_DEFAULTS = {
 
 
 def kafka_available(spark: SparkSession) -> bool:
+    """True when the Kafka connector is on the session's classpath."""
     try:
         jvm = spark._jvm  # noqa: SLF001
         jvm.Class.forName(

@@ -1,10 +1,9 @@
 """Spark-native streaming operators over event streams (reference
 §2.7): the event-time semantics the reference's hand-rolled iterators
 lack, each a Structured Streaming building block whose state the
-watermark bounds: tumbling, sliding and session window counts, an
-interval-bounded stream-stream join, within-watermark dedup,
-stream-static anomaly alerts, and a rollup table that each micro-batch
-merges incrementally.
+watermark bounds: tumbling and sliding window counts, an
+interval-bounded stream-stream join, within-watermark dedup, and a
+rollup table that each micro-batch merges incrementally.
 
 The CDC ingest path itself (logtail source -> gate chain -> decode ->
 envelope or MERGE) is `reader_spark.plans.cdc_mysql`.
@@ -49,40 +48,6 @@ def windowed_event_counts(
     )
 
 
-def session_window_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming sessionization with Spark's NATIVE `session_window`
-    — the state-store-backed merging-session aggregate. Sessions
-    close (and emit, in append mode) once the watermark passes their
-    end; events exactly `gap` apart merge (boundary semantics probed
-    in queries.session_window_native, whose batch form shares this
-    expression shape).
-
-    This is the production counterpart of
-    `stateful.sessionize_stream`: identical gap semantics, but state
-    merging runs in the JVM state store with map-side partial
-    merging — reach for the applyInPandasWithState form only when
-    the per-session state is genuinely custom (non-mergeable)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.col(key_col), F.session_window(F.col(ts_col), gap).alias("sw")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key_col,
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def interval_join_streams(
     left: DataFrame,
     right: DataFrame,
@@ -123,46 +88,6 @@ def dedupe_stream_within_watermark(
     keeps ALL keys forever). This is the streaming analogue of the
     K3 transfer-sink PK dedupe."""
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def anomaly_alerts_stream(
-    events: DataFrame,
-    baseline: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    z_threshold: float = 2.0,
-) -> DataFrame:
-    """Streaming volume-anomaly alerting: hourly counts per key
-    (watermarked tumbling windows) stream-static joined against a
-    BASELINE stats frame (key, mean, std — e.g. the batch
-    events_anomaly aggregate refreshed daily) and only windows with
-    |z| >= threshold emitted. Append mode: an alert fires exactly
-    once, when the watermark closes its window.
-
-    Scale: the stream side is the windowed-count aggregate (state
-    bounded by watermark x key space); the baseline is a
-    key-space-sized broadcast. This is the standing-alert shape —
-    the batch query recomputes the baseline, the stream never
-    re-reads history."""
-    win = F.window(F.col(ts_col), window)
-    counts = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(win, F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    z = (F.col("n_events") - F.col("mean")) / F.col("std")
-    return (
-        counts.join(F.broadcast(baseline), key_col)
-        .filter(F.abs(z) >= z_threshold)
-        .select(
-            F.col("window.start").alias("window_start"),
-            key_col,
-            "n_events",
-            F.round(z, 6).alias("zscore"),
-        )
-    )
 
 
 def maintain_rollup(

@@ -328,69 +328,3 @@ def heavy_hitters_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# streaming EWMA (the incremental form of queries.events_ewma)
-
-EWMA_SCHEMA = "user_id long, event_type string, n_events long, ewma_ppm long"
-# state: (running fold accumulator, events folded so far)
-EWMA_STATE_SCHEMA = "acc double, n long"
-
-
-def make_ewma_tracker(alpha: float):
-    """Per-series EWMA state: one (accumulator, count) pair per
-    (user, event_type) key — O(1) state per series for an unbounded
-    stream. Each batch folds its rows IN (ts, event_id) ORDER into
-    the carried accumulator, exactly the left fold the batch
-    operator (`queries.events_ewma`) computes, so draining a stream
-    equals the one-shot batch fold over the same rows."""
-
-    def fn(key, pdfs, state):
-        user_id, event_type = key
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        if state.exists:
-            acc, n = state.get
-        else:
-            acc, n = None, 0
-        import pandas as pd  # local: executor-side import
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(["ts", "event_id"])
-        for v in batch["value"]:
-            acc = float(v) if acc is None else alpha * float(v) + (1 - alpha) * acc
-            n += 1
-        state.update((acc, n))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "event_type": [event_type],
-                "n_events": [n],
-                "ewma_ppm": [int(acc * 1_000_000 // 1) if acc is not None else 0],
-            }
-        )
-
-    return fn
-
-
-def ewma_stream(events: DataFrame, alpha: float = 0.125) -> DataFrame:
-    """Streaming per-series exponential smoothing: each micro-batch
-    updates every touched series' O(1) (accumulator, count) state
-    and emits its current smoothed value — the incremental form of
-    the batch `events_ewma` fold, with the same dyadic alpha so the
-    arithmetic is reproducible.
-
-    Update mode, no timeout: the state is a single running value per
-    series (nothing to evict); at 100 TB the state store holds one
-    row per live series, the smallest possible footprint for this
-    computation."""
-    keyed = events.select("user_id", "event_type", "ts", "event_id", "value")
-    return keyed.groupBy("user_id", "event_type").applyInPandasWithState(
-        make_ewma_tracker(alpha),
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -1,5 +1,4 @@
-"""Column-expression oracles for the Arrow kernels, plus a second
-connected-components body.
+"""Reference forms that tests check the live operators against.
 
 Each operator in `reader_spark.operators` ships one implementation: a
 vectorized Arrow/numpy `mapInPandas` kernel. The pure column-expression
@@ -17,13 +16,31 @@ They are test code only: the interpreted higher-order-function folds
 run outside whole-stage codegen and lost every A/B against the kernels,
 and no workload here has the long-chain graphs where star's
 O(log n) rounds would beat propagation.
+
+The rest are independent or chained forms with no caller in the
+program, kept only as the expected side of a test:
+
+- `kmv_merge` / `bottomk_merge`: tile merges, vs a direct
+  `sketches.kmv_tiles` / `sketches.bottomk_sample_tiles` sketch
+- `bloom_fp_rate`: the closed-form false-positive rate
+  `sketches.bloom_geometry` must meet
+- `kmeans_assign_trained` / `knn_ivf_trained`: the pyspark.ml model's
+  own assignment and an in-memory probe, vs `similarity.nearest_clusters`
+  and `similarity.knn_ivf_indexed`
+- `extract_media_stats` / `resize_images` / `extract_frames`: the
+  chained mapInPandas forms the fused `multimodal.synth_*` kernels
+  replace
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from reader_spark.functions.localrel import local_df
 from reader_spark.operators.dedup import (
     MINHASH_P,
     ensure_parallelism,
@@ -32,7 +49,15 @@ from reader_spark.operators.dedup import (
     minhash_mix_params,
     word_set,
 )
-from reader_spark.operators.similarity import dot
+from reader_spark.operators.multimodal import (
+    FRAME_SCHEMA,
+    MEDIA_STATS_SCHEMA,
+    _resize_row,
+    _stats_row,
+    decode_ppmv,
+)
+from reader_spark.operators.similarity import _topk_probed, dot, nearest_clusters
+from reader_spark.operators.sketches import BLOOM_WORD_BITS
 
 
 def minhash_signature_expr(
@@ -274,3 +299,190 @@ def connected_components_star(
         .groupBy("node")
         .agg(F.min("label").alias("label"))
     )
+
+
+def kmv_merge(
+    tiles: DataFrame,
+    group_cols: list[str],
+    k: int = 64,
+) -> DataFrame:
+    """Merge KMV tiles up a hierarchy (hours -> day, cells -> total):
+    union the tiles' hash lists, keep the k smallest distinct,
+    estimate (k-1) / (kth/2^60). EXACT merge: the global k smallest
+    hashes are always contained in the union of per-tile k smallest,
+    so a merged estimate equals the directly-computed one."""
+    exploded = tiles.select(*group_cols, F.explode("kmv").alias("h")).distinct()
+    merged = exploded.groupBy(*group_cols).agg(
+        F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("kmv")
+    )
+    kth = F.when(
+        F.size("kmv") >= k, F.element_at("kmv", k)
+    ).otherwise(F.lit(None))
+    scale = float(1 << 60)
+    return merged.select(
+        *group_cols,
+        F.size("kmv").alias("n_kept"),
+        F.round((k - 1) / (kth / F.lit(scale)), 6).alias("estimate"),
+    )
+
+
+def bottomk_merge(
+    tiles: DataFrame, group_cols: list[str], k: int = 128
+) -> DataFrame:
+    """Merge sample tiles up a hierarchy: union the samples, keep the
+    global bottom k — EXACT (equals sampling the concatenated input
+    directly)."""
+    exploded = tiles.select(
+        *group_cols, F.explode("sample").alias("s")
+    ).distinct()
+    return exploded.groupBy(*group_cols).agg(
+        F.slice(F.array_sort(F.collect_list("s")), 1, k).alias("sample")
+    )
+
+
+def bloom_fp_rate(n_keys: int, m_words: int, k_hashes: int) -> float:
+    """Expected false-positive rate of an m_words x 60-bit filter
+    holding n_keys: (1 - e^(-kn/m))^k, the closed form
+    `sketches.bloom_geometry` sizes against."""
+    import math
+
+    m_bits = m_words * BLOOM_WORD_BITS
+    if m_bits <= 0 or k_hashes <= 0:
+        return 1.0
+    return (
+        1.0 - math.exp(-k_hashes * max(0, n_keys) / m_bits)
+    ) ** k_hashes
+
+
+def kmeans_assign_trained(
+    embeddings: DataFrame,
+    model,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Cluster assignment by the fitted pyspark.ml KMeans model's JVM
+    transform — (id_col, cl), an independent argmin to check
+    `similarity.nearest_clusters` against under the same centroids."""
+    from pyspark.ml.functions import array_to_vector
+
+    feats = embeddings.select(
+        F.col(id_col),
+        array_to_vector(F.col(vec_col).cast("array<double>")).alias(
+            "features"
+        ),
+    )
+    return model.transform(feats).select(
+        F.col(id_col), F.col("prediction").alias("cl")
+    )
+
+
+def knn_ivf_trained(
+    embeddings: DataFrame,
+    query_ids: list[int],
+    model,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    nprobe: int = 2,
+) -> DataFrame:
+    """Multi-probe IVF over a fitted KMeans model's centroids, in
+    memory — what `similarity.knn_ivf_indexed` must return from the
+    materialized index at the same probes."""
+    spark = embeddings.sparkSession
+    cents = local_df(
+        spark,
+        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
+        "cl int, c array<double>",
+    ).withColumn("nc", dot(F.col("c"), F.col("c")))
+    vecs = embeddings.select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("vec")
+    ).withColumn("nv", dot(F.col("vec"), F.col("vec")))
+    corpus = nearest_clusters(vecs, cents, 1, id_col)
+    probes = nearest_clusters(
+        vecs.filter(F.col(id_col).isin(query_ids)), cents, nprobe, id_col
+    ).select(
+        F.col(id_col).alias("query_id"),
+        F.col("vec").alias("qvec"),
+        F.col("nv").alias("nq"),
+        F.col("cl").alias("qcl"),
+    )
+    return _topk_probed(corpus, probes, k, id_col)
+
+
+def extract_media_stats(media: DataFrame) -> DataFrame:
+    """Per-blob decode stats (image dims + channel means, audio
+    sample rate / duration / RMS) as one mapInPandas over a media
+    frame: the chained form `multimodal.synth_image_stats_resized`
+    fuses. Undecodable payloads come back decoded=false."""
+    one = _stats_row
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    one(m, k, p)
+                    for m, k, p in zip(pdf["media_id"], pdf["kind"], pdf["payload"])
+                ]
+            )
+
+    return media.mapInPandas(op, schema=MEDIA_STATS_SCHEMA)
+
+
+RESIZE_SCHEMA = (
+    "media_id long, decoded boolean, in_w int, in_h int, "
+    "out_w int, out_h int, payload binary"
+)
+
+
+def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
+    """Nearest-neighbor image resize as one mapInPandas over a media
+    frame, re-encoded as PPM at (out_w, out_h): the chained form
+    `multimodal.synth_image_stats_resized` fuses. Undecodable
+    payloads come back decoded=false."""
+    def one(media_id, kind, payload):
+        return _resize_row(media_id, kind, payload, out_w, out_h)
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    one(m, k, p)
+                    for m, k, p in zip(pdf["media_id"], pdf["kind"], pdf["payload"])
+                ]
+            )
+
+    return media.mapInPandas(op, schema=RESIZE_SCHEMA)
+
+
+def extract_frames(media: DataFrame, every_n: int = 1) -> DataFrame:
+    """One stat row per `every_n`-th frame of each PPMV blob
+    (ordinal, timestamp from the container fps, dims, channel
+    means): the chained form `multimodal.synth_video_frames` fuses.
+    Undecodable payloads are skipped."""
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                if payload is None:
+                    continue
+                try:
+                    fps_milli, frames = decode_ppmv(bytes(payload))
+                except Exception:
+                    continue
+                frame_ms = 1_000_000 // max(fps_milli, 1)
+                for i in range(0, len(frames), every_n):
+                    img = frames[i]
+                    h, w, _ = img.shape
+                    means = img.reshape(-1, 3).mean(axis=0)
+                    rows.append(
+                        (int(mid), i, i * frame_ms, w, h,
+                         float(means[0]), float(means[1]), float(means[2]))
+                    )
+            yield pd.DataFrame(
+                rows,
+                columns=["media_id", "frame_id", "ts_ms", "width",
+                         "height", "mean_r", "mean_g", "mean_b"],
+            )
+
+    return media.mapInPandas(op, schema=FRAME_SCHEMA)

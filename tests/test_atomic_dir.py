@@ -124,45 +124,6 @@ def test_transfer_writer_pointer_flip_roundtrip(spark, tmp_path):
     assert got[3] == "V3" and len(got) == 8
 
 
-def test_time_travel_and_retention(tmp_path):
-    path = str(tmp_path / "ds")
-    A.publish(path, _write_marker("v0"), keep=2)
-    A.publish(path, _write_marker("v1"), keep=2)
-    A.publish(path, _write_marker("v2"), keep=2)
-    assert A.current_version(path) == 2
-    assert A.versions(path) == [0, 1, 2]
-
-    # historical reads
-    for seq in (0, 1, 2):
-        root = A.resolve(path, version=seq)
-        with open(os.path.join(root, "part-0.parquet")) as f:
-            assert f.read() == f"v{seq}"
-
-    # retention: keep=2 displaced versions + current
-    A.publish(path, _write_marker("v3"), keep=2)
-    assert A.versions(path) == [1, 2, 3]
-    with pytest.raises(FileNotFoundError):
-        A.resolve(path, version=0)
-    # default keep=1 tightens retention
-    A.publish(path, _write_marker("v4"))
-    assert A.versions(path) == [3, 4]
-
-
-def test_transfer_writer_time_travel(spark, tmp_path):
-    from reader_spark.operators.transfer import TransferWriter
-
-    tw = TransferWriter(spark, str(tmp_path), keep_versions=3)
-    for i, (op, val) in enumerate([("c", "a"), ("u", "b"), ("u", "c")]):
-        b = spark.createDataFrame(
-            [(1, val, op, i)], "id int, val string, op string, seq int"
-        )
-        tw.upsert("t", b, ["id"], "seq")
-    assert tw.versions("t") == [0, 1, 2]
-    assert [r["val"] for r in tw.read("t").collect()] == ["c"]
-    assert [r["val"] for r in tw.read("t", version=0).collect()] == ["a"]
-    assert [r["val"] for r in tw.read("t", version=1).collect()] == ["b"]
-
-
 def test_publish_gc_spares_nested_published_dataset(tmp_path):
     """Legacy GC must not destroy an independent pointer-published
     artifact nested under the dataset root (the documented

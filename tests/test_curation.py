@@ -282,29 +282,6 @@ def test_epoch_shuffle_is_permutation_and_epoch_varies(spark):
     }
 
 
-def test_quality_classifier_learns_weak_labels(spark, sf_dir):
-    from reader_spark.functions.text import quality_score
-    from reader_spark.session import read_table
-
-    docs = read_table(spark, sf_dir, "documents")
-    model = CU.quality_classifier_fit(docs)
-    scored = CU.quality_classifier_score(model, docs)
-    joined = scored.join(
-        docs.select(
-            "doc_id", (quality_score(F.col("text")) >= 0.5).alias("weak")
-        ),
-        "doc_id",
-    ).collect()
-    assert len(joined) == docs.count()
-    agree = sum(
-        1 for r in joined if (r["p_quality"] >= 0.5) == bool(r["weak"])
-    )
-    # the linear model must reconstruct the weak labels it was fit on
-    assert agree / len(joined) >= 0.85, agree / len(joined)
-    # scores are calibrated probabilities
-    assert all(0.0 <= r["p_quality"] <= 1.0 for r in joined)
-
-
 def test_reservoir_sample_exact_k_and_weight_bias(spark):
     import pyspark.sql.functions as F
 

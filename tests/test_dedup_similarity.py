@@ -157,9 +157,9 @@ def test_ann_recall_report_quantifies_probe_miss(spark):
     ]
 
 
-def test_knn_ivf_trained_recall(spark):
+def test_knn_ivf_trained_recall(spark, tmp_path):
     # production path: pyspark.ml KMeans quantizer fitted once,
-    # multi-probe search. The testdata embeddings are UNclustered
+    # materialized index, multi-probe search. The testdata embeddings are UNclustered
     # random vectors (measured: 8% of a query's true top-5 shares its
     # label), where no coarse quantizer can be recall-faithful with
     # few probes — so validate the mechanics on data with real cluster
@@ -180,13 +180,18 @@ def test_knn_ivf_trained_recall(spark):
     )
     qids = [i * per_center for i in range(10)]
     model = SIM.ivf_fit(emb, n_clusters=n_centers, seed=7)
+    path = str(tmp_path / "ivf")
+    SIM.ivf_index_write(emb, path, model)
     exact = {
         (r["query_id"], r["neighbor_id"])
         for r in SIM.knn_bruteforce(emb, qids, k=5).collect()
     }
+    queries = emb.filter(F.col("vec_id").isin(qids))
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in SIM.knn_ivf_trained(emb, qids, model, k=5, nprobe=2).collect()
+        for r in SIM.knn_ivf_indexed(
+            spark, path, queries, k=5, nprobe=2
+        ).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.9, f"recall@5 = {recall}"
@@ -241,75 +246,6 @@ def test_knn_ivf_pq_indexed_identity_and_pruning(spark, tmp_path, sf_dir):
     counts = {r["query_id"]: r["n"] for r in pruned.groupBy(
         "query_id").agg(F.count("*").alias("n")).collect()}
     assert counts == {0: 5, 1: 5, 2: 5}
-
-
-@pytest.mark.slow  # r13 tier: see pytest.ini
-def test_ivf_pq_index_update_equals_rebuild_and_replay(spark, tmp_path, sf_dir):
-    """PQ-layout incremental update == a full rebuild under the SAME
-    quantizers (stored centroids + stored books), and replaying the
-    same delta (crash replay) changes nothing — per-id replace."""
-    from reader_spark.session import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") % 10 != 0)
-    delta = emb.filter(F.col("vec_id") % 10 == 0)
-    qids = [1, 2, 3]
-    queries = emb.filter(F.col("vec_id").isin(qids))
-    model = SIM.ivf_fit(emb, n_clusters=8, seed=7)
-
-    from reader_spark.operators import atomic_dir
-
-    inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
-    SIM.ivf_pq_index_write(base, inc, model, m=8, dim=64)
-    SIM.ivf_pq_index_update(spark, inc, delta, m=8, dim=64)
-    # rebuild under the SAME stored books — the update contract is
-    # "equals a rebuild under the same quantizers", and books are a
-    # quantizer (they must not be refit by an incremental update)
-    inc_books = spark.read.parquet(f"{atomic_dir.resolve(inc)}/books")
-    SIM.ivf_pq_index_write(emb, full, model, m=8, dim=64, books=inc_books)
-
-    def search(p):
-        return sorted(map(tuple, SIM.knn_ivf_pq_indexed(
-            spark, p, queries, k=5, rerank=10, nprobe=3, m=8, dim=64
-        ).collect()))
-
-    assert search(inc) == search(full)
-    SIM.ivf_pq_index_update(spark, inc, delta, m=8, dim=64)  # replay
-    assert search(inc) == search(full)
-
-
-def test_ivf_pq_index_delete_purges_codes(spark, tmp_path, sf_dir):
-    """Delete removes the vector AND its m codes from the index
-    (right-to-be-forgotten includes the quantized representation);
-    post-delete search == a fresh index without the ids; re-delete
-    is a no-op."""
-    from reader_spark.operators import atomic_dir
-    from reader_spark.session import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    victims = [7, 8, 9]
-    qids = [1, 2, 3]
-    queries = emb.filter(F.col("vec_id").isin(qids))
-    model = SIM.ivf_fit(emb, n_clusters=8, seed=7)
-    idx, fresh = str(tmp_path / "idx"), str(tmp_path / "fresh")
-    SIM.ivf_pq_index_write(emb, idx, model, m=8, dim=64)
-    assert SIM.ivf_pq_index_delete(spark, idx, victims)
-    SIM.ivf_pq_index_write(
-        emb.filter(~F.col("vec_id").isin(victims)), fresh, model, m=8, dim=64
-    )
-    root = atomic_dir.resolve(idx)
-    assert spark.read.parquet(f"{root}/codes").filter(
-        F.col("vec_id").isin(victims)).count() == 0
-    assert spark.read.parquet(f"{root}/corpus").filter(
-        F.col("vec_id").isin(victims)).count() == 0
-
-    def search(p):
-        return sorted(map(tuple, SIM.knn_ivf_pq_indexed(
-            spark, p, queries, k=5, rerank=10, nprobe=3, m=8, dim=64
-        ).collect()))
-
-    assert search(idx) == search(fresh)
-    assert SIM.ivf_pq_index_delete(spark, idx, victims) == []
 
 
 def test_ivf_index_update_removes_emptied_cell(spark, tmp_path):
@@ -526,31 +462,6 @@ def test_connected_components_star_random_graphs(spark):
         assert star == truth == prop, f"seed={seed}"
 
 
-def test_lsh_capped_drops_hot_buckets_keeps_cold_pairs(spark):
-    # 40 identical boilerplate docs (one hot bucket per band) + one
-    # genuine near-dup pair: with max_bucket below the boilerplate
-    # size, the explosion is dropped and the real pair survives
-    texts = ["cookie banner accept terms"] * 40 + [
-        "a unique document about spark",
-        "a unique document about spark engines",
-        "something entirely different altogether now",
-    ]
-    df = docs_df(spark, texts)
-    sigs = DD.minhash_signature(df, num_hashes=8)
-    capped = DD.lsh_candidate_pairs_capped(
-        sigs, num_hashes=8, band_size=2, max_bucket=10
-    )
-    got = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
-    assert (40, 41) in got                      # cold near-dup found
-    assert not any(a < 40 and b < 40 for a, b in got)  # hot bucket dropped
-    # with a generous cap the boilerplate pairs ARE emitted
-    uncapped = DD.lsh_candidate_pairs_capped(
-        sigs, num_hashes=8, band_size=2, max_bucket=10_000
-    )
-    n = uncapped.filter("doc_a < 40 AND doc_b < 40").count()
-    assert n == 40 * 39 // 2
-
-
 def test_empty_doc_signatures_never_band_collide(spark):
     # Degenerate docs (empty / sub-shingle text) carry all-NULL
     # signatures. concat_ws skips NULLs, so without the guard in
@@ -599,17 +510,6 @@ def test_empty_doc_signatures_never_band_collide(spark):
     # and no degenerate-doc id ever appears in a candidate pair
     wide = n_candidates(200, 16, 2)
     assert all(a < len(base) and b < len(base) for a, b in wide)
-    # capped variant shares the melt, so it inherits the guard
-    sigs = DD.minhash_signature(
-        docs_df(spark, base + [None] * 200), num_hashes=16
-    )
-    capped = {
-        (r["doc_a"], r["doc_b"])
-        for r in DD.lsh_candidate_pairs_capped(
-            sigs, num_hashes=16, band_size=2, max_bucket=10_000
-        ).collect()
-    }
-    assert all(a < len(base) and b < len(base) for a, b in capped)
 
 
 def test_containment_pairs_asymmetric(spark):
@@ -712,6 +612,8 @@ def test_ivf_index_write_and_search(spark, sf_dir, tmp_path):
     # materialized index round trip: results identical to the
     # in-memory trained path at the same probes; partition pruning
     # asserted on the physical plan (PartitionFilters on cl)
+    from kernel_oracles import knn_ivf_trained
+
     from reader_spark.session import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
@@ -721,7 +623,7 @@ def test_ivf_index_write_and_search(spark, sf_dir, tmp_path):
     qids = [0, 1, 2]
     queries = emb.filter(F.col("vec_id").isin(qids))
     got = SIM.knn_ivf_indexed(spark, path, queries, k=5, nprobe=2)
-    want = SIM.knn_ivf_trained(emb, qids, model, k=5, nprobe=2)
+    want = knn_ivf_trained(emb, qids, model, k=5, nprobe=2)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "cl" in plan
@@ -977,40 +879,6 @@ def test_ivf_index_stream_maintenance(spark, sf_dir, tmp_path):
     got = SIM.knn_ivf_indexed(spark, path, queries, k=5, nprobe=2)
     want = SIM.knn_ivf_indexed(spark, path2, queries, k=5, nprobe=2)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_pca_projection_preserves_structure(spark):
-    """PCA tier: k components capture the planted variance and
-    nearest-neighbor structure survives projection — top-1 neighbors
-    computed in PCA space match full-dim space on a clustered
-    fixture (the regime dimensionality reduction exists for)."""
-    import random
-
-    rng = random.Random(5)
-    dim, n_centers, per_center = 32, 4, 30
-    rows = []
-    for cid in range(n_centers):
-        center = [3.0 if d % n_centers == cid else 0.0 for d in range(dim)]
-        for j in range(per_center):
-            vec = [c + rng.gauss(0, 0.3) for c in center]
-            rows.append((cid * per_center + j, vec, cid))
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    )
-    model = SIM.pca_fit(emb, k=8)
-    assert sum(model.explainedVariance) > 0.7
-    proj = SIM.pca_project(emb, model)
-    assert proj.schema["embedding"].dataType.simpleString() == "array<double>"
-
-    qids = [0, 35, 70, 105]
-    full = {r["query_id"]: r["neighbor_id"]
-            for r in SIM.knn_bruteforce(emb, qids, k=1).collect()}
-    red = {r["query_id"]: r["neighbor_id"]
-           for r in SIM.knn_bruteforce(proj, qids, k=1).collect()}
-    same_cluster = sum(
-        1 for q in qids if red[q] // per_center == full[q] // per_center
-    )
-    assert same_cluster == len(qids)
 
 
 def test_record_linkage_catches_first_char_typo(spark):
@@ -1324,48 +1192,6 @@ def test_decontaminate_incremental_equals_batch(spark, tmp_path, sf_dir):
         for r in Q.decontaminate_train_q(spark, sf_dir).collect()
     }
     assert got == want
-
-
-def test_decontaminate_maintainer_replay_idempotent(spark, tmp_path, sf_dir):
-    """The ingest-loop body: survivors append once, a crash-replayed
-    batch appends nothing, contaminated docs never land."""
-    from pyspark.sql import functions as F
-
-    from reader_spark.operators import curation as CU
-    from reader_spark.operators import dedup as DD
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    splits = CU.dataset_split(docs).select("doc_id", "split")
-    bench = docs.join(
-        splits.filter(F.col("split") != "train").select("doc_id"),
-        "doc_id", "left_semi",
-    )
-    train = docs.join(
-        splits.filter(F.col("split") == "train").select("doc_id"),
-        "doc_id", "left_semi",
-    ).orderBy("doc_id")
-    ids = [r["doc_id"] for r in train.select("doc_id").collect()]
-    cut = ids[len(ids) // 2]
-    b1 = train.filter(F.col("doc_id") <= cut)
-    b2 = train.filter(F.col("doc_id") > cut)
-
-    idx = str(tmp_path / "benchidx")
-    DD.neardup_index_write(bench, idx)
-    out = str(tmp_path / "clean")
-    body = DD.decontaminate_maintainer(idx, out)
-
-    body(b1, 0)
-    n1 = spark.read.parquet(out).count()
-    body(b1, 0)  # crash replay: nothing re-appends
-    assert spark.read.parquet(out).count() == n1
-    body(b2, 1)
-    final = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    want = {
-        r["doc_id"]
-        for r in DD.decontaminate_incremental(spark, train, idx)
-        .select("doc_id").collect()
-    }
-    assert final == want
 
 
 def test_oph_signature_scheme(spark, tmp_path, sf_dir):

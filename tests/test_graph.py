@@ -378,51 +378,13 @@ def test_neardup_index_crash_mid_update_heals_on_replay(spark, tmp_path):
     ) == 0
 
 
-def test_neardup_index_delete_tombstones(spark, tmp_path):
-    """Delete removes a doc from every edge (both endpoints), is
-    idempotent, and a later update cannot resurrect it as a
-    neighbor — the BM25 tombstone contract on the graph index."""
-    from reader_spark.operators import dedup as DD
-
-    docs = _docs(spark)
-    path = str(tmp_path / "idx")
-    DD.neardup_index_write(
-        docs.filter("doc_id < 12"), path, num_hashes=8, band_size=2,
-        threshold=0.8,
-    )
-    assert (10, 11) in _edges(spark, path)
-    assert DD.neardup_index_delete(spark, path, [11]) == 1
-    after = _edges(spark, path)
-    assert all(11 not in p for p in after)
-    assert (1, 2) in after                      # family A untouched
-    # idempotent; unknown ids are no-ops
-    assert DD.neardup_index_delete(spark, path, [11]) == 0
-    assert DD.neardup_index_delete(spark, path, [999]) == 0
-    # doc 12 arrives later: near-dup of 10 AND 11, but 11 is dead —
-    # only the (10, 12) edge may appear
-    DD.neardup_index_update(
-        spark, path, docs.filter("doc_id = 12"), num_hashes=8,
-        band_size=2, threshold=0.8,
-    )
-    final = _edges(spark, path)
-    assert (10, 12) in final
-    assert all(11 not in p for p in final)
-    # delete == rebuild-without-the-doc, on the surviving world
-    scratch = str(tmp_path / "scratch")
-    DD.neardup_index_write(
-        docs.filter("doc_id < 13 and doc_id != 11"), scratch,
-        num_hashes=8, band_size=2, threshold=0.8,
-    )
-    assert final == _edges(spark, scratch)
-
-
 @pytest.mark.slow  # r13 tier: see pytest.ini
 def test_neardup_index_maintain_compacts_and_purges(spark, tmp_path):
-    """OPTIMIZE: after update waves + a delete, maintain rewrites the
-    subdirs behind pointer flips — the distinct-edge view is
-    unchanged, tombstoned rows are physically gone, the tombstone
-    table empties, and later updates keep working against the
-    maintained layout."""
+    """OPTIMIZE: after update waves plus crash-replay residue (edge
+    rows duplicated on disk), maintain rewrites the subdirs behind
+    pointer flips — the distinct-edge view is unchanged, duplicate
+    rows are physically gone, and later updates keep working against
+    the maintained layout."""
     import glob
 
     from reader_spark.operators import dedup as DD
@@ -438,19 +400,18 @@ def test_neardup_index_maintain_compacts_and_purges(spark, tmp_path):
             spark, path, docs.filter(flt), num_hashes=8, band_size=2,
             threshold=0.8,
         )
-    assert DD.neardup_index_delete(spark, path, [3]) == 1
+    from reader_spark.operators.dedup import _nd_root
+
+    edges_root = _nd_root(path, "edges")
+    spark.read.parquet(edges_root).write.mode("append").parquet(edges_root)
+    spark.catalog.refreshByPath(edges_root)
     want = _edges(spark, path)
     stats = DD.neardup_index_maintain(spark, path)
     assert set(stats) == {"edges", "bands", "toks"}
     assert _edges(spark, path) == want
-    # physical purge: doc 3 gone from every subdir, tombstones empty
-    from reader_spark.operators.dedup import _nd_root, _tombstones
-
+    # physical purge: the duplicated edge rows are gone
     raw_edges = spark.read.parquet(_nd_root(path, "edges"))
-    assert raw_edges.filter("doc_a = 3 or doc_b = 3").count() == 0
-    assert spark.read.parquet(_nd_root(path, "toks")).filter(
-        "doc_id = 3").count() == 0
-    assert _tombstones(spark, path).count() == 0
+    assert raw_edges.count() == raw_edges.distinct().count() == len(want)
     # compaction really reduced the file count
     assert len(glob.glob(f"{_nd_root(path, 'toks')}/*.parquet")) == stats["toks"]
     # updates still work against the maintained (pointer-flip) layout
@@ -462,39 +423,7 @@ def test_neardup_index_maintain_compacts_and_purges(spark, tmp_path):
     # and a from-scratch rebuild over the maintained layout is clean
     DD.neardup_index_write(docs, path, num_hashes=8, band_size=2,
                            threshold=0.8)
-    assert (1, 3) in _edges(spark, path)  # deleted doc back after rebuild
-
-
-def test_neardup_index_health_drives_maintain(spark, tmp_path):
-    """The health row tells the truth before and after OPTIMIZE:
-    replay duplicates and tombstone backlog show up, maintain zeroes
-    them and the reported file counts match the compacted layout."""
-    from reader_spark.operators import dedup as DD
-
-    docs = _docs(spark)
-    path = str(tmp_path / "idx")
-    DD.neardup_index_write(
-        docs.filter("doc_id < 12"), path, num_hashes=8, band_size=2,
-        threshold=0.8,
-    )
-    # manufacture replay residue: duplicate the edge rows on disk
-    edges_root = DD._nd_root(path, "edges")
-    spark.read.parquet(edges_root).write.mode("append").parquet(edges_root)
-    spark.catalog.refreshByPath(edges_root)
-    DD.neardup_index_delete(spark, path, [11])
-    h = DD.neardup_index_health(spark, path).collect()[0]
-    assert h["n_docs"] == 5
-    assert h["n_edges_raw"] == 2 * h["n_edges_distinct"]
-    assert h["dup_edge_ppm"] == 500_000
-    assert h["n_tombstoned"] == 1
-    assert h["dead_edge_rows"] > 0
-    stats = DD.neardup_index_maintain(spark, path)
-    h2 = DD.neardup_index_health(spark, path).collect()[0]
-    assert h2["dup_edge_ppm"] == 0 and h2["n_tombstoned"] == 0
-    assert h2["dead_edge_rows"] == 0
-    assert h2["n_edges_raw"] == h2["n_edges_distinct"]
-    assert (h2["files_edges"], h2["files_bands"], h2["files_toks"]) == (
-        stats["edges"], stats["bands"], stats["toks"])
+    assert (1, 3) in _edges(spark, path)
 
 
 def test_neardup_index_crash_between_bands_and_toks_no_self_loops(
@@ -687,10 +616,10 @@ def test_neardup_cc_replay_is_noop(spark, tmp_path):
     assert _cc_map(spark, path) == want
 
 
-def test_neardup_cc_delete_then_maintain_rebuilds(spark, tmp_path):
-    """Tombstoned docs drop out of the component map immediately; the
-    physical rebuild at maintain() undoes any split the delete caused
-    (removing a cut vertex is invisible to incremental relabeling)."""
+def test_neardup_cc_maintain_rebuilds_component_map(spark, tmp_path):
+    """maintain() rebuilds the materialized component map from the
+    freshly compacted edges: one row per indexed doc, the same labels
+    as before and as a scratch rebuild."""
     from reader_spark.operators import dedup as DD
 
     docs = _bridge_docs(spark)
@@ -699,15 +628,11 @@ def test_neardup_cc_delete_then_maintain_rebuilds(spark, tmp_path):
                            threshold=0.8)
     DD.neardup_cc_write(spark, path, n_buckets=4)
     before = _cc_map(spark, path)
-    merged = before[1] == before[10]  # bridge 30 united X and Y?
-    DD.neardup_index_delete(spark, path, [30])
-    assert 30 not in _cc_map(spark, path)
     out = DD.neardup_index_maintain(spark, path)
-    assert out["cc"] == 5
+    assert out["cc"] == 6
     got = _cc_map(spark, path)
+    assert got == before
     assert got == _cc_rebuild_map(spark, path, str(tmp_path / "scratch"))
-    if merged:
-        assert got[10] == 10  # the split is physical again
 
 
 @pytest.mark.slow  # r13 tier: see pytest.ini

@@ -82,11 +82,13 @@ def test_trained_assignment_matches_broadcast_argmin(spark, sf_dir):
     """The production path (JVM model.transform) and the broadcast
     argmin over the SAME trained centroids assign every vector to the
     same cluster — the two paths are interchangeable downstream."""
+    from kernel_oracles import kmeans_assign_trained
+
     emb = _emb(spark, sf_dir)
     model = SIM.ivf_fit(emb, 8, seed=7)
     fast = {
         (r.vec_id, r.cl)
-        for r in SIM.kmeans_assign_trained(emb, model).collect()
+        for r in kmeans_assign_trained(emb, model).collect()
     }
     cents = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
@@ -277,74 +279,11 @@ def test_catalog_oracle_exact(spark, sf_dir, name):
         assert (got[c] == want[c]).all(), c
 
 
-def test_ivf_index_delete_and_health_repair(spark, sf_dir, tmp_path):
-    """Physical IVF deletes: searches equal a rebuild without the
-    deleted ids, untouched cell dirs keep their files, an emptied
-    cell's directory disappears, and ivf_health_repair lands on
-    exactly the full-rescan stats (including dropping the emptied
-    cell's row)."""
-    import os
-
-    from reader_spark.operators import atomic_dir
-
-    emb = _emb(spark, sf_dir)
-    corpus = emb.filter("vec_id < 400")
-    idx = str(tmp_path / "idx")
-    hp = str(tmp_path / "health")
-    model = SIM.ivf_fit(corpus, 8, seed=7)
-    SIM.ivf_index_write(corpus, idx, model)
-    SIM.ivf_health_write(spark, idx, hp)
-    root = atomic_dir.resolve(idx)
-    stored = spark.read.parquet(f"{root}/corpus")
-    # delete one whole cell plus a few ids from another
-    cells = sorted(r.cl for r in stored.select("cl").distinct().collect())
-    whole = [r.vec_id for r in stored.filter(F.col("cl") == cells[0]).collect()]
-    partial_src = stored.filter(F.col("cl") == cells[1]).limit(3).collect()
-    partial = [r.vec_id for r in partial_src]
-    before_files = {
-        d: sorted(os.listdir(os.path.join(root, "corpus", d)))
-        for d in os.listdir(f"{root}/corpus")
-        if d.startswith("cl=")
-    }
-    touched = SIM.ivf_index_delete(spark, idx, whole + partial + [999_999])
-    assert sorted(touched) == [cells[0], cells[1]]
-    assert not os.path.isdir(f"{root}/corpus/cl={cells[0]}")  # emptied
-    after_files = {
-        d: sorted(os.listdir(os.path.join(root, "corpus", d)))
-        for d in os.listdir(f"{root}/corpus")
-        if d.startswith("cl=")
-    }
-    for d, files in before_files.items():
-        c = int(d.split("=")[1])
-        if c not in (cells[0], cells[1]):
-            assert after_files[d] == files, d
-    # search equivalence vs a rebuild without the deleted ids
-    survivors = corpus.filter(~F.col("vec_id").isin(whole + partial))
-    idx2 = str(tmp_path / "idx_fresh")
-    SIM.ivf_index_write(survivors, idx2, model)
-    qids = [r.vec_id for r in survivors.limit(3).collect()]
-    queries = survivors.filter(F.col("vec_id").isin(qids))
-    got = sorted(map(tuple, SIM.knn_ivf_indexed(
-        spark, idx, queries, k=5, nprobe=2).collect()))
-    want = sorted(map(tuple, SIM.knn_ivf_indexed(
-        spark, idx2, queries, k=5, nprobe=2).collect()))
-    assert got == want
-    # health repair == full rescan
-    SIM.ivf_health_repair(spark, idx, hp, touched)
-    hp2 = str(tmp_path / "health_rescan")
-    SIM.ivf_health_write(spark, idx, hp2)
-    got_h = {tuple(r) for r in SIM.ivf_health_read(spark, hp).collect()}
-    want_h = {tuple(r) for r in SIM.ivf_health_read(spark, hp2).collect()}
-    assert got_h == want_h
-    assert not any(r[0] == cells[0] for r in got_h)  # emptied cell row gone
-
-
 def test_health_machinery_serves_pq_layout(spark, sf_dir, tmp_path):
     """The health/refit loop reads {index}/corpus — which the
-    PQ-resident layout shares — so quantizer health, incremental
-    health maintenance, and repair work on an ivf_pq index unchanged:
-    health over the PQ index == health over a plain IVF index of the
-    same corpus under the same model."""
+    PQ-resident layout shares — so quantizer health works on an
+    ivf_pq index unchanged: health over the PQ index == health over
+    a plain IVF index of the same corpus under the same model."""
     emb = _emb(spark, sf_dir)
     model = SIM.ivf_fit(emb, 8, seed=7)
     pq_idx, plain_idx = str(tmp_path / "pq"), str(tmp_path / "plain")
@@ -356,14 +295,6 @@ def test_health_machinery_serves_pq_layout(spark, sf_dir, tmp_path):
     got = {tuple(r) for r in SIM.ivf_health_read(spark, hp_pq).collect()}
     want = {tuple(r) for r in SIM.ivf_health_read(spark, hp_plain).collect()}
     assert got == want
-    # delete + repair on the PQ layout keeps health == fresh rescan
-    touched = SIM.ivf_pq_index_delete(spark, pq_idx, [0, 1, 2])
-    SIM.ivf_health_repair(spark, pq_idx, hp_pq, touched)
-    hp3 = str(tmp_path / "hrescan")
-    SIM.ivf_health_write(spark, pq_idx, hp3)
-    after = {tuple(r) for r in SIM.ivf_health_read(spark, hp_pq).collect()}
-    fresh = {tuple(r) for r in SIM.ivf_health_read(spark, hp3).collect()}
-    assert after == fresh
 
 
 def test_embedding_drift_family(spark, sf_dir, tmp_path):
@@ -420,36 +351,6 @@ def test_embedding_drift_family(spark, sf_dir, tmp_path):
     assert set(rows) == {0, 1, 2}
     assert not rows[0]["drifted"] and rows[1]["drifted"]
     assert rows[2]["n_cur"] == 0 and rows[2]["drifted"]
-
-
-def test_ivf_drift_check_verdict_row(spark, sf_dir, tmp_path):
-    """ivf_drift_check exposes refit evidence as the one-row drift
-    verdict shape: stable health vs its own baseline reads no drift;
-    a health table rebuilt after a drifted ingest trips it."""
-    emb = _emb(spark, sf_dir)
-    seed = emb.filter("vec_id < 300")
-    idx = str(tmp_path / "idx")
-    hp = str(tmp_path / "health")
-    bp = str(tmp_path / "baseline")
-    model = SIM.ivf_fit(seed, 8, seed=7)
-    SIM.ivf_index_write(seed, idx, model)
-    SIM.ivf_health_write(spark, idx, hp)
-    SIM.ivf_health_write(spark, idx, bp)
-
-    row = SIM.ivf_drift_check(spark, hp, bp).collect()[0]
-    assert not row["drifted"] and row["err_growth_ppm"] == 0
-    assert row["n_members"] == 300
-
-    drifted = emb.filter("vec_id >= 300 and vec_id < 400").select(
-        (F.col("vec_id") + 100_000).alias("vec_id"),
-        F.transform(
-            F.col("embedding").cast("array<double>"), lambda x: x + 40.0
-        ).alias("embedding"),
-    )
-    SIM.ivf_index_update(spark, idx, drifted)
-    SIM.ivf_health_write(spark, idx, hp)
-    row2 = SIM.ivf_drift_check(spark, hp, bp).collect()[0]
-    assert row2["drifted"] and row2["err_growth_ppm"] > 300_000
 
 
 def test_pinned_broadcast_decision_impl_invariant(spark, sf_dir):

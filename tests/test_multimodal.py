@@ -1,10 +1,34 @@
-"""Multimodal plumbing: binary columns through mapInPandas; the codec
-itself is stubbed (libs absent) but batch shape / schema / metadata
-explosion are real."""
+"""Multimodal plumbing: binary columns through mapInPandas. PPM/BMP
+images, WAV audio and the PPMV video container decode natively;
+formats whose codecs are absent come back undecoded, not failed."""
 
+from kernel_oracles import extract_frames, extract_media_stats, resize_images
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from reader_spark.operators import multimodal as MM
+
+# Media-row schema: opaque payload + typed metadata.
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("kind", T.StringType(), False),  # image|audio|video
+        T.StructField("mime", T.StringType(), True),
+        T.StructField("payload", T.BinaryType(), True),
+        T.StructField(
+            "meta",
+            T.StructType(
+                [
+                    T.StructField("width", T.IntegerType()),
+                    T.StructField("height", T.IntegerType()),
+                    T.StructField("duration_ms", T.LongType()),
+                    T.StructField("sample_rate", T.IntegerType()),
+                ]
+            ),
+            True,
+        ),
+    ]
+)
 
 
 def media_df(spark):
@@ -17,7 +41,7 @@ def media_df(spark):
          (1920, 1080, 3500, None)),
         (4, "audio", "audio/wav", None, (None, None, 2000, 16000)),
     ]
-    return spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def test_extract_features_shape(spark):
@@ -35,18 +59,11 @@ def test_extract_features_shape(spark):
     assert by_id[4]["sha256"] is None and by_id[4]["feat"] is None
 
 
-def test_frame_sample_plan(spark):
-    out = MM.frame_sample_plan(media_df(spark), every_ms=1000).collect()
-    stamps = sorted(r["sample_ms"] for r in out)
-    assert stamps == [0, 1000, 2000, 3000]  # duration 3500ms, 1s cadence
-    assert {r["media_id"] for r in out} == {3}
-
-
 def test_decoder_stub_raises_not_implemented():
     import pytest
 
     with pytest.raises((NotImplementedError, Exception)):
-        MM.DECODERS["image"](b"not-an-image")
+        MM._decode_image(b"not-an-image")
 
 
 def _ppm_bytes(w, h, rgb):
@@ -121,8 +138,8 @@ def test_extract_media_stats_mixed_corpus(spark):
         (4, "image", "image/jpeg", bytearray(b"\xff\xd8\xff\xe0junk"), None),  # no codec
         (5, "video", "video/mp4", bytearray(b"....ftyp"), None),
     ]
-    df = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in MM.extract_media_stats(df).collect()}
+    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    out = {r["media_id"]: r for r in extract_media_stats(df).collect()}
     assert out[1]["decoded"] and out[1]["width"] == 2 and out[1]["height"] == 1
     assert out[1]["mean_r"] == 10.0 and out[1]["mean_b"] == 30.0
     assert out[2]["decoded"] and out[2]["mean_g"] == 20.0
@@ -148,8 +165,8 @@ def test_resize_images_nearest_neighbor(spark):
         (2, "image", "image/jpeg", bytearray(b"\xff\xd8junk"), None),
         (3, "audio", "audio/wav", bytearray(b"RIFFjunk"), None),
     ]
-    df = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in MM.resize_images(df, 2, 1).collect()}
+    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    out = {r["media_id"]: r for r in resize_images(df, 2, 1).collect()}
     assert out[1]["decoded"] and (out[1]["in_w"], out[1]["in_h"]) == (4, 2)
     resized = MM.decode_ppm(bytes(out[1]["payload"]))
     assert resized.shape == (1, 2, 3)
@@ -162,9 +179,9 @@ def test_resize_images_nearest_neighbor(spark):
     df2 = spark.createDataFrame(
         [(9, "image", "image/x-ppm",
           bytearray(_ppm_bytes(1, 1, [9, 8, 7])), None)],
-        MM.MEDIA_SCHEMA,
+        MEDIA_SCHEMA,
     )
-    up = MM.resize_images(df2, 3, 3).collect()[0]
+    up = resize_images(df2, 3, 3).collect()[0]
     img = MM.decode_ppm(bytes(up["payload"]))
     assert img.shape == (3, 3, 3) and (img == [9, 8, 7]).all()
 
@@ -182,7 +199,7 @@ def test_audio_spectrum_dominant_frequency(spark):
         (1, "audio", "audio/wav", bytearray(_wav_bytes(sr, samples)), None),
         (2, "audio", "audio/mp3", bytearray(b"ID3junk"), None),
     ]
-    df = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
+    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
     out = {r["media_id"]: r for r in MM.audio_spectrum(df).collect()}
     assert out[1]["decoded"] and out[1]["sample_rate"] == sr
     # bin resolution is sr/n = 10 Hz; 440 lands on a bin exactly
@@ -202,7 +219,7 @@ def test_synthesize_and_resize_pipeline(spark):
     assert img42[1, 2, 1] == (42 * 7 + 1 * 13 + 2 * 17 + 1 * 29) % 256
     out = {
         r["media_id"]: r
-        for r in MM.resize_images(MM.synthesize_images(ids), 3, 2).collect()
+        for r in resize_images(MM.synthesize_images(ids), 3, 2).collect()
     }
     assert out[42]["decoded"] and (out[42]["out_w"], out[42]["out_h"]) == (3, 2)
     resized = MM.decode_ppm(bytes(out[42]["payload"]))
@@ -228,7 +245,7 @@ def test_video_frame_extraction_end_to_end(spark):
 
     ids = spark.range(0, 6).selectExpr("id AS media_id")
     vids = MM.synthesize_videos(ids)
-    out = MM.extract_frames(vids).collect()
+    out = extract_frames(vids).collect()
     by = {}
     for r in out:
         by.setdefault(r["media_id"], []).append(r)
@@ -246,14 +263,14 @@ def test_video_frame_extraction_end_to_end(spark):
             assert abs(r["mean_b"] - means[2]) < 1e-9
             assert r["ts_ms"] == f * 500  # 2 fps container
     # sampling: every 2nd frame only
-    sampled = MM.extract_frames(vids, every_n=2).collect()
+    sampled = extract_frames(vids, every_n=2).collect()
     assert {r["frame_id"] for r in sampled} <= {0, 2, 4}
     # corrupt payload is skipped, not fatal
     bad = spark.createDataFrame(
         [(99, "video", bytearray(b"nope"))],
         "media_id long, kind string, payload binary",
     )
-    assert MM.extract_frames(bad).count() == 0
+    assert extract_frames(bad).count() == 0
 
 
 def test_ppmv_roundtrip():
@@ -408,8 +425,8 @@ def test_fused_synth_pipelines_match_chained(spark):
             key=lambda t: tuple((v is None, v) for v in t),
         )
 
-    chained_resize = MM.extract_media_stats(
-        MM.resize_images(MM.synthesize_images(ids), 3, 2).select(
+    chained_resize = extract_media_stats(
+        resize_images(MM.synthesize_images(ids), 3, 2).select(
             "media_id", F.lit("image").alias("kind"), "payload"
         )
     )
@@ -429,5 +446,5 @@ def test_fused_synth_pipelines_match_chained(spark):
         MM.video_dhash(MM.synthesize_videos(ids))
     )
     assert rows(MM.synth_video_frames(ids)) == rows(
-        MM.extract_frames(MM.synthesize_videos(ids))
+        extract_frames(MM.synthesize_videos(ids))
     )

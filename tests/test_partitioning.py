@@ -1,97 +1,7 @@
-"""Bucketed co-located joins and salted skew joins — plan and
-result contracts."""
+"""Z-order clustered writes (file pruning on two dimensions) and
+the runtime bloom-filter join recipe — plan and result contracts."""
 
 import pyspark.sql.functions as F
-import pytest
-
-from reader_spark.operators import partitioning as PT
-from reader_spark.session import read_table
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-@pytest.fixture(scope="module")
-def bucketed_tables(spark, sf_dir):
-    orders = read_table(spark, sf_dir, "orders")
-    lineitem = read_table(spark, sf_dir, "lineitem")
-    PT.write_bucketed(
-        orders.withColumnRenamed("o_orderkey", "okey"), "b_orders", "okey", 8
-    )
-    PT.write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "okey"), "b_lineitem", "okey", 8
-    )
-    yield "b_orders", "b_lineitem"
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
-    lt, rt = bucketed_tables
-    # Force the join path (broadcast would hide the bucketing).
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = PT.co_located_join(spark, lt, rt, "okey")
-        plan = _plan(j)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "bucketed join must not shuffle"
-        assert j.count() > 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_bucketed_join_matches_plain_join(spark, bucketed_tables, sf_dir):
-    lt, rt = bucketed_tables
-    bucketed_n = PT.co_located_join(spark, lt, rt, "okey").count()
-    plain_n = (
-        read_table(spark, sf_dir, "orders")
-        .join(
-            read_table(spark, sf_dir, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .count()
-    )
-    assert bucketed_n == plain_n
-
-
-def test_salted_join_matches_unsalted(spark, sf_dir):
-    li = read_table(spark, sf_dir, "lineitem").select(
-        F.col("l_suppkey").alias("skey"), "l_orderkey", "l_extendedprice"
-    )
-    supp = read_table(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("skey"), "s_name"
-    )
-    salted = PT.salted_join(li, supp, "skey", salt_source="l_orderkey", n_salts=7)
-    plain = li.join(supp, "skey")
-    assert salted.count() == plain.count()
-    a = sorted(salted.groupBy("s_name").count().collect())
-    b = sorted(plain.groupBy("s_name").count().collect())
-    assert a == b
-
-
-def test_salt_is_deterministic_and_bounded(spark, sf_dir):
-    li = read_table(spark, sf_dir, "lineitem").limit(500)
-    s1 = li.select(PT.deterministic_salt(F.col("l_orderkey"), 16).alias("s"))
-    s2 = li.select(PT.deterministic_salt(F.col("l_orderkey"), 16).alias("s"))
-    assert s1.collect() == s2.collect()
-    mn, mx = s1.agg(F.min("s"), F.max("s")).first()
-    assert 0 <= mn and mx <= 15
-
-
-def test_salted_join_outer_preserves_unmatched(spark, sf_dir):
-    li = read_table(spark, sf_dir, "lineitem").select(
-        F.col("l_suppkey").alias("skey"), "l_orderkey"
-    )
-    # Empty right side: every left row must survive a left join.
-    supp = (
-        read_table(spark, sf_dir, "supplier")
-        .select(F.col("s_suppkey").alias("skey"), "s_name")
-        .filter(F.lit(False))
-    )
-    out = PT.salted_join(li, supp, "skey", salt_source="l_orderkey", how="left")
-    assert out.count() == li.count()
-    assert out.filter(F.col("s_name").isNotNull()).count() == 0
 
 
 def test_zorder_write_empty_and_allnull_inputs(spark, tmp_path):

@@ -834,67 +834,6 @@ def test_embedding_drift_invariants(spark, vecs, shift):
 
 
 @given(
-    n_rows=st.integers(8, 24),
-    missing=st.sets(st.integers(0, 23), max_size=4),
-    mismatch=st.sets(st.integers(0, 23), max_size=4),
-    extra=st.sets(st.integers(100, 110), max_size=3),
-)
-@SET
-@pytest.mark.slow  # r13 tier: see pytest.ini
-def test_reconcile_repair_heals_any_divergence(
-    spark, n_rows, missing, mismatch, extra, tmp_path_factory
-):
-    """Anti-entropy invariants under arbitrary divergence shapes:
-    whatever combination of missing / mismatched / extra keys the
-    sink carries, repair makes it equal the source exactly, the
-    returned census matches the seeded damage, and a second repair
-    is a no-op reporting all-ok."""
-    from pyspark.sql import functions as F
-
-    from reader_spark.operators.transfer import (
-        TransferWriter,
-        reconcile_repair,
-    )
-
-    missing = {k for k in missing if k < n_rows}
-    mismatch = {k for k in mismatch if k < n_rows} - missing
-
-    source = spark.range(n_rows).select(
-        F.col("id"), F.concat(F.lit("v"), F.col("id")).alias("val")
-    )
-    rows = (
-        [(k, f"v{k}") for k in range(n_rows)
-         if k not in missing and k not in mismatch]
-        + [(k, "WRONG") for k in sorted(mismatch)]
-        + [(k, "ghost") for k in sorted(extra)]
-    )
-    w = TransferWriter(spark, str(tmp_path_factory.mktemp("rrprop")))
-    if rows:
-        seed = spark.createDataFrame(rows, "id long, val string").select(
-            "id", "val", F.lit("c").alias("op"), F.lit(0).alias("seq")
-        )
-        w.upsert_bucketed("t", seed, ["id"], "seq", n_buckets=4)
-    else:
-        w.upsert_bucketed(
-            "t",
-            spark.createDataFrame(
-                [], "id long, val string, op string, seq long"
-            ),
-            ["id"], "seq", n_buckets=4,
-        )
-
-    counts = reconcile_repair(w, "t", source, ["id"], n_buckets=4)
-    assert counts.get("missing", 0) == len(missing)
-    assert counts.get("mismatch", 0) == len(mismatch)
-    assert counts.get("extra", 0) == len(extra)
-    got = {r["id"]: r["val"] for r in w.read("t").collect()}
-    assert got == {k: f"v{k}" for k in range(n_rows)}
-
-    again = reconcile_repair(w, "t", source, ["id"], n_buckets=4)
-    assert again == {"ok": n_rows}
-
-
-@given(
     docsets=st.lists(
         st.lists(st.text("abcdef", min_size=1, max_size=4),
                  min_size=1, max_size=30),

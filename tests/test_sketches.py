@@ -91,6 +91,7 @@ def test_kmv_tiles_merge_equals_direct(spark):
     sketch EXACTLY (global k-min is contained in the union of tile
     k-mins), and the estimate lands within the theoretical error
     band of the true distinct count."""
+    from kernel_oracles import kmv_merge
     from pyspark.sql import functions as F
 
     from reader_spark.operators import sketches as SK
@@ -104,8 +105,8 @@ def test_kmv_tiles_merge_equals_direct(spark):
     )
     k = 64
     tiles = SK.kmv_tiles(df, ["kind", "hour"], "user_id", k=k)
-    merged = SK.kmv_merge(tiles, ["kind"], k=k).collect()[0]
-    direct = SK.kmv_merge(
+    merged = kmv_merge(tiles, ["kind"], k=k).collect()[0]
+    direct = kmv_merge(
         SK.kmv_tiles(df, ["kind"], "user_id", k=k), ["kind"], k=k
     ).collect()[0]
     assert merged["estimate"] == direct["estimate"]
@@ -119,7 +120,7 @@ def test_kmv_tiles_merge_equals_direct(spark):
         F.lit("x").alias("g"), F.col("id").alias("u")
     )
     t = SK.kmv_tiles(few, ["g"], "u", k=k)
-    out = SK.kmv_merge(t, ["g"], k=k).collect()[0]
+    out = kmv_merge(t, ["g"], k=k).collect()[0]
     assert out["n_kept"] == 10 and out["estimate"] is None
 
 
@@ -218,6 +219,7 @@ def test_bottomk_sample_merge_equals_direct(spark):
     """Bottom-k-by-uniform-hash samples merge EXACTLY: union tiles,
     keep global bottom k == sample the concatenated input directly
     (the KMV containment argument), and quantile estimates agree."""
+    from kernel_oracles import bottomk_merge
     from pyspark.sql import functions as F
 
     from reader_spark.operators import sketches as SK
@@ -230,7 +232,7 @@ def test_bottomk_sample_merge_equals_direct(spark):
     )
     ta = SK.bottomk_sample_tiles(a, ["g"], "value", k=32)
     tb = SK.bottomk_sample_tiles(b, ["g"], "value", k=32)
-    merged = SK.bottomk_merge(ta.unionByName(tb), ["g"], k=32)
+    merged = bottomk_merge(ta.unionByName(tb), ["g"], k=32)
     direct = SK.bottomk_sample_tiles(
         a.unionByName(b), ["g"], "value", k=32
     )
@@ -629,12 +631,14 @@ def test_bloom_geometry_autosize_meets_budget(spark, tmp_path):
     the standard optimum's k, is not grossly oversized (half the
     words would blow the budget), and an un-sized bloom_write pins
     bloom_geometry(observed_keys x HEADROOM) in the artifact."""
+    from kernel_oracles import bloom_fp_rate
+
     from reader_spark.operators import sketches as SK
 
     for n in (1_000, 50_000, 1_000_000):
         m_w, k_h = SK.bloom_geometry(n, 1e-6)
-        assert SK.bloom_fp_rate(n, m_w, k_h) <= 1e-6
-        assert SK.bloom_fp_rate(n, m_w // 2, k_h) > 1e-6
+        assert bloom_fp_rate(n, m_w, k_h) <= 1e-6
+        assert bloom_fp_rate(n, m_w // 2, k_h) > 1e-6
         assert k_h == 21  # round(ln2 * 29.62 margined bits/key) at 1e-6
 
     keys = spark.range(1_000).select(F.col("id").alias("k"))

@@ -269,75 +269,3 @@ def test_heavy_hitters_stream_state_bounded_and_exact_superset(spark, tmp_path):
         assert hot0 >= 50  # never evicted: true count 60, lb within MG error
     finally:
         q.stop()
-
-
-def test_ewma_stream_equals_batch_fold(spark, tmp_path):
-    """Draining a stream through the per-series EWMA state equals the
-    batch left fold over the same (ts, event_id)-ordered rows; state
-    carries across micro-batches."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from reader_spark.streaming.stateful import ewma_stream
-
-    rows = [
-        (1, "view", "2024-01-01 10:00:00", 1, 10.0),
-        (1, "view", "2024-01-01 10:01:00", 2, 20.0),
-        (1, "view", "2024-01-01 10:02:00", 3, 40.0),
-        (2, "click", "2024-01-01 10:00:30", 4, 5.0),
-    ]
-    src = tmp_path / "ewma_in"
-    src.mkdir()
-    # two files -> two micro-batches with maxFilesPerTrigger=1; the
-    # file source orders batches by modification time, and files
-    # written back-to-back can share an mtime (observed flake:
-    # b-before-a reverses the fold) — pin distinct mtimes.
-    _write_ewma(str(src), "a.jsonl", rows[:2])
-    _write_ewma(str(src), "b.jsonl", rows[2:])
-    t0 = time.time()
-    os.utime(src / "a.jsonl", (t0 - 10, t0 - 10))
-    os.utime(src / "b.jsonl", (t0, t0))
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_type string, ts timestamp, "
-            "event_id long, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        ewma_stream(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("ewma_out")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_ewma"))
-        .start()
-    )
-    q.awaitTermination(90)
-    # LAST update per series is the drained state
-    out = {
-        (r["user_id"], r["event_type"]): (r["n_events"], r["ewma_ppm"])
-        for r in spark.sql(
-            "SELECT * FROM ewma_out"
-        ).collect()
-        if r["n_events"] == max(
-            rr["n_events"]
-            for rr in spark.sql("SELECT * FROM ewma_out").collect()
-            if (rr["user_id"], rr["event_type"]) == (r["user_id"], r["event_type"])
-        )
-    }
-    # hand fold: 10 -> .125*20+.875*10 = 11.25 -> .125*40+.875*11.25
-    expect_u1 = 0.125 * 40 + 0.875 * (0.125 * 20 + 0.875 * 10.0)
-    assert out[(1, "view")] == (3, math.floor(expect_u1 * 1_000_000))
-    assert out[(2, "click")] == (1, 5_000_000)
-
-
-def _write_ewma(d, name, rows):
-    with open(os.path.join(d, name), "w") as f:
-        for uid, et, ts, eid, v in rows:
-            f.write(json.dumps({
-                "user_id": uid, "event_type": et, "ts": ts,
-                "event_id": eid, "value": v,
-            }) + "\n")

@@ -509,88 +509,6 @@ def test_maintain_rollup_incremental_matches_batch(spark, tmp_path):
     assert (("2024-01-01 00:00:00", "a", 3, 7.0) in got2)
 
 
-def test_session_window_native_stream(spark, tmp_path):
-    """Native session_window under a watermark: two gap-separated
-    sessions for user 1 merge/split exactly as the batch probe says
-    (merge at exactly-gap, split beyond), state-store path e2e."""
-    rows = [
-        {"ts": "2024-01-01T00:00:00", "user_id": 1, "value": 1.0},
-        {"ts": "2024-01-01T00:10:00", "user_id": 1, "value": 1.0},
-        # exactly 30 min after the previous event -> MERGES
-        {"ts": "2024-01-01T00:40:00", "user_id": 1, "value": 1.0},
-        # > 30 min gap -> new session
-        {"ts": "2024-01-01T02:00:00", "user_id": 1, "value": 1.0},
-        {"ts": "2024-01-01T00:05:00", "user_id": 2, "value": 1.0},
-        # far-future event moves the watermark past every session end
-        {"ts": "2024-01-02T00:00:00", "user_id": 9, "value": 1.0},
-    ]
-    p = tmp_path / "sess_ev"
-    p.mkdir()
-    with open(p / "e.json", "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    schema = T.StructType([
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    stream = spark.readStream.schema(schema).json(str(p))
-    agg = cdc.session_window_counts(stream, gap="30 minutes", watermark="0 seconds")
-    q = (agg.writeStream.outputMode("append").format("memory")
-         .queryName("sess_out").trigger(availableNow=True)
-         .option("checkpointLocation", str(tmp_path / "ckpt_sess")).start())
-    q.awaitTermination(60)
-    out = spark.sql(
-        "SELECT user_id, session_start, n_events FROM sess_out "
-        "WHERE user_id IN (1, 2) ORDER BY user_id, session_start"
-    ).collect()
-    got = [(r["user_id"], r["session_start"].strftime("%H:%M"), r["n_events"]) for r in out]
-    assert got == [(1, "00:00", 3), (1, "02:00", 1), (2, "00:05", 1)]
-
-
-def test_anomaly_alerts_stream(spark, tmp_path):
-    """Hourly spikes against a static baseline fire exactly one
-    append-mode alert per anomalous (window, key); normal-volume
-    windows stay silent."""
-    rows = []
-    # type "a": baseline mean 2/hr, std 1 -> hour 00 has 2 events
-    # (normal), hour 01 has 8 events (z = 6, alert)
-    for i in range(2):
-        rows.append({"ts": f"2024-01-01T00:0{i}:00", "event_type": "a", "value": 1.0})
-    for i in range(8):
-        rows.append({"ts": f"2024-01-01T01:0{i}:00", "event_type": "a", "value": 1.0})
-    # watermark pusher
-    rows.append({"ts": "2024-01-02T00:00:00", "event_type": "z", "value": 1.0})
-    p = tmp_path / "anom_ev"
-    p.mkdir()
-    with open(p / "e.json", "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    schema = T.StructType([
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    baseline = spark.createDataFrame(
-        [("a", 2.0, 1.0), ("z", 1.0, 1.0)],
-        "event_type string, mean double, std double",
-    )
-    stream = spark.readStream.schema(schema).json(str(p))
-    alerts = cdc.anomaly_alerts_stream(
-        stream, baseline, watermark="0 seconds", z_threshold=2.0
-    )
-    q = (alerts.writeStream.outputMode("append").format("memory")
-         .queryName("anom_out").trigger(availableNow=True)
-         .option("checkpointLocation", str(tmp_path / "ckpt_anom")).start())
-    q.awaitTermination(60)
-    out = spark.sql(
-        "SELECT event_type, n_events, zscore FROM anom_out "
-        "WHERE event_type = 'a'"
-    ).collect()
-    assert len(out) == 1
-    assert out[0]["n_events"] == 8 and out[0]["zscore"] == 6.0
-
-
 def test_ddl_multi_table_rename_chain():
     """RENAME TABLE a TO tmp, b TO a, tmp TO b — MySQL's atomic swap
     idiom. Every pair of the chain applies left to right (the r4

@@ -423,6 +423,54 @@ def test_snapshot_envelope_parquet_encoding(spark, sf_dir, tmp_path):
             assert cols["topic"].has_dictionary_page
 
 
+def _kafka_cfg(sf_dir, out):
+    return _snapshot_cfg(sf_dir, out, ["nation"]).replace(
+        "kind: parquet\n  topic_prefix",
+        "kind: kafka\n  options: {bootstrap: 'broker:9092'}\n  topic_prefix",
+    )
+
+
+def test_kafka_destination_without_connector_falls_back_to_parquet(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Without the Kafka connector jar the envelopes land as parquet
+    under the destination path, and the publisher is never called."""
+    from reader_spark import sinks
+    from reader_spark.job import run_job
+
+    def no_publish(*_a, **_k):
+        raise AssertionError("write_kafka called without the connector")
+
+    monkeypatch.setattr(sinks, "kafka_available", lambda _spark: False)
+    monkeypatch.setattr(sinks, "write_kafka", no_publish)
+    out = str(tmp_path / "out")
+    settings = load_settings(_kafka_cfg(sf_dir, out))
+    assert settings.destination.kind == "kafka"
+    assert run_job(spark, settings) == {"nation": f"{out}/nation"}
+    assert spark.read.parquet(f"{out}/nation").count() == 25
+
+
+def test_kafka_publish_error_fails_the_job(spark, sf_dir, tmp_path, monkeypatch):
+    """With the connector present, a publish error (broker timeout,
+    missing option, partial batch) fails the job: no parquet fallback
+    and no `_metrics` row."""
+    import os
+
+    from reader_spark import sinks
+    from reader_spark.job import run_job
+
+    def broker_down(*_a, **_k):
+        raise RuntimeError("broker timeout")
+
+    monkeypatch.setattr(sinks, "kafka_available", lambda _spark: True)
+    monkeypatch.setattr(sinks, "write_kafka", broker_down)
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="broker timeout"):
+        run_job(spark, load_settings(_kafka_cfg(sf_dir, out)))
+    assert not os.path.exists(f"{out}/nation")
+    assert not os.path.exists(f"{out}/_metrics")
+
+
 def test_job_runner_streaming_merge_yaml(spark, tmp_path):
     import json
 
@@ -1387,50 +1435,6 @@ def test_upsert_scd2_schema_evolution(spark, tmp_path):
     }
 
 
-def test_scd2_current_and_as_of_views(spark, tmp_path):
-    from reader_spark.operators.transfer import (
-        TransferWriter,
-        scd2_as_of,
-        scd2_current,
-    )
-
-    tw = TransferWriter(spark, str(tmp_path / "scd2v"))
-    tw.upsert_scd2(
-        "t",
-        spark.createDataFrame(
-            [("A", "v1", 1, "c"), ("B", "w1", 2, "c")],
-            "id string, val string, seq long, op string",
-        ),
-        ["id"],
-        "seq",
-    )
-    tw.upsert_scd2(
-        "t",
-        spark.createDataFrame(
-            [("A", "v2", 5, "u"), ("B", None, 6, "d")],
-            "id string, val string, seq long, op string",
-        ),
-        ["id"],
-        "seq",
-    )
-    h = tw.read("t")
-    assert {(r["id"], r["val"]) for r in scd2_current(h).collect()} == {
-        ("A", "v2")
-    }
-    # at seq=3 both keys live at their first versions
-    assert {
-        (r["id"], r["val"]) for r in scd2_as_of(h, 3).collect()
-    } == {("A", "v1"), ("B", "w1")}
-    # at seq=5 A's second version is live, B still first
-    assert {
-        (r["id"], r["val"]) for r in scd2_as_of(h, 5).collect()
-    } == {("A", "v2"), ("B", "w1")}
-    # at seq=6 B is deleted
-    assert {
-        (r["id"], r["val"]) for r in scd2_as_of(h, 6).collect()
-    } == {("A", "v2")}
-
-
 @pytest.mark.parametrize("semantics", ["current", "scd2"])
 def test_upsert_scd2_bucketed_matches_full_rewrite(spark, tmp_path, semantics):
     """Each bucketed merge is semantics-identical to its full-rewrite
@@ -2163,32 +2167,34 @@ def test_schema_manifest_pins_reads_no_footer_merge(spark, tmp_path):
 def test_truncate_verb_keeps_schema_and_versions(spark, tmp_path):
     """TransferWriter.truncate: rows clear behind a pointer flip, the
     schema stays readable (zero rows, same columns incl. evolved
-    ones), the displaced snapshot stays time-travelable, and a later
-    bucketed upsert seeds cleanly onto the cleared layout."""
+    ones), the displaced snapshot stays on disk for in-flight readers,
+    and a later bucketed upsert seeds cleanly onto the cleared
+    layout."""
+    import os
+
     from pyspark.sql import functions as F
 
     from reader_spark.operators import atomic_dir
     from reader_spark.operators.transfer import TransferWriter
 
-    w = TransferWriter(spark, str(tmp_path / "dest"), keep_versions=2)
+    w = TransferWriter(spark, str(tmp_path / "dest"))
     seed = spark.range(6).select(
         F.col("id"), F.concat(F.lit("n"), F.col("id")).alias("name"),
         F.lit("c").alias("op"), F.lit(1).alias("seq"),
     )
     w.upsert_bucketed("t", seed, ["id"], "seq", n_buckets=4)
     assert w.read("t").count() == 6
-    pre = atomic_dir.current_version(str(tmp_path / "dest" / "t"))
+    pre = atomic_dir.resolve(str(tmp_path / "dest" / "t"))
 
     w.truncate("t")
+    # the pre-truncate snapshot is the one displaced version kept
+    assert os.path.isdir(pre) and len(os.listdir(pre)) > 0
     emptied = w.read("t")
     assert emptied.count() == 0
     assert {"id", "name"} <= set(emptied.columns)  # schema survives
     # truncate twice = no-op (replayed micro-batch)
     w.truncate("t")
     assert w.read("t").count() == 0
-    # the pre-truncate snapshot is still time-travelable
-    if pre is not None:
-        assert w.read("t", version=pre).count() == 6
 
     post = spark.range(2).select(
         (F.col("id") + 10).alias("id"),
@@ -2482,108 +2488,6 @@ sketch:
     assert got == rows(SK.kmv_tiles_read(spark, f"{out_base}/documents"))
 
 
-def test_reconcile_repair_heals_divergence(spark, tmp_path):
-    """reconcile_repair applies the audit verdict: missing keys
-    upsert, mismatched keys take the source row, extra keys delete —
-    a follow-up reconcile reads all-ok, and a repair of an already-
-    healthy table is a no-op that rewrites nothing."""
-    from pyspark.sql import functions as F
-
-    from reader_spark.operators.transfer import (
-        TransferWriter,
-        reconcile,
-        reconcile_repair,
-    )
-
-    source = spark.range(10).select(
-        F.col("id"), F.concat(F.lit("v"), F.col("id")).alias("val")
-    )
-    w = TransferWriter(spark, str(tmp_path / "dest"))
-    # seed a DIVERGED sink: drop ids 0-1 (missing), corrupt id 2
-    # (mismatch), add id 99 (extra)
-    seed = (
-        source.filter("id >= 3")
-        .unionByName(spark.sql(
-            "SELECT 2 AS id, 'WRONG' AS val UNION ALL "
-            "SELECT 99, 'ghost'"))
-        .select("id", "val", F.lit("c").alias("op"), F.lit(0).alias("seq"))
-    )
-    w.upsert_bucketed("t", seed, ["id"], "seq", n_buckets=4)
-
-    counts = reconcile_repair(w, "t", source, ["id"], n_buckets=4)
-    assert counts.get("missing") == 2
-    assert counts.get("mismatch") == 1
-    assert counts.get("extra") == 1
-    assert counts.get("ok") == 7
-
-    after = {
-        r["status"]: r["n_keys"]
-        for r in reconcile(source, w.read("t"), ["id"]).collect()
-    }
-    assert after == {"ok": 10}
-    got = {r["id"]: r["val"] for r in w.read("t").collect()}
-    assert got == {i: f"v{i}" for i in range(10)}
-
-    # healthy table: repair reports all-ok and rewrites nothing
-    import os
-
-    from reader_spark.operators import atomic_dir
-
-    root = atomic_dir.resolve(str(tmp_path / "dest" / "t"))
-    before_files = {
-        (d, f)
-        for d, _, fs in os.walk(root)
-        for f in fs
-    }
-    counts2 = reconcile_repair(w, "t", source, ["id"], n_buckets=4)
-    assert counts2 == {"ok": 10}
-    after_files = {
-        (d, f)
-        for d, _, fs in os.walk(root)
-        for f in fs
-    }
-    assert before_files == after_files  # byte-level: nothing touched
-
-
-def test_table_diff_between_versions(spark, tmp_path):
-    """table_diff classifies per-key changes between two retained
-    snapshots (or a snapshot and live): added / removed / changed,
-    unchanged keys absent — the audit a run pinned to a version asks
-    before re-reading."""
-    from pyspark.sql import functions as F
-
-    from reader_spark.operators import atomic_dir
-    from reader_spark.operators.transfer import TransferWriter, table_diff
-
-    w = TransferWriter(spark, str(tmp_path / "dest"), keep_versions=3)
-
-    def changes(rows, seq):
-        return spark.createDataFrame(
-            [(i, v, "c" if v is not None else "d", seq) for i, v in rows],
-            "id long, val string, op string, seq long",
-        )
-
-    # v_pin: full-rewrite upsert publishes a version we can pin
-    w.upsert("t", changes([(i, f"v{i}") for i in range(5)], 1), ["id"], "seq")
-    pin = atomic_dir.current_version(str(tmp_path / "dest" / "t"))
-    # evolve live: change id 1, delete id 2, add id 9
-    w.upsert(
-        "t",
-        changes([(1, "CHANGED"), (2, None), (9, "v9")], 2),
-        ["id"],
-        "seq",
-    )
-
-    diff = {
-        r["id"]: r["status"]
-        for r in table_diff(w, "t", pin, ["id"]).collect()
-    }
-    assert diff == {1: "changed", 2: "removed", 9: "added"}
-
-    # same version vs itself: empty diff
-    assert table_diff(w, "t", pin, ["id"], version_new=pin).count() == 0
-
-
 def test_drift_job_watch_categorical_and_vector_yaml(spark, tmp_path, sf_dir):
     """drift: {mode: watch} routes by configured column for the other
     two families: a categorical watch logs per-batch mix verdicts and
@@ -2867,7 +2771,7 @@ checks:
 
 def test_bucket_layout_pinned_across_mismatched_callers(spark, tmp_path):
     """n_buckets is a property of the TABLE, not the call: a merge
-    (or repair) invoked with a different default must resolve the
+    invoked with a different default must resolve the
     seed-time pin from _layout.json — trusting the parameter would
     recompute pmod(hash, wrong_n), rewrite the wrong bucket dirs and
     leave the stale row behind as a duplicate PK."""
@@ -2876,8 +2780,6 @@ def test_bucket_layout_pinned_across_mismatched_callers(spark, tmp_path):
     from reader_spark.operators.transfer import (
         TransferWriter,
         _read_layout_manifest,
-        reconcile,
-        reconcile_repair,
     )
 
     w = TransferWriter(spark, str(tmp_path))
@@ -2902,17 +2804,6 @@ def test_bucket_layout_pinned_across_mismatched_callers(spark, tmp_path):
         if d.startswith("bucket=")
     ]
     assert max(ids) < 16
-
-    # the ADVICE scenario verbatim: repair a 16-bucket table with
-    # repair's own default (64) — must heal, not corrupt
-    source = spark.range(0, 501).selectExpr("id", "concat('v', id) AS v")
-    counts = reconcile_repair(w, "t", source, ["id"])
-    assert counts.get("mismatch", 0) == 1 and counts.get("missing", 0) == 1
-    verdict = {
-        r["status"]: r["n_keys"]
-        for r in reconcile(source, w.read("t").drop("bucket"), ["id"]).collect()
-    }
-    assert verdict == {"ok": 501}
 
 
 def test_legacy_layout_incompatible_buckets_raises(spark, tmp_path):
